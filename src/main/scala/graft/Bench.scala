@@ -61,7 +61,7 @@ object Bench {
     * whichever queries happen to run next (the consecutive slow windows
     * measured in r7). Unpersisting synchronously between queries pins
     * that cost to the boundary, not the next measurement. Shared with
-    * [[TimeQ]] so the builder tool's boundary discipline cannot drift
+    * [[JobProbe]] so the probe's boundary discipline cannot drift
     * from the driver bench's.
     */
   private[graft] def releaseCheckpoints(spark: SparkSession): Unit = {

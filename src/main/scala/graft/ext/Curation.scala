@@ -55,26 +55,6 @@ object Curation {
     docs.join(drops, Seq(idCol), "left_anti")
   }
 
-  /** Transitive near-dup dedup: connected components over the pair
-    * graph, keep only each component's minimum id. Stricter than
-    * [[dropNearDupes]] — a doc that is a near-dup of a near-dup is
-    * dropped even with no direct pair (and a doc whose only pairs are
-    * with HIGHER ids still gets dropped when it isn't the component
-    * minimum, which the pairwise rule misses).
-    */
-  def dropNearDupesTransitive(docs: DataFrame, textCol: String, idCol: String,
-      threshold: Double): DataFrame = {
-    // same strictly-positive guard as [[dropNearDupes]]: t = 0 here
-    // would collapse every co-posting doc into one component
-    require(threshold > 0 && threshold <= 1,
-      s"drop threshold must be in (0, 1], got $threshold")
-    val pairs = Dedup.ngramJaccardPairs(docs, textCol, idCol, 3, threshold)
-    val drops = Dedup.connectedComponents(pairs, "a_id", "b_id")
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as(idCol))
-    docs.join(drops, Seq(idCol), "left_anti")
-  }
-
   /** The full pipeline. Returns surviving rows with quality features.
     *
     * `materialize` is applied to the two multiply-consumed subtrees:

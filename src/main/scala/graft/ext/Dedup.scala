@@ -93,13 +93,6 @@ object Dedup {
         graft.functions.TextHash.hashedShingles(col(textCol), n).as("shs"))
       .select(col("doc_id"), size(col("shs")).as("n_sh"), col("shs"))
 
-  /** Same, over precomputed shingle sets. `sets` feeds BOTH self-join
-    * sides, and the two identical exchanges are NOT deduplicated at
-    * runtime (measured: AQE leaves them separate stages), so callers
-    * that can materialize `sets` (`localCheckpoint()`) cut the
-    * tokenize+shingle subtree from two evaluations to one — 5.6 s →
-    * 3.1 s at sf0.1 for the registered `q_dedup_ngram`.
-    */
   /** Shared inverted-shingle-index blocking: explode the hashed sets
     * into 8-byte postings, SHUFFLE_HASH self-join on the posting
     * (doc_id-ordered, plus any caller predicate over the aliased
@@ -147,6 +140,14 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
+  /** [[ngramJaccardPairs]] over precomputed shingle sets. `sets` feeds
+    * BOTH self-join sides, and the two identical exchanges are NOT
+    * deduplicated at runtime (measured: AQE leaves them separate
+    * stages), so callers that can materialize `sets`
+    * (`localCheckpoint()`) cut the tokenize+shingle subtree from two
+    * evaluations to one — 5.6 s → 3.1 s at sf0.1 for the registered
+    * `q_dedup_ngram`.
+    */
   def ngramJaccardPairsFromSets(sets: DataFrame,
       threshold: Double): DataFrame = {
     require(threshold >= 0 && threshold <= 1,
@@ -180,90 +181,15 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Exact n-gram Jaccard pairs with PREFIX FILTERING (the AllPairs /
-    * PPJoin family): index only each document's first
-    * p = n − ⌈t·n⌉ + 1 shingles under a global rarest-first order —
-    * any pair with J ≥ t must collide inside these prefixes, so the
-    * candidate space shrinks by orders of magnitude versus indexing
-    * every shingle, with NO recall loss. Plus length filtering
-    * (|B| ≥ t·|A|) applied inside the join condition.
+  /** Asymmetric CONTAINMENT near-dup pairs over precomputed shingle
+    * sets: C(A,B) = |A∩B| / min(|A|,|B|) — catches subset/quotation
+    * duplication that Jaccard misses (a short doc wholly embedded in a
+    * long one has containment 1 but Jaccard ≈ |A|/|B|). Same
+    * inverted-shingle-index blocking as [[ngramJaccardPairs]];
+    * deliberately NO length filter — containment is size-ratio-free by
+    * design, so pruning on sizes would drop true positives. Ratio of
+    * small ints ⇒ IEEE-exact ⇒ oracle-expressible.
     *
-    * Same output as [[ngramJaccardPairs]] (verified in DedupSpec);
-    * this is the formulation that survives 100 TB — the inverted index
-    * is ~(1−t) of the full one and candidates are rare-shingle
-    * collisions only.
-    */
-  def ngramJaccardPairsPrefix(docs: DataFrame, textCol: String, idCol: String,
-      n: Int = 3, threshold: Double = 0.6): DataFrame = {
-    // same prefix-length failure mode as containmentPairsPrefix: t > 1
-    // yields a negative slice length that throws mid-job
-    require(threshold >= 0 && threshold <= 1,
-      s"jaccard threshold must be in [0, 1], got $threshold")
-    // Global order = shingle-hash ascending, via the canonical
-    // [[hashedShingleSets]] frame (ONE definition of the sorted-hash
-    // total order shared with the containment prefix filter). Any
-    // fixed total order keeps the prefix guarantee; hash order makes
-    // the per-doc sort a row-local `array_sort` (NO shuffle), where
-    // the classic rarest-first order would cost a doc-frequency join +
-    // collect_list shuffle that dominates at moderate scale.
-    val sorted = hashedShingleSets(docs, textCol, idCol, n)
-    val cands = jaccardPrefixCandidateRows(sorted, threshold).distinct()
-    cands
-      .join(sorted.select(col("doc_id"), col("shs"), col("n_sh")).as("sa"),
-        col("a_id") === col("sa.doc_id"))
-      .join(sorted.select(col("doc_id"), col("shs"), col("n_sh")).as("sb"),
-        col("b_id") === col("sb.doc_id"))
-      .select(col("a_id"), col("b_id"),
-        (size(array_intersect(col("sa.shs"), col("sb.shs"))).cast("double") /
-          (col("sa.n_sh") + col("sb.n_sh") -
-            size(array_intersect(col("sa.shs"), col("sb.shs"))))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
-  /** The prefix-filter candidate join of [[ngramJaccardPairsPrefix]]
-    * (pre-distinct) — shared with ScaleSpec exactly like
-    * [[containmentPrefixCandidateRows]], so skew measurements always
-    * count the join production runs.
-    *
-    * (1 − 1e-12) relative slack on the prefix length: if threshold·n_sh
-    * lands a sub-ulp ABOVE an integer, ceil would round up and shorten
-    * the prefix by one — silently losing recall (no later filter can
-    * restore a dropped candidate). Relative, not absolute, so the guard
-    * holds at any shingle-set size (same treatment as the length
-    * filters).
-    */
-  private[graft] def jaccardPrefixCandidateRows(hsets: DataFrame,
-      threshold: Double): DataFrame = {
-    val withPrefix = hsets.withColumn("p",
-        (col("n_sh") - ceil(lit(threshold * (1 - 1e-12)) * col("n_sh")) + 1).cast("int"))
-      .withColumn("prefix", slice(col("shs"), lit(1), col("p")))
-    val pref = withPrefix.select(col("doc_id"), col("n_sh"),
-      explode(col("prefix")).as("sh"))
-    pref.as("a").join(pref.as("b"),
-      col("a.sh") === col("b.sh") &&
-        col("a.doc_id") < col("b.doc_id") &&
-        // length filter: sizes of a qualifying pair differ by ≤ 1/t
-        // ((1 − 1e-12) relative slack against sub-ulp rounding at
-        // exact-threshold pairs — scale-invariant, see ngramJaccardPairs)
-        col("b.n_sh") * lit(threshold * (1 - 1e-12)) <= col("a.n_sh") &&
-        col("a.n_sh") * lit(threshold * (1 - 1e-12)) <= col("b.n_sh"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-  }
-
-  /** Asymmetric CONTAINMENT near-dup pairs: C(A,B) = |A∩B| / min(|A|,|B|)
-    * — catches subset/quotation duplication that Jaccard misses (a short
-    * doc wholly embedded in a long one has containment 1 but Jaccard
-    * ≈ |A|/|B|). Same inverted-shingle-index blocking as
-    * [[ngramJaccardPairs]]; deliberately NO length filter — containment
-    * is size-ratio-free by design, so pruning on sizes would drop true
-    * positives. Ratio of small ints ⇒ IEEE-exact ⇒ oracle-expressible.
-    */
-  def containmentPairs(docs: DataFrame, textCol: String, idCol: String,
-      n: Int = 3, threshold: Double = 0.9): DataFrame =
-    containmentPairsFromSets(shingleSets(docs, textCol, idCol, n), threshold)
-
-  /** Same, over precomputed shingle sets (see
-    * [[ngramJaccardPairsFromSets]] for why materialized sets pay).
     * UNPRUNED — every posting of every doc meets every co-posting doc;
     * kept as the verification baseline for [[containmentPairsPrefix]]
     * (DedupSpec proves output equality), which is the variant the
@@ -304,9 +230,9 @@ object Dedup {
     * a universally-shared shingle lands in almost no prefix (its hash
     * is uniform over the doc's sorted hash range), so the hot list's
     * quadratic term collapses to prefix-hits × full-hits. The
-    * (1 − 1e-12) relative slack on the ceil mirrors
-    * [[ngramJaccardPairsPrefix]]: a sub-ulp overshoot of t·m would
-    * shorten the prefix and silently lose recall. Exact final filter ⇒
+    * (1 − 1e-12) relative slack on the ceil mirrors the Jaccard length
+    * filter: a sub-ulp overshoot of t·m would shorten the prefix and
+    * silently lose recall. Exact final filter ⇒
     * precision 1; DedupSpec proves equality with the unpruned
     * baseline.
     */
@@ -359,32 +285,13 @@ object Dedup {
       .filter(col("containment") >= threshold)
   }
 
-  /** MinHash signatures: k independent hash functions simulated as
-    * xxhash64 salted with the permutation index; one exploded pass,
-    * k partial-aggregated mins — no per-doc loops.
-    *
-    * This is the STRING-basis signature (permutation i hashes the
-    * shingle text): the streaming near-dup store persists signatures,
-    * so its basis is pinned here for store compatibility. Batch-side
-    * consumers that don't persist signatures should prefer
-    * [[minhashSignaturesFromHashed]].
-    */
-  def minhashSignatures(sets: DataFrame, numPerms: Int): DataFrame = {
-    val inv = sets.select(col("doc_id"), explode(col("shingles")).as("sh"))
-    val mins = (0 until numPerms).map(i => min(xxhash64(lit(i), col("sh"))).as(s"h$i"))
-    inv.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"),
-        array((0 until numPerms).map(i => col(s"h$i")): _*).as("sig"))
-  }
-
-  /** MinHash signatures over HASHED shingle sets: permutation i hashes
-    * the 8-byte shingle hash instead of re-traversing the shingle text
-    * — with k = 48 permutations the string basis hashes every shingle's
-    * bytes 48 times, this one once (in [[hashedShingleSets]]) plus 48
-    * cheap fixed-width long-hashes. Same LSH family (k independent
-    * salted hashes of the set's distinct element ids), so the
-    * candidate-probability math is unchanged; signatures are NOT
-    * comparable across bases (see [[minhashSignatures]]).
+  /** MinHash signatures over HASHED shingle sets: k independent hash
+    * functions simulated as xxhash64 salted with the permutation index,
+    * applied to the 8-byte shingle hash; one exploded pass, k
+    * partial-aggregated mins — no per-doc loops. With k = 48 a
+    * string-basis signature would hash every shingle's bytes 48 times;
+    * this hashes them once (in [[hashedShingleSets]]) plus 48 cheap
+    * fixed-width long-hashes.
     */
   def minhashSignaturesFromHashed(hsets: DataFrame, numPerms: Int): DataFrame = {
     val inv = hsets.select(col("doc_id"), explode(col("shs")).as("sh"))
@@ -394,14 +301,9 @@ object Dedup {
         array((0 until numPerms).map(i => col(s"h$i")): _*).as("sig"))
   }
 
-  /** LSH candidate pairs: band the signature (bands × rowsPerBand =
-    * numPerms), hash each band, join docs colliding in any band.
-    * With b=16, r=4: P(candidate | j=0.9) ≈ 1−(1−0.9⁴)¹⁶ ≈ 1−10⁻⁸.
-    */
   /** Banded form of a signature frame: one (doc_id, band_id, band_hash)
-    * row per band. Shared by [[lshCandidates]] and the streaming
-    * near-dup sink, which bands STORED signatures without touching any
-    * text.
+    * row per band. Shared by [[lshCandidates]] and
+    * [[incrementalDupProbe]], which joins two banded frames.
     */
   def bandedSignatures(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
     val bandCols = (0 until bands).map { b =>
@@ -412,6 +314,10 @@ object Dedup {
       .select(col("doc_id"), col("bb.band_id"), col("bb.band_hash"))
   }
 
+  /** LSH candidate pairs: band the signature (bands × rowsPerBand =
+    * numPerms), hash each band, join docs colliding in any band.
+    * With b=16, r=4: P(candidate | j=0.9) ≈ 1−(1−0.9⁴)¹⁶ ≈ 1−10⁻⁸.
+    */
   def lshCandidates(sigs: DataFrame, bands: Int, rowsPerBand: Int,
       materialize: DataFrame => DataFrame = identity): DataFrame = {
     // the banded frame feeds both self-join sides; without
@@ -426,27 +332,19 @@ object Dedup {
       .distinct()
   }
 
-  /** MinHash+LSH near-dup pairs, exactly verified: LSH prunes the pair
-    * space, then true Jaccard (array_intersect on the shingle sets)
-    * filters candidates — so output = { pairs with J ≥ threshold } ∩
-    * candidates, which at threshold 0.8 with b=16,r=4 is the exact
-    * pair set with probability ≈ 1 (hence the DuckDB oracle twin).
+  /** MinHash+LSH near-dup pairs over [[hashedShingleSets]], exactly
+    * verified: LSH prunes the pair space (hashed-basis signatures,
+    * [[minhashSignaturesFromHashed]]), then true Jaccard on the hashed
+    * sets (equal to string Jaccard modulo the accepted 64-bit collision
+    * class) filters candidates — so output = { pairs with J ≥ threshold }
+    * ∩ candidates, which at threshold 0.8 with b=16 is the exact pair
+    * set with probability ≈ 1 (hence the DuckDB oracle twin). The
+    * registered `q_dedup_minhash` runs this; output equality with the
+    * exact pair set was validated at sf0.01 AND sf0.1 by a parameter
+    * sweep (retired; in git history up to commit 8b0aa7c) and is
+    * asserted in DedupSpec.
     */
-  def minhashNearDupPairs(docs: DataFrame, textCol: String, idCol: String,
-      n: Int = 3, numPerms: Int = 64, bands: Int = 16,
-      threshold: Double = 0.8): DataFrame =
-    // Lazy builder — no internal .cache() (see ngramJaccardPairs note).
-    minhashNearDupPairsFromSets(shingleSets(docs, textCol, idCol, n),
-      numPerms, bands, threshold)
-
-  /** Same, over precomputed shingle sets. The `sets` subtree feeds THREE
-    * consumers — the signature pass and both sides of the exact-Jaccard
-    * verification join — so callers that can materialize it
-    * (`localCheckpoint()`/`persist()`) cut the dominant cost ~3×; the
-    * registered `q_dedup_minhash` does exactly that. This builder stays
-    * lazy and policy-clean either way.
-    */
-  def minhashNearDupPairsFromSets(sets: DataFrame, numPerms: Int,
+  def minhashNearDupPairsFromHashedSets(hsets: DataFrame, numPerms: Int,
       bands: Int, threshold: Double,
       materialize: DataFrame => DataFrame = identity): DataFrame = {
     // t = 0 is excluded (unlike the enumeration-style jaccard entry
@@ -455,33 +353,6 @@ object Dedup {
     // full pair set nor a meaningful near-dup set. A non-divisible
     // (numPerms, bands) would silently drop numPerms % bands
     // permutations from every signature.
-    require(threshold > 0 && threshold <= 1,
-      s"minhash threshold must be in (0, 1], got $threshold")
-    require(numPerms >= 1 && bands >= 1 && numPerms % bands == 0,
-      s"numPerms ($numPerms) must be a positive multiple of bands ($bands)")
-    val cands = lshCandidates(minhashSignatures(sets, numPerms), bands,
-      numPerms / bands, materialize)
-    cands
-      .join(sets.as("sa"), col("a_id") === col("sa.doc_id"))
-      .join(sets.as("sb"), col("b_id") === col("sb.doc_id"))
-      .select(col("a_id"), col("b_id"),
-        (size(array_intersect(col("sa.shingles"), col("sb.shingles"))).cast("double") /
-          size(array_union(col("sa.shingles"), col("sb.shingles")))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
-  /** Same over [[hashedShingleSets]] — hashed-basis signatures
-    * ([[minhashSignaturesFromHashed]]) and exact-Jaccard verification
-    * on the hashed sets (equal to string Jaccard modulo the accepted
-    * 64-bit collision class). The registered `q_dedup_minhash` runs
-    * this; output equality with the exact pair set is re-validated at
-    * sf0.01 AND sf0.1 via `graft.TuneMinhash` and asserted in
-    * DedupSpec.
-    */
-  def minhashNearDupPairsFromHashedSets(hsets: DataFrame, numPerms: Int,
-      bands: Int, threshold: Double,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
-    // same bounds as minhashNearDupPairsFromSets (see there for why)
     require(threshold > 0 && threshold <= 1,
       s"minhash threshold must be in (0, 1], got $threshold")
     require(numPerms >= 1 && bands >= 1 && numPerms % bands == 0,
@@ -507,8 +378,9 @@ object Dedup {
     * signatures, candidates come from an (band_id, band_hash) equi-join
     * of batch bands against archive bands, and exact hashed-set Jaccard
     * verifies. At threshold 0.8 the registered configuration is
-    * (numPerms, bands) = (48, 16) ⇒ r = 3, the TuneMinhash-picked point
-    * documented at the q_dedup_minhash call site: per-pair miss
+    * (numPerms, bands) = (48, 16) ⇒ r = 3, the point the retired
+    * parameter sweep picked (see git history and the q_dedup_minhash
+    * call site): per-pair miss
     * probability at J = 0.8 is ≈ 1e-5, so candidate recall ≈ 1 (same
     * curve as the self-join variant) and the output equals the
     * unblocked batch×archive definition — hence the oracle twin. (The
@@ -567,7 +439,8 @@ object Dedup {
     * near-identical strings whose shingle Jaccard is far above the LSH
     * threshold curve, so candidate recall ≈ 1 and the output equals the
     * unblocked definition (re-validated at sf0.01 AND sf0.1 against the
-    * all-pairs oracle; same argument as [[minhashNearDupPairs]]).
+    * all-pairs oracle; same argument as
+    * [[minhashNearDupPairsFromHashedSets]]).
     *
     * Scale shape: candidates and the J-prefilter are the existing
     * banded/hashed-set machinery (sub-quadratic, skew-bounded); the

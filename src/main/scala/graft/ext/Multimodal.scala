@@ -258,14 +258,4 @@ object Multimodal {
       }.toDF("media_id", "n_bytes", "sample_rate", "n_samples",
         "rms", "zero_cross_rate")
   }
-
-  /** Frame sampling for video-kind rows: explode duration into every
-    * k-th millisecond offset — the schema/partition shape of a frame
-    * extractor, with the decode itself stubbed as above.
-    */
-  def sampleFrames(media: DataFrame, everyMs: Long = 1000L): DataFrame =
-    media.filter(col("kind") === "video")
-      .select(col("media_id"), col("duration_ms"),
-        explode(sequence(lit(0L), col("duration_ms") - 1, lit(everyMs)))
-          .as("frame_offset_ms"))
 }

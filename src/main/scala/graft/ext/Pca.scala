@@ -132,57 +132,6 @@ object Pca {
     df.withColumn(projCol, array(coords: _*))
   }
 
-  /** Persist a fitted model as a plain parquet frame (round 15 — the
-    * bigram-LM train/serve shape for PCA): one row per part,
-    * (kind, idx, vals array<double>, scalar double) —
-    * ("mean", 0, μ, null), ("component", j, c_j, λ_j) for j < k, and
-    * ("total_variance", 0, null, trace). Doubles round-trip parquet
-    * bit-exactly, so load∘save is the IDENTITY on the model and
-    * projections through a reloaded model are bit-identical to the
-    * in-memory ones (pinned in PcaSpec). A serve-side cluster reads
-    * the k+2-row frame and broadcasts the literals exactly as
-    * [[project]] always has — training stays a separate offline job.
-    */
-  def saveModel(spark: org.apache.spark.sql.SparkSession, model: Model,
-      dir: String): Unit = {
-    import spark.implicits._
-    val rows =
-      Seq(("mean", 0, model.mean, Option.empty[Double])) ++
-        model.components.zipWithIndex.map { case (c, j) =>
-          ("component", j, c, Some(model.eigenvalues(j))) } ++
-        Seq(("total_variance", 0, Array.empty[Double],
-          Some(model.totalVariance)))
-    rows.toDF("kind", "idx", "vals", "scalar")
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-  }
-
-  /** Load a model persisted by [[saveModel]]; validates the frame has
-    * exactly the expected parts so a truncated or foreign directory
-    * fails loudly instead of projecting garbage.
-    */
-  def loadModel(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Model = {
-    import spark.implicits._
-    val rows = spark.read.parquet(dir)
-      .select(col("kind"), col("idx"), col("vals"), col("scalar"))
-      .as[(String, Int, Array[Double], Option[Double])].collect()
-    val mean = rows.collect { case ("mean", _, v, _) => v } match {
-      case Array(v) => v
-      case other => throw new IllegalStateException(
-        s"PCA model at $dir: expected exactly one mean row, got ${other.length}")
-    }
-    val comps = rows.collect { case ("component", j, v, Some(ev)) => (j, v, ev) }
-      .sortBy(_._1)
-    require(comps.nonEmpty && comps.map(_._1).toSeq == comps.indices,
-      s"PCA model at $dir: component indices not contiguous from 0")
-    val tv = rows.collect { case ("total_variance", _, _, Some(s)) => s } match {
-      case Array(s) => s
-      case other => throw new IllegalStateException(
-        s"PCA model at $dir: expected exactly one total_variance row, got ${other.length}")
-    }
-    Model(mean, comps.map(_._2), comps.map(_._3), tv)
-  }
-
   /** Cyclic Jacobi eigensolver for a symmetric matrix: returns
     * (eigenvalues, eigenvectors-as-columns). O(d³) per sweep, converges
     * quadratically; off(A) < 1e-12·‖A‖ in ≲ 10 sweeps at d = 64.

@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.ArrayMath.l2sqF
 
@@ -13,19 +12,15 @@ import graft.functions.ArrayMath.l2sqF
   * subspaces of d/m dims, quantize each subvector to one of k
   * per-subspace centroids, and a vector becomes m small codes
   * (m=8, k=16 ⇒ 8 nibbles = 4 bytes per 64-dim float vector — 64×
-  * smaller). Search scans CODES, not vectors: a query precomputes an
-  * m×k table of partial squared distances once, and each candidate
-  * scores as m table lookups (ADC — asymmetric distance computation).
+  * smaller).
   *
   * Scale shape: training is m independent tiny k-means runs (sample
   * the corpus at 100 TB — the codebook is m·k·(d/m) = k·d floats
   * regardless of corpus size); encoding is ONE corpus scan with a
   * per-row argmin fold against the broadcast packed codebook (zero
-  * shuffle — the [[Clustering.assign]] shape per subspace); ADC
-  * scoring is one scan of the (tiny) code table with per-row constant
-  * work, query tables broadcast. Compose with IVF for IVFADC (codes
-  * partitioned by cell) — the postings layout stays
-  * [[Similarity.writeIvfIndex]]'s.
+  * shuffle — the [[Clustering.assign]] shape per subspace). Compose
+  * with IVF for IVFADC (codes partitioned by cell) — the postings
+  * layout stays [[Similarity.writeIvfIndex]]'s.
   *
   * Determinism: seeds and Lloyd steps are the deterministic
   * [[Clustering]] machinery, the argmin tie-breaks to the smaller
@@ -48,7 +43,7 @@ object Pq {
     * scan per iteration for ALL subspaces: the m-run formulation cost
     * 8 × (seed job + assignment agg + pack + join) = 45 one-task jobs
     * at m = 8 and was scheduling-bound (4.9 s at sf0.1 vs 1.3 s for
-    * this shape, measured with TimeQ); at 100 TB it's the difference
+    * this shape, timed warm by JobProbe); at 100 TB it's the difference
     * between m corpus scans and one per iteration. PqSpec pins
     * equality against the per-subspace lloyd reference.
     */
@@ -132,53 +127,4 @@ object Pq {
         transform(sequence(lit(0), lit(m - 1)),
           j => codeFor(col("embedding"), col("cb"), j, dsub).cast("int")))
       .drop("cb")
-
-  /** Reconstruction: codes → concatenated centroids (the quantized
-    * vector). PqSpec bounds the corpus mean squared reconstruction
-    * error by the trivial one-centroid quantizer's.
-    */
-  def reconstruct(encoded: DataFrame, codebook: DataFrame, m: Int): DataFrame =
-    encoded
-      .crossJoin(broadcast(packed(codebook)))
-      .withColumn("recon",
-        flatten(transform(sequence(lit(0), lit(m - 1)), j =>
-          element_at(
-            filter(col("cb"), c => c.getField("subspace") === j &&
-              c.getField("cell_id") === element_at(col("codes"), j + 1)),
-            1).getField("centroid"))))
-      .drop("cb")
-
-  /** ADC top-k: each query precomputes its m×k partial-distance table
-    * against the broadcast codebook (adc = array per subspace of
-    * array per cell of l2sq(query slice, centroid)), then every
-    * encoded row scores as m lookups summed — approximate l2, exact
-    * ranking of the approximation (ties to the smaller vec_id). The
-    * production pattern reranks the ADC shortlist exactly
-    * ([[Similarity.topKCosine]] on the shortlist ids); PqSpec measures
-    * shortlist recall on the worst case (random vectors).
-    */
-  def adcTopK(encoded: DataFrame, codebook: DataFrame, queries: DataFrame,
-      k: Int, m: Int, dsub: Int, numCells: Int): DataFrame = {
-    val tables = queries
-      .crossJoin(broadcast(packed(codebook)))
-      .withColumn("adc",
-        transform(sequence(lit(0), lit(m - 1)), j =>
-          transform(sequence(lit(0), lit(numCells - 1)), c =>
-            l2sqF(slice(col("query_vec"), j * lit(dsub) + 1, lit(dsub)),
-              element_at(
-                filter(col("cb"), cb => cb.getField("subspace") === j &&
-                  cb.getField("cell_id") === c),
-                1).getField("centroid")))))
-      .select(col("query_id"), col("adc"))
-    val scored = encoded.select(col("vec_id"), col("codes"))
-      .join(broadcast(tables), col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id"),
-        aggregate(
-          zip_with(col("codes"), col("adc"),
-            (code, table) => element_at(table, code + 1)),
-          lit(0.0), (acc, x) => acc + x).as("adc_d2"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_d2").asc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
 }

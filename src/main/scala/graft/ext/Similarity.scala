@@ -87,11 +87,16 @@ object Similarity {
     * candidates only. Replaces the O(n²) self-join of
     * [[cosineNearDupPairs]] with L bucket-partitioned joins —
     * approximate (recall 1−(1−pʳ)ᴸ where p = 1−θ/π), measured against
-    * the exact variant in SimilaritySpec.
+    * the exact variant in SimilaritySpec. A bucket id is one long of r
+    * bits, so r ≥ 64 would wrap `1L << i` and silently merge buckets;
+    * bad shapes fail fast instead (r ≤ 62 keeps clear of the sign bit).
     */
   def cosineNearDupPairsLsh(corpus: DataFrame, threshold: Double,
       numTables: Int = 8, planesPerTable: Int = 4, dim: Int = 64,
       materialize: DataFrame => DataFrame = identity): DataFrame = {
+    require(numTables >= 1 && planesPerTable >= 1 && planesPerTable <= 62,
+      s"LSH shape needs numTables >= 1 and planesPerTable in [1, 62], " +
+        s"got numTables=$numTables planesPerTable=$planesPerTable")
     val tables = (0 until numTables).map(t =>
       hyperplanes(planesPerTable, dim, seed = 1042L + t))
     val bucketCols = array(tables.zipWithIndex.map { case (planes, t) =>
@@ -403,24 +408,6 @@ object Similarity {
     (cents, posts)
   }
 
-  /** Incremental serve-side growth: assign a new vector batch with the
-    * index's FROZEN persisted centroids and append its postings — no
-    * retraining, no touch of existing postings, work proportional to
-    * the batch (the q_dedup_incremental band-index contract; re-train
-    * when drift warrants, not per batch). Using the PERSISTED
-    * centroids also keeps the appended cell_id type identical to the
-    * original write whatever centroid source built the index.
-    * SimilaritySpec pins probe(after append) ≡ ivfTopK over the grown
-    * corpus under the same frozen centroids, score-bit-exact.
-    */
-  def appendToIvfIndex(newVecs: DataFrame, dir: String): Unit = {
-    val cents = newVecs.sparkSession.read.parquet(s"$dir/centroids")
-    ivfAssign(newVecs.withColumn("nrm", norm(col("embedding"))),
-        "embedding", cents)
-      .write.mode("append").partitionBy("cell_id")
-      .option("compression", "snappy").parquet(s"$dir/postings")
-  }
-
   /** The SERVE half: top-k cosine over a fitted index — each query
     * ranks the `nprobe` nearest cells against the (tiny, broadcast)
     * centroid frame, then scores ONLY the postings of those cells.
@@ -540,12 +527,6 @@ object Similarity {
           floor(v.cast("double") / scale + 0.5))).cast("int")))
     (scale, codes)
   }
-
-  /** Dequantized reconstruction; SimilaritySpec bounds the max absolute
-    * reconstruction error by scale/2 (the quantizer's half-step).
-    */
-  def dequantizeInt8(codes: Column, scale: Column): Column =
-    transform(codes, c => (c.cast("double") * scale).cast("float"))
 
   /** k-NN label prediction: the exact top-k cosine neighbors of each
     * query vote; majority label wins, ties break toward the smaller

@@ -13,15 +13,6 @@ object TextAnalysis {
   /** Whitespace tokens (matches the oracle's `string_split(text, ' ')`). */
   def tokens(textCol: Column): Column = split(textCol, " ")
 
-  /** BPE-ish subword-boundary token count: splits on whitespace AND at
-    * letter/digit/punctuation boundaries (a cheap stand-in for a real
-    * BPE vocab — the regex is the part Spark must execute at scale).
-    */
-  def bpeishTokenCount(textCol: Column): Column =
-    size(filter(split(textCol,
-      """\s+|(?<=\p{L})(?=\d)|(?<=\d)(?=\p{L})|(?=\p{Punct})|(?<=\p{Punct})"""),
-      t => length(t) > 0))
-
   /** Per-document token Shannon entropy (nats): −Σ p·ln p over the
     * document's token frequency distribution — the diversity/repetition
     * quality signal (template spam scores low, natural text high).

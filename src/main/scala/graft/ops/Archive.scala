@@ -54,12 +54,6 @@ object Archive {
   def unionAll(dfs: Seq[DataFrame]): DataFrame =
     dfs.reduce(_.unionByName(_))
 
-  /** A1 (main.go:194-200): max timestamp of the batch — as a plan node
-    * (partial max per partition + single merge), not a driver-side loop.
-    */
-  def maxTimestamp(tsCol: String)(df: DataFrame): DataFrame =
-    df.agg(max(col(tsCol)).as("max_ts"))
-
   /** S4 (main.go:220-223): hive-style time partition derivation. The
     * reference places the whole batch under ONE `year=/month=` prefix
     * chosen from the max timestamp (lossy when a batch spans months);

@@ -30,9 +30,4 @@ object Scalar {
     * are µs precision; ns = µs*1000 (zero-padded, documented truncation).
     */
   def epochNanos(c: Column): Column = unix_micros(c) * lit(1000L)
-
-  /** F4 (main.go:220-223): the reference's S3 key timestamp format
-    * `20060102_150405` (Go layout) = `yyyyMMdd_HHmmss`.
-    */
-  def archiveKeyStamp(c: Column): Column = date_format(c, "yyyyMMdd_HHmmss")
 }

@@ -1,11 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale mechanics that only matter beyond one machine (SURVEY.md
-  * "100 TB design"): salted joins for skewed keys, bucketed tables for
-  * shuffle-free co-located joins. Both are exercised by ScaleSpec.
+  * "100 TB design"): salted joins for skewed keys, exercised by
+  * ScaleSpec.
   */
 object Scale {
 
@@ -29,21 +29,5 @@ object Scale {
         salted(leftKey) === exploded(rightKey) &&
           salted("__salt") === exploded("__salt"))
       .drop("__salt")
-  }
-
-  /** Write two frames bucketed by their join key: subsequent joins on
-    * that key read co-located buckets and skip the shuffle entirely —
-    * the batch answer to "this join runs every night on 100 TB".
-    * Returns the two re-loaded bucketed tables.
-    */
-  def writeBucketedPair(spark: SparkSession,
-      a: DataFrame, aName: String, aKey: String,
-      b: DataFrame, bName: String, bKey: String,
-      buckets: Int): (DataFrame, DataFrame) = {
-    a.write.mode("overwrite").bucketBy(buckets, aKey).sortBy(aKey)
-      .saveAsTable(aName)
-    b.write.mode("overwrite").bucketBy(buckets, bKey).sortBy(bKey)
-      .saveAsTable(bName)
-    (spark.table(aName), spark.table(bName))
   }
 }

@@ -94,11 +94,11 @@ object ExtQueries {
         .orderBy(col("content_hash"))),
 
     // n-gram Jaccard near-dup via inverted shingle index + groupBy
-    // count (no crossJoin). Measured faster here than the prefix-
-    // filtered AllPairs variant (Dedup.ngramJaccardPairsPrefix, kept +
-    // equivalence-tested): this synthetic corpus's tiny vocabulary
-    // makes per-pair array_intersect verification dominate; on
-    // high-vocabulary corpora the prefix join wins.
+    // count (no crossJoin). Measured faster here than a prefix-filtered
+    // AllPairs variant (removed; see git history): this synthetic
+    // corpus's tiny vocabulary makes per-pair array_intersect
+    // verification dominate; on high-vocabulary corpora the prefix
+    // join wins.
     "q_dedup_ngram" -> ((s, d) => {
       // hashed sets feed both self-join sides as SEPARATE stages (AQE
       // does not reuse the identical exchanges) — materialize once, in
@@ -116,13 +116,15 @@ object ExtQueries {
     // verification-join sides, so materializing it once replaces three
     // full tokenize+shingle evaluations (the bench's top cost in r5:
     // 11.9 s → ~1 s at sf0.1). (numPerms, bands) = (48, 16) ⇒ r=3,
-    // picked with graft.TuneMinhash: vs (64,16,r4) it cuts signature
-    // hashing 25% with a STEEPER at-threshold recall margin
+    // picked by a parameter sweep over the shipped corpora (the sweep
+    // tool is retired; it is in git history up to commit 8b0aa7c): vs
+    // (64,16,r4) it cuts signature hashing 25% with a STEEPER
+    // at-threshold recall margin
     // (P(miss | J=0.8) ≈ 1e-5 vs 2.2e-4 per pair), and vs (32,16,r2)
     // it avoids 7× candidate inflation (274 vs 1938 candidates at
     // sf0.1) that would balloon the verification join on corpora rich
     // in moderate-similarity pairs. Output equals the exact pair set on
-    // both sf0.01 and sf0.1 (TuneMinhash: 0 missing at every config).
+    // both sf0.01 and sf0.1 (the sweep: 0 missing at every config).
     "q_dedup_minhash" -> ((s, d) => {
       // hashed basis (r7): shingles hash once in the native scanner,
       // the 48 permutations salt the 8-byte hashes — the string basis
@@ -173,8 +175,9 @@ object ExtQueries {
     // plan is the bucketed sign-LSH formulation — L bucket-partitioned
     // equi-joins, NOT the O(n²) BroadcastNestedLoopJoin of the exact
     // variant (kept as the verification baseline). (L=24, r=3) tuned
-    // with graft.TuneLsh until the LSH pair set EQUALS the exact set at
-    // sf0.01 and sf0.1 (random embeddings are LSH's worst case — real
+    // by a parameter sweep (retired; in git history up to commit
+    // 8b0aa7c) until the LSH pair set EQUALS the exact set at sf0.01
+    // and sf0.1 (random embeddings are LSH's worst case — real
     // clustered corpora reach recall 1 far cheaper); the exact-cosine
     // post-filter makes precision exactly 1 at any parameters.
     "q_neardup_cosine" -> ((s, d) =>
@@ -351,7 +354,7 @@ object ExtQueries {
       // ONE full tokenize: tf (one row per distinct (doc, token)) also
       // IS the df input, so df = row count per token over tf — a window,
       // not a second aggregation of a re-tokenized corpus. r9 measured
-      // the three shapes at sf0.1 (TimeQ, warm): separate tf/df subtrees
+      // the three shapes at sf0.1 (JobProbe, warm): separate tf/df subtrees
       // 1.26 s (the doc_id<10 filter pushes to the tf-side scan, so the
       // "duplicate" subtree reads 10 docs — cheap but re-plans the
       // corpus scan), localCheckpoint'd toks 2.86 s (materializing ~10M

@@ -49,7 +49,7 @@ object PipelineQueries {
     * Concurrency contract (ADVICE r15): the Spark staging write runs
     * INSIDE computeIfAbsent, holding the bin lock for its duration —
     * fine here because query execution is single-threaded by contract
-    * (Bench/Verify/TimeQ run queries serially) and no build is
+    * (Bench/Verify/JobProbe run queries serially) and no build is
     * re-entrant; a caller that parallelizes queries must first move
     * the build outside the map (per-key futures).
     */

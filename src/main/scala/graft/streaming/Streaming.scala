@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 
@@ -12,7 +12,7 @@ import org.apache.spark.sql.Row
   *
   * Every transform here is defined `DataFrame => DataFrame` so the SAME
   * code runs in batch and streaming — the batch twins are verified
-  * against the DuckDB oracle (q_window_tumbling, q_sessionize), and the
+  * against the DuckDB oracle (q_ohlc_bars, q_sessionize), and the
   * streaming tests assert stream-mode output equals batch-mode output
   * on the same files.
   */
@@ -72,19 +72,6 @@ object Streaming {
     }
   }
 
-  /** Tumbling-window counts+sums per event type, watermarked 1 hour —
-    * late rows beyond the watermark are dropped, state is bounded.
-    * Works identically on a batch frame (watermark is a no-op there).
-    */
-  def tumblingCounts(events: DataFrame, window_ : String = "1 hour",
-      watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_).getField("start").as("bucket_start"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,4)")).cast("double").as("val_sum"))
-
   /** Streaming OHLC bars — the telemetry downsample as an incremental
     * watermarked aggregation. The batch formulation
     * (`TimeSeries.ohlcBars`) rides row_number windows, which streaming
@@ -108,15 +95,6 @@ object Streaming {
         max(key).getField("v").as("close"),
         count(lit(1)).as("n"))
   }
-
-  /** Sliding-window (hopping) aggregation. */
-  def slidingCounts(events: DataFrame, window_ : String = "1 hour",
-      slide: String = "30 minutes", watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_, slide).getField("start").as("bucket_start"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"))
 
   /** Session windows (30-min inactivity gap) — native session_window,
     * the streaming twin of the batch q_sessionize query.
@@ -188,415 +166,5 @@ object Streaming {
         col("s_ts") <= col("p_ts") &&
         col("s_ts") >= col("p_ts") - expr(horizon))
   }
-
-  /** Stream-static enrichment join: each micro-batch joins against a
-    * static dimension frame (re-read per batch if backed by files, so
-    * slowly-changing dims pick up updates without restarting). The
-    * static side broadcasts — no stream-side state, no watermark
-    * needed; this is the scale-correct way to stamp reference data
-    * onto a 100 TB/day event stream.
-    */
-  def enrichWithDim(stream: DataFrame, dim: DataFrame,
-      streamKey: String, dimKey: String): DataFrame =
-    stream.join(broadcast(dim), col(streamKey) === col(dimKey), "left")
-
-  /** Score a document stream against a STATIC persisted bigram model
-    * ([[graft.ext.TextAnalysis.bigramModel]]) — the serving half of
-    * the LM-quality train/serve split: the model trains in batch,
-    * writes to parquet, and every incoming micro-batch scores through
-    * a stream-static join. Single stateful aggregation (streaming
-    * allows only one): bigram INSTANCES join the model and sum per
-    * doc — decimal addition of per-instance lp equals the batch path's
-    * k-weighted sum exactly, so the emitted rows are bit-identical to
-    * [[graft.ext.TextAnalysis.scoreWithBigramModel]] (StreamingSpec).
-    * Unseen bigrams take the `unseenLp` floor and are counted — the
-    * per-batch out-of-domain drift monitor.
-    */
-  def scoreDocsAgainstLm(docs: DataFrame, model: DataFrame,
-      unseenLp: Double = math.log(1e-9)): DataFrame = {
-    import graft.ext.TextAnalysis
-    val lpSeen = log(col("c_bg").cast("double") / col("c_w1").cast("double"))
-      .cast("decimal(18,9)")
-    val lpFloor = lit(BigDecimal(unseenLp)
-      .setScale(9, BigDecimal.RoundingMode.HALF_UP)).cast("decimal(18,9)")
-    docs
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("w"))
-      .select(col("doc_id"),
-        explode(TextAnalysis.bigramsOf(col("w"))).as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .join(model, Seq("w1", "w2"), "left")
-      .select(col("doc_id"),
-        when(col("c_bg").isNull, lpFloor).otherwise(lpSeen).as("lp"),
-        when(col("c_bg").isNull, lit(1L)).otherwise(lit(0L)).as("unseen"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(col("unseen")).as("n_unseen"),
-        ((lit(0.0) - sum(col("lp")).cast("double")) /
-          count(lit(1))).as("nll"))
-  }
-
-  /** Custom streaming state via flatMapGroupsWithState: per-user
-    * running totals emitted on every update — the escape hatch for
-    * stateful logic windowed aggregates can't express (reference's
-    * NOTIFY/LISTEN note, done with bounded state + timeouts).
-    */
-  def runningUserTotals(spark: SparkSession, events: DataFrame):
-      org.apache.spark.sql.Dataset[(Long, Long, Double)] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val typed = events.select(col("user_id").as[Long](org.apache.spark.sql.Encoders.scalaLong),
-      col("value").as[Double](org.apache.spark.sql.Encoders.scalaDouble))
-      .as[(Long, Double)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Double), (Long, Long, Double)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, Double)],
-         state: GroupState[(Long, Double)]) =>
-          val (n0, v0) = state.getOption.getOrElse((0L, 0.0))
-          var n = n0; var v = v0
-          rows.foreach { r => n += 1; v += r._2 }
-          state.update((n, v))
-          Iterator((user, n, v))
-      }
-  }
-
-  /** Per-user running totals on Spark 4's `transformWithState` — the
-    * successor of `flatMapGroupsWithState`: typed named state slots via
-    * `StatefulProcessorHandle`, explicit `TimeMode`, timers, and
-    * per-slot TTL. Requires the RocksDB state store provider (the
-    * 100 TB state backend), which the spec enables. Semantics are the
-    * same as [[runningUserTotals]] — the spec asserts both APIs land on
-    * the batch aggregate.
-    */
-  class RunningTotalsProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Double), (Long, Long, Double)] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    @transient private var totals: ValueState[(Long, Double)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      totals = getHandle.getValueState[(Long, Double)]("totals",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaDouble),
-        TTLConfig.NONE)
-
-    override def handleInputRows(user: Long, rows: Iterator[(Long, Double)],
-        timerValues: TimerValues): Iterator[(Long, Long, Double)] = {
-      val (n0, v0) = if (totals.exists()) totals.get() else (0L, 0.0)
-      var n = n0; var v = v0
-      rows.foreach { r => n += 1; v += r._2 }
-      totals.update((n, v))
-      Iterator((user, n, v))
-    }
-  }
-
-  /** [[runningUserTotals]] re-expressed on the transformWithState API. */
-  def runningUserTotalsTws(spark: SparkSession, events: DataFrame):
-      org.apache.spark.sql.Dataset[(Long, Long, Double)] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    events.select(col("user_id").as[Long](org.apache.spark.sql.Encoders.scalaLong),
-        col("value").as[Double](org.apache.spark.sql.Encoders.scalaDouble))
-      .as[(Long, Double)]
-      .groupByKey(_._1)
-      .transformWithState(new RunningTotalsProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  /** Exactly-once incremental archival: foreachBatch + the idempotent
-    * keyed append (ops/Archive.appendIdempotent). The checkpoint gives
-    * at-least-once batch delivery; the anti-join on archived
-    * (table_name, id) keys makes redelivery a no-op — so a crash
-    * between write and checkpoint commit (the reference's §3.1
-    * duplicate-objects window) produces zero duplicate rows.
-    */
-  def archiveSinkExactlyOnce(events: DataFrame, outDir: String,
-      checkpointDir: String): DataStreamWriter[Row] = {
-    val shaped = events
-      .select(col("event_id").as("id"), col("ts").as("timestamp"),
-        col("user_id").cast("string").as("device_id"), col("value"))
-      .withColumn("table_name", lit("events"))
-    shaped.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        graft.ops.Archive.appendIdempotent(batch.toDF(), outDir): Unit
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-  }
-
-  /** Number of band-hash buckets the near-dup store's band index is
-    * partitioned into. A micro-batch probes at most this many
-    * partitions (usually all of them only when the batch itself is
-    * huge); the point is that each batch READ is pruned to the buckets
-    * its own bands hash into, so probe cost follows batch size, not
-    * store size.
-    */
-  val NearDupBandBuckets = 64
-
-  /** Continuous near-dup-deduplicated corpus ingestion (the streaming
-    * face of MinHash-LSH dedup): each micro-batch of (doc_id, text,
-    * ...) rows is near-dup-checked within itself AND against
-    * everything already accepted, and only survivors append to the
-    * store.
-    *
-    * Store layout — two directories under `storeDir`:
-    *  - `docs/`: one row per accepted doc carrying ALL the batch's
-    *    columns plus its shingle set and MinHash signature (survivors
-    *    are directly usable; nothing from the batch is dropped).
-    *  - `bands/`: the dedup index — (doc_id, band_id, band_hash) rows
-    *    PARTITIONED BY bucket = pmod(band_hash, [[NearDupBandBuckets]]).
-    *    A batch's probe computes its own bands, then reads ONLY the
-    *    matching bucket partitions (partition-pruned scan, asserted in
-    *    StreamingSpec) — replacing r6's whole-store read+checkpoint
-    *    per micro-batch with work proportional to the batch.
-    * Candidate verification joins the (small) candidate id set back to
-    * `docs/` for stored shingles, and replay idempotence anti-joins on
-    * `docs/` ids — both column-pruned scans; at 100 TB bucket `docs/`
-    * by doc_id so these joins prune too.
-    *
-    * Semantics: greedy by arrival — docs are considered in id order
-    * within a batch; a doc is rejected iff it is J ≥ threshold similar
-    * to an already-ACCEPTED doc (store or earlier SURVIVOR of its own
-    * batch). This is the exact sequential greedy: a doc whose only
-    * near-dup partners were themselves rejected IS accepted (computed
-    * by bounded minimal-node iteration, not the r6 approximation that
-    * dropped the higher id of every pair). An accepted doc is never
-    * retroactively dropped (append-only store). Checkpoint replay is
-    * harmless: survivors re-append through an anti-join on stored
-    * doc_ids (zero duplicates — same idempotence contract as
-    * [[archiveSinkExactlyOnce]]). Docs too short to shingle (< n
-    * tokens, or NULL text) cannot be near-dup-compared and pass
-    * STRAIGHT THROUGH to the store (null signature/shingles — banding
-    * skips them); compose with exact dedup upstream if byte-identical
-    * short docs must collapse.
-    */
-  def nearDupDedupSink(docs: DataFrame, storeDir: String,
-      checkpointDir: String, n: Int = 3, numPerms: Int = 48,
-      bands: Int = 16, threshold: Double = 0.8): DataStreamWriter[Row] = {
-    // fail at sink CONSTRUCTION, not inside the first foreachBatch —
-    // a bad parameter inside the batch would throw on every replay
-    requireNearDupParams(n, numPerms, bands, threshold)
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        acceptNearDupBatch(batch.toDF(), storeDir, n, numPerms, bands,
-          threshold): Unit
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-  }
-
-  /** Parameter guard shared by the sink and the batch-callable entry:
-    * mirrors [[graft.ext.Dedup.minhashNearDupPairsFromSets]] (divisible
-    * positive perms/bands) and [[graft.ext.Curation.dropNearDupes]]
-    * (strictly positive threshold) — this path REJECTS docs
-    * irreversibly, so t = 0, which would reject every co-posting doc
-    * from the corpus forever, is a config error, not a setting; a
-    * non-divisible (numPerms, bands) would silently drop
-    * numPerms % bands permutations from every STORED signature, baking
-    * recall loss into the store.
-    */
-  private def requireNearDupParams(n: Int, numPerms: Int, bands: Int,
-      threshold: Double): Unit = {
-    require(n >= 1, s"shingle size must be >= 1, got $n")
-    require(threshold > 0 && threshold <= 1,
-      s"near-dup reject threshold must be in (0, 1], got $threshold")
-    require(numPerms >= 1 && bands >= 1 && numPerms % bands == 0,
-      s"numPerms ($numPerms) must be a positive multiple of bands ($bands)")
-  }
-
-  /** The band index a batch probes against, pruned to `buckets`: the
-    * partition filter reaches the parquet scan, so only matching
-    * bucket directories are read (StreamingSpec asserts via
-    * inputFiles). Factored out so the spec exercises the exact read
-    * path the sink uses.
-    */
-  def probeBands(spark: SparkSession, bandsDir: String,
-      buckets: Seq[Int]): DataFrame =
-    spark.read.parquet(bandsDir)
-      .filter(col("bucket").isin(buckets: _*))
-      .select(col("doc_id"), col("band_id"), col("band_hash"))
-
-  /** One micro-batch of the greedy streaming near-dup dedup; returns the
-    * number of newly accepted docs. Batch-callable (backfill works the
-    * same way, one chunk at a time).
-    */
-  def acceptNearDupBatch(batch: DataFrame, storeDir: String, n: Int,
-      numPerms: Int, bands: Int, threshold: Double): Long = {
-    import graft.ext.Dedup
-    requireNearDupParams(n, numPerms, bands, threshold)
-    val spark = batch.sparkSession
-    val rowsPerBand = numPerms / bands
-    val docsDir = s"$storeDir/docs"
-    val bandsDir = s"$storeDir/bands"
-    // Layout guard: before the docs/ + bands/ split, the store was flat
-    // parquet directly under storeDir. readOpt would treat such a store
-    // as empty — silently re-accepting near-dups of every already-
-    // accepted doc — so fail loudly instead. A config/layout error is
-    // the one case where throwing in foreachBatch is right: replay
-    // keeps failing (visibly) until the operator migrates, rather than
-    // corrupting the store on the first batch. Migration: rewrite the
-    // flat store's rows into docs/ and re-derive bands/ from its
-    // signatures (see DEPLOY.md).
-    // Hadoop FS, not java.io.File: the store can live on any FS the
-    // sink writes to (hdfs://, s3a://, file:) — a local-only check
-    // would silently skip the guard exactly where replay corruption is
-    // hardest to notice.
-    val storePath = new org.apache.hadoop.fs.Path(storeDir)
-    val storeFs = storePath.getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val flatFiles =
-      if (storeFs.exists(storePath)) storeFs.listStatus(storePath)
-      else Array.empty[org.apache.hadoop.fs.FileStatus]
-    if (flatFiles.exists(f => f.isFile &&
-        (f.getPath.getName.endsWith(".parquet") ||
-          f.getPath.getName.endsWith(".parquet.crc"))))
-      throw new IllegalStateException(
-        s"near-dup store at $storeDir uses the pre-split flat parquet " +
-          "layout; migrate it to docs/ + bands/ (DEPLOY.md 'Store " +
-          "layout migration') before resuming ingestion")
-    def readOpt(dir: String): Option[DataFrame] =
-      try Some(spark.read.parquet(dir))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" ||
-              e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
-      }
-    val uniq = batch.dropDuplicates("doc_id")
-    // batch-side state, materialized once: shingle sets + signatures
-    val sets = Dedup.shingleSets(uniq, "text", "doc_id", n).localCheckpoint()
-    val sigs = Dedup.minhashSignatures(sets, numPerms).localCheckpoint()
-    // the asymmetric generalization of minhashNearDupPairsFromSets'
-    // exact-Jaccard verification (two set frames instead of one self-
-    // joined) — keep the formula in sync with Dedup's
-    def verified(cands: DataFrame, setsA: DataFrame, setsB: DataFrame) =
-      cands
-        .join(setsA.select(col("doc_id").as("a_id"), col("shingles").as("sha")), "a_id")
-        .join(setsB.select(col("doc_id").as("b_id"), col("shingles").as("shb")), "b_id")
-        .filter(size(array_intersect(col("sha"), col("shb"))).cast("double") /
-          size(array_union(col("sha"), col("shb"))) >= threshold)
-    // within-batch verified near-dup pairs (a_id < b_id)
-    val withinPairs = verified(
-        Dedup.lshCandidates(sigs, bands, rowsPerBand, _.localCheckpoint()),
-        sets, sets)
-      .select(col("a_id"), col("b_id")).localCheckpoint()
-    // vs the accepted store: band the BATCH signatures, read only the
-    // band-index buckets those hashes land in (partition-pruned)
-    val newBanded = Dedup.bandedSignatures(sigs, bands, rowsPerBand)
-      .withColumn("bucket",
-        pmod(col("band_hash"), lit(NearDupBandBuckets.toLong)).cast("int"))
-      .localCheckpoint()
-    val docsStore = readOpt(docsDir)
-    val storeDrops = (docsStore, readOpt(bandsDir)) match {
-      case (Some(st), Some(_)) =>
-        val buckets = newBanded.select(col("bucket")).distinct()
-          .collect().map(_.getInt(0)).toSeq // ≤ NearDupBandBuckets values
-        val oldBanded = probeBands(spark, bandsDir, buckets)
-        val cands = newBanded.as("a").join(oldBanded.as("b"),
-            col("a.band_id") === col("b.band_id") &&
-              col("a.band_hash") === col("b.band_hash"))
-          .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-          .distinct()
-        verified(cands, sets, st.select(col("doc_id"), col("shingles")))
-          .select(col("a_id").as("doc_id")).distinct()
-      case _ => spark.emptyDataFrame.withColumn("doc_id", lit(0L)).limit(0)
-    }
-    val existingIds = docsStore.map(_.select(col("doc_id")))
-      .getOrElse(storeDrops.select(col("doc_id")).limit(0))
-    // EXACT sequential greedy by id over the within-batch pair graph,
-    // seeded with the store rejections: round k accepts the MINIMAL
-    // nodes (no remaining lower-id candidate partner), then removes
-    // their higher-id partners; converges in chain-depth rounds (the
-    // near-dup graph is near-clique, so 1-2 in practice). Start from
-    // EVERY batch doc id — docs absent from `sets` (under n tokens /
-    // NULL text) have no shingles to compare and must pass through,
-    // not silently vanish; they are never a pair endpoint, so round 1
-    // accepts them.
-    var candidates = uniq.select(col("doc_id"))
-      .join(storeDrops, Seq("doc_id"), "left_anti")
-      .join(existingIds, Seq("doc_id"), "left_anti") // replay idempotence
-      .localCheckpoint()
-    var pairs = withinPairs
-      .join(candidates.select(col("doc_id").as("a_id")), Seq("a_id"))
-      .join(candidates.select(col("doc_id").as("b_id")), Seq("b_id"))
-      .localCheckpoint()
-    var acceptedIds = candidates.limit(0)
-    var done = pairs.isEmpty // common case: no within-batch near-dups
-    if (done) acceptedIds = candidates
-    // Round cap: peeling depth equals the greedy chain depth, which is
-    // 1-2 for near-clique dup groups. If a pathological batch (a
-    // >1000-deep drifting-boilerplate chain) hits the cap, FAIL SAFE
-    // by dropping every still-undecided doc rather than throwing —
-    // a thrown foreachBatch error would replay the same poison batch
-    // forever, while over-dropping keeps the store invariant (no two
-    // accepted docs are near-dups) at the cost of some false drops.
-    var rounds = 0
-    while (!done && rounds < 1000) {
-      val minimal = candidates.join(
-        pairs.select(col("b_id").as("doc_id")), Seq("doc_id"), "left_anti")
-        .localCheckpoint()
-      if (minimal.isEmpty) done = true
-      else {
-        acceptedIds = acceptedIds.union(minimal).localCheckpoint()
-        val rejected = pairs
-          .join(minimal.select(col("doc_id").as("a_id")), Seq("a_id"))
-          .select(col("b_id").as("doc_id")).distinct()
-        candidates = candidates
-          .join(minimal, Seq("doc_id"), "left_anti")
-          .join(rejected, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        pairs = pairs
-          .join(candidates.select(col("doc_id").as("a_id")), Seq("a_id"))
-          .join(candidates.select(col("doc_id").as("b_id")), Seq("b_id"))
-          .localCheckpoint()
-        if (candidates.isEmpty) done = true
-      }
-      rounds += 1
-    }
-    // Fail-safe over-drop must be OBSERVABLE: if the cap fired, every
-    // still-undecided doc is being dropped — record how many, so an
-    // operator can distinguish "converged" from "gave up".
-    if (!done) {
-      val dropped = candidates.count()
-      if (dropped > 0)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"near-dup peeling hit the $rounds-round cap; force-dropping " +
-            s"$dropped undecided doc(s) to keep the store invariant " +
-            "(no two accepted docs are near-dups)")
-    }
-    val accepted = uniq
-      .join(acceptedIds, Seq("doc_id"), "left_semi")
-      .join(sets, Seq("doc_id"), "left")
-      .join(sigs, Seq("doc_id"), "left")
-    val nAccepted = accepted.count()
-    if (nAccepted > 0) {
-      // WRITE ORDER IS THE CRASH-SAFETY INVARIANT: bands/ first, docs/
-      // second. Replay idempotence keys on docs/ ids, so a crash
-      // between the two writes must leave the doc ABSENT from docs/
-      // (replay re-accepts it and re-appends both) — the reverse order
-      // would strand an accepted doc with no index rows, and its
-      // future near-dups would be accepted forever. The benign cost is
-      // duplicate band rows after such a replay; every candidate set
-      // downstream is distinct()'d, so duplicates change nothing.
-      Dedup.bandedSignatures(
-          sigs.join(acceptedIds, Seq("doc_id"), "left_semi"),
-          bands, rowsPerBand)
-        .withColumn("bucket",
-          pmod(col("band_hash"), lit(NearDupBandBuckets.toLong)).cast("int"))
-        .write.mode("append").partitionBy("bucket")
-        .option("compression", "snappy").parquet(bandsDir)
-      accepted.write.mode("append")
-        .option("compression", "snappy").parquet(docsDir)
-    }
-    nAccepted
-  }
-
-  /** Drive a streaming query over already-present files to completion
-    * (test/backfill helper): processes everything available, then stops.
-    */
-  def runToCompletion(q: StreamingQuery): Unit = {
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-  }
 }
+

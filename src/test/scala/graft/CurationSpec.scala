@@ -36,23 +36,16 @@ class CurationSpec extends AnyFunSuite {
     pairs.foreach { case (a, b, _) =>
       assert(!out.contains(b), s"higher id $b of pair ($a,$b) survived")
     }
-  }
-
-  test("transitive near-dup drop keeps ONE doc per component where the " +
-      "pairwise rule keeps one per pair") {
     // J(1,5)=J(2,5)=0.8, J(1,2)=0.6 — at threshold 0.7 the pairs are
     // (1,5) and (2,5): doc 2's only pair is with a HIGHER id, so the
-    // pairwise rule keeps {1,2}; the component {1,2,5} keeps only 1.
+    // pairwise rule keeps {1,2} (not transitive: one drop per pair)
     val tri = Seq(
       (1L, "a b c d e f"),
       (2L, "b c d e f g"),
       (5L, "a b c d e f g")).toDF("doc_id", "text")
     val pairwise = Curation.dropNearDupes(tri, "text", "doc_id", 0.7)
       .select("doc_id").as[Long].collect().toSet
-    val transitive = Curation.dropNearDupesTransitive(tri, "text", "doc_id", 0.7)
-      .select("doc_id").as[Long].collect().toSet
     assert(pairwise == Set(1L, 2L))
-    assert(transitive == Set(1L))
   }
 
   test("classifier filter keeps docs aligned with the quality direction") {

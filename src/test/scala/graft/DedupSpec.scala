@@ -28,16 +28,6 @@ class DedupSpec extends AnyFunSuite {
     assert(s(2L).toSet == Set("a b c", "b c d"))
   }
 
-  test("minhash LSH pairs equal exact ngram-jaccard pairs at J>=0.8 " +
-      "(recall ~1 at b=16,r=4)") {
-    val exact = Dedup.ngramJaccardPairs(docs, "text", "doc_id", 3, 0.8)
-      .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    val lsh = Dedup.minhashNearDupPairs(docs, "text", "doc_id", 3, 64, 16, 0.8)
-      .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    assert(exact.nonEmpty, "fixture should contain near-dup pairs")
-    assert(lsh == exact)
-  }
-
   test("hashed-basis minhash LSH pairs equal the exact pair set too — " +
       "at BOTH the spec config (64,16) and the shipped (48,16)") {
     val exact = Dedup.ngramJaccardPairs(docs, "text", "doc_id", 3, 0.8)
@@ -49,17 +39,6 @@ class DedupSpec extends AnyFunSuite {
       assert(lsh == exact, s"($perms, $bands)")
     }
     assert(exact.nonEmpty)
-  }
-
-  test("prefix-filtered jaccard join equals the naive inverted-index join") {
-    for (t <- Seq(0.6, 0.8)) {
-      val naive = Dedup.ngramJaccardPairs(docs, "text", "doc_id", 3, t)
-        .as[(Long, Long, Double)].collect().toSet
-      val prefix = Dedup.ngramJaccardPairsPrefix(docs, "text", "doc_id", 3, t)
-        .as[(Long, Long, Double)].collect().toSet
-      assert(prefix == naive, s"threshold $t")
-      assert(naive.nonEmpty)
-    }
   }
 
   test("hashed-sets jaccard equals the string-sets jaccard") {
@@ -157,8 +136,6 @@ class DedupSpec extends AnyFunSuite {
     // slice crash mid-job (prefix) or a silent empty frame (baselines)
     for (bad <- Seq(1.0000001, 1.5)) {
       intercept[IllegalArgumentException](
-        Dedup.ngramJaccardPairsPrefix(docs, "text", "doc_id", 3, bad))
-      intercept[IllegalArgumentException](
         Dedup.ngramJaccardPairsFromHashedSets(hsets, bad))
       intercept[IllegalArgumentException](
         Dedup.ngramJaccardPairsFromSets(sets, bad))
@@ -174,31 +151,29 @@ class DedupSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       Dedup.minhashNearDupPairsFromHashedSets(hsets, 48, 16, 1.5))
     intercept[IllegalArgumentException](
-      Dedup.minhashNearDupPairsFromSets(sets, 48, 16, 0.0))
+      Dedup.minhashNearDupPairsFromHashedSets(hsets, 48, 16, 0.0))
     intercept[IllegalArgumentException](
-      Dedup.minhashNearDupPairsFromSets(sets, 50, 16, 0.8))
+      Dedup.minhashNearDupPairsFromHashedSets(hsets, 50, 16, 0.8))
     // "positive multiple" means positive: 0 and negative exact
     // multiples (0 % b == 0, -16 % 16 == 0) must not slip through to
     // an opaque head-of-empty-list crash in signature construction
     intercept[IllegalArgumentException](
-      Dedup.minhashNearDupPairsFromSets(sets, 0, 1, 0.8))
+      Dedup.minhashNearDupPairsFromHashedSets(hsets, 0, 1, 0.8))
     intercept[IllegalArgumentException](
       Dedup.minhashNearDupPairsFromHashedSets(hsets, -16, 16, 0.8))
     intercept[IllegalArgumentException](
       Dedup.simhashNearDupPairs(docs, "text", "doc_id", maxHamming = 4))
     intercept[IllegalArgumentException](
       graft.ext.Curation.dropNearDupes(docs, "text", "doc_id", 0.0))
-    intercept[IllegalArgumentException](
-      graft.ext.Curation.dropNearDupesTransitive(docs, "text", "doc_id", 0.0))
     // boundaries stay legal: 1.0 (exact duplicates only) and 0.0 (every
     // co-posting pair — what the property tests enumerate with); prefix
-    // and baseline agree at both
+    // and baseline, hashed and string sets agree at both
     val p0 = Dedup.containmentPairsPrefix(hsets, 1.0)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     val b0 = Dedup.containmentPairsFromSets(sets, 1.0)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(p0 == b0)
-    val j0 = Dedup.ngramJaccardPairsPrefix(docs, "text", "doc_id", 3, 0.0)
+    val j0 = Dedup.ngramJaccardPairsFromHashedSets(hsets, 0.0)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     val jb = Dedup.ngramJaccardPairsFromSets(sets, 0.0)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet

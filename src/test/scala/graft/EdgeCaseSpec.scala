@@ -17,7 +17,8 @@ class EdgeCaseSpec extends AnyFunSuite {
   test("dedup ops on an empty corpus return empty, not error") {
     assert(Dedup.exactGroups(emptyDocs, "text", "doc_id").isEmpty)
     assert(Dedup.ngramJaccardPairs(emptyDocs, "text", "doc_id", 3, 0.5).isEmpty)
-    assert(Dedup.minhashNearDupPairs(emptyDocs, "text", "doc_id").isEmpty)
+    assert(Dedup.minhashNearDupPairsFromHashedSets(
+      Dedup.hashedShingleSets(emptyDocs, "text", "doc_id"), 48, 16, 0.8).isEmpty)
     assert(Dedup.simhashNearDupPairs(emptyDocs, "text", "doc_id").isEmpty)
   }
 
@@ -59,7 +60,8 @@ class EdgeCaseSpec extends AnyFunSuite {
   test("round-6 corpus ops on degenerate inputs: empty corpus, " +
       "single/uniform tokens") {
     // empty corpus: every op returns empty, not an error
-    assert(Dedup.containmentPairs(emptyDocs, "text", "doc_id").isEmpty)
+    assert(Dedup.containmentPairsFromSets(
+      Dedup.shingleSets(emptyDocs, "text", "doc_id"), 0.9).isEmpty)
     assert(TextAnalysis.tokenEntropy(emptyDocs, "text", "doc_id").isEmpty)
     assert(TextAnalysis.charClasses(emptyDocs, "text", "doc_id").isEmpty)
     assert(TextAnalysis.zipfSlope(emptyDocs, "text").count() == 1) // global agg row
@@ -84,7 +86,8 @@ class EdgeCaseSpec extends AnyFunSuite {
       (1L, "p q r s t"),                          // 3 shingles
       (2L, "p q r s t u v w x y z a b c d e f")) // superset text
       .toDF("doc_id", "text")
-    val cp = Dedup.containmentPairs(subset, "text", "doc_id", 3, 0.99)
+    val cp = Dedup.containmentPairsFromSets(
+        Dedup.shingleSets(subset, "text", "doc_id", 3), 0.99)
       .select("a_id", "b_id", "containment")
       .as[(Long, Long, Double)].collect()
     assert(cp.toSeq == Seq((1L, 2L, 1.0)))

@@ -141,15 +141,4 @@ class MultimodalSpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql("q_multimodal_audio")
       .contains("2989624363592580595"))
   }
-
-  test("frame sampling explodes video rows only, at the requested cadence") {
-    val m = Multimodal.syntheticMedia(spark, 30)
-    val frames = Multimodal.sampleFrames(m, everyMs = 1000)
-    val kinds = m.filter(col("kind") === "video").count()
-    assert(frames.select("media_id").distinct().count() == kinds)
-    val one = frames.filter(col("media_id") === 2)
-      .select("frame_offset_ms").as[Long].collect().sorted
-    assert(one.headOption.contains(0L))
-    assert(one.zip(one.tail).forall { case (a, b) => b - a == 1000L })
-  }
 }

@@ -137,52 +137,6 @@ class PcaSpec extends AnyFunSuite {
       0.01965, 0.01924, 0.01911), er3.toString)
   }
 
-  test("model persistence round trip: load∘save is the identity and " +
-      "projections through a reloaded model are bit-identical") {
-    val emb = graft.model.Tables.embeddings(spark, TestSpark.Sf0001)
-    val m = Pca.fit(emb, "embedding", k = 8, dim = 64)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_pca_model").toString
-    try {
-      Pca.saveModel(spark, m, dir)
-      val m2 = Pca.loadModel(spark, dir)
-      // exact equality, not tolerance: doubles round-trip parquet
-      // bit-exactly, so the reloaded model IS the fitted model
-      assert(m2.mean.toSeq == m.mean.toSeq)
-      assert(m2.eigenvalues.toSeq == m.eigenvalues.toSeq)
-      assert(m2.totalVariance == m.totalVariance)
-      assert(m2.components.map(_.toSeq).toSeq ==
-        m.components.map(_.toSeq).toSeq)
-      // and therefore so are the projections (the serve-side contract:
-      // a cluster that loads the persisted frame projects exactly what
-      // the training JVM would have)
-      val a = Pca.project(emb, "embedding", m)
-        .select(col("vec_id"), col("proj"))
-        .as[(Long, Seq[Double])].collect().toMap
-      val b = Pca.project(emb, "embedding", m2)
-        .select(col("vec_id"), col("proj"))
-        .as[(Long, Seq[Double])].collect().toMap
-      assert(a.keySet == b.keySet)
-      a.foreach { case (id, p) =>
-        assert(p.map(java.lang.Double.doubleToLongBits) ==
-          b(id).map(java.lang.Double.doubleToLongBits), s"vec $id")
-      }
-    } finally graft.model.Tables.rmrf(dir)
-  }
-
-  test("loadModel fails loudly on a truncated or foreign frame") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_pca_bad").toString
-    try {
-      // a frame missing the mean row (components only)
-      Seq(("component", 0, Array(1.0, 0.0), Option(1.0)))
-        .toDF("kind", "idx", "vals", "scalar")
-        .write.mode("overwrite").parquet(dir)
-      val e = intercept[IllegalStateException](Pca.loadModel(spark, dir))
-      assert(e.getMessage.contains("mean"))
-    } finally graft.model.Tables.rmrf(dir)
-  }
-
   test("truncation reconstruction error shrinks as k grows and equals " +
       "the discarded eigenvalue mass") {
     val emb = graft.model.Tables.embeddings(spark, TestSpark.Sf0001)

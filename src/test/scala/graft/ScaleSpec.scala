@@ -6,7 +6,7 @@ import graft.model.Tables
 import graft.ops.Scale
 
 /** Scale mechanics: salted joins preserve semantics while spreading hot
-  * keys; bucketed tables join with zero shuffle (no Exchange in plan).
+  * keys; AQE, prefix filters and orientation keep skewed work bounded.
   */
 class ScaleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -25,25 +25,6 @@ class ScaleSpec extends AnyFunSuite {
       .select("k", "payload", "tag").as[(Long, Long, String)].collect().toSet
     assert(salted == plain)
     assert(plain.count(_._1 == -1L) == 1000)
-  }
-
-  test("bucketed tables join without a shuffle (no Exchange above the scans)") {
-    val o = Tables.orders(spark, TestSpark.Sf0001)
-    val l = Tables.lineitem(spark, TestSpark.Sf0001)
-    val (bo, bl) = Scale.writeBucketedPair(spark,
-      o, "orders_b", "o_orderkey", l, "lineitem_b", "l_orderkey", 8)
-    val joined = bo.join(bl, col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning(o_orderkey"),
-      "orders side shuffled:\n" + plan)
-    assert(!plan.contains("Exchange hashpartitioning(l_orderkey"),
-      "lineitem side shuffled:\n" + plan)
-    // results still correct vs the unbucketed join
-    val expect = o.join(l, col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
-      .as[(String, Long)].collect().toSet
-    assert(joined.as[(String, Long)].collect().toSet == expect)
   }
 
   test("AQE coalesces over-provisioned shuffle partitions at runtime") {
@@ -187,59 +168,6 @@ class ScaleSpec extends AnyFunSuite {
     val baseline = Dedup.containmentPairsFromSets(sets, t)
       .as[(Long, Long, Double)].collect().toSet
     val viaPrefix = Dedup.containmentPairsPrefix(hsets, t)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(viaPrefix == baseline)
-  }
-
-  test("one shingle hot in 50% of docs: unpruned candidates go quadratic " +
-      "in the hot docs, the jaccard prefix filter stays sub-quadratic " +
-      "with zero recall loss") {
-    // The adversarial skew regime for the inverted index: vocabularies
-    // are otherwise disjoint per doc (replica-prefixed tokens), but ONE
-    // 3-gram shingle is injected into every even doc. Each hot doc
-    // collides with every other hot doc on that single posting, so the
-    // unpruned join's output has a hard C(hot, 2) floor — quadratic in
-    // the hot-doc count, unbounded at corpus scale. The prefix filter
-    // only emits the collision when the hot hash sorts into BOTH docs'
-    // ~(1−t)·n_sh prefixes (≈ (1−t)² of hot pairs) and the length
-    // filter prunes the rest — candidates stay a small fraction.
-    import graft.ext.Dedup
-    // per-doc-disjoint vocab (replica-prefixed tokens), hot 3-gram
-    // prepended to every even doc — ONE definition of the prefixing so
-    // hot and cold vocabularies can't silently diverge
-    val disjointVocab = expr("concat_ws(' ', transform(split(text, ' '), " +
-      "w -> concat('d', CAST(doc_id AS STRING), '_', w)))")
-    val docs = Tables.documents(spark, TestSpark.Sf0001)
-      .select(col("doc_id"),
-        when(col("doc_id") % 2 === 0,
-            concat(lit("hot0 hot1 hot2 "), disjointVocab))
-          .otherwise(disjointVocab)
-          .as("text"))
-    val t = 0.8
-    val hsets = Dedup.hashedShingleSets(docs, "text", "doc_id", 3)
-      .localCheckpoint()
-    val hotDocs = docs.filter(col("doc_id") % 2 === 0).count()
-    val quadraticFloor = hotDocs * (hotDocs - 1) / 2
-    val full = hsets.select(col("doc_id"), col("n_sh"),
-      explode(col("shs")).as("sh"))
-    val unpruned = full.as("a").join(full.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .count()
-    // production candidate joins (shared helpers — never a stale twin)
-    val jacPref = Dedup.jaccardPrefixCandidateRows(hsets, t).count()
-    val conPref = Dedup.containmentPrefixCandidateRows(hsets, t).count()
-    assert(unpruned >= quadraticFloor,
-      s"expected the quadratic hot-pair floor $quadraticFloor, got $unpruned")
-    assert(jacPref < unpruned / 4,
-      s"jaccard prefix did not prune the hot shingle: $jacPref of $unpruned")
-    info(f"hot-in-50%% candidates: unpruned $unpruned (floor " +
-      f"$quadraticFloor from $hotDocs hot docs), jaccard-prefix $jacPref " +
-      f"(${100.0 * jacPref / unpruned}%.1f%%), containment-prefix $conPref " +
-      f"(${100.0 * conPref / unpruned}%.1f%%)")
-    // pruning loses nothing: prefix output == unpruned-blocking output
-    val viaPrefix = Dedup.ngramJaccardPairsPrefix(docs, "text", "doc_id", 3, t)
-      .as[(Long, Long, Double)].collect().toSet
-    val baseline = Dedup.ngramJaccardPairsFromHashedSets(hsets, t)
       .as[(Long, Long, Double)].collect().toSet
     assert(viaPrefix == baseline)
   }

@@ -117,6 +117,14 @@ class SimilaritySpec extends AnyFunSuite {
     assert(recall >= 0.3, s"recall=$recall")
   }
 
+  test("LSH near-dup pairs reject shapes that would silently corrupt " +
+      "buckets: planesPerTable = 64 and numTables = 0 throw up front") {
+    intercept[IllegalArgumentException](
+      Similarity.cosineNearDupPairsLsh(emb, 0.4, planesPerTable = 64))
+    intercept[IllegalArgumentException](
+      Similarity.cosineNearDupPairsLsh(emb, 0.4, numTables = 0))
+  }
+
   test("r16 first-collision dedup: the LSH candidate set equals the " +
       "any-table-collision set, each pair exactly once, across (L, r) " +
       "word-packing shapes") {
@@ -367,40 +375,6 @@ class SimilaritySpec extends AnyFunSuite {
     } finally Tables.rmrf(dir)
   }
 
-  test("incremental IVF serve: a new batch appends postings under the " +
-      "FROZEN persisted centroids; probes over the grown index equal " +
-      "the one-shot answer over the grown corpus, score-bit-exact") {
-    // the serve-side growth contract (DEPLOY.md): index half the
-    // corpus, append the other half via appendToIvfIndex (assignment
-    // only — no retraining, no touch of existing postings), and the
-    // served top-k must equal ivfTopK over the WHOLE corpus under the
-    // same frozen centroids
-    val base = emb.filter(col("vec_id") % 2 === 0)
-    val incr = emb.filter(col("vec_id") % 2 === 1)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_incr").toString
-    try {
-      val (c0, p0) = Similarity.ivfIndex(base, cells = 8)
-      Similarity.writeIvfIndex(c0, p0, dir)
-      Similarity.appendToIvfIndex(incr, dir)
-      val (c2, p2) = Similarity.readIvfIndex(spark, dir)
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.select(col("query_id"), col("rank"), col("vec_id"), col("score"))
-          .as[(Long, Int, Long, Double)].collect()
-          .map { case (a, b, c, s) =>
-            (a, b, c, java.lang.Double.doubleToLongBits(s)) }.toSet
-      val served = rows(Similarity.ivfProbe(c2, p2, queries, k = 10,
-        nprobe = 3))
-      val oneShot = rows(Similarity.ivfTopK(emb, queries, k = 10,
-        cells = 8, nprobe = 3,
-        centroids = Some(spark.read.parquet(s"$dir/centroids"))))
-      assert(served == oneShot)
-      // the appended batch is genuinely probed: odd ids reach the top-k
-      assert(served.exists(_._3 % 2 == 1),
-        "no appended (odd-id) vector ever surfaced in a probe result")
-    } finally Tables.rmrf(dir)
-  }
-
   test("int8 quantization: codes in [-127,127], max element hits ±127, " +
     "reconstruction error bounded by scale/2") {
     val (scaleC, codesC) = Similarity.quantizeInt8(col("embedding"))
@@ -414,10 +388,9 @@ class SimilaritySpec extends AnyFunSuite {
       .filter(!exists(col("codes"), c => abs(c) === 127)).count()
     assert(hasExtreme == 0)
     // |v - code*scale| ≤ scale/2 element-wise
-    val recon = Similarity.dequantizeInt8(col("codes"), col("scale"))
     val overErr = q.withColumn("err",
-        array_max(zip_with(col("embedding"), recon,
-          (a, b) => abs(a.cast("double") - b.cast("double")))))
+        array_max(zip_with(col("embedding"), col("codes"),
+          (a, c) => abs(a.cast("double") - c.cast("double") * col("scale")))))
       .filter(col("err") > col("scale") / 2 + 1e-12).count()
     assert(overErr == 0)
     // zero vector: scale 0, all-zero codes

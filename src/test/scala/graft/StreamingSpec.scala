@@ -21,23 +21,11 @@ class StreamingSpec extends AnyFunSuite {
     dir
   }
 
-  test("tumbling-window streaming agg equals batch agg on same files") {
-    val dir = eventsDir
-    val stream = Streaming.readEventsStream(spark, dir, maxFilesPerTrigger = 1)
-    val q = Streaming.tumblingCounts(stream)
-      .writeStream.format("memory").queryName("tumble_out")
-      .outputMode("complete").start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("tumble_out")
-      .select("bucket_start", "event_type", "n", "val_sum")
-      .as[(java.sql.Timestamp, String, Long, Double)].collect().toSet
-    val batch = Streaming.tumblingCounts(Tables.events(spark, TestSpark.Sf0001))
-      .select("bucket_start", "event_type", "n", "val_sum")
-      .as[(java.sql.Timestamp, String, Long, Double)].collect().toSet
-    assert(streamed == batch)
-    assert(streamed.nonEmpty)
-  }
+  private type Bar = (java.sql.Timestamp, String, Double, Double, Double, Double, Long)
+
+  private def bars(df: org.apache.spark.sql.DataFrame): Set[Bar] =
+    df.select("bucket_start", "event_type", "open", "high", "low", "close", "n")
+      .as[Bar].collect().toSet
 
   test("streaming OHLC bars equal the batch struct-encoded twin AND the " +
       "registered row_number-window q_ohlc_bars on the same files") {
@@ -76,16 +64,15 @@ class StreamingSpec extends AnyFunSuite {
       .createTempDirectory("graft_stream_us").toString
     Tables.eventsNative(spark, TestSpark.Sf0001).coalesce(2)
       .write.mode("overwrite").parquet(nativeDir)
-    def run(dir: String, name: String): Set[(java.sql.Timestamp, String, Long, Double)] = {
-      val q = Streaming.tumblingCounts(Streaming.readEventsStream(spark, dir))
+    def run(dir: String, name: String): Set[Bar] = {
+      val q = Streaming.ohlcBars(Streaming.readEventsStream(spark, dir))
         .writeStream.format("memory").queryName(name)
         .outputMode("complete").start()
       q.processAllAvailable(); q.stop()
-      spark.table(name).select("bucket_start", "event_type", "n", "val_sum")
-        .as[(java.sql.Timestamp, String, Long, Double)].collect().toSet
+      bars(spark.table(name))
     }
-    val fromNative = run(nativeDir, "tumble_native")
-    val fromNanos = run(eventsDir, "tumble_nanos")
+    val fromNative = run(nativeDir, "ohlc_native")
+    val fromNanos = run(eventsDir, "ohlc_nanos")
     assert(fromNative == fromNanos)
     assert(fromNative.nonEmpty)
   }
@@ -101,27 +88,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(back.count() == Tables.events(spark, TestSpark.Sf0001).count())
     assert(back.select("year", "month").distinct().as[(Int, Int)].collect()
       .toSet == Set((2024, 1)))
-  }
-
-  test("exactly-once archive sink: replay after checkpoint loss writes " +
-      "no duplicates") {
-    val dir = eventsDir
-    val out = java.nio.file.Files.createTempDirectory("graft_eo_out").toString + "/arch"
-    val ckpt1 = java.nio.file.Files.createTempDirectory("graft_eo_ck1").toString
-    val q1 = Streaming.archiveSinkExactlyOnce(
-      Streaming.readEventsStream(spark, dir), out, ckpt1).start()
-    q1.awaitTermination(120000)
-    val n1 = spark.read.parquet(out).count()
-    assert(n1 == Tables.events(spark, TestSpark.Sf0001).count())
-    // simulate total checkpoint loss: a fresh checkpoint replays ALL
-    // input — the keyed anti-join must turn the replay into a no-op
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft_eo_ck2").toString
-    val q2 = Streaming.archiveSinkExactlyOnce(
-      Streaming.readEventsStream(spark, dir), out, ckpt2).start()
-    q2.awaitTermination(120000)
-    val back = spark.read.parquet(out)
-    assert(back.count() == n1)
-    assert(back.groupBy("id").count().filter(col("count") > 1).isEmpty)
   }
 
   test("native session_window agrees with the lag-based sessionization " +
@@ -188,56 +154,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.nonEmpty)
   }
 
-  test("sliding-window counts: each event lands in exactly window/slide buckets") {
-    val ev = Tables.events(spark, TestSpark.Sf0001)
-    val slid = Streaming.slidingCounts(ev, "1 hour", "30 minutes")
-    val totalAssignments = slid.agg(sum(col("n"))).as[Long].head()
-    assert(totalAssignments == ev.count() * 2) // 1h window / 30m slide = 2
-  }
-
-  test("flatMapGroupsWithState running totals: final state equals batch totals") {
-    val dir = eventsDir
-    val stream = Streaming.readEventsStream(spark, dir)
-    val q = Streaming.runningUserTotals(spark, stream)
-      .toDF("user_id", "n", "total")
-      .writeStream.format("memory").queryName("state_out")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    // last emitted row per user == batch aggregate
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("n").desc)
-    val finalState = spark.table("state_out")
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select("user_id", "n").as[(Long, Long)].collect().toMap
-    val batch = Tables.events(spark, TestSpark.Sf0001)
-      .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
-      .as[(Long, Long)].collect().toMap
-    assert(finalState == batch)
-  }
-
-  test("stream-static enrichment join equals the batch join (static " +
-      "side broadcast, no stream state)") {
-    val dir = eventsDir
-    val dim = Seq((0L, "tier_a"), (1L, "tier_b"), (2L, "tier_c"))
-      .toDF("dim_user", "tier")
-    val stream = Streaming.readEventsStream(spark, dir)
-    val q = Streaming.enrichWithDim(stream, dim, "user_id", "dim_user")
-      .select("event_id", "tier")
-      .writeStream.format("memory").queryName("enrich_out")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("enrich_out")
-      .as[(Long, Option[String])].collect().toSet
-    val batch = Streaming.enrichWithDim(
-        Tables.events(spark, TestSpark.Sf0001), dim, "user_id", "dim_user")
-      .select("event_id", "tier")
-      .as[(Long, Option[String])].collect().toSet
-    assert(streamed == batch && streamed.nonEmpty)
-    assert(streamed.exists(_._2.isDefined)) // some users matched the dim
-  }
-
   test("stateful windowed agg runs on the RocksDB state store " +
       "(the 100 TB state backend) with results identical to batch") {
     val dir = eventsDir
@@ -247,7 +163,7 @@ class StreamingSpec extends AnyFunSuite {
       spark.conf.set(key,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       val stream = Streaming.readEventsStream(spark, dir, maxFilesPerTrigger = 1)
-      val q = Streaming.tumblingCounts(stream)
+      val q = Streaming.ohlcBars(stream)
         .writeStream.format("memory").queryName("rocks_out")
         .outputMode("complete").start()
       q.processAllAvailable()
@@ -256,330 +172,13 @@ class StreamingSpec extends AnyFunSuite {
       q.stop()
       assert(progress.toLowerCase.contains("rocksdb"),
         "state operator did not report RocksDB metrics: " + progress.take(2000))
-      val streamed = spark.table("rocks_out")
-        .select("bucket_start", "event_type", "n", "val_sum")
-        .as[(java.sql.Timestamp, String, Long, Double)].collect().toSet
-      val batch = Streaming.tumblingCounts(Tables.events(spark, TestSpark.Sf0001))
-        .select("bucket_start", "event_type", "n", "val_sum")
-        .as[(java.sql.Timestamp, String, Long, Double)].collect().toSet
+      val streamed = bars(spark.table("rocks_out"))
+      val batch = bars(Streaming.ohlcBars(Tables.events(spark, TestSpark.Sf0001)))
       assert(streamed == batch && streamed.nonEmpty)
     } finally saved match {
       case Some(v) => spark.conf.set(key, v)
       case None    => spark.conf.unset(key)
     }
-  }
-
-  test("transformWithState running totals (the Spark 4 arbitrary-state " +
-      "API, on RocksDB) final state equals batch totals") {
-    val dir = eventsDir
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val stream = Streaming.readEventsStream(spark, dir)
-      val q = Streaming.runningUserTotalsTws(spark, stream)
-        .toDF("user_id", "n", "total")
-        .writeStream.format("memory").queryName("tws_out")
-        .outputMode("append").start()
-      q.processAllAvailable()
-      q.stop()
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("n").desc)
-      val finalState = spark.table("tws_out")
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select("user_id", "n").as[(Long, Long)].collect().toMap
-      val batch = Tables.events(spark, TestSpark.Sf0001)
-        .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
-        .as[(Long, Long)].collect().toMap
-      assert(finalState == batch)
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
-  test("streaming near-dup dedup: greedy acceptance across micro-batches, " +
-      "rejects vs both the batch and the accepted store, replay-safe") {
-    import graft.ext.Dedup
-    val ta = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
-      "lambda mu nu xi omicron pi rho sigma tau upsilon"
-    val tb = "one two three four five six seven eight nine ten eleven " +
-      "twelve thirteen fourteen fifteen sixteen"
-    def uniq(k: Int) = (1 to 20).map(i => s"u${k}w$i").mkString(" ")
-    // file 1: group-A seed, group-B pair (within-batch dup), unique 6,
-    //         and a 2-token doc (too short to shingle — must pass
-    //         through, not silently vanish)
-    // file 2: group-A dup (vs store), unique 7
-    // file 3: group-A dup (vs store), unique 8
-    val files = Seq(
-      Seq((1L, ta), (4L, tb), (5L, tb + " extra"), (6L, uniq(6)),
-        (9L, "hello world")),
-      Seq((2L, ta), (7L, uniq(7))),
-      Seq((3L, ta), (8L, uniq(8))))
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_nd_src").toString
-    files.zipWithIndex.foreach { case (rows, i) =>
-      rows.toDF("doc_id", "text").coalesce(1)
-        .write.mode("append").parquet(srcDir)
-      Thread.sleep(5): Unit // distinct mtimes keep trigger order = id order
-      val _ = i
-    }
-    val store = java.nio.file.Files.createTempDirectory("graft_nd_store").toString + "/store"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_nd_ck").toString
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    def run(checkpoint: String): Unit = {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val q = Streaming.nearDupDedupSink(stream, store, checkpoint).start()
-      q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    run(ckpt)
-    val docsStore = s"$store/docs"
-    val ids = spark.read.parquet(docsStore).select("doc_id")
-      .as[Long].collect().toSet
-    assert(ids == Set(1L, 4L, 6L, 7L, 8L, 9L),
-      s"greedy acceptance set wrong: $ids")
-    // survivors carry the batch columns (text) — the store is the
-    // corpus, not just dedup state
-    assert(spark.read.parquet(docsStore).filter(col("doc_id") === 6L)
-      .select("text").as[String].head() == uniq(6))
-    // the short doc passes through with null signature
-    assert(spark.read.parquet(docsStore).filter(col("doc_id") === 9L)
-      .select("sig").head().isNullAt(0))
-    // invariant: survivors are pairwise NOT near-dups (J < 0.8)
-    val survivors = files.flatten.filter(r => ids(r._1)).toDF("doc_id", "text")
-    assert(Dedup.ngramJaccardPairs(survivors, "text", "doc_id", 3, 0.8).isEmpty)
-    // the band index holds exactly the shingle-able survivors, bucketed
-    val bandsDir = s"$store/bands"
-    val idx = spark.read.parquet(bandsDir)
-    assert(idx.select("doc_id").distinct().as[Long].collect().toSet ==
-      (ids - 9L))
-    // a probe for a bucket subset is PARTITION-PRUNED: the scan reads
-    // only matching bucket=... directories (the r6 whole-store
-    // checkpoint is gone)
-    val allBuckets = idx.select("bucket").distinct().as[Int].collect().toSeq
-    assert(allBuckets.length > 1, "fixture should spread over >1 bucket")
-    val probe = Streaming.probeBands(spark, bandsDir, allBuckets.take(1))
-    assert(probe.collect().nonEmpty)
-    val scan = probe.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.head
-    assert(scan.partitionFilters.nonEmpty,
-      "probe scan has no PartitionFilters — bucket pruning lost")
-    val nFilesRead = scan.metrics("numFiles").value
-    assert(nFilesRead > 0 && nFilesRead < idx.inputFiles.length,
-      s"probe read $nFilesRead of ${idx.inputFiles.length} files — not pruned")
-    // total checkpoint LOSS + full replay: the store stays exactly as is
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft_nd_ck2").toString
-    run(ckpt2)
-    assert(spark.read.parquet(docsStore).count() == 6)
-    assert(spark.read.parquet(docsStore).select("doc_id").distinct().count() == 6)
-  }
-
-  test("streaming near-dup dedup: exact greedy within a batch — a doc " +
-      "whose only near-dup partner was itself rejected is accepted") {
-    import graft.ext.Dedup
-    // chain a<b<c with J(a,b)>=0.8, J(b,c)>=0.8, J(a,c)<0.8: greedy
-    // accepts a, drops b, ACCEPTS c (r6's pairwise b-drop lost c)
-    val base = (1 to 38).map(i => s"w$i")
-    val a = base.take(32).mkString(" ")      // tokens 1..32: J(a,b)=27/33
-    val b = base.slice(3, 35).mkString(" ")  // tokens 4..35: J(b,c)=27/33
-    val c = base.slice(6, 38).mkString(" ")  // tokens 7..38: J(a,c)=24/36
-    val batch = Seq((1L, a), (2L, b), (3L, c)).toDF("doc_id", "text")
-    // sanity on the fixture's jaccard structure
-    val j = Dedup.ngramJaccardPairs(batch, "text", "doc_id", 3, 0.8)
-      .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    assert(j == Set((1L, 2L), (2L, 3L)), s"fixture pair structure wrong: $j")
-    val store = java.nio.file.Files.createTempDirectory("graft_nd_chain")
-      .toString + "/store"
-    val n = Streaming.acceptNearDupBatch(batch, store, 3, 48, 16, 0.8)
-    assert(n == 2)
-    val ids = spark.read.parquet(s"$store/docs").select("doc_id")
-      .as[Long].collect().toSet
-    assert(ids == Set(1L, 3L), s"exact greedy should accept {1,3}: $ids")
-  }
-
-  test("streaming near-dup store: crash between the bands/ and docs/ " +
-      "appends self-heals on replay (bands-first write order)") {
-    import graft.ext.Dedup
-    val text = (1 to 25).map(i => s"c$i").mkString(" ")
-    val batch = Seq((1L, text)).toDF("doc_id", "text")
-    val store = java.nio.file.Files.createTempDirectory("graft_nd_crash")
-      .toString + "/store"
-    // simulate the crash window: the bands append completed, the docs
-    // append did not — exactly the state acceptNearDupBatch can leave
-    // because it writes bands/ FIRST (the reverse order would strand a
-    // doc with no index rows and silently accept its future near-dups)
-    val sets = Dedup.shingleSets(batch, "text", "doc_id", 3).localCheckpoint()
-    val sigs = Dedup.minhashSignatures(sets, 48)
-    Dedup.bandedSignatures(sigs, 16, 3)
-      .withColumn("bucket", pmod(col("band_hash"),
-        lit(Streaming.NearDupBandBuckets.toLong)).cast("int"))
-      .write.mode("append").partitionBy("bucket").parquet(s"$store/bands")
-    assert(!new java.io.File(s"$store/docs").exists())
-    // replay of the same batch: the doc must be accepted (it is absent
-    // from docs/), and its near-dups must then be rejected
-    assert(Streaming.acceptNearDupBatch(batch, store, 3, 48, 16, 0.8) == 1L)
-    assert(spark.read.parquet(s"$store/docs").select("doc_id")
-      .as[Long].collect().toSeq == Seq(1L))
-    val nearDup = Seq((2L, text + " extra")).toDF("doc_id", "text")
-    assert(Streaming.acceptNearDupBatch(nearDup, store, 3, 48, 16, 0.8) == 0L)
-    // duplicate band rows from the replay are tolerated: candidates
-    // are distinct()'d, and the store still holds exactly doc 1
-    assert(spark.read.parquet(s"$store/docs").count() == 1L)
-  }
-
-  test("streaming near-dup store works on a non-file FS scheme " +
-      "(object-store stand-in): accept, reject near-dup, flat guard") {
-    // the store is the streaming dedup state — at 100 TB it lives on an
-    // object store, so the whole path (probe read, bands/docs append,
-    // layout guard) must resolve through the Hadoop FS abstraction
-    spark.sparkContext.hadoopConfiguration.set(
-      "fs.mockobj.impl", classOf[MockObjectStoreFs].getName)
-    val text = (1 to 25).map(i => s"o$i").mkString(" ")
-    val batch = Seq((1L, text)).toDF("doc_id", "text")
-    val local = java.nio.file.Files.createTempDirectory("graft_nd_obj")
-      .toString
-    val store = "mockobj:" + local + "/store"
-    assert(Streaming.acceptNearDupBatch(batch, store, 3, 48, 16, 0.8) == 1L)
-    val nearDup = Seq((2L, text + " extra")).toDF("doc_id", "text")
-    assert(Streaming.acceptNearDupBatch(nearDup, store, 3, 48, 16, 0.8) == 0L)
-    assert(spark.read.parquet(s"$store/docs").count() == 1L)
-    // flat-layout guard fires through the scheme too
-    val flat = "mockobj:" + local + "/flat"
-    batch.write.parquet(flat)
-    val e = intercept[IllegalStateException] {
-      Streaming.acceptNearDupBatch(batch, flat, 3, 48, 16, 0.8)
-    }
-    assert(e.getMessage.contains("flat parquet"))
-  }
-
-  test("streaming near-dup store: pre-split flat store layout fails " +
-      "with a migration error instead of being treated as empty") {
-    val text = (1 to 25).map(i => s"m$i").mkString(" ")
-    val batch = Seq((1L, text)).toDF("doc_id", "text")
-    val store = java.nio.file.Files.createTempDirectory("graft_nd_flat")
-      .toString + "/store"
-    // an r6-era store: accepted rows as flat parquet directly under
-    // storeDir (no docs/ or bands/ subdirs)
-    batch.write.parquet(store)
-    val e = intercept[IllegalStateException] {
-      Streaming.acceptNearDupBatch(batch, store, 3, 48, 16, 0.8)
-    }
-    assert(e.getMessage.contains("flat parquet"))
-    // the pointer must name the DEPLOY.md subsection VERBATIM — a stale
-    // pointer sends the operator grepping for a heading that isn't there
-    assert(e.getMessage.contains("DEPLOY.md 'Store layout migration'"))
-    // the guard must fire for FS-URI store paths too — listing through
-    // java.io.File would return null for "file:/..." and silently skip
-    // the check (the corruption it guards against would be silent)
-    val e2 = intercept[IllegalStateException] {
-      Streaming.acceptNearDupBatch(batch, "file:" + store, 3, 48, 16, 0.8)
-    }
-    assert(e2.getMessage.contains("flat parquet"))
-    // a proper split-layout store on the same code path still works
-    val fresh = java.nio.file.Files.createTempDirectory("graft_nd_fresh")
-      .toString + "/store"
-    assert(Streaming.acceptNearDupBatch(batch, fresh, 3, 48, 16, 0.8) == 1L)
-  }
-
-  test("property: streaming greedy acceptance equals the driver-side " +
-      "sequential greedy on a randomized near-dup corpus, across any " +
-      "batch split") {
-    // The contract under test (scaladoc on nearDupDedupSink): docs are
-    // considered in id order; a doc is rejected iff J >= t against an
-    // already-ACCEPTED doc; rejected docs never block anyone; docs too
-    // short to shingle pass straight through. A seeded random corpus
-    // with planted mutation chains exercises shapes the fixed fixtures
-    // can't (rejected-blocker chains, mutual near-dups across batches,
-    // short docs interleaved), and the reference below is an
-    // independent 15-line driver-side implementation of the same
-    // contract — not a re-run of the Spark path.
-    val rnd = new scala.util.Random(4242)
-    val vocab = (0 until 40).map(i => s"w$i")
-    val n = 3
-    val t = 0.8
-    def randDoc(len: Int): Vector[String] =
-      Vector.fill(len)(vocab(rnd.nextInt(vocab.length)))
-    // ~1/3 fresh docs, ~2/3 mutations of an earlier doc (swap 0-3
-    // tokens — some land above the threshold, some below)
-    val docs = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-    for (id <- 1L to 60L) {
-      val toks =
-        if (docs.isEmpty || rnd.nextInt(3) == 0)
-          randDoc(2 + rnd.nextInt(28)) // includes sub-n shorties
-        else {
-          val base = docs(rnd.nextInt(docs.size))._2.split(" ").toVector
-          val nMut = rnd.nextInt(4)
-          (0 until nMut).foldLeft(base) { (v, _) =>
-            v.updated(rnd.nextInt(v.length), vocab(rnd.nextInt(vocab.length)))
-          }
-        }
-      docs += ((id, toks.mkString(" ")))
-    }
-    // driver-side reference greedy over string shingles
-    def shingles(text: String): Set[String] = {
-      val w = text.split(" ")
-      if (w.length < n) Set.empty
-      else w.sliding(n).map(_.mkString(" ")).toSet
-    }
-    def jaccard(a: Set[String], b: Set[String]): Double =
-      if (a.isEmpty || b.isEmpty) 0.0
-      else (a & b).size.toDouble / (a | b).size
-    val expected = scala.collection.mutable.LinkedHashMap.empty[Long, Set[String]]
-    for ((id, text) <- docs) {
-      val sh = shingles(text)
-      val dup = sh.nonEmpty && expected.values.exists(acc =>
-        acc.nonEmpty && jaccard(sh, acc) >= t)
-      if (!dup) expected += ((id, sh))
-    }
-    // stream the same corpus through the store in 4 uneven batches
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_nd_prop").toString + "/store"
-    val splits = Seq(docs.slice(0, 7), docs.slice(7, 25),
-      docs.slice(25, 26), docs.slice(26, 60))
-    splits.foreach { chunk =>
-      Streaming.acceptNearDupBatch(chunk.toSeq.toDF("doc_id", "text"),
-        store, n, 48, 16, t): Unit
-    }
-    val got = spark.read.parquet(s"$store/docs").select("doc_id")
-      .as[Long].collect().toSet
-    assert(got == expected.keySet.toSet,
-      s"greedy sets differ: extra=${got -- expected.keySet} " +
-        s"missing=${expected.keySet.toSet -- got}")
-    // sanity: the corpus actually exercised both outcomes
-    assert(got.size > 5 && got.size < 60)
-  }
-
-  test("streaming near-dup sink and batch entry validate parameters up " +
-      "front: t = 0 (reject-everything), non-divisible or non-positive " +
-      "(numPerms, bands), and n < 1 all fail before touching the store") {
-    val text = (1 to 25).map(i => s"v$i").mkString(" ")
-    val batch = Seq((1L, text)).toDF("doc_id", "text")
-    val store = java.nio.file.Files.createTempDirectory("graft_nd_val")
-      .toString + "/store"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_nd_valck")
-      .toString
-    // the sink throws at CONSTRUCTION (not on first micro-batch replay)
-    intercept[IllegalArgumentException](
-      Streaming.nearDupDedupSink(batch, store, ckpt, threshold = 0.0))
-    intercept[IllegalArgumentException](
-      Streaming.nearDupDedupSink(batch, store, ckpt, numPerms = 50))
-    // the batch-callable entry rejects the same parameters, and the
-    // guard fires before any store I/O (nothing is created under store)
-    intercept[IllegalArgumentException](
-      Streaming.acceptNearDupBatch(batch, store, 3, 48, 16, 0.0))
-    intercept[IllegalArgumentException](
-      Streaming.acceptNearDupBatch(batch, store, 3, 0, 1, 0.8))
-    intercept[IllegalArgumentException](
-      Streaming.acceptNearDupBatch(batch, store, 0, 48, 16, 0.8))
-    assert(!new java.io.File(store).exists())
-    // legal parameters on the same paths still work
-    assert(Streaming.acceptNearDupBatch(batch, store, 3, 48, 16, 0.8) == 1L)
   }
 
   test("stateful dedup drops duplicate event_ids within watermark") {

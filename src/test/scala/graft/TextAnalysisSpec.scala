@@ -173,14 +173,6 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(kept.size == expected.size && expected.size < n)
   }
 
-  test("bpe-ish token count splits punctuation and digit boundaries") {
-    val df = Seq((1L, "hello,world x9y")).toDF("doc_id", "text")
-    val n = df.select(TextAnalysis.bpeishTokenCount(col("text")).as("n"))
-      .as[Int].head()
-    // hello | ,world -> ,world splits at punct => hello , world x 9 y
-    assert(n == 6)
-  }
-
   test("pii scrub: redacts every email/phone span, counts match") {
     val df = Seq(
       (1L, "mail a.b@x.io or x_1@sub.dom.org then call 555-1234 now"),
