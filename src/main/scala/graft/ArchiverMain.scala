@@ -278,39 +278,36 @@ object ArchiverMain {
       case Array(k, v) => Some(k -> v); case _ => None
     }).toMap
     val cfg0 = sys.env ++ argCfg
-    if (argCfg.contains("GRAFT_DIFF_A") || argCfg.contains("GRAFT_DIFF_B")) {
-      require(cfg0.contains("GRAFT_DIFF_A") && cfg0.contains("GRAFT_DIFF_B"),
-        "diff mode needs BOTH GRAFT_DIFF_A and GRAFT_DIFF_B")
-      println("Archive diff mode: read-only — nothing will be archived " +
-        "or deleted")
-      val spark = SparkSession.builder()
-        .master(cfg0.getOrElse("GRAFT_MASTER", "local[*]"))
-        .appName("graft-archiver-diff")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-      try {
+    val diff = argCfg.contains("GRAFT_DIFF_A") || argCfg.contains("GRAFT_DIFF_B")
+    // config errors fail here, before any session starts
+    val cfg =
+      if (diff) {
+        require(cfg0.contains("GRAFT_DIFF_A") && cfg0.contains("GRAFT_DIFF_B"),
+          "diff mode needs BOTH GRAFT_DIFF_A and GRAFT_DIFF_B")
+        println("Archive diff mode: read-only — nothing will be archived " +
+          "or deleted")
+        None
+      } else Some(parseConfig(sys.env, args))
+    val spark = SparkSession.builder()
+      .master(cfg0.getOrElse("GRAFT_MASTER", "local[*]"))
+      .appName(if (diff) "graft-archiver-diff" else "graft-archiver")
+      .config("spark.sql.shuffle.partitions",
+        cfg0.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .config("spark.sql.session.timeZone", "UTC")
+      .getOrCreate()
+    try cfg match {
+      case None =>
         val counts = runDiff(spark, cfg0("GRAFT_DIFF_A"), cfg0("GRAFT_DIFF_B"))
         if (counts.isEmpty) println("Archive diff: generations are identical")
         else counts.toSeq.sorted.foreach { case ((t, s), n) =>
           println(s"Archive diff: $t $s $n")
         }
-      } finally spark.stop()
-      return
-    }
-    val cfg = parseConfig(sys.env, args)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
-      .appName("graft-archiver")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    try {
-      val connect = cfg.jdbcUrl.map(url =>
-        () => java.sql.DriverManager.getConnection(url, cfg.jdbcProps))
-      val report = run(spark, cfg, sourceFor(cfg), connect)
-      println(s"Successfully archived ${report.extracted} total records " +
-        s"(${report.appended} new) to ${cfg.outPath}")
+      case Some(c) =>
+        val connect = c.jdbcUrl.map(url =>
+          () => java.sql.DriverManager.getConnection(url, c.jdbcProps))
+        val report = run(spark, c, sourceFor(c), connect)
+        println(s"Successfully archived ${report.extracted} total records " +
+          s"(${report.appended} new) to ${c.outPath}")
     } catch {
       case e: Exception =>
         System.err.println(s"error: ${e.getMessage}")

@@ -1,12 +1,10 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import java.util.concurrent.atomic.AtomicLong
 
 /** Driver-run benchmark: one JSON line of per-query seconds over
   * SparkEntry.queries at SPARK_GRAFT_SF_DIR (default sf0.1), plus
-  * per-query shuffle-write and spill totals (a task-metrics listener) —
+  * per-query shuffle-write and spill totals (the [[ToolCore]] recorder) —
   * the two numbers that predict how a plan behaves at 100 TB better
   * than local wall time does.
   */
@@ -24,14 +22,14 @@ object Bench {
     * subset 29.7 s vs 59.6 s baseline = 0.50× while the naive total
     * read 2.44×). Integrity: only err-free queries contribute to the
     * sum, and `baseline_subset_n` rides BOTH output channels — n < 60
-    * means the subset was partial (failures or SPARK_GRAFT_BENCH_ONLY)
+    * means the subset was partial (failures or SPARK_GRAFT_ONLY)
     * and the seconds must not be read against the baseline.
     * Registry-drift guard: QueriesSpec is the SOLE guard (it pins
     * BaselineSubset ⊆ registry AND size == 60, so retiring a subset
     * member is a hard build failure until this pinned set is edited
     * with it — silent retirement is not tolerated); the use-site
     * filter below only handles PARTIAL runs (per-query failures,
-    * SPARK_GRAFT_BENCH_ONLY), which `baseline_subset_n` < 60 flags.
+    * SPARK_GRAFT_ONLY), which `baseline_subset_n` < 60 flags.
     */
   private[graft] val BaselineSubset: Set[String] = Set(
     "q1_pricing_summary", "q3_top_orders", "q5_nation_revenue",
@@ -61,8 +59,8 @@ object Bench {
     * whichever queries happen to run next (the consecutive slow windows
     * measured in r7). Unpersisting synchronously between queries pins
     * that cost to the boundary, not the next measurement. Shared with
-    * [[JobProbe]] so the probe's boundary discipline cannot drift
-    * from the driver bench's.
+    * [[ToolCore.warmPass]] and [[Probe]] so the probes' boundary
+    * discipline cannot drift from the driver bench's.
     */
   private[graft] def releaseCheckpoints(spark: SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values
@@ -77,151 +75,62 @@ object Bench {
     // detail file. Never set by the driver.
     val injectFail = sys.env.get("SPARK_GRAFT_FAIL_INJECT")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    // SPARK_GRAFT_BENCH_ONLY=q_a,q_b restricts the suite — the builder's
-    // drift-bisection knob (e.g. run the r9 96-query subset inside the
-    // current session to separate plan regressions from session/GC
-    // pressure, VERDICT r10 #4). Never set by the driver.
-    val benchQueries: Map[String, (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-        case Some(list) =>
-          val keep = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
-          val missing = keep -- SparkEntry.queries.keySet
-          require(missing.isEmpty, s"SPARK_GRAFT_BENCH_ONLY names unknown queries: $missing")
-          SparkEntry.queries.view.filterKeys(keep).toMap
-        case None => SparkEntry.queries
-      }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // SPARK_GRAFT_ONLY=q_a,q_b restricts the suite — the drift-bisection
+    // knob (e.g. run an older round's subset inside the current session
+    // to separate plan regressions from session/GC pressure). Never set
+    // by the driver.
+    val benchQueries = ToolCore.selectQueries(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = ToolCore.session()
 
-    // Running totals of shuffle-write bytes, spill, task-observed GC
-    // time, and job submissions across all tasks; per-query values are
-    // before/after deltas (queries run serially). GC-ms and job counts
-    // are the r8 contention diagnostics: both the r7 driver run and a
-    // local r8 run showed a CONSECUTIVE window of inflated queries
-    // (driver: positions 30-34, +1.4-4.5 s each; local: 78-82) right
-    // after the heaviest localCheckpoint queries — environment noise
-    // concentrated by GC/cleanup debt, not plan cost. Per-query gc_ms
-    // makes that attribution visible in the detail file.
-    val shuffleBytes = new AtomicLong(0L)
-    val spillBytes = new AtomicLong(0L)
-    val gcMs = new AtomicLong(0L)
-    val jobCount = new AtomicLong(0L)
-    // r9 wall-vs-work attribution (the r8 inflation cluster had +8 s
-    // wall with gc_ms 0 and no spill — invisible to the old counters):
-    // per-query sums of executor RUN time (work actually done) and
-    // scheduler delay (task sat unlaunched / undelivered — the UI's
-    // AppStatusUtils formula). wall >> exec_ms+overheads with low
-    // sched_delay_ms = driver/machine stall between jobs; high
-    // sched_delay_ms = executor-side contention. Both ≈ wall = the
-    // plan itself is the cost.
-    val execRunMs = new AtomicLong(0L)
-    val schedDelayMs = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten): Unit
-          spillBytes.addAndGet(m.memoryBytesSpilled): Unit
-          gcMs.addAndGet(m.jvmGCTime): Unit
-          execRunMs.addAndGet(m.executorRunTime): Unit
-          val info = t.taskInfo
-          if (info != null) {
-            val gettingResult =
-              if (info.gettingResultTime > 0) info.finishTime - info.gettingResultTime
-              else 0L
-            schedDelayMs.addAndGet(math.max(0L,
-              info.duration - m.executorRunTime - m.executorDeserializeTime -
-                m.resultSerializationTime - gettingResult)): Unit
-          }
-        }
-      }
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet(): Unit
-      }
-    })
+    // Per-query shuffle/spill/GC/job deltas come from the shared
+    // recorder (queries run serially). GC-ms and job counts are the r8
+    // contention diagnostics: both the r7 driver run and a local r8 run
+    // showed a CONSECUTIVE window of inflated queries right after the
+    // heaviest localCheckpoint queries — environment noise concentrated
+    // by GC/cleanup debt, not plan cost. Executor run time and scheduler
+    // delay (r9) attribute wall time the other counters cannot see.
+    val rec = ToolCore.recorder(spark)
 
     // Warm the session (JVM/codegen/committer init, parquet footers)
     // so measured numbers reflect plans, not first-hit JIT: r5/r6
     // driver-vs-builder totals swung 35-45% on cold-start-shaped
-    // deltas — r6's broad +0.3-2 s inflation hit ~20 ZERO-SHUFFLE
-    // trivial queries, i.e. fixed per-shape cost (janino codegen
-    // compile + C2 JIT on each query's generated classes), not plan
-    // cost. Warm-up runs EVERY registered query once at the MEASURED
-    // sfDir (steady-state measurement, the JMH discipline): r8 measured
-    // that warming at sf0.001 leaves a one-time +0.5-1.0 s residual on
-    // each complex-plan query in the first measured pass (second-tier
-    // C2 compilation only triggers at real data volume, and sf0.001
-    // plans can pick different join strategies than the measured scale)
-    // — first-run total 51.8 s vs 40.1/41.6 s steady on identical code.
-    // The extra warm pass costs ~40 s once, outside every timer.
-    // Schema canary (footer-only): a regenerated-fixture drift shows up
-    // as a named column here, not as n_failed=90 below.
+    // deltas (janino codegen compile + C2 JIT on each query's generated
+    // classes), and r8 measured that warming at sf0.001 left a one-time
+    // +0.5-1.0 s residual on each complex-plan query in the first
+    // measured pass — first-run total 51.8 s vs 40.1/41.6 s steady on
+    // identical code. The warm pass costs ~40 s once, outside every
+    // timer. Schema canary (footer-only) first: a regenerated-fixture
+    // drift shows up as a named column here, not as n_failed=90 below.
     graft.model.FixtureCheck.driftAll(spark, sfDir)
       .foreach(m => System.err.println(s"[bench] FIXTURE DRIFT: $m"))
-    spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).count()
-    benchQueries.foreach { case (name, fn) =>
-      try { fn(spark, sfDir).count(): Unit }
-      catch { case scala.util.control.NonFatal(e) =>
-        // loud even in warm-up: a query that cannot run here will fail
-        // the measured pass too — surface the first evidence
-        System.err.println(s"[bench] WARM-PASS FAILURE $name: " +
-          s"${e.getClass.getName}: ${e.getMessage}")
-      }
-      // release per warm query — at-scale checkpoint blocks from all 90
-      // queries would otherwise accumulate across the whole warm pass
-      // (block-manager pressure the timed loop never sees, since it
-      // releases at every boundary)
-      releaseCheckpoints(spark)
-    }
-    // in-flight warm-up task events would otherwise land AFTER the
-    // first query's counter snapshot and inflate its deltas
-    org.apache.spark.GraftListenerBridge.drainListenerBus(
-      spark.sparkContext, 10000)
+    ToolCore.warmPass(spark, "bench", sfDir, benchQueries)
 
     case class R(sec: Double, shuffleMb: Double, spillMb: Double,
       gcMs: Long, jobs: Long, execMs: Long, schedDelayMs: Long,
       err: Option[String])
     val results = benchQueries.map { case (name, fn) =>
-      val s0 = shuffleBytes.get(); val p0 = spillBytes.get()
-      val g0 = gcMs.get(); val j0 = jobCount.get()
-      val e0 = execRunMs.get(); val d0 = schedDelayMs.get()
-      val t0 = System.nanoTime()
       // A query that throws is a FAILURE, not a fast success: record
       // the error per-query and count it in the stdout line. r8's 18
       // fixture-broken queries each appeared as a ~0.07 s "pass"
       // inside a rc-0 bench because this catch was silent.
-      val err = try {
+      val w = ToolCore.measure(spark, rec) {
         if (injectFail(name))
           throw new RuntimeException("injected failure (SPARK_GRAFT_FAIL_INJECT)")
-        fn(spark, sfDir).count(); None
+        fn(spark, sfDir).count()
       }
-      catch { case scala.util.control.NonFatal(e) =>
+      val err = w.rows.left.toOption.map { e =>
         System.err.println(s"[bench] FAILURE $name: ${e.getClass.getName}: " +
           s"${e.getMessage}")
-        Some(s"${e.getClass.getSimpleName}: " +
-          Option(e.getMessage).getOrElse("").replace('\n', ' ').take(300))
+        s"${e.getClass.getSimpleName}: " +
+          Option(e.getMessage).getOrElse("").replace('\n', ' ').take(300)
       }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // listener events are delivered async; drain the bus so the
-      // delta lands on the query that caused it
-      org.apache.spark.GraftListenerBridge.drainListenerBus(
-        spark.sparkContext, 10000)
-      val r = R(sec,
-        (shuffleBytes.get() - s0) / 1e6, (spillBytes.get() - p0) / 1e6,
-        gcMs.get() - g0, jobCount.get() - j0,
-        execRunMs.get() - e0, schedDelayMs.get() - d0, err)
+      val d = w.delta
+      val r = R(w.sec, d.shuffleBytes / 1e6, d.memSpill / 1e6, d.gcMs,
+        d.jobs, d.execMs, d.schedDelayMs, err)
       releaseCheckpoints(spark)
       name -> r
-    }
+    }.toMap
     val failed = results.collect { case (k, r) if r.err.isDefined => k }.toSeq
     def num(v: Double, dp: Int): String =
       BigDecimal(v).setScale(dp, BigDecimal.RoundingMode.HALF_UP)
@@ -247,14 +156,8 @@ object Bench {
     // FILE: the driver's stdout capture keeps only the last ~2000
     // chars, so anything bulky on stdout would truncate the
     // machine-readable line below.
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val errsJson = results.collect { case (k, r) if r.err.isDefined =>
-      jstr(k) + ":" + jstr(r.err.get)
+      ToolCore.jsonString(k) + ":" + ToolCore.jsonString(r.err.get)
     }.mkString("{", ",", "}")
     val detail =
       s"""{"metric":"total","value":${num(total, 3)},"unit":"sec",""" +
@@ -315,7 +218,7 @@ object Bench {
     // n_failed + failed names ride the machine-readable line so a bench
     // with broken queries can never be misread as a pass (names capped
     // at 10 to stay inside the driver's ~2000-char stdout keep).
-    val failedJson = failed.take(10).map(jstr).mkString("[", ",", "]")
+    val failedJson = failed.take(10).map(ToolCore.jsonString).mkString("[", ",", "]")
     val line =
       s"""{"metric":"total","value":${num(total, 2)},"unit":"sec",""" +
       s""""baseline_subset_s":${num(baselineSubsetSec, 2)},""" +

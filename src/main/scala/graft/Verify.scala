@@ -1,39 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_ONLY=q_a,q_b restricts the dump (and the oracle json
+    // below) for local iteration; the driver never sets it.
+    val selected = ToolCore.selectQueries(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = ToolCore.session()
     new java.io.File(outDir).mkdirs()
     // Schema canary first (footer-only, seconds): if the driver
     // regenerated fixtures incompatibly, name the drifted column at the
     // top of the log instead of letting every query fail cryptically.
     graft.model.FixtureCheck.driftAll(spark, sfDir)
       .foreach(m => System.err.println(s"[verify] FIXTURE DRIFT: $m"))
-    // SPARK_GRAFT_ONLY=q_a,q_b restricts the dump (and the oracle json
-    // below) for local iteration; the driver never sets it.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    def wanted(name: String): Boolean = only.forall(_.contains(name))
     var nFailed = 0
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (wanted(name)) {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          nFailed += 1
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+    selected.foreach { case (name, fn) =>
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case e: Throwable =>
+        nFailed += 1
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
     // Loud summary (r9): a dump with missing queries must be
@@ -42,21 +30,11 @@ object Verify {
       System.err.println(s"[verify] n_failed=$nFailed — $nFailed quer" +
         s"${if (nFailed == 1) "y" else "ies"} produced NO output above")
     else System.err.println("[verify] n_failed=0")
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    val wanted = selected.map(_._1).toSet
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => wanted(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${ToolCore.jsonString(k)}: ${ToolCore.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -46,6 +46,18 @@ class ArchiverMainSpec extends AnyFunSuite {
     }
   }
 
+  test("main honours GRAFT_MASTER given as a KEY=value argument") {
+    val srcDir = tmp("graft_cli_master_src")
+    Seq((1L, java.sql.Timestamp.valueOf("2024-01-10 00:00:00"), "d1", 1.0))
+      .toDF("id", "timestamp", "device_id", "value")
+      .write.parquet(s"$srcDir/iot_data.parquet")
+    val (code, out) = TestSpark.runMain("graft.ArchiverMain", Seq(
+      s"GRAFT_SOURCE_DIR=$srcDir", s"GRAFT_OUT=${tmp("graft_cli_master_out")}/arch",
+      s"GRAFT_CUTOFF=$Cutoff", "GRAFT_MASTER=not-a-master"))
+    assert(code != 0, s"an unparseable master must fail the run:\n${out.mkString("\n")}")
+    assert(!out.exists(_.startsWith("Successfully archived")))
+  }
+
   test("a failing table aborts the whole run before anything is written " +
       "(reference main.go:183-185)") {
     val srcDir = tmp("graft_cli_abort_src")

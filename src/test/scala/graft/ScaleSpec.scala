@@ -177,24 +177,11 @@ class ScaleSpec extends AnyFunSuite {
     // The force-spill threshold is a SparkConf the shuffle sorter reads
     // at context creation — it can't be flipped on the shared session,
     // so the probe runs in its own JVM on the forked test classpath.
-    import scala.jdk.CollectionConverters._
-    val in = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toVector
-    val addOpens = in.zipWithIndex.flatMap {
-      case (a, i) if a == "--add-opens" => Seq(a, in(i + 1))
-      case (a, _) if a.startsWith("--add-opens=") => Seq(a)
-      case _ => Seq.empty
-    }
-    val cmd = Seq(System.getProperty("java.home") + "/bin/java") ++
-      addOpens ++ Seq("-Xmx3g", "-cp", System.getProperty("java.class.path"),
-        "graft.SpillProbe", "/root/testdata/sf0.01")
-    val out = new StringBuilder
-    val code = scala.sys.process.Process(cmd)
-      .run(scala.sys.process.ProcessLogger(l => { out.append(l).append('\n'); () }, _ => ()))
-      .exitValue()
+    val (code, lines) = TestSpark.runMain("graft.Probe",
+      Seq("spill", "/root/testdata/sf0.01"), heap = "3g")
+    val out = lines.mkString("\n")
     assert(code == 0, s"probe exited $code:\n$out")
-    val line = out.toString.linesIterator
-      .filter(_.startsWith("{\"spill_bytes\"")).toSeq.lastOption
+    val line = lines.filter(_.startsWith("{\"spill_bytes\"")).lastOption
       .getOrElse(fail(s"no probe JSON in:\n$out"))
     assert(line.contains("\"equal\":true"), line)
     val spill = "\"spill_bytes\":([0-9]+)".r
