@@ -75,11 +75,7 @@ object ArchiverMain {
     * retention 90 d).
     */
   def parseConfig(env: Map[String, String], args: Array[String] = Array.empty): Config = {
-    val overrides = args.iterator.map { a =>
-      val i = a.indexOf('=')
-      require(i > 0, s"args must be KEY=value, got: $a")
-      a.substring(0, i) -> a.substring(i + 1)
-    }.toMap
+    val overrides = parseArgs(args)
     def get(k: String): Option[String] = overrides.get(k).orElse(env.get(k))
     val props = new java.util.Properties()
     get("GRAFT_JDBC_USER").foreach(props.setProperty("user", _))
@@ -105,6 +101,14 @@ object ArchiverMain {
       verifyArchive = get("GRAFT_VERIFY").exists(_.toBoolean),
       checkpointDir = get("GRAFT_CHECKPOINT"))
   }
+
+  /** `KEY=value` args as a map; anything else is a config error. */
+  private def parseArgs(args: Array[String]): Map[String, String] =
+    args.iterator.map { a =>
+      val i = a.indexOf('=')
+      require(i > 0, s"args must be KEY=value, got: $a")
+      a.substring(0, i) -> a.substring(i + 1)
+    }.toMap
 
   private def sourceFor(cfg: Config): TableSource = cfg.sourceDir match {
     case Some(dir) => ParquetSource(dir)
@@ -142,7 +146,12 @@ object ArchiverMain {
       val q = stream.writeStream
         .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           extracted += b.count()
-          appended += Archive.appendIdempotent(b.toDF(), cfg.outPath)
+          // batch mode's row shape (epoch-nanos timestamp), so both
+          // modes can append to one archive
+          appended += Archive.appendIdempotent(
+            b.toDF().transform(Archive.withTimePartitions("timestamp"))
+              .transform(Archive.toArchiveShape("timestamp")),
+            cfg.outPath)
         }
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
@@ -192,33 +201,34 @@ object ArchiverMain {
 
       // Reference row shape: timestamp as epoch-nanos int64
       // (main.go:36-44); year/month were derived above while the column
-      // was still timestamp-typed.
-      val appended = Archive.appendIdempotent(
-        batch.transform(Archive.toArchiveShape("timestamp")), cfg.outPath)
+      // was still timestamp-typed. One shaped frame feeds the append and
+      // the verify digest.
+      val shaped = batch.transform(Archive.toArchiveShape("timestamp"))
+      val appended = Archive.appendIdempotent(shaped, cfg.outPath)
       println(s"Archived $appended new rows (batch of $extracted) to ${cfg.outPath}")
 
       // Verify-before-delete (GRAFT_VERIFY): re-read the archive and
       // compare per-(year, month) digests of THIS batch's rows against
       // what we just tried to make durable — the read-back check the
       // reference never does before destroying source data. Order- and
-      // partitioning-independent by construction.
+      // partitioning-independent by construction; both digest sets have
+      // one row per month the batch spans, so they compare on the driver.
       if (cfg.verifyArchive) {
         val canon = Seq(col("table_name"), col("id"), col("device_id"),
           col("timestamp"), col("value").cast("decimal(18,6)"))
-        val want = Archive.groupChecksums(
-          batch.transform(Archive.toArchiveShape("timestamp")),
-          Seq("year", "month"), canon)
-        val keys = batch.select(col("table_name"), col("id"))
-        // Prune the read-back to the batch's year/month partitions (same
-        // predicate appendIdempotent pushes): verification cost follows
-        // batch size, not total archive size.
+        val want = Archive.groupChecksums(shaped, Seq("year", "month"), canon)
+          .collect().toSet
+        // Prune the read-back to the batch's year/month partitions, taken
+        // from `want`: verification cost follows batch size, not total
+        // archive size.
+        val months = want.toSeq.map(r =>
+          col("year") === r.getInt(0) && col("month") === r.getInt(1)).reduce(_ || _)
         val got = Archive.groupChecksums(
-          spark.read.parquet(cfg.outPath)
-            .filter(Archive.timePartitionFilter(batch))
-            .join(keys, Seq("table_name", "id"), "left_semi"),
-          Seq("year", "month"), canon)
-        val mismatch = want.except(got).count() + got.except(want).count()
-        require(mismatch == 0L,
+          spark.read.parquet(cfg.outPath).filter(months)
+            .join(shaped.select("table_name", "id"), Seq("table_name", "id"), "left_semi"),
+          Seq("year", "month"), canon).collect().toSet
+        val mismatch = (want -- got).size + (got -- want).size
+        require(mismatch == 0,
           s"archive verification FAILED: $mismatch partition digests " +
             "differ between the batch and the read-back archive — " +
             "refusing to delete source rows")
@@ -268,29 +278,32 @@ object ArchiverMain {
   }
 
   def main(args: Array[String]): Unit = {
+    def fail(e: Exception): Nothing = {
+      System.err.println(s"error: ${e.getMessage}")
+      sys.exit(1)
+    }
     // Diff mode triggers on explicit CLI args ONLY — a stale
     // GRAFT_DIFF_A/B pair inherited from a scheduler's environment must
     // not silently turn a production archival run into a read-only diff
     // with exit 0 (ADVICE r10). Values may still come from env once the
     // MODE is arg-selected (arg `GRAFT_DIFF_A` alone + env `GRAFT_DIFF_B`
-    // works), but env alone never selects it.
-    val argCfg = args.flatMap(a => a.split("=", 2) match {
-      case Array(k, v) => Some(k -> v); case _ => None
-    }).toMap
-    val cfg0 = sys.env ++ argCfg
-    val diff = argCfg.contains("GRAFT_DIFF_A") || argCfg.contains("GRAFT_DIFF_B")
-    // config errors fail here, before any session starts
-    val cfg =
-      if (diff) {
-        require(cfg0.contains("GRAFT_DIFF_A") && cfg0.contains("GRAFT_DIFF_B"),
-          "diff mode needs BOTH GRAFT_DIFF_A and GRAFT_DIFF_B")
-        println("Archive diff mode: read-only — nothing will be archived " +
-          "or deleted")
-        None
-      } else Some(parseConfig(sys.env, args))
+    // works), but env alone never selects it. Config errors (a malformed
+    // arg in either mode included) fail here, before any session starts.
+    val (cfg0, cfg) =
+      try {
+        val argCfg = parseArgs(args)
+        val cfg0 = sys.env ++ argCfg
+        if (argCfg.contains("GRAFT_DIFF_A") || argCfg.contains("GRAFT_DIFF_B")) {
+          require(cfg0.contains("GRAFT_DIFF_A") && cfg0.contains("GRAFT_DIFF_B"),
+            "diff mode needs BOTH GRAFT_DIFF_A and GRAFT_DIFF_B")
+          println("Archive diff mode: read-only — nothing will be archived " +
+            "or deleted")
+          (cfg0, None)
+        } else (cfg0, Some(parseConfig(sys.env, args)))
+      } catch { case e: Exception => fail(e) }
     val spark = SparkSession.builder()
       .master(cfg0.getOrElse("GRAFT_MASTER", "local[*]"))
-      .appName(if (diff) "graft-archiver-diff" else "graft-archiver")
+      .appName(if (cfg.isEmpty) "graft-archiver-diff" else "graft-archiver")
       .config("spark.sql.shuffle.partitions",
         cfg0.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
@@ -310,9 +323,8 @@ object ArchiverMain {
           s"(${report.appended} new) to ${c.outPath}")
     } catch {
       case e: Exception =>
-        System.err.println(s"error: ${e.getMessage}")
         spark.stop()
-        sys.exit(1)
+        fail(e)
     }
     spark.stop()
   }

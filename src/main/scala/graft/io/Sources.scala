@@ -19,89 +19,23 @@ final case class ParquetSource(dir: String) extends TableSource {
     spark.read.parquet(s"$dir/$table.parquet")
 }
 
-/** JSONL corpus source (table t ↦ dir/t.jsonl, one JSON doc per line) —
-  * the lingua franca of training-data interchange. The schema is
-  * REQUIRED: schema inference would scan the corpus once before
-  * reading it, which at 100 TB doubles the job. `mode` follows Spark's
-  * JSON semantics (PERMISSIVE keeps malformed rows as nulls so a bad
-  * shard never kills a curation run; use FAILFAST for strict loads).
-  */
-final case class JsonlSource(dir: String,
-    schema: org.apache.spark.sql.types.StructType,
-    mode: String = "PERMISSIVE") extends TableSource {
-  override def load(spark: SparkSession, table: String): DataFrame =
-    spark.read.schema(schema).option("mode", mode)
-      .json(s"$dir/$table.jsonl")
-}
-
-/** CSV source with explicit schema (no inference scan — same 100 TB
-  * argument as JSONL) and a header toggle.
-  */
-final case class CsvSource(dir: String,
-    schema: org.apache.spark.sql.types.StructType,
-    header: Boolean = true, mode: String = "PERMISSIVE") extends TableSource {
-  override def load(spark: SparkSession, table: String): DataFrame =
-    spark.read.schema(schema)
-      .option("header", header.toString).option("mode", mode)
-      .csv(s"$dir/$table.csv")
-}
-
-/** ORC source (table t ↦ dir/t.orc) — the other columnar interchange
-  * format; like parquet it carries its own schema, supports predicate
-  * pushdown, and needs no inference scan.
-  */
-final case class OrcSource(dir: String) extends TableSource {
-  override def load(spark: SparkSession, table: String): DataFrame =
-    spark.read.orc(s"$dir/$table.orc")
-}
-
 /** PostgreSQL via Spark's JDBC source — the reference's extract path
-  * (reference main.go:88-129) upgraded for scale:
-  *
-  *  - the reference runs ONE cursor per table in one goroutine; here
-  *    `partitionColumn`/`numPartitions` splits the scan into parallel
-  *    range queries across executors — the 100 TB answer to
-  *    processTable (SURVEY §3.2);
-  *  - filters/limits pushed by Catalyst reach the remote server as SQL
-  *    (the reference hardcodes them into its query text at
-  *    main.go:88-93; delegation is the same, decided at plan time).
-  *
-  * `bounds` (min/max of the partition column) would normally come from
-  * a cheap `SELECT min(..), max(..)` on the server.
+  * (reference main.go:88-129). Filters, limits and column pruning
+  * pushed by Catalyst reach the remote server as SQL (the reference
+  * hardcodes them into its query text at main.go:88-93; delegation is
+  * the same, decided at plan time).
   */
-final case class JdbcSource(url: String, props: java.util.Properties,
-    partitionColumn: Option[String] = None,
-    bounds: Option[(Long, Long)] = None,
-    numPartitions: Int = 8) extends TableSource {
+final case class JdbcSource(url: String, props: java.util.Properties)
+    extends TableSource {
   override def load(spark: SparkSession, table: String): DataFrame = {
-    val base = spark.read.format("jdbc")
+    val reader = spark.read.format("jdbc")
       .option("url", url)
       .option("dbtable", table)
-    val parted = (partitionColumn, bounds) match {
-      case (Some(c), Some((lo, hi))) =>
-        base.option("partitionColumn", c)
-          .option("lowerBound", lo).option("upperBound", hi)
-          .option("numPartitions", numPartitions)
-      case _ => base
-    }
-    props.stringPropertyNames().forEach(k => parted.option(k, props.getProperty(k)))
-    parted.load()
+    props.stringPropertyNames().forEach(k => reader.option(k, props.getProperty(k)))
+    reader.load()
   }
 }
 
-/** Retention write-back (reference main.go:131-145, S5): delete
-  * archived rows from the source after a successful archive.
-  *
-  * The reference deletes `WHERE timestamp < cutoff` — WIDER than what
-  * it archived (its extract had LIMIT batchSize), i.e. it can destroy
-  * rows it never saved (SURVEY §3.1, a data-loss bug). Here the delete
-  * set is keyed to the actually-archived rows: callers pass the
-  * archived frame, we derive per-table key ranges and delete only
-  * those. Driver-side JDBC (no DataFrame DELETE in the v1 source);
-  * statements are built with bind parameters, not string interpolation
-  * (the reference string-interpolates the table name — injection-prone,
-  * main.go:88).
-  */
 /** Identifier handling differs across the engines the retention path
   * targets, and a live server for each doesn't exist in every
   * environment — so the generated SQL is a first-class, unit-testable
@@ -152,6 +86,19 @@ object SqlDialect {
   }
 }
 
+/** Retention write-back (reference main.go:131-145, S5): delete
+  * archived rows from the source after a successful archive.
+  *
+  * The reference deletes `WHERE timestamp < cutoff` — WIDER than what
+  * it archived (its extract had LIMIT batchSize), i.e. it can destroy
+  * rows it never saved (SURVEY §3.1, a data-loss bug). Here the delete
+  * set is keyed to the actually-archived rows: callers pass the
+  * archived frame, we derive per-table key ranges and delete only
+  * those. Driver-side JDBC (no DataFrame DELETE in the v1 source);
+  * statements are built with bind parameters, not string interpolation
+  * (the reference string-interpolates the table name — injection-prone,
+  * main.go:88).
+  */
 object JdbcRetention {
 
   /** Per-table inclusive id ranges covering exactly the archived rows,
@@ -170,10 +117,6 @@ object JdbcRetention {
       .agg(min(col("id")).as("lo"), max(col("id")).as("hi"))
       .select(col("table_name"), col("lo"), col("hi"))
   }
-
-  def archivedKeyRanges(archived: DataFrame): Array[(String, Long, Long)] =
-    keyRangesDf(archived).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
 
   /** Issue the deletes over a caller-supplied connection factory
     * (injectable for tests; production passes

@@ -64,19 +64,19 @@ object Archive {
     df.withColumn("year", year(col(tsCol)))
       .withColumn("month", month(col(tsCol)))
 
-  /** S2+S4 sink (main.go:46-85,220-223): partitioned snappy parquet.
-    * Spark's committer gives atomic-per-task semantics the reference's
-    * buffered PutObject lacks. `partitionBy` yields a `year=/month=`
-    * layout; note Spark writes `month=3` where the reference
-    * zero-pads `month=03` (main.go:220) — readers should address
-    * partitions with pruning predicates (`month = 3`), not
-    * reference-style zero-padded path globs.
+  /** Partition-pruning predicate covering exactly the batch's
+    * (year, month) set, so the append's archive read scans the touched
+    * partitions, not the whole archive. The distinct-months collect is
+    * bounded by the batch's time span (a handful of rows), never by
+    * archive size.
     */
-  def writeArchive(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite")
-      .option("compression", "snappy")
-      .partitionBy("year", "month")
-      .parquet(path)
+  private def timePartitionFilter(batch: DataFrame): Column = {
+    val months = batch.select(col("year"), col("month")).distinct()
+      .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
+    months.map { case (y, m) =>
+      col("year") === y && col("month") === m
+    }.reduceOption(_ || _).getOrElse(lit(false))
+  }
 
   /** Idempotent (exactly-once-per-row) archive append — SURVEY §3.1:
     * the reference re-archives rows when a run crashes between upload
@@ -87,24 +87,14 @@ object Archive {
     *
     * Scale note: the anti-join reads ONLY the archive partitions the
     * batch can touch — the batch's year/month set is pushed as a
-    * partition-pruning filter (derived from the batch min/max
-    * timestamp, a cheap agg), never a full archive scan.
+    * partition-pruning filter, never a full archive scan.
+    *
+    * Sink (main.go:46-85,220-223): snappy parquet under a hive
+    * `year=/month=` layout. Spark writes `month=3` where the reference
+    * zero-pads `month=03` (main.go:220), so readers should address
+    * partitions with pruning predicates (`month = 3`), not
+    * zero-padded path globs.
     */
-  /** Partition-pruning predicate covering exactly the batch's
-    * (year, month) set — push this into any read of the archive that
-    * only concerns the batch's rows (idempotent append, verify-before-
-    * delete), so the read scans the touched partitions, not the whole
-    * archive. The distinct-months collect is bounded by the batch's
-    * time span (a handful of rows), never by archive size.
-    */
-  def timePartitionFilter(batch: DataFrame): Column = {
-    val months = batch.select(col("year"), col("month")).distinct()
-      .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
-    months.map { case (y, m) =>
-      col("year") === y && col("month") === m
-    }.reduceOption(_ || _).getOrElse(lit(false))
-  }
-
   def appendIdempotent(batch: DataFrame, archiveDir: String): Long = {
     val spark = batch.sparkSession
     // Accept pre-derived year/month (e.g. ArchiverMain derives them while
@@ -209,36 +199,6 @@ object Archive {
       .agg(count(lit(1)).as("n_rows"), bit_xor(rowHash).as("checksum"))
   }
 
-  /** Archive maintenance: compact a `year=/month=` partition's small
-    * files. The reference emits one object per run (main.go:46-85) and
-    * [[appendIdempotent]] likewise appends ≥1 file per touched partition
-    * per run — at daily cadence over years that is the classic
-    * small-files failure (a 100 TB archive read becomes millions of
-    * file opens and a listing storm). Each partition whose file count
-    * exceeds ceil(bytes / targetMB) is rewritten into exactly that many
-    * files, and the swap is REFUSED unless the rewrite's
-    * order-independent digest ([[groupChecksums]] over `canonCols`)
-    * equals the original's — the same verify-before-destroy gate as
-    * GRAFT_VERIFY, so compaction can never silently lose or mutate a
-    * row.
-    *
-    * Staging dirs are dot-prefixed, which `FileInputFormat` ignores —
-    * concurrent readers of the archive never see half-written files.
-    * Crash safety: before any original moves to the backup dir, the
-    * rewrite's file names are written to a `_MANIFEST` inside it; a
-    * later run finding a leftover backup ROLLS BACK (restores the
-    * originals, removing exactly the manifest-named partially-swapped
-    * files) while rewrite files remain staged, and ROLLS FORWARD
-    * (drops the backup) once the staging dir is empty — i.e. the swap
-    * had completed. Every recovery step is idempotent renames/deletes,
-    * so a crash during recovery re-recovers. Concurrent appends are
-    * safe too: the rewrite covers EXACTLY the file set listed at the
-    * start (read by explicit paths, not by directory), so a file
-    * appended mid-compaction is never digested, backed up, or deleted
-    * — it simply survives the swap untouched.
-    *
-    * @return (partitions compacted, total files before, after)
-    */
   /** Snapshot diff — the archive-maintenance audit between two
     * generations of the same table (e.g. the archive before and after a
     * re-extraction, or PG-now vs archive-then): rows `added` (key only
@@ -334,6 +294,36 @@ object Archive {
     untouched.unionByName(upserts).orderBy(col(keyCol))
   }
 
+  /** Archive maintenance: compact a `year=/month=` partition's small
+    * files. The reference emits one object per run (main.go:46-85) and
+    * [[appendIdempotent]] likewise appends ≥1 file per touched partition
+    * per run — at daily cadence over years that is the classic
+    * small-files failure (a 100 TB archive read becomes millions of
+    * file opens and a listing storm). Each partition whose file count
+    * exceeds ceil(bytes / targetMB) is rewritten into exactly that many
+    * files, and the swap is REFUSED unless the rewrite's
+    * order-independent digest ([[groupChecksums]] over `canonCols`)
+    * equals the original's — the same verify-before-destroy gate as
+    * GRAFT_VERIFY, so compaction can never silently lose or mutate a
+    * row.
+    *
+    * Staging dirs are dot-prefixed, which `FileInputFormat` ignores —
+    * concurrent readers of the archive never see half-written files.
+    * Crash safety: before any original moves to the backup dir, the
+    * rewrite's file names are written to a `_MANIFEST` inside it; a
+    * later run finding a leftover backup ROLLS BACK (restores the
+    * originals, removing exactly the manifest-named partially-swapped
+    * files) while rewrite files remain staged, and ROLLS FORWARD
+    * (drops the backup) once the staging dir is empty — i.e. the swap
+    * had completed. Every recovery step is idempotent renames/deletes,
+    * so a crash during recovery re-recovers. Concurrent appends are
+    * safe too: the rewrite covers EXACTLY the file set listed at the
+    * start (read by explicit paths, not by directory), so a file
+    * appended mid-compaction is never digested, backed up, or deleted
+    * — it simply survives the swap untouched.
+    *
+    * @return (partitions compacted, total files before, after)
+    */
   def compactPartitions(spark: SparkSession, archiveDir: String,
       targetMB: Int, canonCols: Seq[Column]): (Int, Int, Int) = {
     require(targetMB > 0, "targetMB must be > 0")

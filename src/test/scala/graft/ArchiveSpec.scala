@@ -95,8 +95,8 @@ class ArchiveSpec extends AnyFunSuite {
   test("archive reads prune partitions: a year/month filter becomes " +
       "PartitionFilters, not a data filter") {
     val dir = java.nio.file.Files.createTempDirectory("graft_prune").toString
-    Archive.writeArchive(
-      sample.transform(Archive.withTimePartitions("timestamp")), dir)
+    sample.transform(Archive.withTimePartitions("timestamp"))
+      .write.mode("overwrite").partitionBy("year", "month").parquet(dir)
     val q = spark.read.parquet(dir)
       .filter(col("year") === 2024 && col("month") === 2)
     val plan = q.queryExecution.executedPlan.toString
@@ -135,8 +135,8 @@ class ArchiveSpec extends AnyFunSuite {
     val local = java.nio.file.Files.createTempDirectory("graft_mockobj")
       .toString
     val uri = "mockobj:" + local + "/arch"
-    Archive.writeArchive(
-      sample.transform(Archive.withTimePartitions("timestamp")), uri)
+    sample.transform(Archive.withTimePartitions("timestamp"))
+      .write.mode("overwrite").partitionBy("year", "month").parquet(uri)
     assert(spark.read.parquet(uri).count() == 4)
     // hive layout listed through the SCHEME'd filesystem, not java.io
     val p = new org.apache.hadoop.fs.Path(uri)
@@ -153,12 +153,15 @@ class ArchiveSpec extends AnyFunSuite {
     assert(spark.read.parquet(uri2).count() == 4)
   }
 
-  test("writeArchive produces hive year=/month= layout, snappy parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_arch").toString
-    val df = sample.transform(Archive.withTimePartitions("timestamp"))
-    Archive.writeArchive(df, dir)
+  test("appendIdempotent produces hive year=/month= layout, snappy parquet") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_arch").toString + "/arch"
+    assert(Archive.appendIdempotent(sample.transform(Archive.stampTableName("t")), dir) == 4)
     val sub = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("year=")).sorted
     assert(sub.toSeq == Seq("year=2023", "year=2024"))
+    val files = new java.io.File(dir).listFiles().filter(_.getName.startsWith("year="))
+      .flatMap(_.listFiles()).flatMap(_.listFiles()).map(_.getName)
+      .filter(_.endsWith(".parquet"))
+    assert(files.nonEmpty && files.forall(_.endsWith(".snappy.parquet")), files.toSeq)
     val back = spark.read.parquet(dir)
     assert(back.count() == 4)
     assert(back.columns.toSet.contains("month"))
@@ -179,8 +182,8 @@ class ArchiveSpec extends AnyFunSuite {
       Set((2023, 12), (2024, 1), (2024, 2))) // groups span months
     // archive round-trip (different row order, different partitioning)
     val dir = java.nio.file.Files.createTempDirectory("graft_ck").toString
-    Archive.writeArchive(
-      sample.transform(Archive.withTimePartitions("timestamp")), dir)
+    sample.transform(Archive.withTimePartitions("timestamp"))
+      .write.mode("overwrite").partitionBy("year", "month").parquet(dir)
     val back = spark.read.parquet(dir)
       .select("id", "timestamp", "device_id", "value")
       .orderBy(col("value").desc).repartition(3)

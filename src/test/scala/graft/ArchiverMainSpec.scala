@@ -58,6 +58,17 @@ class ArchiverMainSpec extends AnyFunSuite {
     assert(!out.exists(_.startsWith("Successfully archived")))
   }
 
+  test("diff mode rejects a malformed argument instead of dropping it") {
+    val gen = tmp("graft_cli_diff_gen")
+    Seq((1L, 1000L, "d1", 1.0, "iot_data"))
+      .toDF("id", "timestamp", "device_id", "value", "table_name")
+      .write.mode("overwrite").parquet(gen)
+    val (code, out) = TestSpark.runMain("graft.ArchiverMain",
+      Seq(s"GRAFT_DIFF_A=$gen", s"GRAFT_DIFF_B=$gen", "bogus"))
+    assert(code != 0, s"a malformed arg must fail the run:\n${out.mkString("\n")}")
+    assert(!out.exists(_.startsWith("Archive diff:")))
+  }
+
   test("a failing table aborts the whole run before anything is written " +
       "(reference main.go:183-185)") {
     val srcDir = tmp("graft_cli_abort_src")
@@ -182,6 +193,63 @@ class ArchiverMainSpec extends AnyFunSuite {
     val arch = spark.read.parquet(outDir)
     assert(arch.count() == 3)
     assert(arch.groupBy("id").count().filter(col("count") > 1).isEmpty)
+    assert(arch.schema("timestamp").dataType ==
+      org.apache.spark.sql.types.LongType) // the batch mode's nanos shape
+  }
+
+  test("a streaming run and a batch run share one archive: every " +
+      "archived row reads back") {
+    val srcDir = tmp("graft_cli_mixed_src")
+    val outDir = tmp("graft_cli_mixed_out") + "/arch"
+    def write(rows: Seq[(Long, String)]): Unit =
+      rows.map { case (id, ts) => (id, java.sql.Timestamp.valueOf(ts), "d1", id.toDouble) }
+        .toDF("id", "timestamp", "device_id", "value")
+        .write.mode("append").parquet(s"$srcDir/iot_data.parquet")
+    write(Seq((1L, "2024-01-10 00:00:00"), (2L, "2024-01-12 00:00:00")))
+    val base = Map(
+      "GRAFT_SOURCE_DIR" -> srcDir, "GRAFT_OUT" -> outDir,
+      "GRAFT_TABLES" -> "iot_data", "GRAFT_CUTOFF" -> Cutoff)
+    val streamed = ArchiverMain.run(spark, ArchiverMain.parseConfig(base +
+        ("GRAFT_STREAMING" -> "true") + ("GRAFT_CHECKPOINT" -> tmp("graft_cli_mixed_ckpt"))),
+      ParquetSource(srcDir), None)
+    assert(streamed.appended == 2)
+
+    write(Seq((3L, "2024-01-20 00:00:00")))
+    val batch = ArchiverMain.run(spark, ArchiverMain.parseConfig(base),
+      ParquetSource(srcDir), None)
+    assert(batch.extracted == 3 && batch.appended == 1)
+
+    val ns = (ts: String) => java.sql.Timestamp.valueOf(ts).getTime * 1000000L
+    val back = spark.read.parquet(outDir)
+      .select("id", "timestamp").as[(Long, Long)].collect().toSet
+    assert(back == Set(1L -> ns("2024-01-10 00:00:00"),
+      2L -> ns("2024-01-12 00:00:00"), 3L -> ns("2024-01-20 00:00:00")))
+  }
+
+  test("verify refuses when the archive holds a batch row twice") {
+    val srcDir = tmp("graft_cli_dup_src")
+    val outDir = tmp("graft_cli_dup_out") + "/arch"
+    Seq((1L, java.sql.Timestamp.valueOf("2024-01-10 00:00:00"), "d1", 1.0),
+        (2L, java.sql.Timestamp.valueOf("2024-01-12 00:00:00"), "d1", 2.0))
+      .toDF("id", "timestamp", "device_id", "value")
+      .write.parquet(s"$srcDir/iot_data.parquet")
+    val cfg = ArchiverMain.parseConfig(Map(
+      "GRAFT_SOURCE_DIR" -> srcDir, "GRAFT_OUT" -> outDir,
+      "GRAFT_TABLES" -> "iot_data", "GRAFT_CUTOFF" -> Cutoff,
+      "GRAFT_VERIFY" -> "true"))
+    assert(ArchiverMain.run(spark, cfg, ParquetSource(srcDir), None).appended == 2)
+
+    // a second copy of id 1 lands in its partition; the anti-join then
+    // skips the row, so the read-back month holds one row more
+    val arch = spark.read.parquet(outDir)
+    spark.createDataFrame(
+        java.util.Arrays.asList(arch.filter(col("id") === 1L).collect(): _*), arch.schema)
+      .write.mode("append").partitionBy("year", "month").parquet(outDir)
+    assert(spark.read.parquet(outDir).count() == 3)
+    val ex = intercept[IllegalArgumentException] {
+      ArchiverMain.run(spark, cfg, ParquetSource(srcDir), None)
+    }
+    assert(ex.getMessage.contains("archive verification FAILED"))
   }
 
   // ------------------------------------------------ live JDBC (Derby) loop

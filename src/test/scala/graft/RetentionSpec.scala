@@ -19,8 +19,13 @@ class RetentionSpec extends AnyFunSuite {
     val archived = Seq(
       ("t1", 1L), ("t1", 2L), ("t1", 3L), ("t1", 7L), ("t1", 8L),
       ("t2", 10L)).toDF("table_name", "id")
-    val ranges = JdbcRetention.archivedKeyRanges(archived).toSet
-    assert(ranges == Set(("t1", 1L, 3L), ("t1", 7L, 8L), ("t2", 10L, 10L)))
+    val executed = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
+    val conn = stubConnection((sql, lo, hi) => executed += ((sql, lo, hi)))
+    JdbcRetention.deleteArchived(archived, Set("t1", "t2"), () => conn): Unit
+    // the bound (lo, hi) parameters of the range DELETEs are the ranges
+    def sql(t: String) = SqlDialect.Verbatim.deleteRangeSql(t)
+    assert(executed.toSet ==
+      Set((sql("t1"), 1L, 3L), (sql("t1"), 7L, 8L), (sql("t2"), 10L, 10L)))
   }
 
   test("deleteArchived issues one bounded DELETE per range with bind params " +
