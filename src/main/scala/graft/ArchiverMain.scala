@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.{ExecutionException, FutureTask}
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
 import graft.io.{JdbcRetention, JdbcSource, ParquetSource, TableSource}
 import graft.ops.Archive
@@ -145,13 +147,15 @@ object ArchiverMain {
         .transform(Archive.stampTableName(t))
       val q = stream.writeStream
         .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          extracted += b.count()
           // batch mode's row shape (epoch-nanos timestamp), so both
           // modes can append to one archive
-          appended += Archive.appendIdempotent(
-            b.toDF().transform(Archive.withTimePartitions("timestamp"))
-              .transform(Archive.toArchiveShape("timestamp")),
-            cfg.outPath)
+          val shaped = b.toDF().transform(Archive.withTimePartitions("timestamp"))
+            .transform(Archive.toArchiveShape("timestamp"))
+          val summary = monthDigests(shaped)
+          if (summary.nonEmpty) {
+            extracted += rowCount(summary)
+            appended += Archive.appendIdempotent(shaped, cfg.outPath, monthsOf(summary))
+          }
         }
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
@@ -188,23 +192,41 @@ object ArchiverMain {
     }
 
     // filter(ts<cutoff) → per-table top-k → stamp → union → per-row
-    // year/month. One declarative plan; persisted because three actions
-    // consume it (count, idempotent append, delete-range derivation).
+    // year/month. One declarative plan, persisted: the per-month summary
+    // materializes it, then the append, the verify digest and the
+    // delete-range plan all read the cache, so the source is read once.
     val batch = Archive.archivePipeline(
       perTable, "timestamp", "id", cfg.cutoff, cfg.batchSize).persist()
+    var deletePlan: Option[FutureTask[JdbcRetention.DeletePlan]] = None
     try {
-      val extracted = batch.count()
+      // Reference row shape: timestamp as epoch-nanos int64
+      // (main.go:36-44); year/month were derived above while the column
+      // was still timestamp-typed. One shaped frame feeds the summary,
+      // the append and the verify read-back.
+      val shaped = batch.transform(Archive.toArchiveShape("timestamp"))
+      // The one batch-summary action: per-(year, month) row counts and
+      // digests give the extracted count, the month set the append and
+      // the read-back prune to, and the digest set verify compares.
+      val want = monthDigests(shaped)
+      val extracted = rowCount(want)
       if (extracted == 0L) {
         println("No records to archive")
         return RunReport(0L, 0L, Map.empty)
       }
+      val months = monthsOf(want)
 
-      // Reference row shape: timestamp as epoch-nanos int64
-      // (main.go:36-44); year/month were derived above while the column
-      // was still timestamp-typed. One shaped frame feeds the append and
-      // the verify digest.
-      val shaped = batch.transform(Archive.toArchiveShape("timestamp"))
-      val appended = Archive.appendIdempotent(shaped, cfg.outPath)
+      // The delete-range collect needs only the cached batch, so it runs
+      // beside the append and verify. A thread created here, not a
+      // pooled one, inherits this thread's Spark local properties (job
+      // group, scheduler pool), so its job stays with this run.
+      deletePlan = connect.filter(_ => cfg.deleteFromSource).map { _ =>
+        val task = new FutureTask[JdbcRetention.DeletePlan](() =>
+          JdbcRetention.planDelete(batch.select("table_name", "id"), cfg.tables.toSet))
+        new Thread(task, "graft-delete-plan").start()
+        task
+      }
+
+      val appended = Archive.appendIdempotent(shaped, cfg.outPath, months)
       println(s"Archived $appended new rows (batch of $extracted) to ${cfg.outPath}")
 
       // Verify-before-delete (GRAFT_VERIFY): re-read the archive and
@@ -213,18 +235,13 @@ object ArchiverMain {
       // reference never does before destroying source data. Order- and
       // partitioning-independent by construction; both digest sets have
       // one row per month the batch spans, so they compare on the driver.
+      // The read-back takes the batch's schema instead of inferring one:
+      // a column missing from the files reads as nulls and changes the
+      // digest, and a type clash fails the read.
       if (cfg.verifyArchive) {
-        val canon = Seq(col("table_name"), col("id"), col("device_id"),
-          col("timestamp"), col("value").cast("decimal(18,6)"))
-        val want = Archive.groupChecksums(shaped, Seq("year", "month"), canon)
-          .collect().toSet
-        // Prune the read-back to the batch's year/month partitions, taken
-        // from `want`: verification cost follows batch size, not total
-        // archive size.
-        val months = want.toSeq.map(r =>
-          col("year") === r.getInt(0) && col("month") === r.getInt(1)).reduce(_ || _)
         val got = Archive.groupChecksums(
-          spark.read.parquet(cfg.outPath).filter(months)
+          spark.read.schema(shaped.schema).parquet(cfg.outPath)
+            .filter(Archive.inMonths(months))
             .join(shaped.select("table_name", "id"), Seq("table_name", "id"), "left_semi"),
           Seq("year", "month"), canon).collect().toSet
         val mismatch = (want -- got).size + (got -- want).size
@@ -238,17 +255,38 @@ object ArchiverMain {
       // Retention DELETE keyed to the batch — which is exactly the rows
       // now durable in the archive: freshly appended ones plus any a
       // previously-crashed run wrote but failed to delete.
-      val deleted = connect match {
-        case Some(c) if cfg.deleteFromSource =>
-          val d = JdbcRetention.deleteArchived(
-            batch.select("table_name", "id"), cfg.tables.toSet, c)
+      val deleted = (deletePlan, connect) match {
+        case (Some(plan), Some(c)) =>
+          val d = JdbcRetention.executeDelete(
+            try plan.get() catch { case e: ExecutionException => throw e.getCause }, c)
           d.foreach { case (t, n) => println(s"Deleted $n records from table $t") }
           d
         case _ => Map.empty[String, Long]
       }
       RunReport(extracted, appended, deleted)
-    } finally batch.unpersist()
+    } finally {
+      // the plan's job reads the cache: let it finish before releasing
+      // the cache, so a failed run never re-extracts from the source
+      deletePlan.foreach(t => try t.get() catch { case _: Exception => () })
+      batch.unpersist()
+    }
   }
+
+  /** The archive digest's canonical row (see [[Archive.groupChecksums]]). */
+  private val canon = Seq(col("table_name"), col("id"), col("device_id"),
+    col("timestamp"), col("value").cast("decimal(18,6)"))
+
+  /** Per-(year, month) `(year, month, n_rows, checksum)` rows of an
+    * archive-shaped batch: one action that yields the batch's row count,
+    * its month set and its verify digest.
+    */
+  private def monthDigests(shaped: DataFrame): Set[Row] =
+    Archive.groupChecksums(shaped, Seq("year", "month"), canon).collect().toSet
+
+  private def rowCount(summary: Set[Row]): Long = summary.toSeq.map(_.getLong(2)).sum
+
+  private def monthsOf(summary: Set[Row]): Seq[(Int, Int)] =
+    summary.toSeq.map(r => (r.getInt(0), r.getInt(1)))
 
   /** Maintenance mode (`GRAFT_DIFF_A=<dir> GRAFT_DIFF_B=<dir>`): diff
     * two archive generations keyed on (table_name, id) via

@@ -81,7 +81,8 @@ private[graft] object ToolCore {
     * memory and disk spill, task-observed GC time, executor run time and
     * scheduler delay (the UI's AppStatusUtils formula: a task that sat
     * unlaunched or undelivered). Per job start: a job count and one
-    * `job=… stages=… tasks=… site=<callSite.short>` line. Per completed
+    * `job=… stages=… tasks=… site=…` line, the site being the job's
+    * `callSite.short` or else its final stage's name. Per completed
     * stage: stage and task counts. Wall far above exec time with low
     * scheduler delay is a driver or machine stall between jobs; high
     * scheduler delay is executor-side contention.
@@ -113,8 +114,11 @@ private[graft] object ToolCore {
     }
     override def onJobStart(j: SparkListenerJobStart): Unit = {
       jobs.incrementAndGet(): Unit
-      val site = Option(j.properties).flatMap(p =>
-        Option(p.getProperty("callSite.short"))).getOrElse("")
+      // Spark SQL actions leave callSite.short empty; their final
+      // stage's name (`collect at ArchiverMain.scala:…`) names the site
+      val site = Option(j.properties).flatMap(p => Option(p.getProperty("callSite.short")))
+        .filter(_.nonEmpty)
+        .orElse(j.stageInfos.maxByOption(_.stageId).map(_.name)).getOrElse("")
       jobLines.add(s"job=${j.jobId} stages=${j.stageInfos.size} " +
         s"tasks=${j.stageInfos.map(_.numTasks).sum} site=$site"): Unit
     }

@@ -118,7 +118,102 @@ object JdbcRetention {
       .select(col("table_name"), col("lo"), col("hi"))
   }
 
-  /** Issue the deletes over a caller-supplied connection factory
+  /** What [[executeDelete]] sends, decided before any statement: the
+    * collected key ranges, or — past `maxRanges` — the per-id fallback
+    * over `archived`, whose tables were checked against the allowlist.
+    */
+  sealed trait DeletePlan
+  final case class Ranged(ranges: Seq[(String, Long, Long)]) extends DeletePlan
+  final case class PerId(archived: DataFrame, allowedTables: Set[String],
+      tables: Set[String]) extends DeletePlan
+
+  /** The plan half of [[deleteArchived]]: the Spark work (the key-range
+    * collect, capped at `maxRanges + 1` rows) and the allowlist check,
+    * with no connection opened. A caller may run it concurrently with
+    * other work on the archived frame and execute the plan later.
+    */
+  def planDelete(archived: DataFrame, allowedTables: Set[String],
+      maxRanges: Int = 100000): DeletePlan = {
+    // one job serves both the cap check and the data: maxRanges + 1
+    // rows decide which path runs without re-running the window/group
+    // over all archived rows
+    val headRanges = keyRangesDf(archived).limit(maxRanges + 1).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    val tables =
+      if (headRanges.length <= maxRanges) headRanges.map(_._1).toSet
+      else archived.select("table_name").distinct()
+        .collect().map(_.getString(0)).toSet
+    require((tables -- allowedTables).isEmpty,
+      s"tables not in allowlist: ${tables -- allowedTables}")
+    if (headRanges.length <= maxRanges) Ranged(headRanges)
+    else PerId(archived, allowedTables, tables)
+  }
+
+  /** The execute half of [[deleteArchived]]: issues a plan's statements
+    * over one connection from `connect`. Returns rows deleted per table.
+    */
+  def executeDelete(plan: DeletePlan, connect: () => java.sql.Connection,
+      dialect: SqlDialect = SqlDialect.Verbatim): Map[String, Long] = plan match {
+    case Ranged(ranges) =>
+      val conn = connect()
+      try {
+        ranges.groupBy(_._1).map { case (table, rs) =>
+          // table from allowlist only; range bounds are bind params
+          val st = conn.prepareStatement(dialect.deleteRangeSql(table))
+          var n = 0L
+          try {
+            rs.foreach { case (_, lo, hi) =>
+              st.setLong(1, lo); st.setLong(2, hi)
+              n += st.executeUpdate()
+            }
+          } finally st.close()
+          table -> n
+        }
+      } finally conn.close()
+    case PerId(archived, allowedTables, tables) =>
+      val conn = connect()
+      val counts = scala.collection.mutable.Map.empty[String, Long]
+      val stmts = scala.collection.mutable.Map.empty[String, java.sql.PreparedStatement]
+      val pending = scala.collection.mutable.Map.empty[String, Int]
+      def flush(table: String): Unit = if (pending.getOrElse(table, 0) > 0) {
+        // per-id deletes affect at most one row each; drivers that
+        // report SUCCESS_NO_INFO (-2: Postgres batch rewriting, Oracle)
+        // still executed the statement, so count it as its one row —
+        // clamping to 0 would report "deleted 0" for successful batches
+        val n = stmts(table).executeBatch().map {
+          case java.sql.Statement.SUCCESS_NO_INFO => 1L
+          case k => k.toLong.max(0L)
+        }.sum
+        counts(table) = counts.getOrElse(table, 0L) + n
+        pending(table) = 0
+      }
+      try {
+        val it = archived.select("table_name", "id").toLocalIterator()
+        while (it.hasNext) {
+          val r = it.next()
+          val table = r.getString(0)
+          // re-validate per row: `archived` is re-evaluated by this
+          // iterator, and a non-deterministic frame could yield a table
+          // the plan's distinct() never saw — nothing unvalidated may
+          // reach the interpolated DELETE
+          require(allowedTables.contains(table),
+            s"table not in allowlist: $table")
+          val st = stmts.getOrElseUpdate(table,
+            conn.prepareStatement(dialect.deleteIdSql(table)))
+          st.setLong(1, r.getLong(1)); st.addBatch()
+          pending(table) = pending.getOrElse(table, 0) + 1
+          if (pending(table) >= 10000) flush(table)
+        }
+        stmts.keys.foreach(flush)
+        tables.map(t => t -> counts.getOrElse(t, 0L)).toMap
+      } finally {
+        stmts.values.foreach(_.close())
+        conn.close()
+      }
+  }
+
+  /** Deletes exactly the archived rows: [[planDelete]] then
+    * [[executeDelete]], over a caller-supplied connection factory
     * (injectable for tests; production passes
     * `() => DriverManager.getConnection(url, props)`). Returns rows
     * deleted per table. Validates table names against an allowlist
@@ -148,76 +243,6 @@ object JdbcRetention {
   def deleteArchived(archived: DataFrame, allowedTables: Set[String],
       connect: () => java.sql.Connection,
       maxRanges: Int = 100000,
-      dialect: SqlDialect = SqlDialect.Verbatim): Map[String, Long] = {
-    // one job serves both the cap check and the data: maxRanges + 1
-    // rows decide which path runs without re-running the window/group
-    // over all archived rows
-    val headRanges = keyRangesDf(archived).limit(maxRanges + 1).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    if (headRanges.length <= maxRanges) {
-      val ranges = headRanges
-      val badTables = ranges.map(_._1).toSet -- allowedTables
-      require(badTables.isEmpty, s"tables not in allowlist: $badTables")
-      val conn = connect()
-      try {
-        ranges.groupBy(_._1).map { case (table, rs) =>
-          // table from allowlist only; range bounds are bind params
-          val st = conn.prepareStatement(dialect.deleteRangeSql(table))
-          var n = 0L
-          try {
-            rs.foreach { case (_, lo, hi) =>
-              st.setLong(1, lo); st.setLong(2, hi)
-              n += st.executeUpdate()
-            }
-          } finally st.close()
-          table -> n
-        }
-      } finally conn.close()
-    } else {
-      import org.apache.spark.sql.functions.col
-      val tables = archived.select(col("table_name")).distinct()
-        .collect().map(_.getString(0)).toSet
-      require((tables -- allowedTables).isEmpty,
-        s"tables not in allowlist: ${tables -- allowedTables}")
-      val conn = connect()
-      val counts = scala.collection.mutable.Map.empty[String, Long]
-      val stmts = scala.collection.mutable.Map.empty[String, java.sql.PreparedStatement]
-      val pending = scala.collection.mutable.Map.empty[String, Int]
-      def flush(table: String): Unit = if (pending.getOrElse(table, 0) > 0) {
-        // per-id deletes affect at most one row each; drivers that
-        // report SUCCESS_NO_INFO (-2: Postgres batch rewriting, Oracle)
-        // still executed the statement, so count it as its one row —
-        // clamping to 0 would report "deleted 0" for successful batches
-        val n = stmts(table).executeBatch().map {
-          case java.sql.Statement.SUCCESS_NO_INFO => 1L
-          case k => k.toLong.max(0L)
-        }.sum
-        counts(table) = counts.getOrElse(table, 0L) + n
-        pending(table) = 0
-      }
-      try {
-        val it = archived.select(col("table_name"), col("id")).toLocalIterator()
-        while (it.hasNext) {
-          val r = it.next()
-          val table = r.getString(0)
-          // re-validate per row: `archived` is re-evaluated by this
-          // iterator, and a non-deterministic frame could yield a table
-          // the up-front distinct() never saw — nothing unvalidated may
-          // reach the interpolated DELETE
-          require(allowedTables.contains(table),
-            s"table not in allowlist: $table")
-          val st = stmts.getOrElseUpdate(table,
-            conn.prepareStatement(dialect.deleteIdSql(table)))
-          st.setLong(1, r.getLong(1)); st.addBatch()
-          pending(table) = pending.getOrElse(table, 0) + 1
-          if (pending(table) >= 10000) flush(table)
-        }
-        stmts.keys.foreach(flush)
-        tables.map(t => t -> counts.getOrElse(t, 0L)).toMap
-      } finally {
-        stmts.values.foreach(_.close())
-        conn.close()
-      }
-    }
-  }
+      dialect: SqlDialect = SqlDialect.Verbatim): Map[String, Long] =
+    executeDelete(planDelete(archived, allowedTables, maxRanges), connect, dialect)
 }

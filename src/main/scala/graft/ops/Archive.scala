@@ -64,19 +64,12 @@ object Archive {
     df.withColumn("year", year(col(tsCol)))
       .withColumn("month", month(col(tsCol)))
 
-  /** Partition-pruning predicate covering exactly the batch's
-    * (year, month) set, so the append's archive read scans the touched
-    * partitions, not the whole archive. The distinct-months collect is
-    * bounded by the batch's time span (a handful of rows), never by
-    * archive size.
+  /** Partition-pruning predicate selecting exactly the given
+    * (year, month) partitions (none when `months` is empty).
     */
-  private def timePartitionFilter(batch: DataFrame): Column = {
-    val months = batch.select(col("year"), col("month")).distinct()
-      .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
-    months.map { case (y, m) =>
-      col("year") === y && col("month") === m
-    }.reduceOption(_ || _).getOrElse(lit(false))
-  }
+  def inMonths(months: Seq[(Int, Int)]): Column =
+    months.map { case (y, m) => col("year") === y && col("month") === m }
+      .reduceOption(_ || _).getOrElse(lit(false))
 
   /** Idempotent (exactly-once-per-row) archive append — SURVEY §3.1:
     * the reference re-archives rows when a run crashes between upload
@@ -84,10 +77,17 @@ object Archive {
     * dedup state: the incoming batch is anti-joined against the
     * already-archived (table_name, id) keys before appending, so
     * re-running an interrupted archival writes only missing rows.
+    * Returns the number of rows written.
     *
-    * Scale note: the anti-join reads ONLY the archive partitions the
-    * batch can touch — the batch's year/month set is pushed as a
-    * partition-pruning filter, never a full archive scan.
+    * `batch` carries its `year`/`month` partition columns, and `months`
+    * is its (year, month) set, which the caller already holds (e.g. from
+    * its per-month digest). The anti-join reads ONLY those archive
+    * partitions — a partition-pruning filter, never a full archive scan.
+    *
+    * The written row count is observed on the write itself (a
+    * `CollectMetrics` node over the anti-join), so the anti-join runs
+    * once; an empty result still runs the write, which then adds no
+    * data file, and returns 0.
     *
     * Sink (main.go:46-85,220-223): snappy parquet under a hive
     * `year=/month=` layout. Spark writes `month=3` where the reference
@@ -95,18 +95,13 @@ object Archive {
     * partitions with pruning predicates (`month = 3`), not
     * zero-padded path globs.
     */
-  def appendIdempotent(batch: DataFrame, archiveDir: String): Long = {
-    val spark = batch.sparkSession
-    // Accept pre-derived year/month (e.g. ArchiverMain derives them while
-    // the column is still timestamp-typed, then converts it to the
-    // reference's epoch-nanos int64 shape, on which year() can't run).
-    val shaped =
-      if (batch.columns.contains("year") && batch.columns.contains("month")) batch
-      else batch.transform(withTimePartitions("timestamp"))
+  def appendIdempotent(batch: DataFrame, archiveDir: String,
+      months: Seq[(Int, Int)]): Long = {
     val existing =
       try {
-        val arch = spark.read.parquet(archiveDir)
-        Some(arch.filter(timePartitionFilter(shaped))
+        // schema inference stays: foreign files lacking table_name/id
+        // must fail this read, not silently skip the dedup
+        Some(batch.sparkSession.read.parquet(archiveDir).filter(inMonths(months))
           .select(col("table_name"), col("id")))
       } catch {
         // Two conditions mean "first run — nothing to dedup against":
@@ -123,17 +118,15 @@ object Archive {
               e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
       }
     val fresh = existing match {
-      case Some(keys) =>
-        shaped.join(keys, Seq("table_name", "id"), "left_anti")
-      case None => shaped
+      case Some(keys) => batch.join(keys, Seq("table_name", "id"), "left_anti")
+      case None => batch
     }
-    val n = fresh.count()
-    if (n > 0)
-      fresh.write.mode("append")
-        .option("compression", "snappy")
-        .partitionBy("year", "month")
-        .parquet(archiveDir)
-    n
+    val written = new org.apache.spark.sql.Observation()
+    fresh.observe(written, count(lit(1)).as("n")).write.mode("append")
+      .option("compression", "snappy")
+      .partitionBy("year", "month")
+      .parquet(archiveDir)
+    written.get("n").asInstanceOf[Long]
   }
 
   /** The whole §3.1 pipeline as one composed plan: per-source

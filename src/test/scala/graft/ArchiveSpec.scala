@@ -31,6 +31,15 @@ class ArchiveSpec extends AnyFunSuite {
       .select(col("id"), to_timestamp(col("ts_str")).as("timestamp"),
         col("device_id"), col("value"))
 
+  /** Appends the way the archiver does: `year`/`month` derived on the
+    * batch and its month set passed in.
+    */
+  private def append(batch: org.apache.spark.sql.DataFrame, dir: String): Long = {
+    val parted = batch.transform(Archive.withTimePartitions("timestamp"))
+    val months = parted.select("year", "month").distinct().as[(Int, Int)].collect().toSeq
+    Archive.appendIdempotent(parted, dir, months)
+  }
+
   private val sample = iotDf(Seq(
     (1L, "2024-01-31 23:59:59", "d1", 1.0),
     (2L, "2024-02-01 00:00:00", "d1", 2.0), // exactly at cutoff
@@ -109,19 +118,34 @@ class ArchiveSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_idem").toString + "/arch"
     val batch1 = sample.transform(Archive.stampTableName("t"))
     // first run archives everything
-    assert(Archive.appendIdempotent(batch1, dir) == 4)
+    assert(append(batch1, dir) == 4)
     // crash-rerun of the SAME batch (reference would duplicate): no-op
-    assert(Archive.appendIdempotent(batch1, dir) == 0)
+    assert(append(batch1, dir) == 0)
     assert(spark.read.parquet(dir).count() == 4)
     // overlapping batch: only the genuinely new row lands
     val batch2 = iotDf(Seq(
       (3L, "2024-02-01 00:00:01", "d2", 3.0),   // already archived
       (9L, "2024-02-02 08:00:00", "d9", 9.0)))  // new
       .transform(Archive.stampTableName("t"))
-    assert(Archive.appendIdempotent(batch2, dir) == 1)
+    assert(append(batch2, dir) == 1)
     val back = spark.read.parquet(dir)
     assert(back.count() == 5)
     assert(back.groupBy("id").count().filter(col("count") > 1).isEmpty)
+  }
+
+  test("an append of a fully archived batch returns 0 and adds no data file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_idem_empty").toString + "/arch"
+    val batch = sample.transform(Archive.stampTableName("t"))
+    assert(append(batch, dir) == 4)
+    def dataFiles() = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(dir)).filter(_.getName.endsWith(".parquet")).map(_.getPath).toSet
+    }
+    val before = dataFiles()
+    assert(before.nonEmpty && before.forall(_.contains("/year=")))
+    assert(append(batch, dir) == 0)
+    assert(dataFiles() == before)
   }
 
   test("archive write and idempotent append run end-to-end through a " +
@@ -148,14 +172,14 @@ class ArchiveSpec extends AnyFunSuite {
     // anti-join's pruned archive read + append both resolve mockobj:)
     val stamped = sample.transform(Archive.stampTableName("t"))
     val uri2 = "mockobj:" + local + "/arch2"
-    assert(Archive.appendIdempotent(stamped, uri2) == 4)
-    assert(Archive.appendIdempotent(stamped, uri2) == 0)
+    assert(append(stamped, uri2) == 4)
+    assert(append(stamped, uri2) == 0)
     assert(spark.read.parquet(uri2).count() == 4)
   }
 
   test("appendIdempotent produces hive year=/month= layout, snappy parquet") {
     val dir = java.nio.file.Files.createTempDirectory("graft_arch").toString + "/arch"
-    assert(Archive.appendIdempotent(sample.transform(Archive.stampTableName("t")), dir) == 4)
+    assert(append(sample.transform(Archive.stampTableName("t")), dir) == 4)
     val sub = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("year=")).sorted
     assert(sub.toSeq == Seq("year=2023", "year=2024"))
     val files = new java.io.File(dir).listFiles().filter(_.getName.startsWith("year="))
@@ -211,7 +235,7 @@ class ArchiveSpec extends AnyFunSuite {
         (i * 10 + 1L, "2024-01-15 10:00:00", s"d$i", i + 0.5),
         (i * 10 + 2L, "2024-02-20 11:00:00", s"d$i", i + 1.5)))
         .transform(Archive.stampTableName("t"))
-      Archive.appendIdempotent(batch, dir): Unit
+      append(batch, dir): Unit
     }
     val canon = Seq(col("table_name"), col("id"), col("device_id"),
       Scalar.epochNanos(col("timestamp")), col("value").cast("decimal(18,6)"))
@@ -266,7 +290,7 @@ class ArchiveSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_crash")
       .toString + "/arch"
     (0 until 3).foreach { i =>
-      Archive.appendIdempotent(iotDf(Seq(
+      append(iotDf(Seq(
         (i * 10 + 1L, "2024-01-15 10:00:00", s"d$i", i + 0.5)))
         .transform(Archive.stampTableName("t")), dir): Unit
     }

@@ -395,6 +395,70 @@ class ArchiverMainSpec extends AnyFunSuite {
       .select("id").as[Long].collect().toSet == (1L to 6L).toSet)
   }
 
+  private def derbyBase(url: String, outDir: String) = Map(
+    "GRAFT_JDBC_URL" -> url, "GRAFT_OUT" -> outDir,
+    "GRAFT_TABLES" -> "IOT_DATA", "GRAFT_CUTOFF" -> Cutoff, "GRAFT_VERIFY" -> "true")
+
+  test("one archiver cycle with verify and delete on runs at most 9 Spark jobs") {
+    val (url, connect) = derby("graft_job_budget")
+    val outDir = tmp("graft_cli_budget_out") + "/arch"
+    insert(connect, "IOT_DATA", (1L to 8L).map(i =>
+      (i, f"2024-01-${i + 10}%02d 08:00:00", s"d$i", i.toDouble)))
+    val cfg = ArchiverMain.parseConfig(derbyBase(url, outDir) ++
+      Map("GRAFT_DELETE" -> "true", "GRAFT_BATCH_SIZE" -> "4"))
+    val source = JdbcSource(url, new java.util.Properties())
+    // the first cycle creates the archive; the measured one appends to it
+    ArchiverMain.run(spark, cfg, source, Some(connect)): Unit
+    val rec = ToolCore.recorder(spark)
+    val w = try ToolCore.measure(spark, rec) {
+      ArchiverMain.run(spark, cfg, source, Some(connect)).appended
+    } finally spark.sparkContext.removeSparkListener(rec)
+    assert(w.rows == Right(4L), w.rows)
+    assert(remainingIds(connect, "IOT_DATA").isEmpty)
+    assert(w.delta.jobs <= 9, s"${w.delta.jobs} jobs:\n${w.jobLines.mkString("\n")}")
+  }
+
+  test("verify reads back with the batch's schema: a file lacking " +
+      "device_id in a batch month makes it refuse, and nothing is deleted") {
+    val (url, connect) = derby("graft_foreign_file")
+    val outDir = tmp("graft_cli_foreign_out") + "/arch"
+    insert(connect, "IOT_DATA", Seq(
+      (1L, "2024-01-05 08:00:00", "d1", 1.0),
+      (2L, "2024-01-06 08:00:00", "d2", 2.0)))
+    // a foreign file holding batch row 2 without its device_id: the
+    // anti-join skips the row, so only the read-back can catch it
+    Seq(("IOT_DATA", 2L, 1704528000000000000L, 2.0))
+      .toDF("table_name", "id", "timestamp", "value")
+      .write.parquet(s"$outDir/year=2024/month=1")
+    val cfg = ArchiverMain.parseConfig(derbyBase(url, outDir) + ("GRAFT_DELETE" -> "true"))
+    val ex = intercept[IllegalArgumentException] {
+      ArchiverMain.run(spark, cfg, JdbcSource(url, new java.util.Properties()), Some(connect))
+    }
+    assert(ex.getMessage.contains("archive verification FAILED"), ex.getMessage)
+    assert(remainingIds(connect, "IOT_DATA") == Set(1L, 2L))
+  }
+
+  test("with delete on, a batch row archived twice fails verify and " +
+      "every source row is still there") {
+    val (url, connect) = derby("graft_dup_delete")
+    val outDir = tmp("graft_cli_dup_delete_out") + "/arch"
+    insert(connect, "IOT_DATA", Seq(
+      (1L, "2024-01-05 08:00:00", "d1", 1.0),
+      (2L, "2024-01-06 08:00:00", "d2", 2.0)))
+    val source = JdbcSource(url, new java.util.Properties())
+    val cfg = ArchiverMain.parseConfig(derbyBase(url, outDir))
+    assert(ArchiverMain.run(spark, cfg, source, Some(connect)).appended == 2)
+    val arch = spark.read.parquet(outDir)
+    spark.createDataFrame(
+        java.util.Arrays.asList(arch.filter(col("id") === 1L).collect(): _*), arch.schema)
+      .write.mode("append").partitionBy("year", "month").parquet(outDir)
+    val ex = intercept[IllegalArgumentException] {
+      ArchiverMain.run(spark, cfg.copy(deleteFromSource = true), source, Some(connect))
+    }
+    assert(ex.getMessage.contains("archive verification FAILED"), ex.getMessage)
+    assert(remainingIds(connect, "IOT_DATA") == Set(1L, 2L))
+  }
+
   test("diff maintenance mode: per-table added/removed/changed counts " +
       "between two archive generations; identical generations are clean") {
     def row(t: String, id: Long, ns: Long, dev: String, v: Double) =
