@@ -1,6 +1,11 @@
 package graft
 
+import java.time.{LocalDateTime, ZoneOffset}
+import java.time.format.{DateTimeFormatter, ResolverStyle}
+import java.util.Locale
 import java.util.concurrent.{ExecutionException, FutureTask}
+
+import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
@@ -40,13 +45,21 @@ import graft.ops.Archive
   *   GRAFT_OUT          archive root: file:///… or s3a://bucket/prefix
   *                      (reference S3_BUCKET; same code path either way)
   *   GRAFT_CUTOFF       'yyyy-MM-dd HH:mm:ss' — explicit, deterministic
-  *   GRAFT_RETENTION_DAYS  else now−N days (reference retentionDays=90)
-  *   GRAFT_BATCH_SIZE   per-table top-k (reference batchSize=100)
-  *   GRAFT_DELETE       'true' → run the retention DELETE (JDBC only)
-  *   GRAFT_VERIFY       'true' → re-read the archive and require batch
-  *                      digests to match before any DELETE
-  *                      (Archive.groupChecksums)
+  *   GRAFT_RETENTION_DAYS  else now−N days, N ≥ 0 (reference
+  *                      retentionDays=90)
+  *   GRAFT_BATCH_SIZE   per-table top-k, ≥ 1 (reference batchSize=100)
+  *   GRAFT_DELETE       'true' → run the retention DELETE (JDBC, batch
+  *                      mode only)
+  *   GRAFT_STREAMING    'true' → continuous append-only mode (file source)
+  *   GRAFT_CHECKPOINT   streaming checkpoint root
   *   GRAFT_MASTER       spark master, default local[*]
+  *
+  * Every batch run re-reads the archive and requires its digests to
+  * match the batch's before any DELETE (Archive.groupChecksums). A
+  * malformed value, a table named twice in GRAFT_TABLES (compared
+  * case-insensitively: an unquoted JDBC name reads one table either
+  * way) and a GRAFT_DELETE that cannot run are config errors naming
+  * their key.
   */
 object ArchiverMain {
 
@@ -60,13 +73,18 @@ object ArchiverMain {
       batchSize: Int,
       deleteFromSource: Boolean,
       streaming: Boolean = false,
-      checkpointDir: Option[String] = None,
-      verifyArchive: Boolean = false) {
+      checkpointDir: Option[String] = None) {
     require(sourceDir.isDefined ^ jdbcUrl.isDefined,
       "exactly one of GRAFT_SOURCE_DIR / GRAFT_JDBC_URL must be set")
     require(tables.nonEmpty, "GRAFT_TABLES must name at least one table")
     require(!streaming || sourceDir.isDefined,
       "GRAFT_STREAMING needs a file source (GRAFT_SOURCE_DIR)")
+    require(!deleteFromSource || (jdbcUrl.isDefined && !streaming),
+      "GRAFT_DELETE=true needs a JDBC source (GRAFT_JDBC_URL) in batch mode")
+    require(repeated.isEmpty, s"GRAFT_TABLES names table ${repeated.head} twice")
+
+    /** Names after their first case-insensitive occurrence. */
+    private def repeated = tables.diff(tables.distinctBy(_.toLowerCase(Locale.ROOT)))
   }
 
   final case class RunReport(
@@ -74,7 +92,8 @@ object ArchiverMain {
 
   /** Env-first config, `KEY=value` args override (reference getEnv,
     * main.go:272-277). Defaults mirror the reference's (batch 100,
-    * retention 90 d).
+    * retention 90 d). Values are checked here; the cutoff is re-rendered
+    * from its parsed value.
     */
   def parseConfig(env: Map[String, String], args: Array[String] = Array.empty): Config = {
     val overrides = parseArgs(args)
@@ -83,11 +102,16 @@ object ArchiverMain {
     get("GRAFT_JDBC_USER").foreach(props.setProperty("user", _))
     get("GRAFT_JDBC_PASSWORD").foreach(props.setProperty("password", _))
     get("GRAFT_JDBC_DRIVER").foreach(props.setProperty("driver", _))
-    val cutoff = get("GRAFT_CUTOFF").getOrElse {
-      val days = get("GRAFT_RETENTION_DAYS").map(_.toInt).getOrElse(90)
-      java.time.LocalDateTime.now(java.time.ZoneOffset.UTC).minusDays(days)
-        .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
-    }
+    def checked[A](k: String, what: String)(parse: String => Option[A]): Option[A] =
+      get(k).map(v => parse(v).getOrElse(
+        throw new IllegalArgumentException(s"$k must be $what, got: $v")))
+    def flag(k: String) = checked(k, "true or false")(_.toBooleanOption).getOrElse(false)
+    val days = checked("GRAFT_RETENTION_DAYS", "an integer ≥ 0")(
+      _.toIntOption.filter(_ >= 0)).getOrElse(90)
+    val cutoff = checked("GRAFT_CUTOFF", "'yyyy-MM-dd HH:mm:ss'")(v =>
+      Try(LocalDateTime.parse(v, CutoffFormat)).toOption)
+      .getOrElse(LocalDateTime.now(ZoneOffset.UTC).minusDays(days))
+      .format(CutoffFormat)
     Config(
       sourceDir = get("GRAFT_SOURCE_DIR"),
       jdbcUrl = get("GRAFT_JDBC_URL"),
@@ -97,12 +121,18 @@ object ArchiverMain {
       outPath = get("GRAFT_OUT")
         .getOrElse(sys.error("GRAFT_OUT (archive path) is required")),
       cutoff = cutoff,
-      batchSize = get("GRAFT_BATCH_SIZE").map(_.toInt).getOrElse(100),
-      deleteFromSource = get("GRAFT_DELETE").exists(_.toBoolean),
-      streaming = get("GRAFT_STREAMING").exists(_.toBoolean),
-      verifyArchive = get("GRAFT_VERIFY").exists(_.toBoolean),
+      batchSize = checked("GRAFT_BATCH_SIZE", "an integer ≥ 1")(
+        _.toIntOption.filter(_ >= 1)).getOrElse(100),
+      deleteFromSource = flag("GRAFT_DELETE"),
+      streaming = flag("GRAFT_STREAMING"),
       checkpointDir = get("GRAFT_CHECKPOINT"))
   }
+
+  /** `GRAFT_CUTOFF`'s one accepted form; strict, so a well-formed value
+    * re-renders byte-identically and an impossible date is rejected.
+    */
+  private val CutoffFormat =
+    DateTimeFormatter.ofPattern("uuuu-MM-dd HH:mm:ss").withResolverStyle(ResolverStyle.STRICT)
 
   /** `KEY=value` args as a map; anything else is a config error. */
   private def parseArgs(args: Array[String]): Map[String, String] =
@@ -229,7 +259,7 @@ object ArchiverMain {
       val appended = Archive.appendIdempotent(shaped, cfg.outPath, months)
       println(s"Archived $appended new rows (batch of $extracted) to ${cfg.outPath}")
 
-      // Verify-before-delete (GRAFT_VERIFY): re-read the archive and
+      // Verify-before-delete, on every batch run: re-read the archive and
       // compare per-(year, month) digests of THIS batch's rows against
       // what we just tried to make durable — the read-back check the
       // reference never does before destroying source data. Order- and
@@ -238,19 +268,17 @@ object ArchiverMain {
       // The read-back takes the batch's schema instead of inferring one:
       // a column missing from the files reads as nulls and changes the
       // digest, and a type clash fails the read.
-      if (cfg.verifyArchive) {
-        val got = Archive.groupChecksums(
-          spark.read.schema(shaped.schema).parquet(cfg.outPath)
-            .filter(Archive.inMonths(months))
-            .join(shaped.select("table_name", "id"), Seq("table_name", "id"), "left_semi"),
-          Seq("year", "month"), canon).collect().toSet
-        val mismatch = (want -- got).size + (got -- want).size
-        require(mismatch == 0,
-          s"archive verification FAILED: $mismatch partition digests " +
-            "differ between the batch and the read-back archive — " +
-            "refusing to delete source rows")
-        println("Archive verified: read-back digests match the batch")
-      }
+      val got = Archive.groupChecksums(
+        spark.read.schema(shaped.schema).parquet(cfg.outPath)
+          .filter(Archive.inMonths(months))
+          .join(shaped.select("table_name", "id"), Seq("table_name", "id"), "left_semi"),
+        Seq("year", "month"), canon).collect().toSet
+      val mismatch = (want -- got).size + (got -- want).size
+      require(mismatch == 0,
+        s"archive verification FAILED: $mismatch partition digests " +
+          "differ between the batch and the read-back archive — " +
+          "refusing to delete source rows")
+      println("Archive verified: read-back digests match the batch")
 
       // Retention DELETE keyed to the batch — which is exactly the rows
       // now durable in the archive: freshly appended ones plus any a

@@ -36,56 +36,6 @@ final case class JdbcSource(url: String, props: java.util.Properties)
   }
 }
 
-/** Identifier handling differs across the engines the retention path
-  * targets, and a live server for each doesn't exist in every
-  * environment — so the generated SQL is a first-class, unit-testable
-  * surface (RetentionSpec pins the exact strings per dialect).
-  *
-  * The differences that matter for a DELETE:
-  *  - PostgreSQL folds UNQUOTED identifiers to lower case, so a table
-  *    created unquoted (`CREATE TABLE events ...`) is stored as
-  *    `events` — quote the name as-is.
-  *  - Derby (and the other ANSI-default engines: Oracle, DB2, H2) folds
-  *    unquoted identifiers to UPPER case — the same table is stored as
-  *    `EVENTS`, so addressing it with a quoted name must upper-case it
-  *    first.
-  * Both quote with double quotes, doubling embedded quotes (defense in
-  * depth behind the allowlist — a quote in a table name can never
-  * terminate the identifier).
-  */
-sealed trait SqlDialect {
-  /** How this engine stores identifiers that were CREATEd unquoted. */
-  def foldCase(name: String): String
-  final def quoteIdent(name: String): String =
-    "\"" + foldCase(name).replace("\"", "\"\"") + "\""
-  final def deleteRangeSql(table: String): String =
-    s"DELETE FROM ${quoteIdent(table)} WHERE ${quoteIdent("id")} BETWEEN ? AND ?"
-  final def deleteIdSql(table: String): String =
-    s"DELETE FROM ${quoteIdent(table)} WHERE ${quoteIdent("id")} = ?"
-}
-object SqlDialect {
-  /** PostgreSQL: unquoted DDL folds to lower case. Locale.ROOT: the
-    * default locale would turn "id" into "İD" under a Turkish-family
-    * JVM locale — engines fold per ASCII, not per user locale.
-    */
-  case object Postgres extends SqlDialect {
-    override def foldCase(name: String): String =
-      name.toLowerCase(java.util.Locale.ROOT)
-  }
-  /** Derby / ANSI default: unquoted DDL folds to UPPER case. */
-  case object Derby extends SqlDialect {
-    override def foldCase(name: String): String =
-      name.toUpperCase(java.util.Locale.ROOT)
-  }
-  /** Address identifiers exactly as given — for tables that were
-    * CREATEd with quoted names (what the embedded-Derby integration
-    * tests do, and the pre-r8 behavior).
-    */
-  case object Verbatim extends SqlDialect {
-    override def foldCase(name: String): String = name
-  }
-}
-
 /** Retention write-back (reference main.go:131-145, S5): delete
   * archived rows from the source after a successful archive.
   *
@@ -100,6 +50,21 @@ object SqlDialect {
   * main.go:88).
   */
 object JdbcRetention {
+
+  /** A double-quoted identifier, addressed exactly as given: the table
+    * must be named in its stored case (PostgreSQL folds unquoted DDL to
+    * lower case, Derby and other ANSI-default engines to upper case).
+    * Embedded quotes are doubled, so a quote in a name can never
+    * terminate the identifier (defense in depth behind the allowlist).
+    */
+  private[io] def quoteIdent(name: String): String =
+    "\"" + name.replace("\"", "\"\"") + "\""
+
+  private[io] def deleteRangeSql(table: String): String =
+    s"DELETE FROM ${quoteIdent(table)} WHERE ${quoteIdent("id")} BETWEEN ? AND ?"
+
+  private[io] def deleteIdSql(table: String): String =
+    s"DELETE FROM ${quoteIdent(table)} WHERE ${quoteIdent("id")} = ?"
 
   /** Per-table inclusive id ranges covering exactly the archived rows,
     * as a (table_name, lo, hi) frame — built distributed: per table,
@@ -127,10 +92,25 @@ object JdbcRetention {
   final case class PerId(archived: DataFrame, allowedTables: Set[String],
       tables: Set[String]) extends DeletePlan
 
-  /** The plan half of [[deleteArchived]]: the Spark work (the key-range
-    * collect, capped at `maxRanges + 1` rows) and the allowlist check,
-    * with no connection opened. A caller may run it concurrently with
-    * other work on the archived frame and execute the plan later.
+  /** Decides what [[executeDelete]] sends for exactly the `archived`
+    * rows: the Spark work (the key-range collect, capped at
+    * `maxRanges + 1` rows) and the allowlist check, with no connection
+    * opened. Table names are validated against `allowedTables` instead
+    * of interpolating untrusted strings. A caller may run it
+    * concurrently with other work on the archived frame and execute the
+    * plan later.
+    *
+    * Driver-memory bound: the collected range list is capped at
+    * `maxRanges` (pathologically fragmented archived ids — e.g. every
+    * second id — would otherwise materialize one driver row per id).
+    * Past the cap the delete DEGRADES, never widens: the plan becomes
+    * per-id batched `DELETE WHERE id = ?` statements streamed through
+    * `toLocalIterator` (one partition of ids on the driver at a time),
+    * so memory stays bounded and the delete set is still EXACTLY the
+    * archived rows — slower, but a fragmented id space is already the
+    * slow path server-side, and coarsening ranges instead would
+    * re-introduce the reference's delete-wider-than-extract bug
+    * (main.go:134).
     */
   def planDelete(archived: DataFrame, allowedTables: Set[String],
       maxRanges: Int = 100000): DeletePlan = {
@@ -149,17 +129,28 @@ object JdbcRetention {
     else PerId(archived, allowedTables, tables)
   }
 
-  /** The execute half of [[deleteArchived]]: issues a plan's statements
-    * over one connection from `connect`. Returns rows deleted per table.
+  /** Issues a [[planDelete]] plan's statements over one connection from
+    * `connect` (injectable for tests; production passes
+    * `() => DriverManager.getConnection(url, props)`). Returns rows
+    * deleted per table.
+    *
+    * Count semantics: on drivers that batch-rewrite and report
+    * SUCCESS_NO_INFO (Postgres `reWriteBatchedInserts`, Oracle), the
+    * per-id fallback counts STATEMENTS EXECUTED, not rows matched — an
+    * id already absent (a retried/replayed delete) still counts 1, so
+    * the returned map can overreport there. Callers needing exact
+    * row counts under such drivers should verify with a follow-up
+    * SELECT count; the ranged fast path always reports true update
+    * counts.
     */
-  def executeDelete(plan: DeletePlan, connect: () => java.sql.Connection,
-      dialect: SqlDialect = SqlDialect.Verbatim): Map[String, Long] = plan match {
+  def executeDelete(plan: DeletePlan,
+      connect: () => java.sql.Connection): Map[String, Long] = plan match {
     case Ranged(ranges) =>
       val conn = connect()
       try {
         ranges.groupBy(_._1).map { case (table, rs) =>
           // table from allowlist only; range bounds are bind params
-          val st = conn.prepareStatement(dialect.deleteRangeSql(table))
+          val st = conn.prepareStatement(deleteRangeSql(table))
           var n = 0L
           try {
             rs.foreach { case (_, lo, hi) =>
@@ -199,7 +190,7 @@ object JdbcRetention {
           require(allowedTables.contains(table),
             s"table not in allowlist: $table")
           val st = stmts.getOrElseUpdate(table,
-            conn.prepareStatement(dialect.deleteIdSql(table)))
+            conn.prepareStatement(deleteIdSql(table)))
           st.setLong(1, r.getLong(1)); st.addBatch()
           pending(table) = pending.getOrElse(table, 0) + 1
           if (pending(table) >= 10000) flush(table)
@@ -211,38 +202,4 @@ object JdbcRetention {
         conn.close()
       }
   }
-
-  /** Deletes exactly the archived rows: [[planDelete]] then
-    * [[executeDelete]], over a caller-supplied connection factory
-    * (injectable for tests; production passes
-    * `() => DriverManager.getConnection(url, props)`). Returns rows
-    * deleted per table. Validates table names against an allowlist
-    * instead of interpolating untrusted strings.
-    *
-    * Count semantics: on drivers that batch-rewrite and report
-    * SUCCESS_NO_INFO (Postgres `reWriteBatchedInserts`, Oracle), the
-    * per-id fallback counts STATEMENTS EXECUTED, not rows matched — an
-    * id already absent (a retried/replayed delete) still counts 1, so
-    * the returned map can overreport there. Callers needing exact
-    * row counts under such drivers should verify with a follow-up
-    * SELECT count; the ranged fast path always reports true update
-    * counts.
-    *
-    * Driver-memory bound: the collected range list is capped at
-    * `maxRanges` (pathologically fragmented archived ids — e.g. every
-    * second id — would otherwise materialize one driver row per id).
-    * Past the cap the delete DEGRADES, never widens: per-id batched
-    * `DELETE WHERE id = ?` statements streamed through
-    * `toLocalIterator` (one partition of ids on the driver at a time),
-    * so memory stays bounded and the delete set is still EXACTLY the
-    * archived rows — slower, but a fragmented id space is already the
-    * slow path server-side, and coarsening ranges instead would
-    * re-introduce the reference's delete-wider-than-extract bug
-    * (main.go:134).
-    */
-  def deleteArchived(archived: DataFrame, allowedTables: Set[String],
-      connect: () => java.sql.Connection,
-      maxRanges: Int = 100000,
-      dialect: SqlDialect = SqlDialect.Verbatim): Map[String, Long] =
-    executeDelete(planDelete(archived, allowedTables, maxRanges), connect, dialect)
 }

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -285,144 +284,5 @@ object Archive {
     val upserts = checked.filter(col(opCol) =!= "D")
       .select(dataCols.map(col): _*)
     untouched.unionByName(upserts).orderBy(col(keyCol))
-  }
-
-  /** Archive maintenance: compact a `year=/month=` partition's small
-    * files. The reference emits one object per run (main.go:46-85) and
-    * [[appendIdempotent]] likewise appends ≥1 file per touched partition
-    * per run — at daily cadence over years that is the classic
-    * small-files failure (a 100 TB archive read becomes millions of
-    * file opens and a listing storm). Each partition whose file count
-    * exceeds ceil(bytes / targetMB) is rewritten into exactly that many
-    * files, and the swap is REFUSED unless the rewrite's
-    * order-independent digest ([[groupChecksums]] over `canonCols`)
-    * equals the original's — the same verify-before-destroy gate as
-    * GRAFT_VERIFY, so compaction can never silently lose or mutate a
-    * row.
-    *
-    * Staging dirs are dot-prefixed, which `FileInputFormat` ignores —
-    * concurrent readers of the archive never see half-written files.
-    * Crash safety: before any original moves to the backup dir, the
-    * rewrite's file names are written to a `_MANIFEST` inside it; a
-    * later run finding a leftover backup ROLLS BACK (restores the
-    * originals, removing exactly the manifest-named partially-swapped
-    * files) while rewrite files remain staged, and ROLLS FORWARD
-    * (drops the backup) once the staging dir is empty — i.e. the swap
-    * had completed. Every recovery step is idempotent renames/deletes,
-    * so a crash during recovery re-recovers. Concurrent appends are
-    * safe too: the rewrite covers EXACTLY the file set listed at the
-    * start (read by explicit paths, not by directory), so a file
-    * appended mid-compaction is never digested, backed up, or deleted
-    * — it simply survives the swap untouched.
-    *
-    * @return (partitions compacted, total files before, after)
-    */
-  def compactPartitions(spark: SparkSession, archiveDir: String,
-      targetMB: Int, canonCols: Seq[Column]): (Int, Int, Int) = {
-    require(targetMB > 0, "targetMB must be > 0")
-    val root = new Path(archiveDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    def digest(df: DataFrame): (Long, Long) = {
-      val r = groupChecksums(df, Seq.empty, canonCols).collect().head
-      val n = r.getLong(r.fieldIndex("n_rows"))
-      // bit_xor over zero rows is NULL: a partition whose files are all
-      // empty must digest as (0, 0) and compact normally, not NPE the run
-      (n, if (n == 0) 0L else r.getLong(r.fieldIndex("checksum")))
-    }
-    val leafDirs = for {
-      y <- fs.listStatus(root).toSeq
-      if y.isDirectory && y.getPath.getName.startsWith("year=")
-      m <- fs.listStatus(y.getPath).toSeq
-      if m.isDirectory && m.getPath.getName.startsWith("month=")
-    } yield m.getPath
-    var compacted = 0
-    var before = 0
-    var after = 0
-    leafDirs.foreach { part =>
-      val tmp = new Path(part.getParent, "." + part.getName + ".compact_tmp")
-      val bak = new Path(part.getParent, "." + part.getName + ".compact_bak")
-      recoverInterruptedCompaction(fs, part, tmp, bak)
-      val files = dataFiles(fs, part)
-      before += files.length
-      val want = math.max(1, math.ceil(
-        files.map(_.getLen).sum.toDouble / (targetMB.toLong << 20)).toInt)
-      if (files.length <= want) after += files.length
-      else {
-        // read EXACTLY this snapshot of files: a concurrently appended
-        // file is neither digested nor backed up nor deleted below
-        val df = spark.read.parquet(files.map(_.getPath.toString): _*)
-        val expect = digest(df)
-        fs.delete(tmp, true): Unit
-        // coalesce, not repartition: pure file merge, no shuffle
-        df.coalesce(want).write.mode("overwrite")
-          .option("compression", "snappy").parquet(tmp.toString)
-        val got = digest(spark.read.parquet(tmp.toString))
-        require(got == expect,
-          s"compaction digest mismatch for $part: rewrite=$got " +
-            s"original=$expect — partition left untouched")
-        fs.delete(bak, true): Unit
-        require(fs.mkdirs(bak), s"cannot create backup dir $bak")
-        val rewritten = dataFiles(fs, tmp)
-        // manifest BEFORE any original moves: the rollback contract
-        val mf = fs.create(new Path(bak, "_MANIFEST"), true)
-        try mf.write(rewritten.map(_.getPath.getName).mkString("\n")
-          .getBytes("UTF-8"))
-        finally mf.close()
-        files.foreach { f =>
-          require(fs.rename(f.getPath, new Path(bak, f.getPath.getName)),
-            s"backup rename failed: ${f.getPath}")
-        }
-        rewritten.foreach { f =>
-          require(fs.rename(f.getPath, new Path(part, f.getPath.getName)),
-            s"swap-in rename failed: ${f.getPath}")
-        }
-        fs.delete(tmp, true): Unit
-        fs.delete(bak, true): Unit
-        compacted += 1
-        after += rewritten.length
-      }
-    }
-    (compacted, before, after)
-  }
-
-  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem, dir: Path) =
-    fs.listStatus(dir).filter { f =>
-      val n = f.getPath.getName
-      f.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-
-  /** Recovery from a compaction interrupted mid-swap (see
-    * [[compactPartitions]]): backup present + rewrite files still
-    * staged ⇒ the swap did not finish — roll BACK (remove the
-    * manifest-named files already swapped in, restore every original);
-    * backup present + staging empty ⇒ the digest-verified swap
-    * finished — roll FORWARD (drop the backup). A backup without a
-    * manifest means nothing was moved yet: plain cleanup.
-    */
-  private def recoverInterruptedCompaction(
-      fs: org.apache.hadoop.fs.FileSystem,
-      part: Path, tmp: Path, bak: Path): Unit = {
-    if (!fs.exists(bak)) return
-    val manifest = new Path(bak, "_MANIFEST")
-    if (!fs.exists(manifest)) {
-      fs.delete(bak, true): Unit
-      fs.delete(tmp, true): Unit
-      return
-    }
-    val swapIncomplete = fs.exists(tmp) && dataFiles(fs, tmp).nonEmpty
-    if (swapIncomplete) {
-      val in = fs.open(manifest)
-      val names =
-        try new String(in.readAllBytes(), "UTF-8").split("\n")
-          .map(_.trim).filter(_.nonEmpty)
-        finally in.close()
-      names.foreach { nm => fs.delete(new Path(part, nm), false): Unit }
-      dataFiles(fs, bak).foreach { f =>
-        require(fs.rename(f.getPath, new Path(part, f.getPath.getName)),
-          s"recovery restore failed: ${f.getPath}")
-      }
-    }
-    fs.delete(tmp, true): Unit
-    fs.delete(bak, true): Unit
   }
 }

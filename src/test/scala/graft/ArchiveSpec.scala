@@ -223,131 +223,6 @@ class ArchiveSpec extends AnyFunSuite {
       s"expected only 2024-02 to differ, got $diffs")
   }
 
-  test("compaction merges per-run small files and leaves every " +
-      "partition digest bit-identical") {
-    import graft.ops.Scalar
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact")
-      .toString + "/arch"
-    // three appends of disjoint batches = ≥3 files in the partitions
-    // they share (the reference's one-file-per-run accumulation)
-    (0 until 3).foreach { i =>
-      val batch = iotDf(Seq(
-        (i * 10 + 1L, "2024-01-15 10:00:00", s"d$i", i + 0.5),
-        (i * 10 + 2L, "2024-02-20 11:00:00", s"d$i", i + 1.5)))
-        .transform(Archive.stampTableName("t"))
-      append(batch, dir): Unit
-    }
-    val canon = Seq(col("table_name"), col("id"), col("device_id"),
-      Scalar.epochNanos(col("timestamp")), col("value").cast("decimal(18,6)"))
-    def sums() = Archive.groupChecksums(spark.read.parquet(dir),
-        Seq("year", "month"), canon)
-      .orderBy("year", "month").as[(Int, Int, Long, Long)].collect().toSeq
-    def fileCount() = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(dir)).count(_.getName.endsWith(".parquet"))
-    }
-    val pre = sums()
-    val preFiles = fileCount()
-    assert(preFiles >= 6, s"fixture should accumulate small files, got $preFiles")
-    val (nParts, before, after) =
-      Archive.compactPartitions(spark, dir, targetMB = 64, canon)
-    assert(nParts == 2 && before == preFiles && after == 2,
-      s"expected both partitions compacted to 1 file: ($nParts, $before, $after)")
-    assert(fileCount() == 2)
-    assert(sums() == pre, "compaction changed a partition digest")
-    // idempotent: a second pass finds nothing to do
-    assert(Archive.compactPartitions(spark, dir, targetMB = 64, canon) ==
-      ((0, 2, 2)))
-  }
-
-  test("compaction survives a partition of all-empty files (bit_xor over " +
-      "zero rows is NULL — digest must treat it as 0, not NPE)") {
-    import graft.ops.Scalar
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact0")
-      .toString + "/arch"
-    val part = s"$dir/year=2024/month=1"
-    new java.io.File(part).mkdirs()
-    // three zero-row appends: file count exceeds the 1-file target while
-    // every file holds no rows
-    val empty = iotDf(Seq((1L, "2024-01-15 10:00:00", "d0", 0.5)))
-      .transform(Archive.stampTableName("t")).filter(col("id") < 0L)
-      .transform(Archive.withTimePartitions("timestamp"))
-      .drop("year", "month")
-    (0 until 3).foreach(_ => empty.write.mode("append").parquet(part))
-    val canon = Seq(col("table_name"), col("id"), col("device_id"),
-      Scalar.epochNanos(col("timestamp")), col("value").cast("decimal(18,6)"))
-    val (nParts, before, after) =
-      Archive.compactPartitions(spark, dir, targetMB = 64, canon)
-    assert(nParts == 1 && before == 3 && after == 1, s"($nParts, $before, $after)")
-    assert(spark.read.parquet(dir).isEmpty)
-  }
-
-  test("compaction crash recovery: a mid-swap crash rolls back to the " +
-      "exact originals, a completed-swap leftover backup rolls forward") {
-    import graft.ops.Scalar
-    import org.apache.hadoop.fs.Path
-    val dir = java.nio.file.Files.createTempDirectory("graft_crash")
-      .toString + "/arch"
-    (0 until 3).foreach { i =>
-      append(iotDf(Seq(
-        (i * 10 + 1L, "2024-01-15 10:00:00", s"d$i", i + 0.5)))
-        .transform(Archive.stampTableName("t")), dir): Unit
-    }
-    val canon = Seq(col("table_name"), col("id"), col("device_id"),
-      Scalar.epochNanos(col("timestamp")), col("value").cast("decimal(18,6)"))
-    def digestAll() = Archive.groupChecksums(spark.read.parquet(dir),
-        Seq("year", "month"), canon)
-      .orderBy("year", "month").as[(Int, Int, Long, Long)].collect().toSeq
-    val pre = digestAll()
-    val fs = new Path(dir).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val part = new Path(dir, "year=2024/month=1")
-    val tmp = new Path(part.getParent, ".month=1.compact_tmp")
-    val bak = new Path(part.getParent, ".month=1.compact_bak")
-    def parquetFiles(p: Path) = fs.listStatus(p).filter { f =>
-      val n = f.getPath.getName
-      f.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    def writeManifest(names: Seq[String]): Unit = {
-      val o = fs.create(new Path(bak, "_MANIFEST"), true)
-      try o.write(names.mkString("\n").getBytes("UTF-8")) finally o.close()
-    }
-    // --- scenario A: crash AFTER originals moved to backup, BEFORE any
-    // swap-in (partition momentarily empty — the worst case: a naive
-    // rerun would see nothing to compact and delete the only copy)
-    val originals = parquetFiles(part).map(_.getPath.getName).toSeq
-    spark.read.parquet(part.toString).coalesce(1)
-      .write.mode("overwrite").parquet(tmp.toString)
-    fs.mkdirs(bak)
-    writeManifest(parquetFiles(tmp).map(_.getPath.getName).toSeq)
-    originals.foreach(n =>
-      assert(fs.rename(new Path(part, n), new Path(bak, n))))
-    assert(parquetFiles(part).isEmpty) // the dangerous window
-    val (n1, b1, a1) = Archive.compactPartitions(spark, dir, 64, canon)
-    assert(n1 == 1 && b1 == 3 && a1 == 1, s"($n1, $b1, $a1)")
-    assert(digestAll() == pre, "rollback+recompact changed the digest")
-    assert(!fs.exists(tmp) && !fs.exists(bak))
-    // --- scenario B: crash AFTER the swap completed but BEFORE the
-    // backup was dropped (partition holds the verified rewrite; the
-    // backup must be discarded, not restored — restoring would
-    // duplicate every row)
-    val rewriteName = parquetFiles(part).head.getPath.getName
-    fs.mkdirs(bak)
-    writeManifest(Seq(rewriteName))
-    // stale original content in the backup (same rows, pre-compaction)
-    val scratch = new Path(part.getParent, ".scratch")
-    spark.read.parquet(part.toString).coalesce(1)
-      .write.mode("overwrite").parquet(scratch.toString)
-    parquetFiles(scratch).foreach(f =>
-      assert(fs.rename(f.getPath, new Path(bak, "old_" + f.getPath.getName))))
-    fs.delete(scratch, true)
-    val (n2, b2, a2) = Archive.compactPartitions(spark, dir, 64, canon)
-    assert(n2 == 0 && b2 == 1 && a2 == 1, s"($n2, $b2, $a2)")
-    assert(digestAll() == pre, "roll-forward changed the digest")
-    assert(!fs.exists(bak))
-  }
-
   test("checksum canonical encoding is injective: NULL position shifts " +
       "and delimiter bytes inside values cannot collide two rows") {
     def digest(rows: Seq[(String, String, String)]): Long =

@@ -44,6 +44,29 @@ class ArchiverMainSpec extends AnyFunSuite {
       ArchiverMain.parseConfig(Map("GRAFT_OUT" -> "/out",
         "GRAFT_SOURCE_DIR" -> "/s", "GRAFT_JDBC_URL" -> "jdbc:x"))
     }
+
+    // each rejected input's error names what is wrong with it
+    def rejects(named: String, env: (String, String)*): Unit = {
+      val e = intercept[IllegalArgumentException] {
+        ArchiverMain.parseConfig(Map("GRAFT_SOURCE_DIR" -> "/src", "GRAFT_OUT" -> "/out") ++ env)
+      }
+      assert(e.getMessage.contains(named), e.getMessage)
+    }
+    // a table named twice, also in another case, would be archived twice
+    rejects("iot_data", "GRAFT_TABLES" -> "iot_data,iot_data")
+    rejects("IOT_DATA", "GRAFT_TABLES" -> "iot_data, IOT_DATA")
+    // a DELETE the config asks for but cannot run
+    rejects("GRAFT_DELETE", "GRAFT_DELETE" -> "true")
+    rejects("GRAFT_DELETE", "GRAFT_DELETE" -> "true", "GRAFT_STREAMING" -> "true")
+    // malformed values
+    rejects("GRAFT_BATCH_SIZE", "GRAFT_BATCH_SIZE" -> "abc")
+    rejects("GRAFT_BATCH_SIZE", "GRAFT_BATCH_SIZE" -> "0")
+    rejects("GRAFT_RETENTION_DAYS", "GRAFT_RETENTION_DAYS" -> "-1")
+    rejects("GRAFT_DELETE", "GRAFT_DELETE" -> "yes")
+    rejects("GRAFT_STREAMING", "GRAFT_STREAMING" -> "1")
+    rejects("GRAFT_CUTOFF", "GRAFT_CUTOFF" -> "2024-02-30 00:00:00")
+    rejects("GRAFT_CUTOFF", "GRAFT_CUTOFF" -> "2024-02-01")
+    rejects("GRAFT_CUTOFF", "GRAFT_CUTOFF" -> "2024-02-01T00:00:00")
   }
 
   test("main honours GRAFT_MASTER given as a KEY=value argument") {
@@ -130,13 +153,9 @@ class ArchiverMainSpec extends AnyFunSuite {
     assert(spark.read.parquet(outDir)
       .groupBy("table_name", "id").count().filter(col("count") > 1).isEmpty)
 
-    // GRAFT_VERIFY: the read-back digest gate passes on the intact
-    // archive...
-    val vcfg = cfg.copy(verifyArchive = true)
-    val r3 = ArchiverMain.run(spark, vcfg, ParquetSource(srcDir), None)
-    assert(r3.extracted == 3 && r3.appended == 0)
-
-    // ...and refuses (throws) once a durable archive row is corrupted
+    // every run verifies: the read-back digest gate passed on the intact
+    // archive above, and refuses (throws) once a durable archive row is
+    // corrupted
     val goodRows = spark.read.parquet(outDir).collect()
     val schema = spark.read.parquet(outDir).schema
     val corrupted = spark.createDataFrame(
@@ -148,7 +167,7 @@ class ArchiverMainSpec extends AnyFunSuite {
     val outDir2 = tmp("graft_cli_out2") + "/arch"
     corrupted.write.partitionBy("year", "month").parquet(outDir2)
     val ex = intercept[IllegalArgumentException] {
-      ArchiverMain.run(spark, vcfg.copy(outPath = outDir2),
+      ArchiverMain.run(spark, cfg.copy(outPath = outDir2),
         ParquetSource(srcDir), None)
     }
     assert(ex.getMessage.contains("archive verification FAILED"))
@@ -235,8 +254,7 @@ class ArchiverMainSpec extends AnyFunSuite {
       .write.parquet(s"$srcDir/iot_data.parquet")
     val cfg = ArchiverMain.parseConfig(Map(
       "GRAFT_SOURCE_DIR" -> srcDir, "GRAFT_OUT" -> outDir,
-      "GRAFT_TABLES" -> "iot_data", "GRAFT_CUTOFF" -> Cutoff,
-      "GRAFT_VERIFY" -> "true"))
+      "GRAFT_TABLES" -> "iot_data", "GRAFT_CUTOFF" -> Cutoff))
     assert(ArchiverMain.run(spark, cfg, ParquetSource(srcDir), None).appended == 2)
 
     // a second copy of id 1 lands in its partition; the anti-join then
@@ -397,7 +415,7 @@ class ArchiverMainSpec extends AnyFunSuite {
 
   private def derbyBase(url: String, outDir: String) = Map(
     "GRAFT_JDBC_URL" -> url, "GRAFT_OUT" -> outDir,
-    "GRAFT_TABLES" -> "IOT_DATA", "GRAFT_CUTOFF" -> Cutoff, "GRAFT_VERIFY" -> "true")
+    "GRAFT_TABLES" -> "IOT_DATA", "GRAFT_CUTOFF" -> Cutoff)
 
   test("one archiver cycle with verify and delete on runs at most 9 Spark jobs") {
     val (url, connect) = derby("graft_job_budget")

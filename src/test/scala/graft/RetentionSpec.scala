@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.io.{JdbcRetention, SqlDialect}
+import graft.io.JdbcRetention
 
 /** Retention write-back (SURVEY.md §7 step 6): the delete set must be
   * keyed to the actually-archived rows — NOT the reference's wider
@@ -21,9 +21,10 @@ class RetentionSpec extends AnyFunSuite {
       ("t2", 10L)).toDF("table_name", "id")
     val executed = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
     val conn = stubConnection((sql, lo, hi) => executed += ((sql, lo, hi)))
-    JdbcRetention.deleteArchived(archived, Set("t1", "t2"), () => conn): Unit
+    JdbcRetention.executeDelete(
+      JdbcRetention.planDelete(archived, Set("t1", "t2")), () => conn): Unit
     // the bound (lo, hi) parameters of the range DELETEs are the ranges
-    def sql(t: String) = SqlDialect.Verbatim.deleteRangeSql(t)
+    def sql(t: String) = s"""DELETE FROM "$t" WHERE "id" BETWEEN ? AND ?"""
     assert(executed.toSet ==
       Set((sql("t1"), 1L, 3L), (sql("t1"), 7L, 8L), (sql("t2"), 10L, 10L)))
   }
@@ -36,16 +37,27 @@ class RetentionSpec extends AnyFunSuite {
     val executed = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
     val conn = stubConnection((sql, lo, hi) => executed += ((sql, lo, hi)))
 
-    val counts = JdbcRetention.deleteArchived(archived, Set("iot_data"), () => conn)
+    val counts = JdbcRetention.executeDelete(
+      JdbcRetention.planDelete(archived, Set("iot_data")), () => conn)
     assert(counts == Map("iot_data" -> 2L)) // stub reports 1 row per executeUpdate
     assert(executed.toSet ==
       Set(("""DELETE FROM "iot_data" WHERE "id" BETWEEN ? AND ?""", 1L, 2L),
         ("""DELETE FROM "iot_data" WHERE "id" BETWEEN ? AND ?""", 9L, 9L)))
 
     val bad = intercept[IllegalArgumentException] {
-      JdbcRetention.deleteArchived(archived, Set("other"), () => conn)
+      JdbcRetention.executeDelete(
+        JdbcRetention.planDelete(archived, Set("other")), () => conn)
     }
     assert(bad.getMessage.contains("iot_data"))
+
+    // embedded quotes can never terminate the identifier (defense in
+    // depth behind the allowlist)
+    executed.clear()
+    val weird = Seq(("""we"ird""", 5L)).toDF("table_name", "id")
+    JdbcRetention.executeDelete(
+      JdbcRetention.planDelete(weird, Set("""we"ird""")), () => conn): Unit
+    assert(executed.toSeq ==
+      Seq(("""DELETE FROM "we""ird" WHERE "id" BETWEEN ? AND ?""", 5L, 5L)))
   }
 
   test("fragmented ids past maxRanges fall back to per-id batched " +
@@ -59,59 +71,16 @@ class RetentionSpec extends AnyFunSuite {
       assert(sql == """DELETE FROM "iot_data" WHERE "id" = ?""")
       deleted += id
     })
-    val counts = JdbcRetention.deleteArchived(archived, Set("iot_data"),
-      () => conn, maxRanges = 2)
+    val counts = JdbcRetention.executeDelete(
+      JdbcRetention.planDelete(archived, Set("iot_data"), maxRanges = 2), () => conn)
     assert(counts == Map("iot_data" -> ids.size.toLong))
     assert(deleted.toSet == ids.toSet) // exactly the archived ids, no widening
     // allowlist still enforced on the fallback path
     val bad = intercept[IllegalArgumentException] {
-      JdbcRetention.deleteArchived(archived, Set("other"), () => conn,
-        maxRanges = 2)
+      JdbcRetention.executeDelete(
+        JdbcRetention.planDelete(archived, Set("other"), maxRanges = 2), () => conn)
     }
     assert(bad.getMessage.contains("iot_data"))
-  }
-
-  test("dialects generate the engine's stored form of an unquoted table " +
-      "name — PG lower-folds, Derby upper-folds, Verbatim passes through") {
-    // A table CREATEd unquoted as `IoT_Data` is stored as `iot_data` on
-    // PG and `IOT_DATA` on Derby; the quoted DELETE must address the
-    // stored form or it hits a missing-table error on a live server.
-    assert(SqlDialect.Postgres.deleteRangeSql("IoT_Data") ==
-      """DELETE FROM "iot_data" WHERE "id" BETWEEN ? AND ?""")
-    assert(SqlDialect.Derby.deleteRangeSql("IoT_Data") ==
-      """DELETE FROM "IOT_DATA" WHERE "ID" BETWEEN ? AND ?""")
-    assert(SqlDialect.Verbatim.deleteRangeSql("IoT_Data") ==
-      """DELETE FROM "IoT_Data" WHERE "id" BETWEEN ? AND ?""")
-    assert(SqlDialect.Postgres.deleteIdSql("events") ==
-      """DELETE FROM "events" WHERE "id" = ?""")
-    assert(SqlDialect.Derby.deleteIdSql("events") ==
-      """DELETE FROM "EVENTS" WHERE "ID" = ?""")
-    // embedded quotes can never terminate the identifier (defense in
-    // depth behind the allowlist)
-    assert(SqlDialect.Verbatim.quoteIdent("""we"ird""") == "\"we\"\"ird\"")
-  }
-
-  test("deleteArchived applies the dialect on both the ranged and the " +
-      "per-id fallback path") {
-    val archived = Seq(("IoT_Data", 1L), ("IoT_Data", 2L))
-      .toDF("table_name", "id")
-    val ranged = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
-    val conn = stubConnection((sql, lo, hi) => ranged += ((sql, lo, hi)))
-    JdbcRetention.deleteArchived(archived, Set("IoT_Data"), () => conn,
-      dialect = SqlDialect.Postgres): Unit
-    assert(ranged.toSet ==
-      Set(("""DELETE FROM "iot_data" WHERE "id" BETWEEN ? AND ?""", 1L, 2L)))
-
-    val fragmented = Seq(("IoT_Data", 1L), ("IoT_Data", 3L), ("IoT_Data", 5L))
-      .toDF("table_name", "id")
-    val perId = scala.collection.mutable.ArrayBuffer[Long]()
-    val bconn = stubBatchConnection((sql, id) => {
-      assert(sql == """DELETE FROM "IOT_DATA" WHERE "ID" = ?""")
-      perId += id
-    })
-    JdbcRetention.deleteArchived(fragmented, Set("IoT_Data"), () => bconn,
-      maxRanges = 2, dialect = SqlDialect.Derby): Unit
-    assert(perId.toSet == Set(1L, 3L, 5L))
   }
 
   /** Batch-capable stub: records (sql, id) per batched row; executeBatch
