@@ -57,9 +57,10 @@ import graft.ops.Archive
   * Every batch run re-reads the archive and requires its digests to
   * match the batch's before any DELETE (Archive.groupChecksums). A
   * malformed value, a table named twice in GRAFT_TABLES (compared
-  * case-insensitively: an unquoted JDBC name reads one table either
-  * way) and a GRAFT_DELETE that cannot run are config errors naming
-  * their key.
+  * case-insensitively: a table created by unquoted DDL exists in one
+  * case only) and a GRAFT_DELETE that cannot run are config errors
+  * naming their key. JDBC tables are addressed quoted, in the case
+  * given, by both the extract and the DELETE.
   */
 object ArchiverMain {
 

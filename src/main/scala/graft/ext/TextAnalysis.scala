@@ -188,23 +188,6 @@ object TextAnalysis {
       .select(col("doc_id"), col("lang"), col("n_bigrams"), col("nll"))
   }
 
-  /** The bigram model as a persistable frame: (w1, w2, c_bg, c_w1) —
-    * [[bigramNll]]'s sufficient statistics materialized for reuse.
-    * At 100 TB this is the train/serve split: build once from the
-    * corpus (or incrementally union counts), write to parquet, then
-    * score every NEW batch with [[scoreWithBigramModel]]'s keyed join
-    * instead of re-deriving the model per run (DEPLOY.md).
-    */
-  def bigramModel(docs: DataFrame, textCol: String): DataFrame = {
-    val wW1 = org.apache.spark.sql.expressions.Window.partitionBy(col("w1"))
-    docs
-      .select(tokens(col(textCol)).as("w"))
-      .select(explode(bigramsOf(col("w"))).as("bg"))
-      .groupBy(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .agg(count(lit(1)).as("c_bg"))
-      .withColumn("c_w1", sum(col("c_bg")).over(wW1))
-  }
-
   /** Adjacent-pair structs from a PROJECTED token-array column. Callers
     * must alias the tokenize into its own projection first: an inline
     * `split` would be re-inlined into all four references here (both
@@ -216,42 +199,6 @@ object TextAnalysis {
       slice(w, lit(1), size(w) - 1),
       slice(w, lit(2), size(w) - 1),
       (a, b) => struct(a.as("w1"), b.as("w2")))
-
-  /** Score documents against a prebuilt [[bigramModel]]: per-doc avg
-    * negative log-likelihood plus the count of bigrams the model has
-    * never seen (each contributes `unseenLp` nats of log-prob — the
-    * out-of-domain signal itself). Self-scoring a corpus against its
-    * own model yields n_unseen = 0 and EXACTLY [[bigramNll]]'s nll
-    * (pinned in TextAnalysisSpec): the same decimal(18,9) rounding of
-    * the same rationals, reached through a keyed join instead of
-    * windows. Scale shape: one scan of the scored batch, one
-    * (w1,w2)-keyed join against the model, one doc agg — the model
-    * never re-derives.
-    */
-  def scoreWithBigramModel(docs: DataFrame, model: DataFrame,
-      textCol: String, idCol: String,
-      unseenLp: Double = math.log(1e-9)): DataFrame = {
-    val dk = docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("w"))
-      .select(col("doc_id"), explode(bigramsOf(col("w"))).as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .groupBy(col("doc_id"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("k"))
-    val lpSeen = log(col("c_bg").cast("double") / col("c_w1").cast("double"))
-      .cast("decimal(18,9)")
-    val lpFloor = lit(BigDecimal(unseenLp)
-      .setScale(9, BigDecimal.RoundingMode.HALF_UP)).cast("decimal(18,9)")
-    dk.join(model, Seq("w1", "w2"), "left")
-      .select(col("doc_id"), col("k"),
-        when(col("c_bg").isNull, lpFloor).otherwise(lpSeen).as("lp"),
-        when(col("c_bg").isNull, col("k")).otherwise(lit(0L)).as("unseen"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("k")).as("n_bigrams"),
-        sum(col("unseen")).as("n_unseen"),
-        ((lit(0.0) -
-          sum(col("k").cast("decimal(10,0)") * col("lp")).cast("double")) /
-          sum(col("k"))).as("nll"))
-  }
 
   /** Top-k token pairs by document-level pointwise mutual information:
     * PMI(a,b) = ln(n_ab·N / (n_a·n_b)) over per-document DISTINCT

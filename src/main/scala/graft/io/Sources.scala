@@ -23,14 +23,18 @@ final case class ParquetSource(dir: String) extends TableSource {
   * (reference main.go:88-129). Filters, limits and column pruning
   * pushed by Catalyst reach the remote server as SQL (the reference
   * hardcodes them into its query text at main.go:88-93; delegation is
-  * the same, decided at plan time).
+  * the same, decided at plan time). The table name is quoted exactly
+  * like the retention DELETE's ([[JdbcRetention.quoteIdent]]), so the
+  * extract and the DELETE address the same table, and a name not in
+  * its stored case fails at schema resolution, before anything is
+  * written.
   */
 final case class JdbcSource(url: String, props: java.util.Properties)
     extends TableSource {
   override def load(spark: SparkSession, table: String): DataFrame = {
     val reader = spark.read.format("jdbc")
       .option("url", url)
-      .option("dbtable", table)
+      .option("dbtable", JdbcRetention.quoteIdent(table))
     props.stringPropertyNames().forEach(k => reader.option(k, props.getProperty(k)))
     reader.load()
   }

@@ -15,9 +15,10 @@ import org.apache.spark.sql.types._
   * accepted. FixtureSchemaSpec runs it against the live testdata and
   * proves it goes red on a synthetically drifted fixture.
   *
-  * Columns that have legitimately shipped under several physical
-  * encodings accept every encoding the readers handle (see
-  * [[Tables.events]] — Long epoch-nanos | TIMESTAMP | TIMESTAMP_NTZ).
+  * `events.ts` accepts exactly the dtypes [[Tables.eventsTsType]]
+  * canonicalizes (TIMESTAMP | TIMESTAMP_NTZ). The r1–r7 parquet
+  * TIMESTAMP(NANOS) encoding is no longer read; [[driftAll]] loads it
+  * as BIGINT and reports it as drift.
   * Extra columns are reported too: a new column is not a failure for
   * today's queries but is exactly the early warning this exists for.
   */
@@ -29,16 +30,12 @@ object FixtureCheck {
     * real signals).
     */
   private def t(dts: DataType*): Set[DataType] = dts.toSet
-  /** Encodings `Tables.events` actually branches on — accepting a type
-    * here REQUIRES a reader branch for it (the canary must never stay
+  /** Datetime columns: only real timestamp types. For `events.ts` these
+    * are exactly what `Tables.eventsTsType` accepts — accepting a type
+    * there REQUIRES the readers to handle it (the canary must never stay
     * green on a dtype the readers would throw on).
     */
-  private val tsEncodings: Set[DataType] =
-    Set(LongType, TimestampType, TimestampNTZType)
-  /** Plain datetime columns (orders/lineitem) read directly with no
-    * adaptive branch: only real timestamp types are acceptable.
-    */
-  private val plainTs: Set[DataType] = Set(TimestampType, TimestampNTZType)
+  private val timestamps: Set[DataType] = Set(TimestampType, TimestampNTZType)
 
   val expected: Map[String, Map[String, Set[DataType]]] = Map(
     "region" -> Map("r_regionkey" -> t(IntegerType), "r_name" -> t(StringType)),
@@ -54,14 +51,14 @@ object FixtureCheck {
       "p_size" -> t(IntegerType), "p_retailprice" -> t(DoubleType)),
     "orders" -> Map("o_orderkey" -> t(LongType), "o_custkey" -> t(LongType),
       "o_orderstatus" -> t(StringType), "o_totalprice" -> t(DoubleType),
-      "o_orderdate" -> plainTs, "o_orderpriority" -> t(StringType)),
+      "o_orderdate" -> timestamps, "o_orderpriority" -> t(StringType)),
     "lineitem" -> Map("l_orderkey" -> t(LongType), "l_partkey" -> t(LongType),
       "l_suppkey" -> t(LongType), "l_linenumber" -> t(IntegerType),
       "l_quantity" -> t(DoubleType), "l_extendedprice" -> t(DoubleType),
       "l_discount" -> t(DoubleType), "l_tax" -> t(DoubleType),
       "l_returnflag" -> t(StringType), "l_linestatus" -> t(StringType),
-      "l_shipdate" -> plainTs),
-    "events" -> Map("event_id" -> t(LongType), "ts" -> tsEncodings,
+      "l_shipdate" -> timestamps),
+    "events" -> Map("event_id" -> t(LongType), "ts" -> timestamps,
       "user_id" -> t(LongType), "event_type" -> t(StringType),
       "value" -> t(DoubleType), "props" -> t(StringType)),
     "documents" -> Map("doc_id" -> t(LongType), "text" -> t(StringType),
@@ -95,13 +92,19 @@ object FixtureCheck {
     missing ++ retyped ++ extra
   }
 
-  /** Check every fixture table under `sfDir` (footer reads only). */
+  /** Check every fixture table under `sfDir` (footer reads only). The
+    * legacy nanos flag makes a parquet TIMESTAMP(NANOS) regeneration load
+    * as BIGINT, so it is named as `events.ts: dtype DRIFTED to BIGINT`
+    * instead of failing the footer read with PARQUET_TYPE_ILLEGAL.
+    */
   def driftAll(spark: SparkSession, sfDir: String): Seq[String] = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    expected.keySet.toSeq.sorted.flatMap { table =>
+    val flag = "spark.sql.legacy.parquet.nanosAsLong"
+    val saved = spark.conf.getOption(flag)
+    spark.conf.set(flag, "true")
+    try expected.keySet.toSeq.sorted.flatMap { table =>
       val path = s"$sfDir/$table.parquet"
       if (!new java.io.File(path).exists) Seq(s"$table: fixture missing at $path")
       else drift(table, spark.read.parquet(path).schema)
-    }
+    } finally saved.fold(spark.conf.unset(flag))(spark.conf.set(flag, _))
   }
 }

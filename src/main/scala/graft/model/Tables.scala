@@ -1,6 +1,7 @@
 package graft.model
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** Table loaders for the driver-generated star schema (TESTDATA.md) plus
@@ -45,103 +46,55 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")
-  /** `events.ts` has shipped under two physical parquet types across
-    * fixture generations: TIMESTAMP(NANOS) (r1-r7; unreadable natively,
-    * [PARQUET_TYPE_ILLEGAL], so the legacy flag surfaces it as a nanos
-    * Long) and plain timestamp[us] (r8 regeneration; arrives as
-    * TIMESTAMP_NTZ under Spark 4's parquet NTZ inference). Loading with
-    * the flag set is safe for both — it only affects NANOS columns — so
-    * `eventsNative` reads once and callers branch on the loaded dtype.
-    * Any OTHER dtype is fixture drift and must fail loudly, not produce
-    * silently-wrong timestamps (see FixtureCheck / FixtureSchemaSpec).
+  /** The one place that knows how `events.ts` is encoded. Every fixture
+    * since r8 stores it as parquet timestamp[us], which Spark 4 loads as
+    * TIMESTAMP_NTZ; a TIMESTAMP column is accepted too. One
+    * `cast(TimestampType)` canonicalizes either, and the readers apply
+    * that cast after any predicate on the native column, so filters
+    * still reach the scan. Returns the loaded dtype. Any other dtype is
+    * fixture drift and fails loudly here, naming `events.ts`, instead of
+    * producing silently-wrong timestamps (FixtureCheck is the footer
+    * canary for the same contract).
     */
-  def eventsNative(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    load(s, d, "events")
+  private[graft] def eventsTsType(s: SparkSession, loaded: StructType): DataType = {
+    val dt = loaded("ts").dataType
+    dt match {
+      case TimestampType =>
+      case _: TimestampNTZType => requireUtc(s)
+      case other => badTsType(other)
+    }
+    dt
   }
 
-  /** The NTZ fixture encoding stores wall-clock datetimes;
-    * canonicalizing to TimestampType reinterprets them in the SESSION
-    * timezone. Under the engine's UTC determinism contract (SURVEY
-    * §5.1) that reproduces the exact epoch-µs of the legacy nanos-Long
-    * encoding; under any other session timezone the two encodings
-    * would silently disagree on every absolute-epoch surface
-    * (epochNanos, unix_micros, the mixed-generation union). Loud
-    * failure instead.
+  /** TIMESTAMP_NTZ stores wall-clock datetimes, and the cast to
+    * TimestampType reinterprets them in the SESSION timezone. The
+    * generator writes naive-UTC wall times, so only a UTC session
+    * (SURVEY §5.1 determinism contract) yields their true epoch values;
+    * any other zone would shift every absolute-epoch surface (epochNanos,
+    * unix_micros, the archive shape) by its offset. Loud failure instead.
     */
-  private[graft] def requireUtcForNtz(s: SparkSession): Unit = {
+  private def requireUtc(s: SparkSession): Unit = {
     val tz = s.conf.get("spark.sql.session.timeZone")
     require(java.time.ZoneId.of(tz).normalized() == java.time.ZoneOffset.UTC,
       s"events.ts arrives as TIMESTAMP_NTZ and is reinterpreted in the " +
-        s"session timezone, which is '$tz', not UTC — the nanos-Long and " +
-        "timestamp[us] fixture encodings would disagree on epoch values. " +
-        "Set spark.sql.session.timeZone=UTC (SURVEY §5.1 determinism " +
-        "contract).")
+        s"session timezone, which is '$tz', not UTC — its epoch values " +
+        "would shift by the zone offset. Set spark.sql.session.timeZone=UTC " +
+        "(SURVEY §5.1 determinism contract).")
   }
 
   private def badTsType(dt: DataType): Nothing = throw new IllegalStateException(
-    s"events.ts has unsupported dtype ${dt.sql}: expected BIGINT (epoch " +
-      "nanos, legacy fixtures), TIMESTAMP, or TIMESTAMP_NTZ (current " +
-      "fixtures). The testdata schema drifted again — update Tables.events.")
+    s"events.ts has unsupported dtype ${dt.sql}: expected TIMESTAMP_NTZ " +
+      "(parquet timestamp[us], current fixtures) or TIMESTAMP. The testdata " +
+      "schema drifted — run FixtureCheck, then fix the fixture or " +
+      "Tables.eventsTsType.")
 
   /** Canonical events view: `ts` is always Spark TimestampType (µs, UTC
-    * session). Nanos-Long fixtures floor-truncate ns→µs (`ts div 1000`,
-    * matching DuckDB's ns→µs cast); timestamp fixtures pass through
-    * (NTZ reinterpreted as UTC — the generator writes naive-UTC wall
-    * times, so the epoch-µs values are identical to the legacy path's).
+    * session; see [[eventsTsType]]).
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val raw = eventsNative(s, d)
-    raw.schema("ts").dataType match {
-      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampType => raw
-      case _: TimestampNTZType =>
-        requireUtcForNtz(s)
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-      case other => badTsType(other)
-    }
-  }
-
-  /** Raw events with `ts` as an epoch-nanos Long (for F3-style queries).
-    * On timestamp-typed fixtures the nanos view is derived
-    * (`unix_micros(ts) * 1000` — zero-padded ns, the same convention as
-    * the archive shape); note a predicate on the DERIVED column cannot
-    * reach the scan — filter-pushdown paths must branch on
-    * [[eventsTsIsNanosLong]] and compare in the native column space
-    * (see RefQueries.eventsAsIotBefore).
-    */
-  def eventsRawNanos(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val raw = eventsNative(s, d)
-    raw.schema("ts").dataType match {
-      case LongType => raw
-      case TimestampType =>
-        raw.withColumn("ts", unix_micros(col("ts")) * lit(1000L))
-      case _: TimestampNTZType =>
-        requireUtcForNtz(s)
-        raw.withColumn("ts", unix_micros(col("ts").cast(TimestampType)) * lit(1000L))
-      case other => badTsType(other)
-    }
-  }
-
-  /** True when the on-disk `events.ts` is the legacy nanos-as-Long
-    * encoding (schema-only probe; reads footers, not data).
-    */
-  def eventsTsIsNanosLong(s: SparkSession, d: String): Boolean =
-    eventsNative(s, d).schema("ts").dataType == LongType
-
-  /** Events across a MIXED-generation lake: each directory holds ONE
-    * encoding (Spark merges footers per read, so a ns-Long/µs mix in a
-    * single read fails schema merge — correctly loudly), and this
-    * unions the per-directory canonicalized reads. The migration shape
-    * for a multi-year archive while old and new generations coexist
-    * (DEPLOY.md); each leg keeps its own native-space predicate
-    * pushdown, and union-all adds no exchange.
-    */
-  def eventsUnionAll(s: SparkSession, dirs: Seq[String]): DataFrame = {
-    require(dirs.nonEmpty, "eventsUnionAll needs at least one directory")
-    dirs.map(events(s, _)).reduce(_.unionByName(_))
+    val raw = load(s, d, "events")
+    eventsTsType(s, raw.schema)
+    raw.withColumn("ts", col("ts").cast(TimestampType))
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")

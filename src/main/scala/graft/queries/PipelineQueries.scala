@@ -18,7 +18,7 @@ object PipelineQueries {
   /** Plain 3-shard staged copy of `events`, SHARED by the three
     * arrival-order-free streams — q_ohlc_stream, q_stream_archive
     * (r14 — VERDICT r13 #3), and q_stream_sessions (r15): all stage
-    * the identical `eventsNative.repartition(3)` parquet tree and
+    * the identical `repartition(3)` copy of `events.parquet` and
     * none depends on arrival order (complete-mode aggs / stateless
     * sink), so in a Verify/Bench JVM that runs every query only the
     * FIRST pays the staging write. Keyed by scale dir; deleted at JVM
@@ -65,7 +65,7 @@ object PipelineQueries {
     })
   private[graft] def stagedEvents3(s: SparkSession, d: String): String =
     stagedTree("stage3", d) { tmp =>
-      Tables.eventsNative(s, d).repartition(3)
+      Tables.load(s, d, "events").repartition(3)
         .write.mode("overwrite").parquet(tmp)
     }
 
@@ -89,7 +89,7 @@ object PipelineQueries {
       val staging = java.nio.file.Files
         .createTempDirectory("graft_stream_range_stage").toString
       try {
-        Tables.eventsNative(s, d).repartitionByRange(slices, col("ts"))
+        Tables.load(s, d, "events").repartitionByRange(slices, col("ts"))
           .write.mode("overwrite").parquet(staging)
         val parts = new java.io.File(staging).listFiles()
           .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)

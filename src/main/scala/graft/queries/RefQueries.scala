@@ -32,49 +32,30 @@ object RefQueries {
       col("value"))
 
   /** eventsAsIot with the retention cutoff applied on the NATIVE scan
-    * column, BEFORE any type conversion: a predicate on a converted
-    * timestamp cannot pass through `timestamp_micros(ts div 1000)` (or
-    * an NTZ cast) to the scan, so each fixture encoding compares in its
-    * own column space and the parquet reader evaluates the filter
-    * against row-group statistics (PushedFilters — asserted in
-    * PlanSpec). Nanos-Long fixtures: `ts < cutoff_µs * 1000` is exact
-    * because the cutoff is whole-µs (floor(ns/1000) < C ⟺ ns < C*1000).
-    * Timestamp fixtures: a plain timestamp/NTZ literal comparison.
+    * column, BEFORE the canonicalizing cast: a predicate on the cast
+    * column cannot pass through an NTZ → TIMESTAMP cast to the scan, so
+    * the cutoff literal is cast to the loaded dtype instead and the
+    * parquet reader evaluates the filter against row-group statistics
+    * (PushedFilters — asserted in PlanSpec).
     */
   def eventsAsIotBefore(s: SparkSession, d: String, cutoff: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val raw = Tables.eventsNative(s, d)
-    val filtered = raw.schema("ts").dataType match {
-      case LongType =>
-        val cutoffNanos = java.time.LocalDateTime
-          .parse(cutoff.replace(' ', 'T'))
-          .toInstant(java.time.ZoneOffset.UTC)
-          .getEpochSecond * 1000000000L
-        raw.filter(col("ts") < lit(cutoffNanos))
-          .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampType =>
-        raw.filter(col("ts") < lit(cutoff).cast(TimestampType))
-      case _: TimestampNTZType =>
-        Tables.requireUtcForNtz(s)
-        raw.filter(col("ts") < lit(cutoff).cast(TimestampNTZType))
-          .withColumn("ts", col("ts").cast(TimestampType))
-      case other => throw new IllegalStateException(
-        s"events.ts has unsupported dtype ${other.sql} (see Tables.events)")
-    }
-    filtered.select(
-      col("event_id").as("id"),
-      col("ts").as("timestamp"),
-      col("user_id").cast("string").as("device_id"),
-      col("value"))
+    import org.apache.spark.sql.types.TimestampType
+    val raw = Tables.load(s, d, "events")
+    raw.filter(col("ts") < lit(cutoff).cast(Tables.eventsTsType(s, raw.schema)))
+      .withColumn("ts", col("ts").cast(TimestampType))
+      .select(
+        col("event_id").as("id"),
+        col("ts").as("timestamp"),
+        col("user_id").cast("string").as("device_id"),
+        col("value"))
   }
 
-  /** DuckDB twin of `Tables.events`'s ts canonicalization, valid for
-    * BOTH fixture encodings: on TIMESTAMP_NS fixtures
-    * `epoch_ns(ts) // 1000` floor-divides nanos to µs exactly like
-    * Spark's `ts div 1000`; on timestamp[us] fixtures (DuckDB reads
-    * them as TIMESTAMP) `epoch_ns` zero-pads to ns and the divide
-    * round-trips the identical µs value. Verified both ways in the
-    * r9 sf0.01+sf0.1 oracle sweeps.
+  /** DuckDB twin of `Tables.events`'s ts canonicalization. On the
+    * timestamp[us] fixtures (DuckDB reads them as TIMESTAMP) `epoch_ns`
+    * zero-pads to ns and the divide round-trips the identical µs value;
+    * on the r1–r7 TIMESTAMP_NS fixtures it floor-divided ns to µs. The
+    * oracle string is the board's reference and is kept as it was
+    * verified in the r9 sf0.01+sf0.1 sweeps.
     */
   private val EventsCte =
     """WITH e AS (SELECT event_id, make_timestamp(epoch_ns(ts) // 1000) AS ts,

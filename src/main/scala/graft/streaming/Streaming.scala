@@ -18,58 +18,38 @@ import org.apache.spark.sql.Row
   */
 object Streaming {
 
-  /** events schema for file-stream reads of the LEGACY nanos-Long
-    * encoding (parquet TIMESTAMP(NANOS) surfaced as Long via the
-    * legacy flag). See [[readEventsStream]] for the adaptive entry.
+  /** events schema for file-stream reads, with `ts` as found in the
+    * directory (see [[readEventsStream]]).
     */
-  val eventsRawSchema: StructType = StructType(Seq(
+  private def eventsSchema(tsType: DataType): StructType = StructType(Seq(
     StructField("event_id", LongType),
-    StructField("ts", LongType), // epoch nanos (parquet TIMESTAMP(NANOS))
+    StructField("ts", tsType),
     StructField("user_id", LongType),
     StructField("event_type", StringType),
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  private def eventsSchemaWith(tsType: DataType): StructType =
-    StructType(eventsRawSchema.fields.map(f =>
-      if (f.name == "ts") f.copy(dataType = tsType) else f))
-
   /** File-based streaming source over an events-shaped parquet
     * directory — the incremental version of the reference's batch
     * re-scan loop. maxFilesPerTrigger bounds per-batch work.
     *
-    * A file stream needs its schema up front, and `events.ts` has
-    * shipped under multiple physical encodings (FIXTURES.md): this
-    * probes the footers ALREADY in `dir` (batch read, schema only) and
-    * pins the stream schema to the encoding found, canonicalizing `ts`
-    * to a µs TimestampType exactly like [[graft.model.Tables.events]].
-    * Requires ≥1 seed file at start — true for the re-scan layouts this
-    * models; a stream over an initially-EMPTY directory must pass
-    * `tsTypeHint` instead (files of a DIFFERENT encoding arriving later
-    * fail the stream loudly rather than misread). One encoding per
-    * directory — a mixed-generation lake migrates by rewrite or by
-    * unioning two canonicalized reads, never by merging footers.
+    * A file stream needs its schema up front: this probes the footers
+    * ALREADY in `dir` (batch read, schema only), checks `ts` through
+    * [[graft.model.Tables.eventsTsType]] and canonicalizes it to a µs
+    * TimestampType exactly like [[graft.model.Tables.events]]. Requires
+    * ≥1 seed file at start — true for the re-scan layouts this models.
+    * Files of a different `ts` dtype arriving later fail the stream
+    * loudly rather than misread.
     */
   def readEventsStream(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Int = 1,
-      tsTypeHint: Option[DataType] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = tsTypeHint.getOrElse(
-      spark.read.parquet(dir).schema("ts").dataType)
-    val raw = spark.readStream
-      .schema(eventsSchemaWith(tsType))
+      maxFilesPerTrigger: Int = 1): DataFrame = {
+    val tsType = graft.model.Tables.eventsTsType(spark,
+      spark.read.parquet(dir).schema)
+    spark.readStream
+      .schema(eventsSchema(tsType))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(dir)
-    tsType match {
-      case LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampType => raw
-      case _: TimestampNTZType =>
-        graft.model.Tables.requireUtcForNtz(spark)
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-      case other => throw new IllegalStateException(
-        s"events.ts has unsupported dtype ${other.sql} (see Tables.events)")
-    }
+      .withColumn("ts", col("ts").cast(TimestampType))
   }
 
   /** Streaming OHLC bars — the telemetry downsample as an incremental

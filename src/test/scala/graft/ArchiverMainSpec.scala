@@ -436,6 +436,28 @@ class ArchiverMainSpec extends AnyFunSuite {
     assert(w.delta.jobs <= 9, s"${w.delta.jobs} jobs:\n${w.jobLines.mkString("\n")}")
   }
 
+  test("a JDBC table named in another case than it is stored fails the " +
+      "extract: nothing is archived and every source row stays") {
+    val (url, connect) = derby("graft_table_case")
+    val outDir = tmp("graft_cli_case_out") + "/arch"
+    insert(connect, "IOT_DATA", Seq(
+      (1L, "2024-01-05 08:00:00", "d1", 1.0),
+      (2L, "2024-01-06 08:00:00", "d2", 2.0)))
+    // Derby stores the unquoted DDL name as IOT_DATA; the extract and
+    // the DELETE both address "iot_data" exactly as given
+    val cfg = ArchiverMain.parseConfig(derbyBase(url, outDir) ++
+      Map("GRAFT_TABLES" -> "iot_data", "GRAFT_DELETE" -> "true"))
+    val ex = intercept[RuntimeException] {
+      ArchiverMain.run(spark, cfg, JdbcSource(url, new java.util.Properties()), Some(connect))
+    }
+    assert(ex.getMessage.contains("processing table iot_data"), ex.getMessage)
+    val written = Option(new java.io.File(outDir)).filter(_.exists).toSeq
+      .flatMap(d => java.nio.file.Files.walk(d.toPath).toArray.toSeq)
+      .filter(_.toString.endsWith(".parquet"))
+    assert(written.isEmpty, written)
+    assert(remainingIds(connect, "IOT_DATA") == Set(1L, 2L))
+  }
+
   test("verify reads back with the batch's schema: a file lacking " +
       "device_id in a batch month makes it refuse, and nothing is deleted") {
     val (url, connect) = derby("graft_foreign_file")

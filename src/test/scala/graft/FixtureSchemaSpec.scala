@@ -39,13 +39,17 @@ class FixtureSchemaSpec extends AnyFunSuite {
 
   test("canary accepts every encoding the events reader handles and " +
     "rejects none of them (Long ns | TIMESTAMP | TIMESTAMP_NTZ)") {
-    for (dt <- Seq(LongType, TimestampType, TimestampNTZType)) {
-      val s = StructType(Seq(
-        StructField("event_id", LongType), StructField("ts", dt),
-        StructField("user_id", LongType), StructField("event_type", StringType),
-        StructField("value", DoubleType), StructField("props", StringType)))
-      assert(FixtureCheck.drift("events", s).isEmpty, dt)
-    }
+    def events(ts: DataType) = StructType(Seq(
+      StructField("event_id", LongType), StructField("ts", ts),
+      StructField("user_id", LongType), StructField("event_type", StringType),
+      StructField("value", DoubleType), StructField("props", StringType)))
+    for (dt <- Seq(TimestampType, TimestampNTZType))
+      assert(FixtureCheck.drift("events", events(dt)).isEmpty, dt)
+    // the r1–r7 TIMESTAMP(NANOS) encoding loads as BIGINT under the
+    // canary's legacy flag, and no reader accepts it any more
+    val msgs = FixtureCheck.drift("events", events(LongType))
+    assert(msgs.size == 1 && msgs.head.contains("events.ts: dtype DRIFTED to BIGINT"),
+      msgs)
   }
 
   test("canary fires on missing and unexpected columns") {
@@ -59,45 +63,30 @@ class FixtureSchemaSpec extends AnyFunSuite {
     assert(msgs.exists(m => m.contains("events.payload") && m.contains("UNEXPECTED")), msgs)
   }
 
-  test("mixed-generation lake: one nanos-Long dir + one timestamp[us] " +
-    "dir union to twice the rows with BIT-IDENTICAL canonical ts " +
-    "values per event (the DEPLOY.md migration path)") {
-    import org.apache.spark.sql.functions._
-    import graft.model.Tables
-    val base = java.nio.file.Files.createTempDirectory("graft_mixed").toString
-    // legacy generation: ts as a plain INT64 of epoch nanos on disk
-    Tables.eventsRawNanos(spark, TestSpark.Sf0001)
-      .write.mode("overwrite").parquet(s"$base/gen_ns/events.parquet")
-    // current generation: ts as timestamp[us]/NTZ, untransformed
-    Tables.eventsNative(spark, TestSpark.Sf0001)
-      .write.mode("overwrite").parquet(s"$base/gen_us/events.parquet")
-    assert(Tables.eventsTsIsNanosLong(spark, s"$base/gen_ns"))
-    assert(!Tables.eventsTsIsNanosLong(spark, s"$base/gen_us"))
-    val u = Tables.eventsUnionAll(spark, Seq(s"$base/gen_ns", s"$base/gen_us"))
-    val n = Tables.events(spark, TestSpark.Sf0001).count()
-    assert(u.count() == 2 * n)
-    // every event_id appears exactly twice with ONE distinct canonical
-    // ts — the two encodings canonicalize to identical µs values
-    val bad = u.groupBy("event_id")
-      .agg(count(lit(1)).as("c"), countDistinct(col("ts")).as("d"))
-      .filter(col("c") =!= 2 || col("d") =!= 1)
-    assert(bad.isEmpty)
-  }
-
   test("the events readers themselves fail loudly on an unsupported " +
     "ts dtype, naming the column and the accepted encodings") {
     import org.apache.spark.sql.functions._
     import graft.model.Tables
-    val dir = java.nio.file.Files.createTempDirectory("graft_badts").toString
-    spark.read.parquet(s"${TestSpark.Sf0001}/events.parquet")
-      .withColumn("ts", col("ts").cast("string"))
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    for (read <- Seq(
-        () => Tables.events(spark, dir),
-        () => Tables.eventsRawNanos(spark, dir))) {
-      val e = intercept[IllegalStateException](read())
-      assert(e.getMessage.contains("events.ts") &&
-        e.getMessage.contains("TIMESTAMP_NTZ"), e.getMessage)
+    val base = java.nio.file.Files.createTempDirectory("graft_badts").toString
+    val fixture = spark.read.parquet(s"${TestSpark.Sf0001}/events.parquet")
+    // a string ts, and epoch-nanos BIGINT (the r1–r7 encoding as the
+    // legacy flag surfaced it)
+    for ((name, ts) <- Seq(
+        "string" -> col("ts").cast("string"),
+        "nanos" -> (unix_micros(col("ts").cast("timestamp")) * 1000L))) {
+      val dir = s"$base/$name"
+      fixture.withColumn("ts", ts).write.mode("overwrite")
+        .parquet(s"$dir/events.parquet")
+      for (read <- Seq(
+          () => Tables.events(spark, dir),
+          () => graft.queries.RefQueries.eventsAsIotBefore(spark, dir,
+            graft.queries.RefQueries.Cutoff),
+          () => graft.streaming.Streaming.readEventsStream(spark,
+            s"$dir/events.parquet"))) {
+        val e = intercept[IllegalStateException](read())
+        assert(e.getMessage.contains("events.ts") &&
+          e.getMessage.contains("TIMESTAMP_NTZ"), s"$name: ${e.getMessage}")
+      }
     }
   }
 

@@ -20,26 +20,6 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("PushedFilters: [IsNotNull(ts), LessThan(ts,"), p)
   }
 
-  test("retention pushdown holds under BOTH events encodings: the " +
-      "legacy nanos-Long dir gets a numeric-literal pushed filter, the " +
-      "timestamp dir a timestamp-literal one (r9 adaptive reader)") {
-    import graft.model.Tables
-    val base = java.nio.file.Files.createTempDirectory("graft_push").toString
-    Tables.eventsRawNanos(spark, d)
-      .write.mode("overwrite").parquet(s"$base/ns/events.parquet")
-    Tables.eventsNative(spark, d)
-      .write.mode("overwrite").parquet(s"$base/us/events.parquet")
-    def pushed(dir: String): String =
-      graft.queries.RefQueries.eventsAsIotBefore(spark, dir,
-          graft.queries.RefQueries.Cutoff)
-        .queryExecution.executedPlan.toString
-        .linesIterator.find(_.contains("PushedFilters")).getOrElse("")
-    val ns = pushed(s"$base/ns")
-    assert(ns.contains("LessThan(ts,1705708800000000000)"), ns)
-    val us = pushed(s"$base/us")
-    assert(us.contains("LessThan(ts,2024-01-20T00:00"), us)
-  }
-
   test("tfidf tokenizes the corpus ONCE: a single explode feeds both " +
       "tf and the window-derived df (r9 window-df shape; counted on " +
       "the Generate node so a cached documents scan can't fool it)") {

@@ -14,9 +14,9 @@ class StreamingSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def eventsDir: String = {
-    // one-file parquet dir of raw events (ts still nanos long)
+    // two-file parquet dir of the events fixture as loaded
     val dir = java.nio.file.Files.createTempDirectory("graft_stream_src").toString
-    Tables.eventsRawNanos(spark, TestSpark.Sf0001).coalesce(2)
+    Tables.load(spark, TestSpark.Sf0001, "events").coalesce(2)
       .write.mode("overwrite").parquet(dir)
     dir
   }
@@ -53,28 +53,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed == batchTwin)
     assert(streamed == registered)
     assert(streamed.nonEmpty)
-  }
-
-  test("the streaming source is dtype-adaptive like the batch reader: " +
-      "a timestamp[us]-typed events dir (the current fixture encoding) " +
-      "streams to the same result as the legacy nanos-Long dir") {
-    // native (µs/NTZ) encoding — written straight from the on-disk
-    // fixture with NO ts transformation
-    val nativeDir = java.nio.file.Files
-      .createTempDirectory("graft_stream_us").toString
-    Tables.eventsNative(spark, TestSpark.Sf0001).coalesce(2)
-      .write.mode("overwrite").parquet(nativeDir)
-    def run(dir: String, name: String): Set[Bar] = {
-      val q = Streaming.ohlcBars(Streaming.readEventsStream(spark, dir))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-      q.processAllAvailable(); q.stop()
-      bars(spark.table(name))
-    }
-    val fromNative = run(nativeDir, "ohlc_native")
-    val fromNanos = run(eventsDir, "ohlc_nanos")
-    assert(fromNative == fromNanos)
-    assert(fromNative.nonEmpty)
   }
 
   test("streaming archive sink writes the hive year=/month= layout incrementally") {
@@ -114,7 +92,7 @@ class StreamingSpec extends AnyFunSuite {
     // run's, which the test above ties to the lag algebra.
     val dir = java.nio.file.Files
       .createTempDirectory("graft_sess_stage").toString
-    Tables.eventsRawNanos(spark, TestSpark.Sf0001).repartition(3)
+    Tables.load(spark, TestSpark.Sf0001, "events").repartition(3)
       .write.mode("overwrite").parquet(dir)
     val q = Streaming.sessionCounts(
         Streaming.readEventsStream(spark, dir, maxFilesPerTrigger = 1),

@@ -118,35 +118,6 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(pruned == Set(("a", "b"), ("a", "c")))
   }
 
-  test("bigram model round-trips: self-scoring through the persisted " +
-      "model equals bigramNll exactly with zero unseen; unseen bigrams " +
-      "hit the floor and are counted") {
-    val corpus = Seq((1L, "a b a b"), (2L, "a b c"), (3L, "b c a"))
-      .toDF("doc_id", "text")
-    val model = TextAnalysis.bigramModel(corpus, "text").localCheckpoint()
-    val direct = TextAnalysis.bigramNll(corpus, "text", "doc_id")
-      .select("doc_id", "n_bigrams", "nll")
-      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
-    val scored = TextAnalysis
-      .scoreWithBigramModel(corpus, model, "text", "doc_id")
-      .select("doc_id", "n_bigrams", "n_unseen", "nll")
-      .as[(Long, Long, Long, Double)].collect().sortBy(_._1).toSeq
-    assert(scored.forall(_._3 == 0L), s"self-scoring saw unseen: $scored")
-    assert(scored.map(r => (r._1, r._2, r._4)) == direct)
-    // new data with an unknown bigram: floor applied, counted
-    val fresh = Seq((9L, "a b z q")).toDF("doc_id", "text")
-    val f = TextAnalysis
-      .scoreWithBigramModel(fresh, model, "text", "doc_id")
-      .select("n_bigrams", "n_unseen", "nll")
-      .as[(Long, Long, Double)].head()
-    assert(f._1 == 3L && f._2 == 2L) // (b,z) and (z,q) unseen
-    // (a,b) is seen with lp = ln(3/3) = 0 (c(a,b)=3 = every a-bigram);
-    // the two unseen bigrams each contribute the floor
-    val floor = BigDecimal(math.log(1e-9))
-      .setScale(9, BigDecimal.RoundingMode.HALF_UP)
-    assert(f._3 == (0.0 - (floor * 2).toDouble) / 3)
-  }
-
   test("nll quality gate keeps exactly the central rank band per " +
       "language, pure integer thresholds") {
     // one language, 20 docs with distinct NLLs: ranks 1..20, keep
