@@ -7,8 +7,10 @@ import java.util.concurrent.{ExecutionException, FutureTask}
 
 import scala.util.Try
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.types.StructType
 import graft.io.{JdbcRetention, JdbcSource, ParquetSource, TableSource}
 import graft.ops.Archive
 
@@ -223,11 +225,14 @@ object ArchiverMain {
     }
 
     // filter(ts<cutoff) → per-table top-k → stamp → union → per-row
-    // year/month. One declarative plan, persisted: the per-month summary
-    // materializes it, then the append, the verify digest and the
-    // delete-range plan all read the cache, so the source is read once.
+    // year/month. One declarative plan, marked for a lazy local
+    // checkpoint: the per-month summary's one job extracts and stores it
+    // (nothing else reads `batch` until that job returns, so it is the
+    // only job that computes it), then the append, the verify digest and
+    // the delete-range plan all read the stored blocks, so the source is
+    // read once. A lost block fails the cycle; it is never re-extracted.
     val batch = Archive.archivePipeline(
-      perTable, "timestamp", "id", cfg.cutoff, cfg.batchSize).persist()
+      perTable, "timestamp", "id", cfg.cutoff, cfg.batchSize).localCheckpoint(eager = false)
     var deletePlan: Option[FutureTask[JdbcRetention.DeletePlan]] = None
     try {
       // Reference row shape: timestamp as epoch-nanos int64
@@ -246,7 +251,7 @@ object ArchiverMain {
       }
       val months = monthsOf(want)
 
-      // The delete-range collect needs only the cached batch, so it runs
+      // The delete-range collect needs only the stored batch, so it runs
       // beside the append and verify. A thread created here, not a
       // pooled one, inherits this thread's Spark local properties (job
       // group, scheduler pool), so its job stays with this run.
@@ -269,11 +274,10 @@ object ArchiverMain {
       // The read-back takes the batch's schema instead of inferring one:
       // a column missing from the files reads as nulls and changes the
       // digest, and a type clash fails the read.
-      val got = Archive.groupChecksums(
+      val got = monthDigests(
         spark.read.schema(shaped.schema).parquet(cfg.outPath)
           .filter(Archive.inMonths(months))
-          .join(shaped.select("table_name", "id"), Seq("table_name", "id"), "left_semi"),
-        Seq("year", "month"), canon).collect().toSet
+          .join(shaped.select("table_name", "id"), Seq("table_name", "id"), "left_semi"))
       val mismatch = (want -- got).size + (got -- want).size
       require(mismatch == 0,
         s"archive verification FAILED: $mismatch partition digests " +
@@ -294,23 +298,44 @@ object ArchiverMain {
       }
       RunReport(extracted, appended, deleted)
     } finally {
-      // the plan's job reads the cache: let it finish before releasing
-      // the cache, so a failed run never re-extracts from the source
+      // the plan's job reads the stored batch: let it finish before
+      // releasing the blocks, so a failed run never re-extracts from the
+      // source and no cycle leaves its blocks to the ContextCleaner
       deletePlan.foreach(t => try t.get() catch { case _: Exception => () })
-      batch.unpersist()
+      batch.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
+        .foreach(_.unpersist())
     }
   }
 
   /** The archive digest's canonical row (see [[Archive.groupChecksums]]). */
-  private val canon = Seq(col("table_name"), col("id"), col("device_id"),
+  private[graft] val canon = Seq(col("table_name"), col("id"), col("device_id"),
     col("timestamp"), col("value").cast("decimal(18,6)"))
 
   /** Per-(year, month) `(year, month, n_rows, checksum)` rows of an
-    * archive-shaped batch: one action that yields the batch's row count,
-    * its month set and its verify digest.
+    * archive-shaped frame, equal to `Archive.groupChecksums(shaped,
+    * Seq("year", "month"), canon)` collected: one job with no exchange.
+    * Each partition folds its rows into per-month partial digests, and
+    * the driver folds the partials. On the batch it is the one action
+    * that yields the row count, the month set and the verify digest.
     */
-  private def monthDigests(shaped: DataFrame): Set[Row] =
-    Archive.groupChecksums(shaped, Seq("year", "month"), canon).collect().toSet
+  private[graft] def monthDigests(shaped: DataFrame): Set[Row] = {
+    val hashed = shaped.select(col("year"), col("month"), lit(1L), Archive.rowHash(canon))
+    val partials = hashed.mapPartitions(foldDigests)(Encoders.row(DigestSchema)).collect()
+    foldDigests(partials.iterator).toSet
+  }
+
+  private val DigestSchema =
+    StructType.fromDDL("year INT, month INT, n_rows BIGINT, checksum BIGINT")
+
+  /** Folds `(year, month, n_rows, checksum)` rows to one per month:
+    * counts add, checksums XOR.
+    */
+  private def foldDigests(rows: Iterator[Row]): Iterator[Row] =
+    rows.foldLeft(Map.empty[(Any, Any), (Long, Long)]) { (acc, r) =>
+      val month = (r.get(0), r.get(1))
+      val (n, x) = acc.getOrElse(month, (0L, 0L))
+      acc.updated(month, (n + r.getLong(2), x ^ r.getLong(3)))
+    }.iterator.map { case ((y, m), (n, x)) => Row(y, m, n, x) }
 
   private def rowCount(summary: Set[Row]): Long = summary.toSeq.map(_.getLong(2)).sum
 

@@ -1,5 +1,13 @@
 package graft.ops
 
+import java.util.Locale
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -83,6 +91,16 @@ object Archive {
     * its per-month digest). The anti-join reads ONLY those archive
     * partitions — a partition-pruning filter, never a full archive scan.
     *
+    * The archive is read with `batch`'s schema, so no footer-inference
+    * job runs. A missing archive root (checked through the Hadoop
+    * FileSystem of the session's conf, so `s3a:` and other schemes
+    * resolve) is the first run: nothing to dedup against. A root holding
+    * no committed data file — a crash mid-first-write leaves only
+    * `_temporary/` — reads as empty. A root whose first data file in path
+    * order lacks `table_name` or `id` is not an archive: the append refuses,
+    * naming the file, because skipping the anti-join there would append
+    * duplicates.
+    *
     * The written row count is observed on the write itself (a
     * `CollectMetrics` node over the anti-join), so the anti-join runs
     * once; an empty result still runs the write, which then adds no
@@ -96,36 +114,37 @@ object Archive {
     */
   def appendIdempotent(batch: DataFrame, archiveDir: String,
       months: Seq[(Int, Int)]): Long = {
-    val existing =
-      try {
-        // schema inference stays: foreign files lacking table_name/id
-        // must fail this read, not silently skip the dedup
-        Some(batch.sparkSession.read.parquet(archiveDir).filter(inMonths(months))
-          .select(col("table_name"), col("id")))
-      } catch {
-        // Two conditions mean "first run — nothing to dedup against":
-        // a missing archive dir, and a dir with no committed parquet
-        // footers (UNABLE_TO_INFER_SCHEMA — a crash mid-first-write
-        // leaves only _temporary/, which spark.read.parquet cannot
-        // schema-infer; treating it as fatal would wedge every rerun).
-        // Any other analysis failure (e.g. foreign data in the dir
-        // lacking table_name/id) must propagate: silently skipping the
-        // anti-join would append duplicates and break the exactly-once
-        // guarantee.
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" ||
-              e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
+    val spark = batch.sparkSession
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(archiveDir)
+    val fresh =
+      if (!root.getFileSystem(conf).exists(root)) batch
+      else {
+        val archived = spark.read.schema(batch.schema).parquet(archiveDir)
+        archived.inputFiles.minOption.foreach(requireArchiveKeys(_, conf))
+        batch.join(archived.filter(inMonths(months)).select("table_name", "id"),
+          Seq("table_name", "id"), "left_anti")
       }
-    val fresh = existing match {
-      case Some(keys) => batch.join(keys, Seq("table_name", "id"), "left_anti")
-      case None => batch
-    }
     val written = new org.apache.spark.sql.Observation()
     fresh.observe(written, count(lit(1)).as("n")).write.mode("append")
       .option("compression", "snappy")
       .partitionBy("year", "month")
       .parquet(archiveDir)
     written.get("n").asInstanceOf[Long]
+  }
+
+  /** Refuses a parquet file whose footer lacks `table_name` or `id`
+    * (matched case-insensitively, as the reader resolves columns). One
+    * footer read on the driver, no Spark job.
+    */
+  private def requireArchiveKeys(file: String, conf: Configuration): Unit = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(java.net.URI.create(file)), conf))
+    val fields =
+      try reader.getFileMetaData.getSchema.getFields.asScala.map(_.getName.toLowerCase(Locale.ROOT))
+      finally reader.close()
+    require(fields.contains("table_name") && fields.contains("id"),
+      s"archive file $file lacks table_name or id: not an archive, refusing to append")
   }
 
   /** The whole §3.1 pipeline as one composed plan: per-source
@@ -180,15 +199,20 @@ object Archive {
     * concatenation injective for any field content.
     */
   def groupChecksums(df: DataFrame, groupCols: Seq[String],
-      canonCols: Seq[Column]): DataFrame = {
+      canonCols: Seq[Column]): DataFrame =
+    df.groupBy(groupCols.map(col): _*)
+      .agg(count(lit(1)).as("n_rows"), bit_xor(rowHash(canonCols)).as("checksum"))
+
+  /** The digest's per-row hash: a 60-bit md5 prefix of the canonical
+    * row (see [[groupChecksums]]), never NULL.
+    */
+  def rowHash(canonCols: Seq[Column]): Column = {
     val canon = concat(canonCols.map { c =>
       val s = c.cast("string")
       when(s.isNull, lit("N"))
         .otherwise(concat(lit("V"), length(s), lit(":"), s))
     }: _*)
-    val rowHash = conv(substring(md5(canon), 1, 15), 16, 10).cast("long")
-    df.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("n_rows"), bit_xor(rowHash).as("checksum"))
+    conv(substring(md5(canon), 1, 15), 16, 10).cast("long")
   }
 
   /** Snapshot diff — the archive-maintenance audit between two

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.io.{JdbcSource, ParquetSource}
+import graft.ops.Archive
 
 /** End-to-end archiver integration (the reference's full `run()` loop,
   * main.go:147-256): config → extract → archive → idempotent append →
@@ -417,7 +418,7 @@ class ArchiverMainSpec extends AnyFunSuite {
     "GRAFT_JDBC_URL" -> url, "GRAFT_OUT" -> outDir,
     "GRAFT_TABLES" -> "IOT_DATA", "GRAFT_CUTOFF" -> Cutoff)
 
-  test("one archiver cycle with verify and delete on runs at most 9 Spark jobs") {
+  test("one archiver cycle with verify and delete on runs at most 6 Spark jobs") {
     val (url, connect) = derby("graft_job_budget")
     val outDir = tmp("graft_cli_budget_out") + "/arch"
     insert(connect, "IOT_DATA", (1L to 8L).map(i =>
@@ -433,7 +434,108 @@ class ArchiverMainSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(rec)
     assert(w.rows == Right(4L), w.rows)
     assert(remainingIds(connect, "IOT_DATA").isEmpty)
-    assert(w.delta.jobs <= 9, s"${w.delta.jobs} jobs:\n${w.jobLines.mkString("\n")}")
+    assert(w.delta.jobs <= 6, s"${w.delta.jobs} jobs:\n${w.jobLines.mkString("\n")}")
+  }
+
+  test("a first cycle into a fresh GRAFT_OUT runs no failing query") {
+    val (url, connect) = derby("graft_fresh_out")
+    val outDir = tmp("graft_cli_fresh_out") + "/arch"
+    insert(connect, "IOT_DATA", Seq(
+      (1L, "2024-01-05 08:00:00", "d1", 1.0),
+      (2L, "2024-01-06 08:00:00", "d2", 2.0)))
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = ()
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = failures.add(s"$f: ${e.getMessage}"): Unit
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val r = ArchiverMain.run(spark, ArchiverMain.parseConfig(derbyBase(url, outDir)),
+        JdbcSource(url, new java.util.Properties()), Some(connect))
+      assert(r.appended == 2)
+      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext, 10000L)
+    } finally spark.listenerManager.unregister(listener)
+    assert(failures.isEmpty, failures)
+  }
+
+  test("a GRAFT_OUT holding only a crashed first write's _temporary/ " +
+      "archives, verifies and deletes the whole batch") {
+    val (url, connect) = derby("graft_crashed_first")
+    val outDir = tmp("graft_cli_crashed_out") + "/arch"
+    insert(connect, "IOT_DATA", Seq(
+      (1L, "2024-01-05 08:00:00", "d1", 1.0),
+      (2L, "2024-01-06 08:00:00", "d2", 2.0)))
+    // an uncommitted task attempt's file, holding batch row 1
+    val staged = tmp("graft_cli_crashed_staged")
+    Seq(("IOT_DATA", 1L, 1704441600000000000L, "d1", 1.0))
+      .toDF("table_name", "id", "timestamp", "device_id", "value")
+      .coalesce(1).write.mode("overwrite").parquet(staged)
+    val part = new java.io.File(staged).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val attempt = new java.io.File(outDir,
+      "_temporary/0/_temporary/attempt_202401050800_0001_m_000000_0/year=2024/month=1")
+    assert(attempt.mkdirs())
+    java.nio.file.Files.copy(part.toPath, new java.io.File(attempt, part.getName).toPath)
+
+    val r = ArchiverMain.run(spark,
+      ArchiverMain.parseConfig(derbyBase(url, outDir) + ("GRAFT_DELETE" -> "true")),
+      JdbcSource(url, new java.util.Properties()), Some(connect))
+    assert(r.extracted == 2 && r.appended == 2 && r.deleted == Map("IOT_DATA" -> 2L))
+    assert(remainingIds(connect, "IOT_DATA").isEmpty)
+    assert(spark.read.parquet(outDir).select("id").as[Long].collect().sorted.toSeq
+      == Seq(1L, 2L))
+  }
+
+  test("a GRAFT_OUT holding a parquet dataset without table_name/id is " +
+      "refused before anything is written or deleted") {
+    val (url, connect) = derby("graft_foreign_dataset")
+    val outDir = tmp("graft_cli_foreign_ds_out") + "/arch"
+    insert(connect, "IOT_DATA", Seq(
+      (1L, "2024-01-05 08:00:00", "d1", 1.0),
+      (2L, "2024-01-06 08:00:00", "d2", 2.0)))
+    Seq((2024, 1, 7L, "x")).toDF("year", "month", "key", "payload")
+      .write.partitionBy("year", "month").parquet(outDir)
+    def dataFiles() = java.nio.file.Files.walk(java.nio.file.Paths.get(outDir)).toArray.toSeq
+      .map(_.toString).filter(_.endsWith(".parquet")).toSet
+    val before = dataFiles()
+    assert(before.size == 1)
+    val ex = intercept[Exception] {
+      ArchiverMain.run(spark,
+        ArchiverMain.parseConfig(derbyBase(url, outDir) + ("GRAFT_DELETE" -> "true")),
+        JdbcSource(url, new java.util.Properties()), Some(connect))
+    }
+    val file = before.head.substring(before.head.lastIndexOf('/') + 1)
+    assert(ex.getMessage.contains(file), ex.getMessage)
+    assert(dataFiles() == before)
+    assert(remainingIds(connect, "IOT_DATA") == Set(1L, 2L))
+  }
+
+  test("the one-job month digest equals the grouped SQL digest") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("table_name", StringType), StructField("id", LongType),
+      StructField("timestamp", LongType), StructField("device_id", StringType),
+      StructField("value", DoubleType), StructField("year", IntegerType),
+      StructField("month", IntegerType)))
+    val dup = Row("t", 5L, 50L, "d5", 5.5, 2024, 3)
+    val rows = Seq(
+      Row("t", 1L, 10L, "d1", 1.25, 2024, 1),
+      Row(null, 2L, 20L, "d2", 2.0, 2024, 1),
+      Row("t", null, 30L, "d3", 3.0, 2024, 2),
+      Row("t", 3L, null, "d3", 3.0, 2024, 2),
+      Row("t", 4L, 40L, null, 4.0, 2024, 2),
+      Row("t", 6L, 60L, "d6", null, 2024, 2),
+      dup, dup, // XOR cancels the pair; the count does not
+      Row("u", 7L, null, "d7", 7.0, null, null))
+    // more partitions than rows: several partitions, some of them empty
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, rows.size + 2), schema)
+    val sizes = df.rdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(sizes.length > 1 && sizes.contains(0))
+    val want = Archive.groupChecksums(df, Seq("year", "month"), ArchiverMain.canon)
+      .collect().toSet
+    assert(want.size == 4 && want.exists(r => r.get(1) == 3 && r.getLong(3) == 0L))
+    assert(ArchiverMain.monthDigests(df) == want)
   }
 
   test("a JDBC table named in another case than it is stored fails the " +
