@@ -152,50 +152,65 @@ object ArchiverMain {
 
   /** Continuous mode (`GRAFT_STREAMING=true`): the same archival as an
     * incremental exactly-once streaming job — new source files are
-    * picked up by checkpointed file streams and appended through the
-    * keyed idempotent sink, so neither checkpoint replay nor total
-    * checkpoint LOSS can duplicate a row. The reference lists
-    * "real-time archival" as future work (reference README.md:124);
-    * this is it, sharing every operator with the batch path. No top-k
-    * cap here: streaming bounds per-trigger work with
-    * maxFilesPerTrigger instead of the cron model's batch LIMIT; no
-    * retention DELETE either (run batch mode for that) — the streaming
-    * contract is append-only archival.
+    * picked up by checkpointed file streams, one per table, and each
+    * goes through [[archiveStream]]. The reference lists "real-time
+    * archival" as future work (reference README.md:124); this is it,
+    * sharing every operator with the batch path. No top-k cap here:
+    * streaming bounds per-trigger work with maxFilesPerTrigger instead
+    * of the cron model's batch LIMIT; no retention DELETE either (run
+    * batch mode for that) — the streaming contract is append-only
+    * archival.
     */
   def runStreaming(spark: SparkSession, cfg: Config): RunReport = {
     import org.apache.spark.sql.types._
-    import org.apache.spark.sql.streaming.Trigger
     val iotSchema = StructType(Seq(
       StructField("id", LongType), StructField("timestamp", TimestampType),
       StructField("device_id", StringType), StructField("value", DoubleType)))
-    var appended = 0L
-    var extracted = 0L
-    cfg.tables.foreach { t =>
+    val reports = cfg.tables.map { t =>
       val ckpt = cfg.checkpointDir.map(c => s"$c/$t").getOrElse(
         java.nio.file.Files.createTempDirectory(s"graft_ckpt_$t").toString)
-      val stream = spark.readStream.schema(iotSchema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(s"${cfg.sourceDir.get}/$t.parquet")
-        .transform(Archive.retentionFilter("timestamp", cfg.cutoff))
-        .transform(Archive.stampTableName(t))
-      val q = stream.writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          // batch mode's row shape (epoch-nanos timestamp), so both
-          // modes can append to one archive
-          val shaped = b.toDF().transform(Archive.withTimePartitions("timestamp"))
-            .transform(Archive.toArchiveShape("timestamp"))
-          val summary = monthDigests(shaped)
-          if (summary.nonEmpty) {
-            extracted += rowCount(summary)
-            appended += Archive.appendIdempotent(shaped, cfg.outPath, monthsOf(summary))
-          }
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      archiveStream(
+        spark.readStream.schema(iotSchema)
+          .option("maxFilesPerTrigger", "4")
+          .parquet(s"${cfg.sourceDir.get}/$t.parquet")
+          .transform(Archive.retentionFilter("timestamp", cfg.cutoff))
+          .transform(Archive.stampTableName(t)),
+        cfg.outPath, ckpt)
     }
+    val extracted = reports.map(_.extracted).sum
+    val appended = reports.map(_.appended).sum
     println(s"Streaming archival: $appended new rows (of $extracted extracted) to ${cfg.outPath}")
+    RunReport(extracted, appended, Map.empty)
+  }
+
+  /** Archives a stream of `(id, timestamp, device_id, value, table_name)`
+    * rows, `timestamp` timestamp-typed, into `outPath`: the one streaming
+    * archival path, run by the CLI's continuous mode and by
+    * `q_stream_archive`. Each micro-batch takes batch mode's row shape
+    * (per-row `year=/month=`, epoch-nanos timestamp), so both modes
+    * append to one archive; one month-digest job gives its row count and
+    * month set, and the keyed idempotent append writes only rows the
+    * archive lacks, so neither checkpoint replay nor total checkpoint
+    * LOSS can duplicate a row. Runs every available file to completion
+    * (AvailableNow) and reports the rows extracted and appended.
+    */
+  def archiveStream(stream: DataFrame, outPath: String, checkpoint: String): RunReport = {
+    var appended = 0L
+    var extracted = 0L
+    stream.writeStream
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[Row], _: Long) =>
+        val shaped = b.toDF().transform(Archive.withTimePartitions("timestamp"))
+          .transform(Archive.toArchiveShape("timestamp"))
+        val summary = monthDigests(shaped)
+        if (summary.nonEmpty) {
+          extracted += rowCount(summary)
+          appended += Archive.appendIdempotent(shaped, outPath, monthsOf(summary))
+        }
+      }
+      .option("checkpointLocation", checkpoint)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
     RunReport(extracted, appended, Map.empty)
   }
 

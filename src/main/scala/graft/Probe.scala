@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.execution.ExplainMode
-import org.apache.spark.sql.functions.col
 
 /** Measurement probes over the registered queries, all on the
   * [[ToolCore]] session (`local[$SPARK_GRAFT_CPUS]`, default 4, with
@@ -16,13 +15,16 @@ import org.apache.spark.sql.functions.col
   *     counts, broadcast builds) a loop pays for. A query that throws
   *     prints `JOBPROBE-FAILURE <q> <exception>` and the probe goes on.
   *
-  *   Probe streams <sfDir> [ohlc|join|dedup|sessions ...]
-  *     Reruns each stream's registered shape against the shared staged
-  *     trees and prints `SPROBE <name> wall=… batches=…`, then every
-  *     batch's durationMs split as `  SP …` (triggerExecution = whole
-  *     batch; addBatch = plan+run the batch job; latestOffset/getBatch =
-  *     source listing; walCommit/commitOffsets = checkpoint log). Every
-  *     batch's progress is kept, however long the stream.
+  *   Probe streams <sfDir> [q ...]
+  *     Runs the named registered streaming queries (by default
+  *     q_ohlc_stream, q_stream_join, q_stream_dedup, q_stream_sessions
+  *     and q_stream_archive) once each and prints `SPROBE <q> wall=…
+  *     batches=…`, then every micro-batch's durationMs split as `  SP …`
+  *     (triggerExecution = whole batch; addBatch = plan+run the batch
+  *     job; latestOffset/getBatch = source listing; walCommit/
+  *     commitOffsets = checkpoint log), from the progress events the
+  *     recorder collects. A query that throws prints `SPROBE-FAILURE`
+  *     first and the probe goes on.
   *
   *   Probe plans [q ...]
   *     Prints the formatted physical plan of the named queries (all of
@@ -43,11 +45,12 @@ object Probe {
   def main(args: Array[String]): Unit = args.toList match {
     case "jobs" :: sfDir :: names :: Nil => jobs(sfDir, names)
     case "streams" :: sfDir :: names =>
-      streams(sfDir, if (names.nonEmpty) names else Seq("ohlc", "join", "dedup", "sessions"))
+      streams(sfDir, if (names.nonEmpty) names else Seq("q_ohlc_stream",
+        "q_stream_join", "q_stream_dedup", "q_stream_sessions", "q_stream_archive"))
     case "plans" :: names => plans(names)
     case "spill" :: rest => spill(rest.headOption.getOrElse("/root/testdata/sf0.01"))
     case _ => sys.error("usage: Probe jobs <sfDir> q_a,q_b | streams <sfDir> " +
-      "[stream ...] | plans [q ...] | spill [sfDir]")
+      "[q ...] | plans [q ...] | spill [sfDir]")
   }
 
   private def jobs(sfDir: String, names: String): Unit = {
@@ -71,40 +74,19 @@ object Probe {
   }
 
   private def streams(sfDir: String, names: Seq[String]): Unit = {
-    import graft.queries.PipelineQueries.{stagedEvents3, stagedRangeSlices}
-    import graft.streaming.Streaming._
+    val queries = ToolCore.selectQueries(Some(names.mkString(",")))
     val spark = ToolCore.session()
-    names.foreach { name =>
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", "4")
-      s2.conf.set("spark.sql.session.timeZone", "UTC")
-      s2.conf.set("spark.sql.streaming.numRecentProgressUpdates",
-        Int.MaxValue.toString)
-      def events = readEventsStream(s2, stagedEvents3(spark, sfDir),
-        maxFilesPerTrigger = 1)
-      def slices(n: Int, dup: Boolean) = readEventsStream(s2,
-        stagedRangeSlices(spark, sfDir, slices = n, dupEachFile = dup),
-        maxFilesPerTrigger = 1)
-      val t0 = System.nanoTime()
-      val (out, mode) = name match {
-        case "ohlc" => (ohlcBars(events), "complete")
-        case "sessions" => (sessionCounts(events, watermark = "3650 days"), "complete")
-        case "join" =>
-          (purchaseSignupJoin(slices(3, dup = false)).select(col("p_id"), col("s_id")),
-            "append")
-        case "dedup" => (dedupedStream(slices(2, dup = true)), "append")
-        case other => sys.error(s"unknown stream: $other")
-      }
-      val q = out.writeStream.format("memory").queryName(s"probe_$name")
-        .outputMode(mode).start()
-      try q.processAllAvailable() finally q.stop()
-      val wall = (System.nanoTime() - t0) / 1e9
-      println(f"SPROBE $name wall=$wall%.2f s batches=${q.recentProgress.length}")
-      q.recentProgress.foreach { p =>
+    val rec = ToolCore.recorder(spark)
+    queries.foreach { case (n, fn) =>
+      val w = ToolCore.measure(spark, rec)(fn(spark, sfDir).count())
+      w.rows.left.foreach(e =>
+        println(s"SPROBE-FAILURE $n ${e.getClass.getName}: ${e.getMessage}"))
+      println(f"SPROBE $n wall=${w.sec}%.2f s batches=${w.progress.length}")
+      w.progress.foreach { p =>
         val d = p.durationMs
         def g(k: String): Long =
           if (d.containsKey(k)) d.get(k).longValue() else -1L
-        println(s"  SP $name batch=${p.batchId} rows=${p.numInputRows} " +
+        println(s"  SP $n batch=${p.batchId} rows=${p.numInputRows} " +
           s"trigger=${g("triggerExecution")} addBatch=${g("addBatch")} " +
           s"latestOffset=${g("latestOffset")} getBatch=${g("getBatch")} " +
           s"queryPlanning=${g("queryPlanning")} " +

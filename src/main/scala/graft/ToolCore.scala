@@ -4,8 +4,9 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
 /** The measurement core shared by the tool mains ([[Bench]], [[Verify]],
   * [[Probe]]): one session builder, one recorder listener, one warm pass
@@ -83,15 +84,20 @@ private[graft] object ToolCore {
     * unlaunched or undelivered). Per job start: a job count and one
     * `job=… stages=… tasks=… site=…` line, the site being the job's
     * `callSite.short` or else its final stage's name. Per completed
-    * stage: stage and task counts. Wall far above exec time with low
-    * scheduler delay is a driver or machine stall between jobs; high
-    * scheduler delay is executor-side contention.
+    * stage: stage and task counts. Per streaming micro-batch: its
+    * progress report, which Spark posts to the context's listener bus
+    * for queries of every session, `newSession()`s included. Wall far
+    * above exec time with low scheduler delay is a driver or machine
+    * stall between jobs; high scheduler delay is executor-side
+    * contention.
     */
   final class Recorder extends SparkListener {
     private val shuffleBytes, memSpill, diskSpill, gcMs, execMs,
       schedDelayMs, jobs, stages, tasks = new AtomicLong(0L)
     private val jobLines =
       java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+    private val progress = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[StreamingQueryProgress]())
 
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
       val m = t.taskMetrics
@@ -126,6 +132,10 @@ private[graft] object ToolCore {
       stages.incrementAndGet(): Unit
       tasks.addAndGet(s.stageInfo.numTasks): Unit
     }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case p: StreamingQueryListener.QueryProgressEvent => progress.add(p.progress): Unit
+      case _ => ()
+    }
 
     def counters: Counters = Counters(shuffleBytes.get(), memSpill.get(),
       diskSpill.get(), gcMs.get(), execMs.get(), schedDelayMs.get(),
@@ -134,6 +144,13 @@ private[graft] object ToolCore {
     /** The job lines recorded after the first `from` jobs. */
     def jobLinesFrom(from: Long): Seq[String] = jobLines.synchronized {
       (from.toInt until jobLines.size).map(jobLines.get)
+    }
+
+    def progressCount: Int = progress.size
+
+    /** The micro-batch progress reports recorded after the first `from`. */
+    def progressFrom(from: Int): Seq[StreamingQueryProgress] = progress.synchronized {
+      (from until progress.size).map(progress.get)
     }
   }
 
@@ -175,7 +192,7 @@ private[graft] object ToolCore {
     * it threw, and what the recorder saw while it ran.
     */
   final case class Window(sec: Double, rows: Either[Throwable, Long],
-      delta: Counters, jobLines: Seq[String])
+      delta: Counters, jobLines: Seq[String], progress: Seq[StreamingQueryProgress])
 
   /** Drains the bus, times `body` alone (a `NonFatal` throw is the
     * window's result, not an escape), drains again and takes the
@@ -184,10 +201,12 @@ private[graft] object ToolCore {
   def measure(spark: SparkSession, rec: Recorder)(body: => Long): Window = {
     drain(spark)
     val before = rec.counters
+    val batches = rec.progressCount
     val t0 = System.nanoTime()
     val rows = try Right(body) catch { case NonFatal(e) => Left(e) }
     val sec = (System.nanoTime() - t0) / 1e9
     drain(spark)
-    Window(sec, rows, rec.counters - before, rec.jobLinesFrom(before.jobs))
+    Window(sec, rows, rec.counters - before, rec.jobLinesFrom(before.jobs),
+      rec.progressFrom(batches))
   }
 }

@@ -32,7 +32,8 @@ import org.apache.spark.sql.functions._
   * AQE no-subtree-dedup lesson: each state frame feeds BOTH the count
   * and the rewrite). A production 30k-merge run batches many disjoint
   * pairs per rewrite pass instead of one (same algebra over a
-  * broadcast merge SET); `steps` is capped accordingly.
+  * broadcast merge SET) — [[pairMergesBatched]], whose one-pair round
+  * (`pairsPerRound = candidatePool = 1`) is the step above.
   */
 object Bpe {
 
@@ -45,8 +46,8 @@ object Bpe {
       posexplode(split(col(textCol), " ")).as(Seq("pos", "tok")))
 
   /** Attach the successor token (`nxt` = lead(tok) over the doc
-    * window) when the frame doesn't already carry it. The TRAINERS
-    * carry `nxt` THROUGH their materialized state (r16): a
+    * window) when the frame doesn't already carry it. The TRAINER
+    * carries `nxt` THROUGH its materialized state (r16): a
     * checkpointed frame comes back with unknown partitioning, so a
     * per-round `lead` in the pair-count pass would re-shuffle the
     * corpus by doc every round — storing the successor at rewrite time
@@ -58,15 +59,15 @@ object Bpe {
     else toks.withColumn("nxt", lead(col("tok"), 1).over(wDoc))
 
   /** One greedy left-to-right non-overlapping rewrite pass — the
-    * window algebra the object scaladoc derives, shared by both
-    * trainers and [[encode]]: positions whose (tok, nxt) satisfy
+    * window algebra the object scaladoc derives, shared by the trainer
+    * and [[encode]]: positions whose (tok, nxt) satisfy
     * `isMatch` merge into `merged`; runs of CONSECUTIVE matches (only
     * possible for a self-pair when the match set is symbol-disjoint)
     * keep even offsets. `isMatch`/`merged` see columns `tok` and
     * `nxt` (nxt is null at doc end — a null match mark reads false).
     * With `emitNext` the output ALSO carries the REWRITTEN stream's
     * successor token (one more window expression on the same spec —
-    * no extra exchange), which is what lets the trainers' next
+    * no extra exchange), which is what lets the trainer's next
     * pair-count ride the materialized state without a window.
     */
   private def rewriteOnce(toks: DataFrame, isMatch: Column,
@@ -99,50 +100,8 @@ object Bpe {
         newTok.as("tok"))
   }
 
-  /** First `steps` merge decisions as (step, lft, rgt, n_pairs) —
-    * n_pairs is the corpus-wide adjacent count at selection time.
-    * Merged tokens are spelled `left + "+" + right` (the corpus
-    * alphabet is [a-z ]; '+' cannot collide).
-    */
-  def pairMerges(docs: DataFrame, idCol: String, textCol: String,
-      steps: Int,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
-    require(steps >= 1 && steps <= 16,
-      s"steps must be in [1, 16] (batch disjoint pairs beyond), got $steps")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // state carries `nxt` (r16): the per-step pair count is then a pure
-    // two-phase aggregation over the materialized frame — no window, no
-    // per-step doc-keyed exchange (see withNext)
-    var toks = materialize(withNext(tokenize(docs, idCol, textCol)))
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    var exhausted = false
-    for (step <- 1 to steps if !exhausted) {
-      val top = toks
-        .filter(col("nxt").isNotNull)
-        .groupBy(col("tok"), col("nxt")).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("tok").asc, col("nxt").asc)
-        .limit(1).collect() // bounded: exactly one row
-      if (top.isEmpty) exhausted = true
-      else {
-        val (p1, p2, n) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((step, p1, p2, n))
-        // the LAST step's rewrite is dead work — nothing reads the
-        // final token stream (the merge table is the output); skip it
-        // instead of materializing it (r16)
-        if (step < steps) toks = materialize(rewriteOnce(toks,
-          col("tok") === p1 && col("nxt") === p2, lit(p1 + "+" + p2),
-          emitNext = true))
-      }
-    }
-    merges.result()
-      .toDF("step", "lft", "rgt", "n_pairs")
-      .orderBy(col("step"))
-  }
-
-  /** Batched BPE training — the 100 TB shape [[pairMerges]]'s scaladoc
-    * promises: each rewrite pass applies a SET of up to `pairsPerRound`
+  /** BPE training — the 100 TB shape the object scaladoc promises:
+    * each rewrite pass applies a SET of up to `pairsPerRound`
     * merges chosen greedily SYMBOL-DISJOINT from the round's top
     * `candidatePool` pairs (ordered n desc, lft, rgt), so a 30k-merge
     * production run costs O(30k / K) corpus passes instead of 30k.
@@ -150,8 +109,8 @@ object Bpe {
     * Why disjointness makes the one-pass rewrite exact: two matches at
     * adjacent positions share their middle token, so under
     * symbol-disjoint pairs consecutive matches can only come from the
-    * SAME self-pair (a, a) — exactly the run case [[pairMerges]]'s
-    * cumulative-count + min-over-run algebra already resolves greedily
+    * SAME self-pair (a, a) — exactly the run case the one-pair
+    * rewrite's running-max run algebra already resolves greedily
     * left-to-right. The same algebra runs unchanged with the match
     * predicate generalized from one (left, right) literal to the
     * round's broadcast merge set.
@@ -165,7 +124,10 @@ object Bpe {
     * the same top-`candidatePool` list), not an approximation knob.
     *
     * Returns (merge_round, ord, lft, rgt, n_pairs): `ord` is the
-    * pair's 1-based position in its round's greedy selection.
+    * pair's 1-based position in its round's greedy selection, n_pairs
+    * the corpus-wide adjacent count at selection time. Merged tokens
+    * are spelled `left + "+" + right` (the corpus alphabet is [a-z ];
+    * '+' cannot collide).
     */
   def pairMergesBatched(docs: DataFrame, idCol: String, textCol: String,
       rounds: Int, pairsPerRound: Int, candidatePool: Int = 64,
@@ -241,10 +203,10 @@ object Bpe {
     * LM's persistable-model pattern, SURVEY §2.9; VERDICT r13 #2):
     * tokenizes the corpus and applies a TRAINED merge table in rank
     * order, each rank the greedy left-to-right non-overlapping rewrite
-    * of [[pairMerges]] — the standard BPE encode (Sennrich et al.
+    * of a one-pair training round — the standard BPE encode (Sennrich et al.
     * 2016, arXiv:1508.07909 §3). Returns the encoded (doc, pos, tok)
     * frame; merged tokens spell `left + "+" + right` like the
-    * trainers, so encode∘train reproduces the trainer's own final
+    * trainer, so encode∘train reproduces the trainer's own final
     * token stream exactly (pinned in PropertySpec).
     *
     * Scale shape — the 100 TB story: consecutive ranks collapse into
@@ -262,7 +224,7 @@ object Bpe {
     * symbol) applies in far fewer corpus passes than merges, every
     * pass reusing the same (doc) partitioning. `materialize`
     * (localCheckpoint in the registered query) cuts per-pass lineage
-    * growth exactly as in the trainers.
+    * growth exactly as in the trainer.
     */
   def encode(docs: DataFrame, idCol: String, textCol: String,
       merges: Seq[(String, String)],

@@ -114,18 +114,32 @@ object Dedup {
       .agg(count(lit(1)).as("inter"))
   }
 
-  private[ext] def shinglePairCounts(sets: DataFrame,
-      extraJoinPred: Column): DataFrame =
-    shinglePairCountsHashed(
-      sets.select(col("doc_id"), size(col("shingles")).as("n_sh"),
-        expr("transform(shingles, s -> xxhash64(s))").as("shs")),
-      extraJoinPred)
+  /** A [[shingleSets]] frame in [[hashedShingleSets]]' shape: each
+    * distinct shingle as its xxhash64 (unsorted — the pair counts do
+    * not need the order).
+    */
+  private def hashSets(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), size(col("shingles")).as("n_sh"),
+      expr("transform(shingles, s -> xxhash64(s))").as("shs"))
 
   /** Jaccard pairs over a precomputed HASHED set frame
     * ([[hashedShingleSets]]) — the cheapest entry point: callers
     * materialize the hashed frame once and both self-join sides read
-    * 8-byte postings. Same output as [[ngramJaccardPairsFromSets]]
-    * (the count path has always compared hashes).
+    * 8-byte postings (~4x smaller shuffle than strings; a 64-bit
+    * collision among ~10^6 distinct shingles is ~1e-7 — far below the
+    * bit-exactness bar of everything else here).
+    *
+    * Each inverted row carries its doc's set size so the LENGTH FILTER
+    * (J ≥ t ⇒ t·|B| ≤ |A| ≤ |B|/t) prunes pairs inside the join, before
+    * the aggregation shuffle ever sees them. The (1 − 1e-12) RELATIVE
+    * slack keeps a sub-ulp rounding of threshold·n from pruning an
+    * exactly-at-threshold pair at any magnitude (an absolute 1e-9 slack
+    * stops working once threshold·n > ~9e6, where half an ulp of the
+    * product exceeds it); the final jaccard >= threshold check keeps the
+    * output exact. n_sh is functionally dependent on doc_id, so grouping
+    * by it too is free — and carrying it through the aggregation means
+    * the Jaccard denominator needs NO join back to a per-doc size table
+    * (the two size joins this replaced were the top cost in BENCH_r02).
     */
   def ngramJaccardPairsFromHashedSets(hsets: DataFrame,
       threshold: Double): DataFrame = {
@@ -140,46 +154,17 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** [[ngramJaccardPairs]] over precomputed shingle sets. `sets` feeds
+  /** [[ngramJaccardPairs]] over precomputed shingle sets, hashed once
+    * and scored by [[ngramJaccardPairsFromHashedSets]]. `sets` feeds
     * BOTH self-join sides, and the two identical exchanges are NOT
     * deduplicated at runtime (measured: AQE leaves them separate
     * stages), so callers that can materialize `sets`
     * (`localCheckpoint()`) cut the tokenize+shingle subtree from two
-    * evaluations to one — 5.6 s → 3.1 s at sf0.1 for the registered
-    * `q_dedup_ngram`.
+    * evaluations to one.
     */
   def ngramJaccardPairsFromSets(sets: DataFrame,
-      threshold: Double): DataFrame = {
-    require(threshold >= 0 && threshold <= 1,
-      s"jaccard threshold must be in [0, 1], got $threshold")
-    // join on 8-byte shingle hashes, not strings: ~4x smaller shuffle;
-    // a 64-bit collision among ~10^6 distinct shingles is ~1e-7 — far
-    // below the bit-exactness bar of everything else here. Each inverted
-    // row carries its doc's set size so the LENGTH FILTER (J ≥ t ⇒
-    // t·|B| ≤ |A| ≤ |B|/t) prunes pairs inside the join, before the
-    // aggregation shuffle ever sees them. The (1 − 1e-12) RELATIVE slack
-    // keeps a sub-ulp rounding of threshold·n from pruning an
-    // exactly-at-threshold pair at any magnitude (an absolute 1e-9 slack
-    // stops working once threshold·n > ~9e6, where half an ulp of the
-    // product exceeds it); the final jaccard >= threshold check keeps
-    // the output exact.
-    // n_sh is functionally dependent on doc_id, so grouping by it too is
-    // free — and carrying it through the aggregation means the Jaccard
-    // denominator needs NO join back to a per-doc size table. The two
-    // size joins this replaces were the top cost in BENCH_r02
-    // (shingleSets re-evaluated 4x per action: 12.9 s vs 4.0 s cached);
-    // the set subtree now feeds only the two self-join sides — which
-    // run as SEPARATE stages (AQE does not reuse the identical
-    // exchanges; measured round 6), hence the FromSets entry point for
-    // callers that materialize `sets`.
-    shinglePairCounts(sets,
-        col("b.n_sh") * lit(threshold * (1 - 1e-12)) <= col("a.n_sh") &&
-          col("a.n_sh") * lit(threshold * (1 - 1e-12)) <= col("b.n_sh"))
-      .select(col("a_id"), col("b_id"),
-        (col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
+      threshold: Double): DataFrame =
+    ngramJaccardPairsFromHashedSets(hashSets(sets), threshold)
 
   /** Asymmetric CONTAINMENT near-dup pairs over precomputed shingle
     * sets: C(A,B) = |A∩B| / min(|A|,|B|) — catches subset/quotation
@@ -200,9 +185,9 @@ object Dedup {
       threshold: Double): DataFrame = {
     require(threshold >= 0 && threshold <= 1,
       s"containment threshold must be in [0, 1], got $threshold")
-    // same blocking as Jaccard (shinglePairCounts) with NO length
-    // predicate — containment is size-ratio-free by design
-    shinglePairCounts(sets, lit(true))
+    // same blocking as Jaccard with NO length predicate — containment
+    // is size-ratio-free by design
+    shinglePairCountsHashed(hashSets(sets), lit(true))
       .select(col("a_id"), col("b_id"),
         (col("inter").cast("double") / least(col("na"), col("nb")))
           .as("containment"))

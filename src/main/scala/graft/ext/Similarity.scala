@@ -284,9 +284,10 @@ object Similarity {
 
   /** IVF (inverted-file) index: assign every vector to its nearest of
     * `centroids` (a tiny broadcast table), search only the `nprobe`
-    * nearest cells per query. Centroids here come from a deterministic
-    * sample + one Lloyd step (`ivfCentroids`) — at real scale you'd
-    * train offline and persist the cell assignment as a partition key.
+    * nearest cells per query. Centroids come from
+    * [[Clustering.lloyd]] (or its seeds, [[Clustering.seedCentroids]]) —
+    * at real scale you'd train offline and persist the cell assignment
+    * as a partition key.
     *
     * Contract: `vec_id` must be unique in `vecs` — the zero-shuffle
     * argmin fold emits one row per input row, where the replaced
@@ -320,16 +321,6 @@ object Similarity {
       .select(col("vec_id") +: col("m.cell_id").as("cell_id") +:
         (vecCol +: passthrough.toSeq).map(col): _*)
   }
-
-  /** Deterministic centroids: the first `cells` vectors by id (seed
-    * points; with random data a Lloyd iteration adds nothing — kept
-    * simple and fully deterministic). For trained cells use
-    * [[Clustering.lloyd]], which [[ivfTopK]] does by default.
-    */
-  def ivfCentroids(corpus: DataFrame, cells: Int): DataFrame =
-    corpus.orderBy(col("vec_id")).limit(cells)
-      .select(monotonically_increasing_id().as("cell_id"),
-        col("embedding").as("centroid"))
 
   /** IVF top-k search: Lloyd-trained cells (k-means is what makes IVF
     * an index rather than a partition guess), each query probing only
@@ -394,8 +385,8 @@ object Similarity {
 
   /** Load a persisted IVF index for serving. Postings cell_id is
     * NORMALIZED to long on read: the partition-directory round trip
-    * re-infers the type, and centroid sources disagree to begin with
-    * (seedCentroids/lloyd emit int, ivfCentroids long) — a fixed long
+    * re-infers the type, and callers may pass centroids with a long
+    * `cell_id` where seedCentroids/lloyd emit int — a fixed long
     * makes the reloaded index's join key independent of both, and the
     * probe side aligns by implicit cast (the parity pin in
     * SimilaritySpec holds score-bit-exact either way).

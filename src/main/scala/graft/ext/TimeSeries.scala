@@ -11,37 +11,34 @@ import org.apache.spark.sql.expressions.Window
   */
 object TimeSeries {
 
-  /** OHLC bars: per (group, time-bucket) open/high/low/close/count —
-    * the canonical telemetry downsample. `open`/`close` are the values
-    * of the earliest/latest row under the TOTAL order (ts, tieCol), so
-    * the result is deterministic even with duplicate timestamps.
+  /** OHLC bars: per (group, day) open/high/low/close/count — the
+    * canonical telemetry downsample, in batch and streaming alike.
+    * `open`/`close` are the values of the earliest/latest row under the
+    * TOTAL order (ts, tieCol), so the result is deterministic even with
+    * duplicate timestamps. The bucket is `to_date(ts)` in the session
+    * time zone (the oracle's `CAST(ts AS DATE)`).
     *
-    * Shape: both row_number windows share the same (group, bucket)
-    * partitioning as the final aggregation — one hash exchange, two
-    * in-partition sorts, one two-phase agg. No global window, no join;
-    * the per-partition state is one row per input row only inside its
-    * own bucket partition. At 100 TB bucket×group is the natural
-    * partition key and every stage here already keys on it.
+    * Shape: open/close are lexicographic MIN/MAX over (µs, tie, value)
+    * structs — associative, commutative and mergeable — so all five
+    * columns come from one two-phase aggregation on (group, bucket):
+    * one hash exchange, no window, no join. A streaming aggregation
+    * keeps one struct per (group, bucket) as state, not the rows;
+    * streaming callers run it in complete mode, where nothing is
+    * evicted, so no watermark is needed. The output is unordered: a
+    * sort here would re-sort the whole result table in every
+    * micro-batch, so callers order what they read.
     */
   def ohlcBars(events: DataFrame, groupCol: String, tsCol: String,
       tieCol: String, valueCol: String): DataFrame = {
-    val bucket = to_date(col(tsCol)).as("bucket")
-    val base = events.select(col(groupCol).as("grp"), bucket,
-      col(tsCol).as("ts"), col(tieCol).as("tie"), col(valueCol).as("v"))
-    val asc = Window.partitionBy(col("grp"), col("bucket"))
-      .orderBy(col("ts").asc, col("tie").asc)
-    val desc = Window.partitionBy(col("grp"), col("bucket"))
-      .orderBy(col("ts").desc, col("tie").desc)
-    base
-      .withColumn("rn_a", row_number().over(asc))
-      .withColumn("rn_d", row_number().over(desc))
-      .groupBy(col("grp"), col("bucket"))
-      .agg(max(when(col("rn_a") === 1, col("v"))).as("open"),
-        max(col("v")).as("high"),
-        min(col("v")).as("low"),
-        max(when(col("rn_d") === 1, col("v"))).as("close"),
+    val key = struct(unix_micros(col(tsCol)).as("us"), col(tieCol).as("tie"),
+      col(valueCol).as("v"))
+    events
+      .groupBy(col(groupCol).as("grp"), to_date(col(tsCol)).as("bucket"))
+      .agg(min(key).getField("v").as("open"),
+        max(col(valueCol)).as("high"),
+        min(col(valueCol)).as("low"),
+        max(key).getField("v").as("close"),
         count(lit(1)).as("n"))
-      .orderBy(col("grp"), col("bucket"))
   }
 
   /** Strictly-ordered multi-step funnel: for each user, the first

@@ -190,19 +190,19 @@ object PipelineQueries {
     // telemetry downsample, deterministic via the (ts, event_id) order
     "q_ohlc_bars" -> ((s, d) =>
       TimeSeries.ohlcBars(Tables.events(s, d),
-        "event_type", "ts", "event_id", "value")),
+        "event_type", "ts", "event_id", "value")
+        .orderBy(col("grp"), col("bucket"))),
 
     // The SAME downsample through the ACTUAL incremental path
     // (VERDICT r10 #8): events re-sharded into 3 files (4→3 in r13:
     // one less micro-batch of fixed per-trigger cost; the result is
     // file-count-independent), file-streamed one file per micro-batch
-    // through the watermarked struct-encoded streaming twin,
-    // complete-mode memory sink — the registered, driver-gated proof
-    // that the micro-batch execution produces the batch answer
-    // (StreamingSpec pins the equivalence; this row pins it against
-    // the DuckDB oracle). Complete mode + processAllAvailable makes
-    // the final table independent of file arrival order, so the
-    // q_ohlc_bars oracle applies verbatim.
+    // through the same TimeSeries.ohlcBars, complete-mode memory sink —
+    // the registered, driver-gated proof that the micro-batch execution
+    // produces the batch answer (StreamingSpec pins the equivalence;
+    // this row pins it against the DuckDB oracle). Complete mode +
+    // processAllAvailable makes the final table independent of file
+    // arrival order, so the q_ohlc_bars oracle applies verbatim.
     "q_ohlc_stream" -> ((s, d) => {
       // staged input shared with q_stream_archive and q_stream_sessions
       // (see stagedEvents3)
@@ -219,19 +219,16 @@ object PipelineQueries {
       s2.conf.set("spark.sql.shuffle.partitions", "4")
       s2.conf.set("spark.sql.session.timeZone",
         s.conf.get("spark.sql.session.timeZone"))
-      val q = graft.streaming.Streaming.ohlcBars(
+      val q = TimeSeries.ohlcBars(
           graft.streaming.Streaming.readEventsStream(s2, tmp,
-            maxFilesPerTrigger = 1))
+            maxFilesPerTrigger = 1),
+          "event_type", "ts", "event_id", "value")
         .writeStream.format("memory").queryName(sink)
         .outputMode("complete").start()
       try q.processAllAvailable() finally q.stop()
       // the memory sink holds the rows; the SHARED staged input stays
       // for the other order-free streams and is deleted at JVM exit
-      s2.table(sink)
-        .select(col("event_type").as("grp"),
-          to_date(col("bucket_start")).as("bucket"),
-          col("open"), col("high"), col("low"), col("close"), col("n"))
-        .orderBy(col("grp"), col("bucket"))
+      s2.table(sink).orderBy(col("grp"), col("bucket"))
     }),
 
     // Stream-stream watermarked join through the ACTUAL incremental
@@ -318,16 +315,16 @@ object PipelineQueries {
         .orderBy(col("event_type"))
     }),
 
-    // The reference's archival loop through the ACTUAL incremental sink
-    // (round 11): events file-streamed one file per micro-batch through
-    // archiveSink (shape → year=/month= partitioned parquet append,
-    // AvailableNow, checkpointed) into a fresh archive dir, then the
-    // gate aggregates the READ-BACK archive per partition — proving the
-    // incremental write path lands byte-equivalent data where the
-    // reference's batch rerun would. Stateless sink ⇒ no watermark, so
-    // arrival order is free (plain re-shard; 4→3 files in r13 — one
-    // less micro-batch of fixed trigger cost, result identical; the
-    // staged tree is shared with q_ohlc_stream since r14).
+    // The reference's archival loop through the archiver CLI's own
+    // streaming path (ArchiverMain.archiveStream, the GRAFT_STREAMING
+    // micro-batch): events mapped to the IoT row shape and stamped with
+    // a table_name, file-streamed one file per micro-batch (AvailableNow,
+    // checkpointed) through the month digest and the keyed idempotent
+    // append into a fresh archive dir; then the gate aggregates the
+    // READ-BACK archive per partition — proving the incremental write
+    // path lands the data the reference's batch rerun would. Stateless
+    // per batch ⇒ no watermark, so arrival order is free (plain
+    // re-shard into 3 files, shared with q_ohlc_stream).
     "q_stream_archive" -> ((s, d) => {
       val tmp = stagedEvents3(s, d)
       val out = java.nio.file.Files
@@ -335,21 +332,25 @@ object PipelineQueries {
       val ckpt = java.nio.file.Files
         .createTempDirectory("graft_stream_archive_ckpt").toString
       try {
-        val q = graft.streaming.Streaming.archiveSink(
+        graft.ArchiverMain.archiveStream(
           graft.streaming.Streaming.readEventsStream(s, tmp,
-            maxFilesPerTrigger = 1), out, ckpt).start()
-        q.awaitTermination()
+              maxFilesPerTrigger = 1)
+            .select(col("event_id").as("id"), col("ts").as("timestamp"),
+              col("user_id").cast("string").as("device_id"), col("value"))
+            .transform(Archive.stampTableName("events")),
+          out, ckpt)
         // materialize the per-partition rollup (a handful of rows) so
         // the archive dir and the checkpoint can be deleted before
         // returning — repeated runs (including FAILED ones, hence the
         // finally) leak nothing; the SHARED staged input stays for
-        // the other order-free streams and is deleted at JVM exit
+        // the other order-free streams and is deleted at JVM exit.
+        // The archive holds epoch-nanos timestamps (µs * 1000).
         s.read.parquet(out)
           .groupBy(col("year").cast("long").as("year"),
             col("month").cast("long").as("month"))
           .agg(count(lit(1)).as("n"), sum(col("id")).as("id_sum"),
-            min(unix_micros(col("timestamp"))).as("min_us"),
-            max(unix_micros(col("timestamp"))).as("max_us"))
+            expr("min(timestamp) div 1000").as("min_us"),
+            expr("max(timestamp) div 1000").as("max_us"))
           .orderBy(col("year"), col("month"))
           .localCheckpoint()
       } finally Tables.rmrf(out, ckpt)
@@ -411,13 +412,10 @@ object PipelineQueries {
     // passes × up to 4 symbol-disjoint merges each — 8 merges for 2
     // corpus passes instead of 8; pool-then-greedy selection is part
     // of the contract and unrolled identically in the oracle.
-    // The sequential 3-step variant (q_bpe_merges, r11) was retired
-    // from the registry in r13 as a bench-budget call (VERDICT r12):
-    // the batched query subsumes the capability at the gate, and
-    // Bpe.pairMerges stays pinned — hand-computed merges in
-    // TextAnalysisSpec, and the batched-vs-sequential agreement
-    // property in PropertySpec (the batch contract is DEFINED by
-    // agreement with the sequential reference)
+    // One pair per round (pairsPerRound = candidatePool = 1) is the
+    // sequential trainer; TextAnalysisSpec pins hand-computed merges for
+    // both shapes, and PropertySpec checks this one against a driver-side
+    // Scala model of pool-then-greedy selection and rewrite.
     "q_bpe_merges_batch" -> ((s, d) =>
       Bpe.pairMergesBatched(Tables.documents(s, d), "doc_id", "text",
         rounds = 2, pairsPerRound = 4, candidatePool = 64,
@@ -828,8 +826,8 @@ object PipelineQueries {
     * [[graft.ext.Bpe.pairMergesBatched]] mirrored exactly: the top-
     * `pool` candidate list, `k` greedy symbol-disjoint picks unrolled
     * as chained anti-conditioned LIMIT-1 CTEs (each pick excludes
-    * every symbol the previous selection used), then the sequential
-    * run algebra of [[graft.ext.Bpe.pairMerges]] (match marking,
+    * every symbol the previous selection used), then the Bpe rewrite
+    * pass's run algebra (match marking,
     * cumulative-count run keys, even-offset greedy selection,
     * right-half drop, renumber) with the match generalized from one
     * literal pair to a LEFT JOIN against the round's selection (pairs
@@ -1120,8 +1118,6 @@ object PipelineQueries {
         |  COUNT(*) AS n
         |FROM r GROUP BY grp, bucket ORDER BY grp, bucket""".stripMargin,
 
-    // the batch twin of the incremental archival sink: identical
-    // shape/partition derivation over events, aggregated per partition
     // the twice-delivered stream must collapse back to the plain batch
     // rollup — a doubled (dedup miss) or missing (over-drop) key fails
     "q_stream_dedup" ->
@@ -1131,6 +1127,8 @@ object PipelineQueries {
         |    / 100.0 AS total
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
 
+    // the batch twin of the streamed archive's read-back: identical
+    // shape/partition derivation over events, aggregated per partition
     "q_stream_archive" ->
       """WITH a AS (SELECT event_id AS id, epoch_ns(ts) // 1000 AS us,
         |    year(ts) AS year, month(ts) AS month FROM events)

@@ -2,19 +2,19 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.Row
 
-/** Structured-Streaming surface (SURVEY.md §2.10): the reference's
-  * "real-time archival" future-work note (reference README.md:124) plus
-  * the standard streaming analytics a telemetry pipeline needs.
+/** Structured-Streaming surface (SURVEY.md §2.10): the file-stream
+  * source and the stateful streaming analytics a telemetry pipeline
+  * needs (session windows, watermarked dedup, a watermarked
+  * stream-stream join). OHLC bars stream through the one batch operator
+  * ([[graft.ext.TimeSeries.ohlcBars]]) and the reference's "real-time
+  * archival" future-work note (reference README.md:124) through the
+  * archiver CLI's own micro-batch ([[graft.ArchiverMain.archiveStream]]).
   *
   * Every transform here is defined `DataFrame => DataFrame` so the SAME
-  * code runs in batch and streaming — the batch twins are verified
-  * against the DuckDB oracle (q_ohlc_bars, q_sessionize), and the
-  * streaming tests assert stream-mode output equals batch-mode output
-  * on the same files.
+  * code runs in batch and streaming — the streaming tests assert
+  * stream-mode output equals batch-mode output on the same files.
   */
 object Streaming {
 
@@ -52,30 +52,6 @@ object Streaming {
       .withColumn("ts", col("ts").cast(TimestampType))
   }
 
-  /** Streaming OHLC bars — the telemetry downsample as an incremental
-    * watermarked aggregation. The batch formulation
-    * (`TimeSeries.ohlcBars`) rides row_number windows, which streaming
-    * cannot do; this twin encodes open/close as lexicographic MIN/MAX
-    * over (µs, tie, value) structs — associative, commutative, mergeable
-    * per micro-batch, so state per (window, group) is one struct, not
-    * the rows. Same (ts, tie) total order ⇒ StreamingSpec pins
-    * stream ≡ batch ≡ the registered q_ohlc_bars on the same files.
-    */
-  def ohlcBars(events: DataFrame, window_ : String = "1 day",
-      watermark: String = "1 hour"): DataFrame = {
-    val key = struct(unix_micros(col("ts")).as("us"),
-      col("event_id").as("tie"), col("value").as("v"))
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_).getField("start").as("bucket_start"),
-        col("event_type"))
-      .agg(min(key).getField("v").as("open"),
-        max(col("value")).as("high"),
-        min(col("value")).as("low"),
-        max(key).getField("v").as("close"),
-        count(lit(1)).as("n"))
-  }
-
   /** Session windows (30-min inactivity gap) — native session_window,
     * the streaming twin of the batch q_sessionize query.
     *
@@ -97,32 +73,11 @@ object Streaming {
         col("n_events"))
 
   /** Stateful streaming dedup on event_id within the watermark horizon —
-    * exactly-once-per-key delivery for the archival sink.
+    * exactly-once-per-key delivery downstream.
     */
   def dedupedStream(events: DataFrame, watermark: String = "1 hour"): DataFrame =
     events.withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("event_id")
-
-  /** The reference's archival loop as an incremental streaming sink:
-    * filter → shape → partitioned parquet append (reference
-    * main.go:88-93,220-223, done continuously instead of by re-running
-    * the container).
-    */
-  def archiveSink(events: DataFrame, outDir: String, checkpointDir: String):
-      DataStreamWriter[Row] = {
-    val shaped = events
-      .select(col("event_id").as("id"), col("ts").as("timestamp"),
-        col("user_id").cast("string").as("device_id"), col("value"))
-      .withColumn("year", year(col("timestamp")))
-      .withColumn("month", month(col("timestamp")))
-    shaped.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .partitionBy("year", "month")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-  }
 
   /** Stream-stream inner join with watermarks: purchases joined to the
     * same user's signups within `horizon` BEFORE the purchase. Both

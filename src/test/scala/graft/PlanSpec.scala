@@ -515,13 +515,12 @@ class PlanSpec extends AnyFunSuite {
     assert("Exchange".r.findAllIn(p).length <= 2, p) // key hash + output sort
   }
 
-  test("ohlc bars: ONE data exchange on (group, bucket) feeds both " +
-      "row_number windows AND the two-phase agg — no join, no global window") {
+  test("ohlc bars: ONE data exchange on (group, bucket) feeds the " +
+      "two-phase struct min/max agg — no window, no join") {
     val p = plan("q_ohlc_bars")
     assert(!p.contains("Join"), p)
-    assert("Window".r.findAllIn(p).length == 2, p)
-    // exchanges: the (grp, bucket) hash + the output sort's range — the
-    // windows and the aggregation reuse the first, never re-shuffle
+    assert(!p.contains("Window"), p)
+    // exchanges: the (grp, bucket) hash + the output sort's range
     assert("Exchange".r.findAllIn(p).length <= 2, p)
   }
 

@@ -608,32 +608,37 @@ class PropertySpec extends AnyFunSuite {
     val docGen = Gen.listOfN(4,
       Gen.chooseNum(5, 30).flatMap(n =>
         Gen.listOfN(n, Gen.oneOf("a", "b", "c", "d", "e"))))
+    // (rounds, pairsPerRound, candidatePool): a batched shape, and the
+    // one-pair-per-round sequential trainer
+    val shapes = Seq((2, 3, 6), (3, 1, 1))
     forAllSampled(docGen, 8) { docLists =>
       val docs = docLists.zipWithIndex
         .map { case (ts, i) => (i.toLong, ts.mkString(" ")) }
-      val got = graft.ext.Bpe.pairMergesBatched(
-          docs.toDF("doc_id", "text"), "doc_id", "text",
-          rounds = 2, pairsPerRound = 3, candidatePool = 6)
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getString(2),
-          r.getString(3), r.getLong(4))).toSeq
-      var state = docs.map { case (id, t) =>
-        id -> t.split(" ").toVector }.toMap
-      val want = Seq.newBuilder[(Int, Int, String, String, Long)]
-      var round = 1
-      var exhausted = false
-      while (round <= 2 && !exhausted) {
-        val (sel, next) = refRound(state, k = 3, pool = 6)
-        if (sel.isEmpty) exhausted = true
-        else {
-          sel.zipWithIndex.foreach { case ((l, r, n), i) =>
-            want += ((round, i + 1, l, r, n)) }
-          state = next
+      shapes.foreach { case (rounds, k, pool) =>
+        val got = graft.ext.Bpe.pairMergesBatched(
+            docs.toDF("doc_id", "text"), "doc_id", "text",
+            rounds = rounds, pairsPerRound = k, candidatePool = pool)
+          .collect()
+          .map(r => (r.getInt(0), r.getInt(1), r.getString(2),
+            r.getString(3), r.getLong(4))).toSeq
+        var state = docs.map { case (id, t) =>
+          id -> t.split(" ").toVector }.toMap
+        val want = Seq.newBuilder[(Int, Int, String, String, Long)]
+        var round = 1
+        var exhausted = false
+        while (round <= rounds && !exhausted) {
+          val (sel, next) = refRound(state, k, pool)
+          if (sel.isEmpty) exhausted = true
+          else {
+            sel.zipWithIndex.foreach { case ((l, r, n), i) =>
+              want += ((round, i + 1, l, r, n)) }
+            state = next
+          }
+          round += 1
         }
-        round += 1
+        assert(got == want.result(),
+          s"shape=($rounds, $k, $pool) docs=$docs\ngot=$got\nwant=${want.result()}")
       }
-      assert(got == want.result(),
-        s"docs=$docs\ngot=$got\nwant=${want.result()}")
     }
   }
 
@@ -684,11 +689,12 @@ class PropertySpec extends AnyFunSuite {
       assert(sparkEncode(docs, table) == refEncode(docs, table),
         s"docs=$docs table=$table")
       // encode ∘ train: the trained table re-applied via encode equals
-      // the trainer's rewrite stream (= the sequential reference —
-      // pairMerges IS rank-sequential greedy application)
-      val trained = graft.ext.Bpe.pairMerges(
-          docs.toDF("doc_id", "text"), "doc_id", "text", steps = 3)
-        .collect().map(r => (r.getString(1), r.getString(2))).toSeq
+      // the trainer's rewrite stream (= the sequential reference — one
+      // pair per round IS rank-sequential greedy application)
+      val trained = graft.ext.Bpe.pairMergesBatched(
+          docs.toDF("doc_id", "text"), "doc_id", "text", rounds = 3,
+          pairsPerRound = 1, candidatePool = 1)
+        .collect().map(r => (r.getString(2), r.getString(3))).toSeq
       if (trained.nonEmpty)
         assert(sparkEncode(docs, trained) == refEncode(docs, trained),
           s"docs=$docs trained=$trained")

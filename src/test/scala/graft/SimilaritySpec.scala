@@ -163,7 +163,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("IVF assigns every vector to exactly one cell") {
-    val cents = Similarity.ivfCentroids(emb, 8)
+    val cents = graft.ext.Clustering.seedCentroids(emb, 8)
     val assigned = Similarity.ivfAssign(
       emb.select(col("vec_id"), col("embedding")), "embedding", cents)
     assert(assigned.count() == emb.count())
@@ -173,7 +173,7 @@ class SimilaritySpec extends AnyFunSuite {
   test("null centroid cells are dead to the whole IVF path: never " +
     "assigned to, never probed, output identical to the cell set " +
     "without them (ADVICE r8 — pins the filter-before-fold contract)") {
-    val cents = Similarity.ivfCentroids(emb, 8)
+    val cents = graft.ext.Clustering.seedCentroids(emb, 8)
     val withNull = cents.unionByName(
       Seq((99L, null.asInstanceOf[Array[Float]])).toDF("cell_id", "centroid"))
     // assignment: no vector lands in the null cell

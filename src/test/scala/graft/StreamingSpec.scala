@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.Streaming
+import graft.ext.TimeSeries
 import graft.model.Tables
+import graft.ops.Archive
+import graft.streaming.Streaming
 
 /** Streaming ≡ batch equivalence: the same `DataFrame => DataFrame`
   * transforms produce identical results when driven incrementally from
@@ -21,51 +23,57 @@ class StreamingSpec extends AnyFunSuite {
     dir
   }
 
-  private type Bar = (java.sql.Timestamp, String, Double, Double, Double, Double, Long)
+  private type Bar = (java.sql.Date, String, Double, Double, Double, Double, Long)
 
   private def bars(df: org.apache.spark.sql.DataFrame): Set[Bar] =
-    df.select("bucket_start", "event_type", "open", "high", "low", "close", "n")
+    df.select("bucket", "grp", "open", "high", "low", "close", "n")
       .as[Bar].collect().toSet
 
-  test("streaming OHLC bars equal the batch struct-encoded twin AND the " +
-      "registered row_number-window q_ohlc_bars on the same files") {
+  private def ohlc(events: org.apache.spark.sql.DataFrame) =
+    TimeSeries.ohlcBars(events, "event_type", "ts", "event_id", "value")
+
+  test("streamed OHLC bars (complete mode) equal the batch run of the " +
+      "same ohlcBars and the registered q_ohlc_bars") {
     val dir = eventsDir
-    val q = Streaming.ohlcBars(
-        Streaming.readEventsStream(spark, dir, maxFilesPerTrigger = 1))
+    val q = ohlc(Streaming.readEventsStream(spark, dir, maxFilesPerTrigger = 1))
       .writeStream.format("memory").queryName("ohlc_out")
       .outputMode("complete").start()
     q.processAllAvailable()
     q.stop()
-    val streamed = spark.table("ohlc_out")
-      .select(to_date(col("bucket_start")).cast("string"), col("event_type"),
-        col("open"), col("high"), col("low"), col("close"), col("n"))
-      .as[(String, String, Double, Double, Double, Double, Long)].collect().toSet
-    val batchTwin = Streaming.ohlcBars(Tables.events(spark, TestSpark.Sf0001))
-      .select(to_date(col("bucket_start")).cast("string"), col("event_type"),
-        col("open"), col("high"), col("low"), col("close"), col("n"))
-      .as[(String, String, Double, Double, Double, Double, Long)].collect().toSet
-    val registered = graft.ext.TimeSeries.ohlcBars(
-        Tables.events(spark, TestSpark.Sf0001),
-        "event_type", "ts", "event_id", "value")
-      .select(col("bucket").cast("string"), col("grp"),
-        col("open"), col("high"), col("low"), col("close"), col("n"))
-      .as[(String, String, Double, Double, Double, Double, Long)].collect().toSet
-    assert(streamed == batchTwin)
-    assert(streamed == registered)
+    val streamed = bars(spark.table("ohlc_out"))
+    assert(streamed == bars(ohlc(Tables.events(spark, TestSpark.Sf0001))))
+    assert(streamed == bars(SparkEntry.queries("q_ohlc_bars")(spark, TestSpark.Sf0001)))
     assert(streamed.nonEmpty)
   }
 
-  test("streaming archive sink writes the hive year=/month= layout incrementally") {
+  test("streamed archival shares its root with the batch append: an " +
+      "overlapping batch and a rerun without the checkpoint both append 0") {
     val dir = eventsDir
     val out = java.nio.file.Files.createTempDirectory("graft_stream_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt").toString
-    val stream = Streaming.readEventsStream(spark, dir)
-    val q = Streaming.archiveSink(stream, out, ckpt).start()
-    q.awaitTermination(120000)
+    def ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt").toString
+    def iot(events: org.apache.spark.sql.DataFrame) = events
+      .select(col("event_id").as("id"), col("ts").as("timestamp"),
+        col("user_id").cast("string").as("device_id"), col("value"))
+      .transform(Archive.stampTableName("events"))
+    def stream = iot(Streaming.readEventsStream(spark, dir, maxFilesPerTrigger = 1))
+    val n = Tables.events(spark, TestSpark.Sf0001).count()
+    val first = ArchiverMain.archiveStream(stream, out, ckpt)
+    assert(first.extracted == n && first.appended == n, first)
     val back = spark.read.parquet(out)
-    assert(back.count() == Tables.events(spark, TestSpark.Sf0001).count())
+    assert(back.count() == n)
     assert(back.select("year", "month").distinct().as[(Int, Int)].collect()
       .toSet == Set((2024, 1)))
+    // the batch path's append into the streamed root: the footer guard
+    // finds table_name and id, and the anti-join drops every row
+    val overlap = iot(Tables.events(spark, TestSpark.Sf0001)
+        .filter(col("event_id") % 3 === 0))
+      .transform(Archive.withTimePartitions("timestamp"))
+      .transform(Archive.toArchiveShape("timestamp"))
+    assert(Archive.appendIdempotent(overlap, out, Seq((2024, 1))) == 0L)
+    // a lost checkpoint replays every file and appends nothing
+    val rerun = ArchiverMain.archiveStream(stream, out, ckpt)
+    assert(rerun.extracted == n && rerun.appended == 0L, rerun)
+    assert(spark.read.parquet(out).count() == n)
   }
 
   test("native session_window agrees with the lag-based sessionization " +
@@ -141,7 +149,7 @@ class StreamingSpec extends AnyFunSuite {
       spark.conf.set(key,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       val stream = Streaming.readEventsStream(spark, dir, maxFilesPerTrigger = 1)
-      val q = Streaming.ohlcBars(stream)
+      val q = ohlc(stream)
         .writeStream.format("memory").queryName("rocks_out")
         .outputMode("complete").start()
       q.processAllAvailable()
@@ -151,7 +159,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(progress.toLowerCase.contains("rocksdb"),
         "state operator did not report RocksDB metrics: " + progress.take(2000))
       val streamed = bars(spark.table("rocks_out"))
-      val batch = bars(Streaming.ohlcBars(Tables.events(spark, TestSpark.Sf0001)))
+      val batch = bars(ohlc(Tables.events(spark, TestSpark.Sf0001)))
       assert(streamed == batch && streamed.nonEmpty)
     } finally saved match {
       case Some(v) => spark.conf.set(key, v)

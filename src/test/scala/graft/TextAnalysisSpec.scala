@@ -235,15 +235,19 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(one.length == 1 && one(0).getDouble(2) == 0.0)
   }
 
-  test("bpe pairMerges: greedy left-to-right non-overlap on a " +
-      "self-pair run ('a a a a a' → [aa, aa, a]), deterministic " +
-      "tie-break, merged tokens pair in later steps") {
+  test("bpe one pair per round (pairsPerRound = candidatePool = 1): " +
+      "greedy left-to-right non-overlap on a self-pair run " +
+      "('a a a a a' → [aa, aa, a]), deterministic tie-break, merged " +
+      "tokens pair in later rounds") {
     // doc0 'a a a a a': (a,a) count 4; doc1 'x a a y a a': +2 → 6.
     val docs = Seq((0L, "a a a a a"), (1L, "x a a y a a"))
       .toDF("doc_id", "text")
-    val out = graft.ext.Bpe.pairMerges(docs, "doc_id", "text", steps = 3)
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2),
-        r.getLong(3))).toSeq
+    def onePair(d: org.apache.spark.sql.DataFrame, rounds: Int) =
+      graft.ext.Bpe.pairMergesBatched(d, "doc_id", "text", rounds,
+        pairsPerRound = 1, candidatePool = 1)
+    val out = onePair(docs, 3)
+      .collect().map(r => (r.getInt(0), r.getString(2), r.getString(3),
+        r.getLong(4))).toSeq
     // step 1: (a,a,6). After greedy rewrite: doc0 = [a+a, a+a, a]
     // (NON-overlapping — never [a, a+a, ...]), doc1 = [x, a+a, y, a+a].
     // step 2 pairs all count 1 → tie-break (lft, rgt) ascending:
@@ -253,13 +257,10 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(out == Seq((1, "a", "a", 6L), (2, "a+a", "a", 1L),
       (3, "a+a", "a+a+a", 1L)))
     // a corpus whose pairs run out stops early instead of failing
-    val tiny = graft.ext.Bpe.pairMerges(
-      Seq((0L, "a b")).toDF("doc_id", "text"), "doc_id", "text", 3)
+    val tiny = onePair(Seq((0L, "a b")).toDF("doc_id", "text"), 3)
       .collect()
-    assert(tiny.length >= 1 && tiny(0).getString(1) == "a")
-    intercept[IllegalArgumentException] {
-      graft.ext.Bpe.pairMerges(docs, "doc_id", "text", steps = 0)
-    }
+    assert(tiny.length >= 1 && tiny(0).getString(2) == "a")
+    intercept[IllegalArgumentException](onePair(docs, 0))
   }
 
   test("bpe pairMergesBatched: greedy symbol-disjoint selection per " +

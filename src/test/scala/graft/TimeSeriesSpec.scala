@@ -30,6 +30,7 @@ class TimeSeriesSpec extends AnyFunSuite {
       (6L, ts("2024-01-01 10:00:00"), "b", 1.0)
     ).toDF("event_id", "ts", "event_type", "value")
     val out = TimeSeries.ohlcBars(rows, "event_type", "ts", "event_id", "value")
+      .orderBy("grp", "bucket")
       .collect().map(r => (r.getString(0), r.getDate(1).toString,
         r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5),
         r.getLong(6))).toSeq

@@ -28,6 +28,20 @@ class ToolCoreSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](ToolCore.selectQueries(Some(" , ")))
   }
 
+  test("the recorder collects every micro-batch's progress of a registered " +
+      "stream that runs on a newSession") {
+    val spark = TestSpark.spark
+    val rec = ToolCore.recorder(spark)
+    try {
+      val w = ToolCore.measure(spark, rec)(
+        SparkEntry.queries("q_ohlc_stream")(spark, TestSpark.Sf0001).count())
+      assert(w.rows.isRight, w.rows)
+      // one stream, one data micro-batch per staged shard
+      assert(w.progress.map(_.id).distinct.size == 1, w.progress.map(_.json))
+      assert(w.progress.count(_.numInputRows > 0) == 3, w.progress.map(_.json))
+    } finally spark.sparkContext.removeSparkListener(rec)
+  }
+
   test("Bench keeps its stdout line and detail-file contract and counts an " +
       "injected failure") {
     val (subsetQ, otherQ) = ("q_row_counts", "q_archive_checksum")
