@@ -14,8 +14,11 @@ comparing, every plan is normalised:
   - JVM lambda and object identities (`$Lambda$61/0x7f..@5a03`, `X@1f2e3d`)
   - call-site lines (`Foo.scala:138`) -> `Foo.scala:L`
   - temp-directory suffixes (`graft_stream_stage3123456789`) -> `...N`
-  - each `Expand` node's projection lists are sorted, since Spark may
-    list the same grouping sets in a different order between runs
+  - each `Expand` node's projection lists are sorted; for a
+    distinct-aggregate Expand (output column `gid#`), whose distinct
+    groups Spark may order differently between runs of the same code,
+    the group columns are put in name order and the gids renumbered to
+    match throughout the plan
 
 With query names, only those are compared. Prints a unified diff per query
 that differs and a summary line; exits 1 if any query differs or is missing
@@ -51,24 +54,79 @@ def top_level_lists(s):
     return items
 
 
-def sort_expand(lines):
-    """Sorts the projection lists on the Arguments line of each Expand."""
-    out, in_expand = [], False
-    for line in lines:
+def split_items(s):
+    """Split 'a, f(b, c), [d, e]' on its top-level commas."""
+    items, depth, cur = [], 0, ""
+    for ch in s:
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        if ch == "," and depth == 0:
+            items.append(cur.strip())
+            cur = ""
+        else:
+            cur += ch
+    if cur.strip():
+        items.append(cur.strip())
+    return items
+
+
+def canonical_expand(block, idx):
+    """Rewrites the Expand whose `Arguments:` line is block[idx].
+
+    A distinct-aggregate rewrite (an output column `gid#`) may order its
+    distinct groups differently from run to run: the columns before
+    `gid#`, the projection per group and the gid each group gets all
+    move together. The columns are put in name order, the projections
+    sorted, the gids renumbered in that order, and the same column order
+    and gid numbering applied to the rest of the plan. Any other Expand
+    only has its projection lists sorted.
+    """
+    outer = top_level_lists(block[idx][len("Arguments: "):])
+    if len(outer) < 2:
+        return
+    projs = [split_items(p[1:-1]) for p in top_level_lists(outer[0][1:-1])]
+    outs = split_items(outer[1][1:-1])
+    g = outs.index("gid#") if "gid#" in outs else -1
+    if g < 0 or any(len(p) != len(outs) or not p[g].isdigit() for p in projs):
+        block[idx] = ("Arguments: [" + ", ".join(sorted(
+            "[" + ", ".join(p) + "]" for p in projs)) + "]" +
+            block[idx][len("Arguments: ") + len(outer[0]):])
+        return
+    perm = sorted(range(g), key=lambda i: outs[i]) + list(range(g, len(outs)))
+    projs = [[p[i] for i in perm] for p in projs]
+    new_outs = [outs[i] for i in perm]
+    order = sorted(range(len(projs)),
+                   key=lambda j: str(projs[j][:g] + projs[j][g + 1:]))
+    values = sorted((p[g] for p in projs), key=int)
+    gids = {projs[j][g]: values[rank] for rank, j in enumerate(order)}
+    for j in order:
+        projs[j][g] = gids[projs[j][g]]
+    block[idx] = ("Arguments: [" + ", ".join(
+        "[" + ", ".join(projs[j]) + "]" for j in order) + "], [" +
+        ", ".join(new_outs) + "]")
+    old_list, new_list = ", ".join(outs), ", ".join(new_outs)
+    for i, line in enumerate(block):
+        if i != idx:
+            line = line.replace(old_list, new_list)
+            block[i] = re.sub(r"gid# = (\d+)",
+                              lambda m: "gid# = " + gids.get(m.group(1), m.group(1)),
+                              line)
+
+
+def canonical_expands(lines):
+    """Applies canonical_expand to the Arguments line of each Expand."""
+    block, in_expand = list(lines), False
+    for i, line in enumerate(block):
         if re.match(r"^\(\d+\) Expand", line):
             in_expand = True
         elif in_expand and line.startswith("Arguments: [["):
-            # Arguments: [[proj], [proj], ...], [output attrs]
-            outer = top_level_lists(line[len("Arguments: "):])
-            if outer:
-                projs = top_level_lists(outer[0][1:-1])
-                rest = line[len("Arguments: ") + len(outer[0]):]
-                line = "Arguments: [" + ", ".join(sorted(projs)) + "]" + rest
+            canonical_expand(block, i)
             in_expand = False
         elif line.startswith("("):
             in_expand = False
-        out.append(line)
-    return out
+    return block
 
 
 def parse(path):
@@ -81,7 +139,7 @@ def parse(path):
                 name, body = line[3:].strip(), []
             elif line.startswith("```") and name is not None:
                 if in_block:
-                    plans[name] = sort_expand(body)
+                    plans[name] = canonical_expands(body)
                     name = None
                 in_block = not in_block
             elif in_block:
