@@ -56,8 +56,9 @@ import graft.ops.Archive
   *   GRAFT_CHECKPOINT   streaming checkpoint root
   *   GRAFT_MASTER       spark master, default local[*]
   *
-  * Every batch run re-reads the archive and requires its digests to
-  * match the batch's before any DELETE (Archive.groupChecksums). A
+  * Every run, batch cycle or streaming micro-batch, re-reads the archive
+  * and requires its digests to match the batch's (Archive.groupChecksums),
+  * so a batch cycle deletes nothing unless the archive holds its rows. A
   * malformed value, a table named twice in GRAFT_TABLES (compared
   * case-insensitively: a table created by unquoted DDL exists in one
   * case only) and a GRAFT_DELETE that cannot run are config errors
@@ -155,7 +156,8 @@ object ArchiverMain {
     * picked up by checkpointed file streams, one per table, and each
     * goes through [[archiveStream]]. The reference lists "real-time
     * archival" as future work (reference README.md:124); this is it,
-    * sharing every operator with the batch path. No top-k cap here:
+    * each micro-batch archived and verified by the batch cycle's own
+    * step. A table's stream failure names the table. No top-k cap here:
     * streaming bounds per-trigger work with maxFilesPerTrigger instead
     * of the cron model's batch LIMIT; no retention DELETE either (run
     * batch mode for that) — the streaming contract is append-only
@@ -169,13 +171,13 @@ object ArchiverMain {
     val reports = cfg.tables.map { t =>
       val ckpt = cfg.checkpointDir.map(c => s"$c/$t").getOrElse(
         java.nio.file.Files.createTempDirectory(s"graft_ckpt_$t").toString)
-      archiveStream(
+      forTable(t)(archiveStream(
         spark.readStream.schema(iotSchema)
           .option("maxFilesPerTrigger", "4")
           .parquet(s"${cfg.sourceDir.get}/$t.parquet")
           .transform(Archive.retentionFilter("timestamp", cfg.cutoff))
           .transform(Archive.stampTableName(t)),
-        cfg.outPath, ckpt)
+        cfg.outPath, ckpt))
     }
     val extracted = reports.map(_.extracted).sum
     val appended = reports.map(_.appended).sum
@@ -186,26 +188,23 @@ object ArchiverMain {
   /** Archives a stream of `(id, timestamp, device_id, value, table_name)`
     * rows, `timestamp` timestamp-typed, into `outPath`: the one streaming
     * archival path, run by the CLI's continuous mode and by
-    * `q_stream_archive`. Each micro-batch takes batch mode's row shape
-    * (per-row `year=/month=`, epoch-nanos timestamp), so both modes
-    * append to one archive; one month-digest job gives its row count and
-    * month set, and the keyed idempotent append writes only rows the
-    * archive lacks, so neither checkpoint replay nor total checkpoint
-    * LOSS can duplicate a row. Runs every available file to completion
-    * (AvailableNow) and reports the rows extracted and appended.
+    * `q_stream_archive`. Each micro-batch goes through [[archiveBatch]],
+    * the batch cycle's step: batch mode's row shape, one read of its
+    * source files, the keyed idempotent append and the verify. So neither
+    * checkpoint replay nor total checkpoint LOSS can duplicate a row, and
+    * a re-delivered key whose content changed fails the stream. Runs every
+    * available file to completion (AvailableNow) and reports the rows
+    * extracted and appended.
     */
   def archiveStream(stream: DataFrame, outPath: String, checkpoint: String): RunReport = {
     var appended = 0L
     var extracted = 0L
     stream.writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val shaped = b.toDF().transform(Archive.withTimePartitions("timestamp"))
-          .transform(Archive.toArchiveShape("timestamp"))
-        val summary = monthDigests(shaped)
-        if (summary.nonEmpty) {
-          extracted += rowCount(summary)
-          appended += Archive.appendIdempotent(shaped, outPath, monthsOf(summary))
-        }
+        val (n, a, _) = archiveBatch(
+          b.toDF().transform(Archive.withTimePartitions("timestamp")), outPath, None)
+        extracted += n
+        appended += a
       }
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -226,96 +225,94 @@ object ArchiverMain {
     // resolution is eager, so a missing table / bad connection fails
     // HERE — before anything is written.
     val perTable: Seq[(String, DataFrame)] = cfg.tables.map { t =>
-      val df =
-        try {
-          val loaded = source.load(spark, t).transform(Archive.projectIot)
-          // canonical archive schema regardless of source-identifier
-          // case (JDBC servers often uppercase unquoted names)
-          loaded.toDF("id", "timestamp", "device_id", "value")
-        } catch {
-          case e: Exception =>
-            throw new RuntimeException(s"processing table $t: ${e.getMessage}", e)
-        }
-      t -> df
+      // canonical archive schema regardless of source-identifier case
+      // (JDBC servers often uppercase unquoted names)
+      t -> forTable(t)(source.load(spark, t).transform(Archive.projectIot)
+        .toDF("id", "timestamp", "device_id", "value"))
     }
 
     // filter(ts<cutoff) → per-table top-k → stamp → union → per-row
-    // year/month. One declarative plan, marked for a lazy local
-    // checkpoint: the per-month summary's one job extracts and stores it
-    // (nothing else reads `batch` until that job returns, so it is the
-    // only job that computes it), then the append, the verify digest and
-    // the delete-range plan all read the stored blocks, so the source is
-    // read once. A lost block fails the cycle; it is never re-extracted.
-    val batch = Archive.archivePipeline(
-      perTable, "timestamp", "id", cfg.cutoff, cfg.batchSize).localCheckpoint(eager = false)
+    // year/month: one declarative plan, archived by the shared step.
+    val (extracted, appended, deletePlan) = archiveBatch(
+      Archive.archivePipeline(perTable, "timestamp", "id", cfg.cutoff, cfg.batchSize),
+      cfg.outPath,
+      connect.filter(_ => cfg.deleteFromSource).map(_ => (stored: DataFrame) =>
+        JdbcRetention.planDelete(stored.select("table_name", "id"), cfg.tables.toSet)))
+    if (extracted == 0L) {
+      println("No records to archive")
+      return RunReport(0L, 0L, Map.empty)
+    }
+    println(s"Archived $appended new rows (batch of $extracted) to ${cfg.outPath}")
+    println("Archive verified: read-back digests match the batch")
+
+    // Retention DELETE keyed to the batch — which is exactly the rows
+    // now durable in the archive: freshly appended ones plus any a
+    // previously-crashed run wrote but failed to delete.
+    val deleted = (deletePlan, connect) match {
+      case (Some(plan), Some(c)) =>
+        val d = JdbcRetention.executeDelete(plan, c)
+        d.foreach { case (t, n) => println(s"Deleted $n records from table $t") }
+        d
+      case _ => Map.empty[String, Long]
+    }
+    RunReport(extracted, appended, deleted)
+  }
+
+  /** Runs `body` for table `t`, naming the table in its failure. */
+  private def forTable[A](t: String)(body: => A): A =
+    try body catch {
+      case e: Exception => throw new RuntimeException(s"processing table $t: ${e.getMessage}", e)
+    }
+
+  /** The archival step of every batch cycle and every streaming
+    * micro-batch, over `(id, timestamp, device_id, value, table_name,
+    * year, month)` rows, `timestamp` timestamp-typed. Returns the rows
+    * extracted and appended, and the delete plan if `planDelete` is given.
+    *
+    * `parted` is marked for a lazy local checkpoint: the month-digest job
+    * extracts and stores it, then the append, the verify read-back and
+    * `planDelete` (on its own thread, joined before the blocks are
+    * released) read the stored blocks, so the source is read once. A lost
+    * block fails the step; it is never re-extracted. The digests give the
+    * row count, the month set the append and the read-back prune to, and
+    * the digest set verify compares: the archive rows holding the batch's
+    * keys within its months, read back with the batch's schema, must give
+    * the batch's digests, or the step throws naming the partitions.
+    */
+  private def archiveBatch(parted: DataFrame, outPath: String,
+      planDelete: Option[DataFrame => JdbcRetention.DeletePlan]):
+      (Long, Long, Option[JdbcRetention.DeletePlan]) = {
+    val batch = parted.localCheckpoint(eager = false)
     var deletePlan: Option[FutureTask[JdbcRetention.DeletePlan]] = None
     try {
-      // Reference row shape: timestamp as epoch-nanos int64
-      // (main.go:36-44); year/month were derived above while the column
-      // was still timestamp-typed. One shaped frame feeds the summary,
-      // the append and the verify read-back.
+      // Reference row shape: timestamp as epoch-nanos int64 (main.go:36-44)
       val shaped = batch.transform(Archive.toArchiveShape("timestamp"))
-      // The one batch-summary action: per-(year, month) row counts and
-      // digests give the extracted count, the month set the append and
-      // the read-back prune to, and the digest set verify compares.
       val want = monthDigests(shaped)
-      val extracted = rowCount(want)
-      if (extracted == 0L) {
-        println("No records to archive")
-        return RunReport(0L, 0L, Map.empty)
-      }
+      val extracted = want.toSeq.map(_.getLong(2)).sum
+      if (extracted == 0L) return (0L, 0L, None)
       val months = monthsOf(want)
-
-      // The delete-range collect needs only the stored batch, so it runs
-      // beside the append and verify. A thread created here, not a
-      // pooled one, inherits this thread's Spark local properties (job
-      // group, scheduler pool), so its job stays with this run.
-      deletePlan = connect.filter(_ => cfg.deleteFromSource).map { _ =>
-        val task = new FutureTask[JdbcRetention.DeletePlan](() =>
-          JdbcRetention.planDelete(batch.select("table_name", "id"), cfg.tables.toSet))
+      // A thread created here, not a pooled one, inherits this thread's
+      // Spark local properties (job group, scheduler pool), so its job
+      // stays with this run.
+      deletePlan = planDelete.map { f =>
+        val task = new FutureTask[JdbcRetention.DeletePlan](() => f(batch))
         new Thread(task, "graft-delete-plan").start()
         task
       }
-
-      val appended = Archive.appendIdempotent(shaped, cfg.outPath, months)
-      println(s"Archived $appended new rows (batch of $extracted) to ${cfg.outPath}")
-
-      // Verify-before-delete, on every batch run: re-read the archive and
-      // compare per-(year, month) digests of THIS batch's rows against
-      // what we just tried to make durable — the read-back check the
-      // reference never does before destroying source data. Order- and
-      // partitioning-independent by construction; both digest sets have
-      // one row per month the batch spans, so they compare on the driver.
-      // The read-back takes the batch's schema instead of inferring one:
-      // a column missing from the files reads as nulls and changes the
-      // digest, and a type clash fails the read.
+      val appended = Archive.appendIdempotent(shaped, outPath, months)
       val got = monthDigests(
-        spark.read.schema(shaped.schema).parquet(cfg.outPath)
+        shaped.sparkSession.read.schema(shaped.schema).parquet(outPath)
           .filter(Archive.inMonths(months))
           .join(shaped.select("table_name", "id"), Seq("table_name", "id"), "left_semi"))
-      val mismatch = (want -- got).size + (got -- want).size
-      require(mismatch == 0,
-        s"archive verification FAILED: $mismatch partition digests " +
-          "differ between the batch and the read-back archive — " +
-          "refusing to delete source rows")
-      println("Archive verified: read-back digests match the batch")
-
-      // Retention DELETE keyed to the batch — which is exactly the rows
-      // now durable in the archive: freshly appended ones plus any a
-      // previously-crashed run wrote but failed to delete.
-      val deleted = (deletePlan, connect) match {
-        case (Some(plan), Some(c)) =>
-          val d = JdbcRetention.executeDelete(
-            try plan.get() catch { case e: ExecutionException => throw e.getCause }, c)
-          d.foreach { case (t, n) => println(s"Deleted $n records from table $t") }
-          d
-        case _ => Map.empty[String, Long]
-      }
-      RunReport(extracted, appended, deleted)
+      val differ = (want -- got) ++ (got -- want)
+      require(differ.isEmpty,
+        s"archive verification FAILED: ${differ.size} partition digests differ " +
+          "between the batch and the read-back archive in " +
+          monthsOf(differ).distinct.sorted.map { case (y, m) => s"year=$y/month=$m" }
+            .mkString(", ") + " — refusing to delete source rows")
+      (extracted, appended,
+        deletePlan.map(t => try t.get() catch { case e: ExecutionException => throw e.getCause }))
     } finally {
-      // the plan's job reads the stored batch: let it finish before
-      // releasing the blocks, so a failed run never re-extracts from the
-      // source and no cycle leaves its blocks to the ContextCleaner
       deletePlan.foreach(t => try t.get() catch { case _: Exception => () })
       batch.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
         .foreach(_.unpersist())
@@ -351,8 +348,6 @@ object ArchiverMain {
       val (n, x) = acc.getOrElse(month, (0L, 0L))
       acc.updated(month, (n + r.getLong(2), x ^ r.getLong(3)))
     }.iterator.map { case ((y, m), (n, x)) => Row(y, m, n, x) }
-
-  private def rowCount(summary: Set[Row]): Long = summary.toSeq.map(_.getLong(2)).sum
 
   private def monthsOf(summary: Set[Row]): Seq[(Int, Int)] =
     summary.toSeq.map(r => (r.getInt(0), r.getInt(1)))

@@ -319,12 +319,12 @@ object PipelineQueries {
     // streaming path (ArchiverMain.archiveStream, the GRAFT_STREAMING
     // micro-batch): events mapped to the IoT row shape and stamped with
     // a table_name, file-streamed one file per micro-batch (AvailableNow,
-    // checkpointed) through the month digest and the keyed idempotent
-    // append into a fresh archive dir; then the gate aggregates the
-    // READ-BACK archive per partition — proving the incremental write
-    // path lands the data the reference's batch rerun would. Stateless
-    // per batch ⇒ no watermark, so arrival order is free (plain
-    // re-shard into 3 files, shared with q_ohlc_stream).
+    // checkpointed) through the batch cycle's archival step (digest,
+    // keyed idempotent append, verify) into a fresh archive dir; then
+    // the gate aggregates the READ-BACK archive per partition — proving
+    // the incremental write path lands the data the reference's batch
+    // rerun would. Stateless per batch ⇒ no watermark, so arrival order
+    // is free (plain re-shard into 3 files, shared with q_ohlc_stream).
     "q_stream_archive" -> ((s, d) => {
       val tmp = stagedEvents3(s, d)
       val out = java.nio.file.Files

@@ -269,6 +269,16 @@ class ArchiverMainSpec extends AnyFunSuite {
       ArchiverMain.run(spark, cfg, ParquetSource(srcDir), None)
     }
     assert(ex.getMessage.contains("archive verification FAILED"))
+    assert(ex.getMessage.contains("year=2024/month=1"), ex.getMessage)
+
+    // streaming verifies each micro-batch too: the same source streamed
+    // into that archive fails, naming the table and the partition
+    val streamed = intercept[RuntimeException] {
+      ArchiverMain.run(spark, cfg.copy(streaming = true,
+        checkpointDir = Some(tmp("graft_cli_dup_ckpt"))), ParquetSource(srcDir), None)
+    }
+    Seq("processing table iot_data", "archive verification FAILED", "year=2024/month=1")
+      .foreach(m => assert(streamed.getMessage.contains(m), streamed.getMessage))
   }
 
   // ------------------------------------------------ live JDBC (Derby) loop
@@ -417,6 +427,31 @@ class ArchiverMainSpec extends AnyFunSuite {
   private def derbyBase(url: String, outDir: String) = Map(
     "GRAFT_JDBC_URL" -> url, "GRAFT_OUT" -> outDir,
     "GRAFT_TABLES" -> "IOT_DATA", "GRAFT_CUTOFF" -> Cutoff)
+
+  test("an archiver cycle leaves no persisted blocks behind, whether its " +
+      "verify passes or fails") {
+    val (url, connect) = derby("graft_no_leak")
+    val outDir = tmp("graft_cli_no_leak_out") + "/arch"
+    insert(connect, "IOT_DATA", Seq(
+      (1L, "2024-01-05 08:00:00", "d1", 1.0),
+      (2L, "2024-01-06 08:00:00", "d2", 2.0)))
+    val source = JdbcSource(url, new java.util.Properties())
+    val cfg = ArchiverMain.parseConfig(derbyBase(url, outDir))
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    assert(ArchiverMain.run(spark, cfg, source, Some(connect)).appended == 2)
+    // ids only: the ContextCleaner may drop an earlier test's blocks meanwhile
+    assert((persisted -- before).isEmpty, persisted -- before)
+    val arch = spark.read.parquet(outDir)
+    spark.createDataFrame(
+        java.util.Arrays.asList(arch.filter(col("id") === 1L).collect(): _*), arch.schema)
+      .write.mode("append").partitionBy("year", "month").parquet(outDir)
+    intercept[IllegalArgumentException] {
+      ArchiverMain.run(spark, cfg.copy(deleteFromSource = true), source, Some(connect))
+    }
+    assert((persisted -- before).isEmpty, persisted -- before)
+    assert(remainingIds(connect, "IOT_DATA") == Set(1L, 2L))
+  }
 
   test("one archiver cycle with verify and delete on runs at most 6 Spark jobs") {
     val (url, connect) = derby("graft_job_budget")

@@ -16,10 +16,13 @@ class StreamingSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def eventsDir: String = {
-    // two-file parquet dir of the events fixture as loaded
+    // two-file parquet dir of the events fixture as loaded, so a stream
+    // with maxFilesPerTrigger = 1 runs two data micro-batches
     val dir = java.nio.file.Files.createTempDirectory("graft_stream_src").toString
-    Tables.load(spark, TestSpark.Sf0001, "events").coalesce(2)
+    Tables.load(spark, TestSpark.Sf0001, "events").repartition(2)
       .write.mode("overwrite").parquet(dir)
+    val files = new java.io.File(dir).list().count(_.endsWith(".parquet"))
+    assert(files == 2, s"$dir holds $files data files")
     dir
   }
 
@@ -28,6 +31,12 @@ class StreamingSpec extends AnyFunSuite {
   private def bars(df: org.apache.spark.sql.DataFrame): Set[Bar] =
     df.select("bucket", "grp", "open", "high", "low", "close", "n")
       .as[Bar].collect().toSet
+
+  /** Events in the archiver's IoT row shape, as `q_stream_archive` maps them. */
+  private def iot(events: org.apache.spark.sql.DataFrame) = events
+    .select(col("event_id").as("id"), col("ts").as("timestamp"),
+      col("user_id").cast("string").as("device_id"), col("value"))
+    .transform(Archive.stampTableName("events"))
 
   private def ohlc(events: org.apache.spark.sql.DataFrame) =
     TimeSeries.ohlcBars(events, "event_type", "ts", "event_id", "value")
@@ -51,10 +60,6 @@ class StreamingSpec extends AnyFunSuite {
     val dir = eventsDir
     val out = java.nio.file.Files.createTempDirectory("graft_stream_out").toString
     def ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt").toString
-    def iot(events: org.apache.spark.sql.DataFrame) = events
-      .select(col("event_id").as("id"), col("ts").as("timestamp"),
-        col("user_id").cast("string").as("device_id"), col("value"))
-      .transform(Archive.stampTableName("events"))
     def stream = iot(Streaming.readEventsStream(spark, dir, maxFilesPerTrigger = 1))
     val n = Tables.events(spark, TestSpark.Sf0001).count()
     val first = ArchiverMain.archiveStream(stream, out, ckpt)
@@ -74,6 +79,36 @@ class StreamingSpec extends AnyFunSuite {
     val rerun = ArchiverMain.archiveStream(stream, out, ckpt)
     assert(rerun.extracted == n && rerun.appended == 0L, rerun)
     assert(spark.read.parquet(out).count() == n)
+  }
+
+  test("a streamed archive reads each micro-batch's source files once " +
+      "and leaves no persisted blocks behind") {
+    val dir = eventsDir
+    val out = java.nio.file.Files.createTempDirectory("graft_stream_once_out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_once_ckpt").toString
+    val read = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.sink.description.contains("ForeachBatchSink"))
+          read.addAndGet(e.progress.numInputRows): Unit
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    val n = Tables.events(spark, TestSpark.Sf0001).count()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    spark.streams.addListener(listener)
+    val r = try {
+      val r = ArchiverMain.archiveStream(
+        iot(Streaming.readEventsStream(spark, dir, maxFilesPerTrigger = 1)), out, ckpt)
+      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext, 10000L)
+      r
+    } finally spark.streams.removeListener(listener)
+    assert(r.extracted == n && r.appended == n, r)
+    assert(read.get == n, s"the micro-batches read ${read.get} source rows for $n events")
+    // ids only: the ContextCleaner may drop an earlier test's blocks meanwhile
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
   }
 
   test("native session_window agrees with the lag-based sessionization " +

@@ -14,6 +14,7 @@ comparing, every plan is normalised:
   - JVM lambda and object identities (`$Lambda$61/0x7f..@5a03`, `X@1f2e3d`)
   - call-site lines (`Foo.scala:138`) -> `Foo.scala:L`
   - temp-directory suffixes (`graft_stream_stage3123456789`) -> `...N`
+  - random UUIDs, e.g. an `Observation`'s `CollectMetrics` name -> `<uuid>`
   - each `Expand` node's projection lists are sorted; for a
     distinct-aggregate Expand (output column `gid#`), whose distinct
     groups Spark may order differently between runs of the same code,
@@ -36,6 +37,7 @@ SUBS = [
     (re.compile(r"([\w$])@[0-9a-f]{4,16}\b"), r"\1@H"),
     (re.compile(r"\.scala:\d+"), ".scala:L"),
     (re.compile(r"(graft_[A-Za-z0-9_]*?[A-Za-z_])\d{5,}"), r"\1N"),
+    (re.compile(r"\b[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}\b"), "<uuid>"),
 ]
 
 
