@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * agg (map-side combine over doc-local lead()); top-1 is a bounded
   * TakeOrdered collect of ONE row (the IVF-training pattern); the
   * rewrite is doc-keyed windows — every pass reuses the same (doc)
-  * partitioning, and `materialize` (localCheckpoint in the registered
-  * query) cuts the lineage that would otherwise double per step (the
+  * partitioning, and the trainer `localCheckpoint()`s each state frame,
+  * which cuts the lineage that would otherwise double per step (the
   * AQE no-subtree-dedup lesson: each state frame feeds BOTH the count
   * and the rewrite). A production 30k-merge run batches many disjoint
   * pairs per rewrite pass instead of one (same algebra over a
@@ -127,11 +127,11 @@ object Bpe {
     * pair's 1-based position in its round's greedy selection, n_pairs
     * the corpus-wide adjacent count at selection time. Merged tokens
     * are spelled `left + "+" + right` (the corpus alphabet is [a-z ];
-    * '+' cannot collide).
+    * '+' cannot collide). EAGER AT CALL TIME: training runs when
+    * CALLED, each state frame checkpointed and each pool collected.
     */
   def pairMergesBatched(docs: DataFrame, idCol: String, textCol: String,
-      rounds: Int, pairsPerRound: Int, candidatePool: Int = 64,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      rounds: Int, pairsPerRound: Int, candidatePool: Int = 64): DataFrame = {
     require(rounds >= 1 && rounds <= 16,
       s"rounds must be in [1, 16], got $rounds")
     require(pairsPerRound >= 1 && pairsPerRound <= 16,
@@ -142,9 +142,9 @@ object Bpe {
     val spark = docs.sparkSession
     import spark.implicits._
     // state carries `nxt` (r16): the per-round pair count is then a
-    // pure two-phase aggregation over the materialized frame — no
+    // pure two-phase aggregation over the checkpointed frame — no
     // window, no per-round doc-keyed exchange (see withNext)
-    var toks = materialize(withNext(tokenize(docs, idCol, textCol)))
+    var toks = withNext(tokenize(docs, idCol, textCol)).localCheckpoint()
     val merges = Seq.newBuilder[(Int, Int, String, String, Long)]
     var exhausted = false
     for (round <- 1 to rounds if !exhausted) {
@@ -174,11 +174,11 @@ object Bpe {
         // (the SQL twin LEFT JOINs its sel CTE; same row semantics).
         // The LAST round's rewrite is dead work — nothing reads the
         // final token stream (the merge table is the output); skip it
-        // instead of materializing it (r16)
-        if (round < rounds) toks = materialize(rewriteOnce(toks,
+        // instead of checkpointing it (r16)
+        if (round < rounds) toks = rewriteOnce(toks,
           matchAny(sel.map { case (l, r, _) => (l, r) }),
           spellAny(sel.map { case (l, r, _) => (l, r) }),
-          emitNext = true))
+          emitNext = true).localCheckpoint()
       }
     }
     merges.result()
@@ -222,9 +222,11 @@ object Bpe {
     * the sequential application — a production 30k-merge vocabulary
     * (mostly-disjoint by construction: each merge introduces a fresh
     * symbol) applies in far fewer corpus passes than merges, every
-    * pass reusing the same (doc) partitioning. `materialize`
-    * (localCheckpoint in the registered query) cuts per-pass lineage
-    * growth exactly as in the trainer.
+    * pass reusing the same (doc) partitioning. `materialize` wraps
+    * each pass's output; `q_bpe_encode` passes `identity` (each pass has
+    * ONE consumer, so its 2-pass lazy chain recomputes nothing). A
+    * production-size table (about merges/16 passes) should pass
+    * `_.localCheckpoint()` to keep each plan and lineage one pass deep.
     */
   def encode(docs: DataFrame, idCol: String, textCol: String,
       merges: Seq[(String, String)],

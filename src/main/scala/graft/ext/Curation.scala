@@ -35,21 +35,19 @@ object Curation {
   /** Near-dup dedup: drop every doc that is J ≥ threshold similar to a
     * LOWER-id doc (the higher id of each near-dup pair). Deterministic
     * and order-free: the drop set is { b | ∃ (a,b), a<b, J(a,b) ≥ t }.
+    * EAGER AT CALL TIME: the hashed shingle sets feed both pair-join
+    * sides (AQE does not reuse the twin exchanges), so they are
+    * checkpointed — one tokenize+shingle job when CALLED.
     */
   def dropNearDupes(docs: DataFrame, textCol: String, idCol: String,
-      threshold: Double,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      threshold: Double): DataFrame = {
     // STRICTLY positive here, though the pair APIs accept 0: this
     // operator DROPS rows, and t = 0 (the unset-Double default) would
     // silently discard every doc sharing a single shingle with any
     // lower-id doc — near-total corpus loss, not a curation setting
     require(threshold > 0 && threshold <= 1,
       s"drop threshold must be in (0, 1], got $threshold")
-    // hashed sets feed both pair-join sides as separate stages (AQE
-    // does not reuse the identical exchanges) — callers that can
-    // materialize pass `_.localCheckpoint()` and tokenize+shingle once
-    val hsets = materialize(
-      Dedup.hashedShingleSets(docs, textCol, idCol, 3))
+    val hsets = Dedup.hashedShingleSets(docs, textCol, idCol, 3).localCheckpoint()
     val drops = Dedup.ngramJaccardPairsFromHashedSets(hsets, threshold)
       .select(col("b_id").as(idCol)).distinct()
     docs.join(drops, Seq(idCol), "left_anti")
@@ -57,23 +55,15 @@ object Curation {
 
   /** The full pipeline. Returns surviving rows with quality features.
     *
-    * `materialize` is applied to the two multiply-consumed subtrees:
-    * the exact-dedup stage (feeds the near-dup pair generation AND the
-    * final anti-join) and the near-dup stage's hashed shingle sets
-    * (feed both pair-join sides) — callers that can afford it pass
-    * `_.localCheckpoint()` (the registered `q_curation_pipeline` does)
-    * to evaluate each subtree once instead of per-consumer; the
-    * default keeps the builder fully lazy (no hidden state — same
-    * policy as ngramJaccardPairs).
+    * EAGER AT CALL TIME: two checkpoint jobs run when CALLED — the
+    * exact-dedup stage (feeds the near-dup pairs AND the final
+    * anti-join) and [[dropNearDupes]]' hashed shingle sets.
     */
   def curate(docs: DataFrame, textCol: String, idCol: String,
-      minTokens: Int = 20, nearDupThreshold: Double = 0.8,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      minTokens: Int = 20, nearDupThreshold: Double = 0.8): DataFrame = {
     val gated = qualityGate(docs, textCol, minTokens)
-    val exact = materialize(dropExactDupes(gated, textCol, idCol))
-    // materialize flows into the near-dup stage too: its hashed shingle
-    // sets feed both pair-join sides
-    dropNearDupes(exact, textCol, idCol, nearDupThreshold, materialize)
+    val exact = dropExactDupes(gated, textCol, idCol).localCheckpoint()
+    dropNearDupes(exact, textCol, idCol, nearDupThreshold)
   }
 
   // ------------------------------------------------- corpus assembly ops
@@ -255,26 +245,27 @@ object Curation {
     * (that is the premise of held-out evaluation), so it broadcasts —
     * the corpus is scanned once, no corpus-side self-join. Returns
     * (id, n_overlap) for flagged docs; anti-join against it to clean.
+    * EAGER AT CALL TIME: both hashed-set frames are checkpointed
+    * (see the body), two jobs when CALLED.
     */
   def contaminatedDocs(corpus: DataFrame, benchmark: DataFrame,
       textCol: String, idCol: String, n: Int = 3,
-      minOverlap: Int = 1,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      minOverlap: Int = 1): DataFrame = {
     // both sides compare 64-bit shingle hashes, not strings: the
     // broadcast is 8 bytes per benchmark shingle (a 1M-shingle bench
     // set broadcasts as ~8 MB at any text length) and the probe is a
     // long equality — same accepted collision class as the dedup
     // family's hashed postings (~1e-7 among 10^6 shingles).
-    // `materialize` wraps the hashed-set frames: when the plan stays
-    // lazy, InferFiltersFromGenerate turns each explode into
+    // the hashed-set frames are checkpointed: in a lazy plan,
+    // InferFiltersFromGenerate turns each explode into
     // size(...) > 0 / isnotnull(...) predicates that the pushdown
     // inlines as TWO extra evaluations of the shingle scan per row
     // (observed in the r7 plan dump); a checkpoint makes it one.
-    val benchShingles = materialize(
-        Dedup.hashedShingleSets(benchmark, textCol, idCol, n))
+    val benchShingles = Dedup.hashedShingleSets(benchmark, textCol, idCol, n)
+      .localCheckpoint()
       .select(explode(col("shs")).as("sh")).distinct()
-    val corpusShingles = materialize(
-        Dedup.hashedShingleSets(corpus, textCol, idCol, n))
+    val corpusShingles = Dedup.hashedShingleSets(corpus, textCol, idCol, n)
+      .localCheckpoint()
       .select(col("doc_id"), explode(col("shs")).as("sh"))
     corpusShingles.join(broadcast(benchShingles), "sh")
       .groupBy(col("doc_id"))

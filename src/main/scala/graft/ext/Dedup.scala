@@ -53,9 +53,10 @@ object Dedup {
     */
   def ngramJaccardPairs(docs: DataFrame, textCol: String, idCol: String,
       n: Int = 3, threshold: Double = 0.6): DataFrame =
-    // No .cache() here: the builder is lazy, so an internal cache could
-    // never be unpersisted and would leak blocks in long-lived sessions.
-    // Callers that reuse the plan across actions should cache themselves.
+    // No checkpoint here: this string-basis form is the exact baseline
+    // the specs hold the hashed operators to, so it stays one lazy plan
+    // (each self-join side re-shingles); scale callers checkpoint
+    // [[hashedShingleSets]] for [[ngramJaccardPairsFromHashedSets]].
     ngramJaccardPairsFromSets(shingleSets(docs, textCol, idCol, n), threshold)
 
   /** (doc_id, n_sh, shs) — the 64-bit-hashed form of [[shingleSets]]:
@@ -302,13 +303,13 @@ object Dedup {
   /** LSH candidate pairs: band the signature (bands × rowsPerBand =
     * numPerms), hash each band, join docs colliding in any band.
     * With b=16, r=4: P(candidate | j=0.9) ≈ 1−(1−0.9⁴)¹⁶ ≈ 1−10⁻⁸.
+    * EAGER AT CALL TIME: the banded frame feeds both self-join sides
+    * (AQE does not reuse the twin exchanges — measured), so it is
+    * checkpointed: the signature aggregation runs as one job when
+    * CALLED, not once per side. Its minhash and fuzzy callers inherit this.
     */
-  def lshCandidates(sigs: DataFrame, bands: Int, rowsPerBand: Int,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
-    // the banded frame feeds both self-join sides; without
-    // materialization the whole SIGNATURE aggregation upstream runs
-    // twice (AQE does not reuse the identical exchanges — measured)
-    val banded = materialize(bandedSignatures(sigs, bands, rowsPerBand))
+  def lshCandidates(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
+    val banded = bandedSignatures(sigs, bands, rowsPerBand).localCheckpoint()
     banded.as("a").hint("SHUFFLE_HASH").join(banded.as("b").hint("SHUFFLE_HASH"),
         col("a.band_id") === col("b.band_id") &&
           col("a.band_hash") === col("b.band_hash") &&
@@ -330,8 +331,7 @@ object Dedup {
     * asserted in DedupSpec.
     */
   def minhashNearDupPairsFromHashedSets(hsets: DataFrame, numPerms: Int,
-      bands: Int, threshold: Double,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      bands: Int, threshold: Double): DataFrame = {
     // t = 0 is excluded (unlike the enumeration-style jaccard entry
     // points): banded LSH is a threshold-tuned filter — at 0 the
     // verification keeps every banded candidate, which is neither the
@@ -343,7 +343,7 @@ object Dedup {
     require(numPerms >= 1 && bands >= 1 && numPerms % bands == 0,
       s"numPerms ($numPerms) must be a positive multiple of bands ($bands)")
     val cands = lshCandidates(minhashSignaturesFromHashed(hsets, numPerms),
-      bands, numPerms / bands, materialize)
+      bands, numPerms / bands)
     cands
       .join(hsets.select(col("doc_id").as("a_id"), col("shs").as("sa")), "a_id")
       .join(hsets.select(col("doc_id").as("b_id"), col("shs").as("sb")), "b_id")
@@ -435,8 +435,7 @@ object Dedup {
     */
   def fuzzyDupPairs(hsets: DataFrame, texts: DataFrame, textCol: String,
       idCol: String, numPerms: Int = 64, bands: Int = 16,
-      jPrefilter: Double = 0.5, editSim: Double = 0.9,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      jPrefilter: Double = 0.5, editSim: Double = 0.9): DataFrame = {
     require(editSim > 0 && editSim <= 1,
       s"editSim must be in (0, 1], got $editSim")
     require(jPrefilter >= 0 && jPrefilter <= 1,
@@ -444,7 +443,7 @@ object Dedup {
     require(numPerms >= 1 && bands >= 1 && numPerms % bands == 0,
       s"numPerms ($numPerms) must be a positive multiple of bands ($bands)")
     val cands = lshCandidates(minhashSignaturesFromHashed(hsets, numPerms),
-      bands, numPerms / bands, materialize)
+      bands, numPerms / bands)
     val jPairs = cands
       .join(hsets.select(col("doc_id").as("a_id"), col("shs").as("sa")), "a_id")
       .join(hsets.select(col("doc_id").as("b_id"), col("shs").as("sb")), "b_id")
@@ -542,21 +541,21 @@ object Dedup {
     * 3: a larger bound would VALIDATE but the blocking would silently
     * miss pairs whose differing bits touch all four chunks (recall
     * loss, not an error an output filter can surface).
+    * EAGER AT CALL TIME: the chunked frame feeds both self-join sides,
+    * so it is checkpointed — the simhash agg is one job when CALLED.
     */
   def simhashNearDupPairs(docs: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"maxHamming must be in [0, 3] (4-chunk pigeonhole guarantees " +
         s"recall only through hamming 3), got $maxHamming")
     val fps = simhash(docs, textCol, idCol)
-    // the chunked frame feeds both self-join sides — without
-    // materialization the 64-bit-sum simhash aggregation runs twice
-    val chunks = materialize(fps.select(col("doc_id"), col("simhash"),
+    val chunks = fps.select(col("doc_id"), col("simhash"),
       explode(array((0 until 4).map(c =>
         struct(lit(c).as("chunk_id"),
           shiftright(col("simhash"), c * 16).bitwiseAND(0xFFFFL).as("chunk_val"))): _*)).as("ch"))
-      .select(col("doc_id"), col("simhash"), col("ch.chunk_id"), col("ch.chunk_val")))
+      .select(col("doc_id"), col("simhash"), col("ch.chunk_id"), col("ch.chunk_val"))
+      .localCheckpoint()
     chunks.as("a").hint("SHUFFLE_HASH").join(chunks.as("b").hint("SHUFFLE_HASH"),
         col("a.chunk_id") === col("b.chunk_id") &&
           col("a.chunk_val") === col("b.chunk_val") &&

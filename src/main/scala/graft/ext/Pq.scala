@@ -32,9 +32,10 @@ object Pq {
   /** Train an (m × k) codebook: per subspace, k-means from
     * deterministic seeds over the sliced subvectors. Returns
     * (subspace, cell_id, centroid) rows — m·k of them, a driver-tiny
-    * frame whatever the corpus size. `dsub` = d/m must divide the
-    * embedding width (callers slice exhaustively; a ragged tail would
-    * silently train on a short subvector).
+    * frame whatever the corpus size. `m · dsub` must equal the width
+    * of every seed vector (else it fails before any training job).
+    * EAGER AT CALL TIME: the seed collect and one codebook checkpoint
+    * job per iteration run when CALLED.
     *
     * Semantics are EXACTLY m independent [[Clustering.lloyd]] runs
     * (same seeds: the first k vectors by id, sliced; same argmin
@@ -47,8 +48,7 @@ object Pq {
     * between m corpus scans and one per iteration. PqSpec pins
     * equality against the per-subspace lloyd reference.
     */
-  def train(corpus: DataFrame, m: Int, dsub: Int, k: Int, iters: Int = 1,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+  def train(corpus: DataFrame, m: Int, dsub: Int, k: Int, iters: Int = 1): DataFrame = {
     require(m >= 1 && dsub >= 1 && k >= 2, s"bad PQ shape m=$m dsub=$dsub k=$k")
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -57,6 +57,9 @@ object Pq {
     val seedVecs = corpus.orderBy(col("vec_id")).limit(k)
       .select(col("embedding")).as[Array[Float]].collect()
     require(seedVecs.length >= 2, s"PQ needs >= 2 vectors, got ${seedVecs.length}")
+    val widths = seedVecs.map(_.length).distinct.sorted
+    require(widths.sameElements(Array(m * dsub)), s"PQ shape m=$m × dsub=$dsub = " +
+      s"${m * dsub} must equal the embedding width, got width(s) ${widths.mkString(", ")}")
     var cb = (for (j <- 0 until m; c <- seedVecs.indices) yield
       (j, c, seedVecs(c).slice(j * dsub, (j + 1) * dsub)))
       .toDF("subspace", "cell_id", "centroid")
@@ -83,13 +86,13 @@ object Pq {
           s => s.getField("c").cast("float")).as("centroid"))
       // empty-cell fallback: a cell that lost every member keeps its
       // previous centroid (lloyd's contract — dropping would shrink k)
-      cb = materialize(cb
+      cb = cb
         .select(col("subspace"), col("cell_id"), col("centroid").as("prev"))
         .join(next.select(col("subspace"), col("cell_id"),
           col("centroid").as("nxt")), Seq("subspace", "cell_id"), "left")
         .select(col("subspace"), col("cell_id"),
           coalesce(col("nxt"), col("prev")).as("centroid"))
-        .coalesce(1))
+        .coalesce(1).localCheckpoint()
     }
     cb
   }

@@ -90,10 +90,15 @@ object Similarity {
     * the exact variant in SimilaritySpec. A bucket id is one long of r
     * bits, so r ≥ 64 would wrap `1L << i` and silently merge buckets;
     * bad shapes fail fast instead (r ≤ 62 keeps clear of the sign bit).
+    * EAGER AT CALL TIME: the banded frame feeds both self-join sides
+    * (AQE does not reuse the twin exchanges), so it is checkpointed —
+    * one corpus-scan job when CALLED. Determinism: the embedding attach
+    * re-reads `corpus`, so a nondeterministic corpus (a sample, a source
+    * that changes between reads) can score a pair against vectors other
+    * than the ones that collided; pass a deterministic or checkpointed one.
     */
   def cosineNearDupPairsLsh(corpus: DataFrame, threshold: Double,
-      numTables: Int = 8, planesPerTable: Int = 4, dim: Int = 64,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      numTables: Int = 8, planesPerTable: Int = 4, dim: Int = 64): DataFrame = {
     require(numTables >= 1 && planesPerTable >= 1 && planesPerTable <= 62,
       s"LSH shape needs numTables >= 1 and planesPerTable in [1, 62], " +
         s"got numTables=$numTables planesPerTable=$planesPerTable")
@@ -155,12 +160,13 @@ object Similarity {
           wordCols(j).bitwiseAND(lit(maskConst(j, t))).as(s"pw$j"),
           lit(maskConst(j, t)).as(s"mk$j"))): _*)
     }: _*))
-    val banded = materialize(corpus
+    val banded = corpus
       .select((col("vec_id") +: bkCols): _*)
       .withColumn("tb", tbCol)
       .select(Seq(col("vec_id"), col("tb.table_id"), col("tb.bucket")) ++
         (0 until nWords).flatMap(j =>
-          Seq(col(s"tb.pw$j"), col(s"tb.mk$j"))): _*))
+          Seq(col(s"tb.pw$j"), col(s"tb.mk$j"))): _*)
+      .localCheckpoint()
     // collision in an EARLIER table == some prefix field of some word
     // zeroes out under XOR; field masks are literals, everything codegen
     val earlierCollision = (0 until nWords).flatMap { j =>

@@ -215,9 +215,9 @@ object TextAnalysis {
     * Token doc-frequencies attach via plain keyed joins (vocab-sized;
     * AQE broadcasts them at test scale, stays keyed at 100 TB where a
     * vocabulary outgrows a broadcast). The `toks` frame feeds three
-    * subtrees (two join sides + df agg) — callers pass
-    * `materialize = _.localCheckpoint()` to scan the corpus once (the
-    * dedup-hsets lesson; AQE does not dedupe identical subtrees).
+    * subtrees (two join sides + df agg) and AQE does not dedupe
+    * identical subtrees, so it is checkpointed — EAGER AT CALL TIME:
+    * one full-corpus job when CALLED.
     *
     * Determinism: PMI is a SINGLE ln per output row on an exact
     * integer rational (products < 2⁵³ — exact in IEEE), rounded into
@@ -225,11 +225,11 @@ object TextAnalysis {
     * top-k; ties break on (t1, t2).
     */
   def pmiPairs(docs: DataFrame, textCol: String, idCol: String,
-      minSupport: Long, topK: Int,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      minSupport: Long, topK: Int): DataFrame = {
     require(minSupport >= 1, s"minSupport must be >= 1, got $minSupport")
-    val toks = materialize(docs.select(col(idCol).as("doc_id"),
-      explode(array_distinct(tokens(col(textCol)))).as("tok")))
+    val toks = docs.select(col(idCol).as("doc_id"),
+      explode(array_distinct(tokens(col(textCol)))).as("tok"))
+      .localCheckpoint()
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val dfs = toks.groupBy(col("tok")).agg(count(lit(1)).as("n_t"))
     val pairs = toks.as("a")
@@ -485,18 +485,17 @@ object TextAnalysis {
     * that frame feeds BOTH the vocab top-k (which fuses to
     * TakeOrderedAndProject: per-partition heaps, the corpus vocabulary
     * is never globally sorted) and the per-doc rollup after a BROADCAST
-    * left join against the ≤vocabSize-row vocab. `materialize` cuts the
-    * shared subtree from two evaluations to one (AQE does not dedupe
-    * identical subtrees — the tfidf/PMI lesson); the registered query
-    * passes `localCheckpoint`.
+    * left join against the ≤vocabSize-row vocab. AQE does not dedupe
+    * identical subtrees, so the shared frame is checkpointed — EAGER
+    * AT CALL TIME: one full-corpus job when CALLED.
     */
   def vocabOovRates(docs: DataFrame, textCol: String, idCol: String,
-      vocabSize: Int,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      vocabSize: Int): DataFrame = {
     require(vocabSize >= 1, s"vocabSize must be positive, got $vocabSize")
-    val dtc = materialize(docs
+    val dtc = docs
       .select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("tok"))
-      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("cnt")))
+      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("cnt"))
+      .localCheckpoint()
     val vocab = dtc.groupBy(col("tok")).agg(sum(col("cnt")).as("c"))
       .orderBy(col("c").desc, col("tok").asc)
       .limit(vocabSize)
@@ -523,22 +522,21 @@ object TextAnalysis {
     * term's 1e-9 rounding (observed once in zipfSlope at sf0.1), and
     * the coarser final rounding absorbs exactly that class of drift.
     *
-    * Scale shape: ONE tokenize feeds everything; `materialize` cuts the
-    * (source, token) count frame that three consumers share (two window
-    * passes + the grand-total agg — AQE does not dedupe identical
-    * subtrees). Both windows key on vocab-or-source-sized frames, never
-    * the corpus; the grand total joins back as a broadcast scalar.
+    * Scale shape: ONE tokenize feeds everything; the (source, token)
+    * count frame three consumers share (two window passes + the grand-
+    * total agg) is checkpointed — EAGER AT CALL TIME: one full-corpus
+    * job when CALLED. Both windows key on vocab-or-source-sized frames,
+    * never the corpus; the grand total joins back as a broadcast scalar.
     */
-  def sourceTokenKl(docs: DataFrame, textCol: String, sourceCol: String,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+  def sourceTokenKl(docs: DataFrame, textCol: String, sourceCol: String): DataFrame = {
     val wt = org.apache.spark.sql.expressions.Window.partitionBy(col("t"))
     val ws = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source"))
-    val counts = materialize(
-      docs.select(col(sourceCol).as("source"),
-          explode(tokens(col(textCol))).as("t"))
-        .groupBy(col("source"), col("t"))
-        .agg(count(lit(1)).as("c_st")))
+    val counts = docs.select(col(sourceCol).as("source"),
+        explode(tokens(col(textCol))).as("t"))
+      .groupBy(col("source"), col("t"))
+      .agg(count(lit(1)).as("c_st"))
+      .localCheckpoint()
     val total = counts.agg(sum(col("c_st")).as("n_total"))
     counts
       .withColumn("c_t", sum(col("c_st")).over(wt))

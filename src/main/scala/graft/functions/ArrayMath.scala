@@ -134,12 +134,4 @@ object ArrayMath {
   def l2sqF(a: Column, b: Column): Column =
     GraftColumnBridge.column(L2SquaredFloat(
       GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
-
-  /** Register the array-math functions for SQL use on a session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f32", exprs => DotProductFloat(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "l2sq_f32", exprs => L2SquaredFloat(exprs(0), exprs(1)), "built-in")
-  }
 }

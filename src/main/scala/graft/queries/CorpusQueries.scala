@@ -57,12 +57,11 @@ object CorpusQueries {
         .orderBy(col("doc_id"))),
 
     // top-30 token-pair collocations by document-level PMI (phrase
-    // mining / tokenizer-merge candidates); distinct-token frame
-    // materialized once, feeds both join sides + the df agg
+    // mining / tokenizer-merge candidates); pmiPairs checkpoints the
+    // distinct-token frame that feeds both join sides + the df agg
     "q_token_pmi" -> ((s, d) =>
       TextAnalysis.pmiPairs(Tables.documents(s, d), "text", "doc_id",
-        minSupport = 5L, topK = 30,
-        materialize = _.localCheckpoint())),
+        minSupport = 5L, topK = 30)),
 
     // signup → purchase conversion funnel within 48 h, per user. Integer
     // microsecond arithmetic throughout — exact. Scale shape: two
@@ -190,7 +189,7 @@ object CorpusQueries {
         "doc_id", n = 3).localCheckpoint()
       val pairs = Dedup.ngramJaccardPairsFromHashedSets(hsets, threshold = 0.6)
         .coalesce(1).localCheckpoint()
-      // identity materialize: 5 FIXED iterations over a tiny pair
+      // materialize = identity: 5 FIXED iterations over a tiny pair
       // graph, each label frame consumed exactly once — lazy chains
       // beat 5 eager checkpoint jobs (see labelPropagation scaladoc)
       Graph.labelPropagation(pairs, "a_id", "b_id", iterations = 5,
@@ -223,11 +222,10 @@ object CorpusQueries {
     // BT.601/RMS values + this digest pinned in MultimodalSpec.
     // per-source token-distribution drift KL(P_source ‖ P_corpus)
     // (round 11): the domain-shift diagnostic before source weighting;
-    // one tokenize, materialized (source, token) counts feed two
-    // windows + the broadcast grand total
+    // one tokenize; sourceTokenKl checkpoints the (source, token)
+    // counts that feed two windows + the broadcast grand total
     "q_source_kl" -> ((s, d) =>
-      TextAnalysis.sourceTokenKl(Tables.documents(s, d), "text", "source",
-        materialize = _.localCheckpoint())),
+      TextAnalysis.sourceTokenKl(Tables.documents(s, d), "text", "source")),
 
     "q_multimodal_audio" -> ((s, _) =>
       Multimodal.extractAudioFeatures(Multimodal.syntheticAudio(s, 64))

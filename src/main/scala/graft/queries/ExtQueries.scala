@@ -132,10 +132,7 @@ object ExtQueries {
       val hsets = Dedup.hashedShingleSets(Tables.documents(s, d), "text",
         "doc_id", n = 3).localCheckpoint()
       Dedup.minhashNearDupPairsFromHashedSets(hsets,
-          numPerms = 48, bands = 16, threshold = 0.8,
-          // the banded frame feeds both candidate-join sides: without
-          // this the signature aggregation runs twice
-          materialize = _.localCheckpoint())
+          numPerms = 48, bands = 16, threshold = 0.8)
         .orderBy(col("a_id"), col("b_id"))
     }),
 
@@ -165,7 +162,7 @@ object ExtQueries {
     // fixture regeneration breaks spec and oracle loudly together.
     "q_dedup_simhash" -> ((s, d) =>
       Dedup.simhashNearDupPairs(Tables.documents(s, d), "text", "doc_id",
-          maxHamming = 3, materialize = _.localCheckpoint())
+          maxHamming = 3)
         .agg(count(lit(1)).as("n_pairs"),
           bit_xor(xxhash64(col("a_id"), col("b_id"), col("hamming")))
             .as("xor_digest"))),
@@ -182,8 +179,7 @@ object ExtQueries {
     // post-filter makes precision exactly 1 at any parameters.
     "q_neardup_cosine" -> ((s, d) =>
       Similarity.cosineNearDupPairsLsh(Tables.embeddings(s, d),
-          threshold = 0.4, numTables = 24, planesPerTable = 3,
-          materialize = _.localCheckpoint())
+          threshold = 0.4, numTables = 24, planesPerTable = 3)
         .select(col("a_id"), col("b_id"))
         .orderBy(col("a_id"), col("b_id"))),
 
@@ -400,10 +396,7 @@ object ExtQueries {
     // verified alone; this pins the composition).
     "q_curation_pipeline" -> ((s, d) =>
       graft.ext.Curation.curate(Tables.documents(s, d), "text", "doc_id",
-          minTokens = 20, nearDupThreshold = 0.8,
-          // exact-dedup stage feeds pair generation AND the final
-          // anti-join: materialize it once (q_dedup_minhash treatment)
-          materialize = _.localCheckpoint())
+          minTokens = 20, nearDupThreshold = 0.8)
         .select(col("doc_id"), col("lang"), col("n_tokens"), col("n_stop"))
         .orderBy(col("doc_id"))),
 
@@ -468,8 +461,7 @@ object ExtQueries {
       graft.ext.Curation.contaminatedDocs(
           docs.filter(col("doc_id") % 50 =!= 0),
           docs.filter(col("doc_id") % 50 === 0),
-          "text", "doc_id", n = 3, minOverlap = 5,
-          materialize = _.localCheckpoint())
+          "text", "doc_id", n = 3, minOverlap = 5)
         .orderBy(col("doc_id"))
     }),
 
@@ -711,10 +703,9 @@ object ExtQueries {
     // partition invariance) are pinned in PqSpec.
     "q_embed_pq" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      // train's per-iteration materialize hook already checkpoints the
-      // final 128-row codebook — no second cut needed
-      val cb = Pq.train(emb, m = 8, dsub = 8, k = 16,
-        materialize = _.localCheckpoint())
+      // train checkpoints the final 128-row codebook itself — no
+      // second cut needed
+      val cb = Pq.train(emb, m = 8, dsub = 8, k = 16)
       Pq.encode(emb, cb, m = 8, dsub = 8)
         .agg(count(lit(1)).as("n_rows"),
           bit_xor(xxhash64(col("vec_id"),

@@ -118,20 +118,15 @@ object PipelineQueries {
   def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // LSH candidates → hashed-Jaccard prefilter → Levenshtein verify;
-    // the hashed-set frame is materialized once for its three consumers
-    // (signatures + both prefilter sides), and the materialize hook is
-    // passed through so lshCandidates ALSO checkpoints the banded
-    // signature frame — without it the 64-perm minhash aggregation
-    // feeds both LSH self-join sides unmaterialized and computes twice
-    // (the AQE no-subtree-dedup lesson; parity with q_dedup_minhash,
-    // ADVICE r10)
+    // the hashed-set frame is checkpointed once for its three consumers
+    // (signatures + both prefilter sides); lshCandidates checkpoints the
+    // banded signature frame itself
     "q_dedup_fuzzy" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val hsets = Dedup.hashedShingleSets(docs, "text", "doc_id", n = 3)
         .localCheckpoint()
       Dedup.fuzzyDupPairs(hsets, docs, "text", "doc_id",
-          numPerms = 64, bands = 16, jPrefilter = 0.5, editSim = 0.9,
-          materialize = _.localCheckpoint())
+          numPerms = 64, bands = 16, jPrefilter = 0.5, editSim = 0.9)
         .orderBy(col("a_id"), col("b_id"))
     }),
 
@@ -418,8 +413,7 @@ object PipelineQueries {
     // Scala model of pool-then-greedy selection and rewrite.
     "q_bpe_merges_batch" -> ((s, d) =>
       Bpe.pairMergesBatched(Tables.documents(s, d), "doc_id", "text",
-        rounds = 2, pairsPerRound = 4, candidatePool = 64,
-        materialize = _.localCheckpoint())),
+        rounds = 2, pairsPerRound = 4, candidatePool = 64)),
 
     // BPE APPLY (round 14 — the serve side of the train→serve split,
     // VERDICT r13 #2): encode the corpus with an INLINED literal merge
@@ -454,8 +448,7 @@ object PipelineQueries {
     // coverage); vocab top-k is deterministic via (count desc, token)
     "q_vocab_oov" -> ((s, d) =>
       TextAnalysis.vocabOovRates(Tables.documents(s, d),
-        "text", "doc_id", vocabSize = 1000,
-        materialize = _.localCheckpoint())),
+        "text", "doc_id", vocabSize = 1000)),
 
     // CDC apply: a deterministic three-op change set (deletes, full-row
     // updates, re-inserts of the held-out slice) merged onto a base

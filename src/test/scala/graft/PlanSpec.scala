@@ -771,4 +771,41 @@ class PlanSpec extends AnyFunSuite {
     assert(rangeEx == 1, s"expected only the display sort's range exchange, plan:\n$p")
     assert(!p.contains("runkey"), p) // the second-exchange key is gone
   }
+
+  test("operators checkpoint their own shared subtrees when CALLED: on " +
+      "plain parquet inputs each returned plan reads the expected number " +
+      "of checkpointed RDDs, and the call itself ran Spark jobs") {
+    import graft.ext.{Curation, Dedup, Pq, Similarity, TextAnalysis}
+    import org.apache.spark.sql.execution.LogicalRDD
+    val docs = model.Tables.documents(spark, d)
+    val emb = model.Tables.embeddings(spark, d)
+    val hsets = Dedup.hashedShingleSets(docs, "text", "doc_id", 3) // lazy
+    val bench = docs.filter(org.apache.spark.sql.functions.col("doc_id") % 50 === 0)
+    val sc = spark.sparkContext
+    Seq[(String, Int, () => org.apache.spark.sql.DataFrame)](
+      ("lshCandidates", 1, () =>
+        Dedup.lshCandidates(Dedup.minhashSignaturesFromHashed(hsets, 48), 16, 3)),
+      ("minhashNearDupPairsFromHashedSets", 1, () =>
+        Dedup.minhashNearDupPairsFromHashedSets(hsets, 48, 16, 0.8)),
+      ("fuzzyDupPairs", 1, () => Dedup.fuzzyDupPairs(hsets, docs, "text", "doc_id")),
+      ("simhashNearDupPairs", 1, () => Dedup.simhashNearDupPairs(docs, "text", "doc_id")),
+      ("cosineNearDupPairsLsh", 1, () => Similarity.cosineNearDupPairsLsh(emb, 0.4)),
+      ("pmiPairs", 1, () => TextAnalysis.pmiPairs(docs, "text", "doc_id", 5L, 30)),
+      ("vocabOovRates", 1, () => TextAnalysis.vocabOovRates(docs, "text", "doc_id", 100)),
+      ("sourceTokenKl", 1, () => TextAnalysis.sourceTokenKl(docs, "text", "source")),
+      ("dropNearDupes", 1, () => Curation.dropNearDupes(docs, "text", "doc_id", 0.8)),
+      ("curate", 2, () => Curation.curate(docs, "text", "doc_id")),
+      ("contaminatedDocs", 2, () =>
+        Curation.contaminatedDocs(docs, bench, "text", "doc_id", 3, 5)),
+      ("Pq.train", 1, () => Pq.train(emb, 8, 8, 16))
+    ).foreach { case (name, ckpts, call) =>
+      val group = s"eager-checkpoint-$name"
+      sc.setJobGroup(group, name)
+      val out = try call() finally sc.clearJobGroup()
+      val rdds = out.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }
+      assert(rdds.distinct.size == ckpts, s"$name: checkpointed RDDs $rdds")
+      val jobs = sc.statusTracker.getJobIdsForGroup(group).length
+      assert(jobs >= ckpts, s"$name ran $jobs jobs when called")
+    }
+  }
 }

@@ -15,8 +15,7 @@ class PqSpec extends AnyFunSuite {
 
   private val M = 8; private val Dsub = 8; private val K = 16
   private lazy val emb = Tables.embeddings(spark, TestSpark.Sf0001).cache()
-  private lazy val cb = Pq.train(emb, M, Dsub, K,
-    materialize = _.localCheckpoint())
+  private lazy val cb = Pq.train(emb, M, Dsub, K)
 
   test("codebook shape: m×k centroids of dsub dims, every subspace full") {
     val rows = cb.select(col("subspace"), col("cell_id"),
@@ -59,6 +58,16 @@ class PqSpec extends AnyFunSuite {
     // and codes genuinely vary (a degenerate constant code table would
     // pass the shape checks while quantizing everything identically)
     assert(base.values.toSet.size > 100)
+  }
+
+  test("train fails fast when m × dsub differs from the embedding width " +
+      "(below it trains on a truncated prefix of every vector, above it " +
+      "slices short or empty tail subvectors)") {
+    Seq(4 -> 32, 16 -> 128).foreach { case (dsub, width) =>
+      val e = intercept[IllegalArgumentException](Pq.train(emb, M, dsub, K))
+      assert(e.getMessage.contains(s"= $width must equal the embedding width") &&
+        e.getMessage.contains("got width(s) 64"), e.getMessage)
+    }
   }
 
   test("reconstruction: PQ mean squared error beats the one-centroid " +

@@ -430,8 +430,7 @@ class ScaleSpec extends AnyFunSuite {
       (col("doc_id") + lit(1000000L)).as("doc_id"), col("text")))
     def run(df: org.apache.spark.sql.DataFrame) =
       Bpe.pairMergesBatched(df, "doc_id", "text", rounds = 2,
-          pairsPerRound = 4, candidatePool = 64,
-          materialize = _.localCheckpoint())
+          pairsPerRound = 4, candidatePool = 64)
         .collect().map(r => (r.getInt(0), r.getInt(1), r.getString(2),
           r.getString(3), r.getLong(4))).toSeq
     val m1 = run(docs)

@@ -28,7 +28,10 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("dot_f32 is registered for SQL and codegen-evaluable") {
-    ArrayMath.register(spark)
+    // the one registration path: the session extension ScaleSpec uses
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    org.apache.spark.sql.GraftColumnBridge.applyFunctionExtensions(ext, spark)
     val r = spark.sql(
       "SELECT dot_f32(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
         "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT)))").as[Double].head()

@@ -13,6 +13,9 @@ comparing, every plan is normalised:
   - RDD ids (`RDD[12]`) -> `RDD[N]`
   - JVM lambda and object identities (`$Lambda$61/0x7f..@5a03`, `X@1f2e3d`)
   - call-site lines (`Foo.scala:138`) -> `Foo.scala:L`
+  - the source file of an RDD's call site (`RDD[N] at localCheckpoint at
+    Foo.scala:L`) -> `<site>.scala:L`: it names where the code calls
+    `localCheckpoint`, not what the plan does
   - temp-directory suffixes (`graft_stream_stage3123456789`) -> `...N`
   - random UUIDs, e.g. an `Observation`'s `CollectMetrics` name -> `<uuid>`
   - each `Expand` node's projection lists are sorted; for a
@@ -36,6 +39,7 @@ SUBS = [
     (re.compile(r"\$Lambda[$\w/]*@[0-9a-f]+"), "$Lambda@H"),
     (re.compile(r"([\w$])@[0-9a-f]{4,16}\b"), r"\1@H"),
     (re.compile(r"\.scala:\d+"), ".scala:L"),
+    (re.compile(r"(RDD\[N\] at \w+ at )[\w$]+\.scala:L"), r"\1<site>.scala:L"),
     (re.compile(r"(graft_[A-Za-z0-9_]*?[A-Za-z_])\d{5,}"), r"\1N"),
     (re.compile(r"\b[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}\b"), "<uuid>"),
 ]
