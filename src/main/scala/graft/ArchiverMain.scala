@@ -3,16 +3,14 @@ package graft
 import java.time.{LocalDateTime, ZoneOffset}
 import java.time.format.{DateTimeFormatter, ResolverStyle}
 import java.util.Locale
-import java.util.concurrent.{ExecutionException, FutureTask}
 
 import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, count, lit}
-import org.apache.spark.sql.types.StructType
 import graft.io.{JdbcRetention, JdbcSource, ParquetSource, TableSource}
-import graft.ops.Archive
+import graft.ops.{Archive, KeyRanges}
 
 /** The runnable end-to-end archiver — the reference's entire operational
   * surface (`run()`, reference main.go:147-256) as one Spark job:
@@ -202,7 +200,8 @@ object ArchiverMain {
     stream.writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[Row], _: Long) =>
         val (n, a, _) = archiveBatch(
-          b.toDF().transform(Archive.withTimePartitions("timestamp")), outPath, None)
+          b.toDF().transform(Archive.withTimePartitions("timestamp")), outPath,
+          KeyRanges.MaxRanges, None)
         extracted += n
         appended += a
       }
@@ -219,7 +218,15 @@ object ArchiverMain {
     */
   def run(spark: SparkSession, cfg: Config,
       source: TableSource,
-      connect: Option[() => java.sql.Connection]): RunReport = {
+      connect: Option[() => java.sql.Connection]): RunReport =
+    run(spark, cfg, source, connect, KeyRanges.MaxRanges)
+
+  /** [[run]] with the batch's key-range cap given, so a spec can take
+    * the over-cap path with a small batch.
+    */
+  private[graft] def run(spark: SparkSession, cfg: Config,
+      source: TableSource,
+      connect: Option[() => java.sql.Connection], maxRanges: Int): RunReport = {
     if (cfg.streaming) return runStreaming(spark, cfg)
     // Per-table extract, abort-on-first-error (main.go:183-185). Schema
     // resolution is eager, so a missing table / bad connection fails
@@ -233,28 +240,21 @@ object ArchiverMain {
 
     // filter(ts<cutoff) → per-table top-k → stamp → union → per-row
     // year/month: one declarative plan, archived by the shared step.
-    val (extracted, appended, deletePlan) = archiveBatch(
+    val (extracted, appended, deleted) = archiveBatch(
       Archive.archivePipeline(perTable, "timestamp", "id", cfg.cutoff, cfg.batchSize),
-      cfg.outPath,
-      connect.filter(_ => cfg.deleteFromSource).map(_ => (stored: DataFrame) =>
-        JdbcRetention.planDelete(stored.select("table_name", "id"), cfg.tables.toSet)))
+      cfg.outPath, maxRanges,
+      // Retention DELETE keyed to the batch — which is exactly the rows
+      // now durable in the archive: freshly appended ones plus any a
+      // previously-crashed run wrote but failed to delete.
+      connect.filter(_ => cfg.deleteFromSource).map(c => (keys: DataFrame, ranges: Option[KeyRanges]) =>
+        JdbcRetention.executeDelete(JdbcRetention.planDelete(keys, cfg.tables.toSet, ranges), c)))
     if (extracted == 0L) {
       println("No records to archive")
       return RunReport(0L, 0L, Map.empty)
     }
     println(s"Archived $appended new rows (batch of $extracted) to ${cfg.outPath}")
     println("Archive verified: read-back digests match the batch")
-
-    // Retention DELETE keyed to the batch — which is exactly the rows
-    // now durable in the archive: freshly appended ones plus any a
-    // previously-crashed run wrote but failed to delete.
-    val deleted = (deletePlan, connect) match {
-      case (Some(plan), Some(c)) =>
-        val d = JdbcRetention.executeDelete(plan, c)
-        d.foreach { case (t, n) => println(s"Deleted $n records from table $t") }
-        d
-      case _ => Map.empty[String, Long]
-    }
+    deleted.foreach { case (t, n) => println(s"Deleted $n records from table $t") }
     RunReport(extracted, appended, deleted)
   }
 
@@ -267,43 +267,46 @@ object ArchiverMain {
   /** The archival step of every batch cycle and every streaming
     * micro-batch, over `(id, timestamp, device_id, value, table_name,
     * year, month)` rows, `timestamp` timestamp-typed. Returns the rows
-    * extracted and appended, and the delete plan if `planDelete` is given.
+    * extracted, appended and, if `delete` is given, deleted per table.
     *
-    * `parted` is marked for a lazy local checkpoint: the month-digest job
+    * `parted` is marked for a lazy local checkpoint: the digest job
     * extracts and stores it, then the append, the verify read-back and
-    * `planDelete` (on its own thread, joined before the blocks are
-    * released) read the stored blocks, so the source is read once. A lost
-    * block fails the step; it is never re-extracted. The digests give the
-    * row count, the month set the append and the read-back prune to, and
-    * the digest set verify compares: the archive rows holding the batch's
-    * keys within its months, read back with the batch's schema, must give
-    * the batch's digests, or the step throws naming the partitions.
+    * `delete` read the stored blocks, so the source is read once. A lost
+    * block fails the step; it is never re-extracted. The digest job also
+    * gathers the batch's exact per-table id ranges ([[KeyRanges]], up to
+    * `maxRanges`); a NULL id refuses the batch, naming its table, before
+    * anything is written. The digests give the row count, the month set
+    * the append and the read-back prune to, and the digest set verify
+    * compares: the archive rows holding the batch's keys within its
+    * months, read back with the batch's schema, must give the batch's
+    * digests, or the step throws naming the partitions.
+    *
+    * The key ranges serve three ways with no broadcast join: the
+    * append's overlap probe, the read-back's key filter and, only after
+    * verify passes, `delete`'s ranged plan, which then runs no Spark
+    * job. Past the cap (`None`) the append anti-joins, the read-back
+    * semi-joins on the batch's keys and `delete` plans per-id deletes.
     */
-  private def archiveBatch(parted: DataFrame, outPath: String,
-      planDelete: Option[DataFrame => JdbcRetention.DeletePlan]):
-      (Long, Long, Option[JdbcRetention.DeletePlan]) = {
+  private def archiveBatch(parted: DataFrame, outPath: String, maxRanges: Int,
+      delete: Option[(DataFrame, Option[KeyRanges]) => Map[String, Long]]):
+      (Long, Long, Map[String, Long]) = {
     val batch = parted.localCheckpoint(eager = false)
-    var deletePlan: Option[FutureTask[JdbcRetention.DeletePlan]] = None
     try {
       // Reference row shape: timestamp as epoch-nanos int64 (main.go:36-44)
       val shaped = batch.transform(Archive.toArchiveShape("timestamp"))
-      val want = monthDigests(shaped)
+      val (want, gathered) = digests(shaped, Some(maxRanges))
+      val KeyRanges.Partial(keys, nullIds) = gathered.get
       val extracted = want.toSeq.map(_.getLong(2)).sum
-      if (extracted == 0L) return (0L, 0L, None)
+      if (extracted == 0L) return (0L, 0L, Map.empty)
+      require(nullIds.isEmpty, "refusing to archive: " + nullIds.toSeq.sorted
+        .map { case (t, n) => s"$n rows of table $t have a NULL id" }.mkString(", "))
       val months = monthsOf(want)
-      // A thread created here, not a pooled one, inherits this thread's
-      // Spark local properties (job group, scheduler pool), so its job
-      // stays with this run.
-      deletePlan = planDelete.map { f =>
-        val task = new FutureTask[JdbcRetention.DeletePlan](() => f(batch))
-        new Thread(task, "graft-delete-plan").start()
-        task
-      }
-      val appended = Archive.appendIdempotent(shaped, outPath, months)
-      val got = monthDigests(
-        shaped.sparkSession.read.schema(shaped.schema).parquet(outPath)
-          .filter(Archive.inMonths(months))
-          .join(shaped.select("table_name", "id"), Seq("table_name", "id"), "left_semi"))
+      val appended = Archive.appendIdempotent(shaped, outPath, months, keys)
+      val readBack = shaped.sparkSession.read.schema(shaped.schema).parquet(outPath)
+        .filter(Archive.inMonths(months))
+      val got = monthDigests(keys.fold(
+        readBack.join(shaped.select("table_name", "id"), Seq("table_name", "id"), "left_semi"))(
+        k => readBack.filter(k.holds)))
       val differ = (want -- got) ++ (got -- want)
       require(differ.isEmpty,
         s"archive verification FAILED: ${differ.size} partition digests differ " +
@@ -311,9 +314,8 @@ object ArchiverMain {
           monthsOf(differ).distinct.sorted.map { case (y, m) => s"year=$y/month=$m" }
             .mkString(", ") + " — refusing to delete source rows")
       (extracted, appended,
-        deletePlan.map(t => try t.get() catch { case e: ExecutionException => throw e.getCause }))
+        delete.fold(Map.empty[String, Long])(_(batch.select("table_name", "id"), keys)))
     } finally {
-      deletePlan.foreach(t => try t.get() catch { case _: Exception => () })
       batch.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
         .foreach(_.unpersist())
     }
@@ -327,27 +329,40 @@ object ArchiverMain {
     * archive-shaped frame, equal to `Archive.groupChecksums(shaped,
     * Seq("year", "month"), canon)` collected: one job with no exchange.
     * Each partition folds its rows into per-month partial digests, and
-    * the driver folds the partials. On the batch it is the one action
-    * that yields the row count, the month set and the verify digest.
+    * the driver folds the partials.
     */
-  private[graft] def monthDigests(shaped: DataFrame): Set[Row] = {
-    val hashed = shaped.select(col("year"), col("month"), lit(1L), Archive.rowHash(canon))
-    val partials = hashed.mapPartitions(foldDigests)(Encoders.row(DigestSchema)).collect()
-    foldDigests(partials.iterator).toSet
+  private[graft] def monthDigests(shaped: DataFrame): Set[Row] = digests(shaped, None)._1
+
+  private type MonthDigests = Map[(Any, Any), (Long, Long)]
+
+  /** [[monthDigests]] that, given a cap, also gathers the frame's key
+    * ranges in the same job: on the batch it is the one action that
+    * yields the row count, the month set, the verify digest and the keys.
+    */
+  private def digests(shaped: DataFrame, maxRanges: Option[Int]):
+      (Set[Row], Option[KeyRanges.Partial]) = {
+    val hashed = shaped.select(col("year"), col("month"), Archive.rowHash(canon),
+      col("table_name"), col("id"))
+    val partials = hashed.mapPartitions { rows =>
+      val keys = maxRanges.map(new KeyRanges.Builder(_))
+      val folded = rows.foldLeft(Map.empty: MonthDigests) { (acc, r) =>
+        keys.foreach(_.add(r.getString(3), r, 4))
+        fold(acc, (r.get(0), r.get(1)), 1L, r.getLong(2))
+      }
+      Iterator((folded, keys.map(_.result())))
+    }(Encoders.javaSerialization[(MonthDigests, Option[KeyRanges.Partial])]).collect()
+    val months = partials.iterator.flatMap(_._1).foldLeft(Map.empty: MonthDigests) {
+      case (acc, (month, (n, x))) => fold(acc, month, n, x)
+    }
+    (months.iterator.map { case ((y, m), (n, x)) => Row(y, m, n, x) }.toSet,
+      maxRanges.map(KeyRanges.merge(partials.toSeq.flatMap(_._2), _)))
   }
 
-  private val DigestSchema =
-    StructType.fromDDL("year INT, month INT, n_rows BIGINT, checksum BIGINT")
-
-  /** Folds `(year, month, n_rows, checksum)` rows to one per month:
-    * counts add, checksums XOR.
-    */
-  private def foldDigests(rows: Iterator[Row]): Iterator[Row] =
-    rows.foldLeft(Map.empty[(Any, Any), (Long, Long)]) { (acc, r) =>
-      val month = (r.get(0), r.get(1))
-      val (n, x) = acc.getOrElse(month, (0L, 0L))
-      acc.updated(month, (n + r.getLong(2), x ^ r.getLong(3)))
-    }.iterator.map { case ((y, m), (n, x)) => Row(y, m, n, x) }
+  /** Adds a partial digest to a month's: counts add, checksums XOR. */
+  private def fold(acc: MonthDigests, month: (Any, Any), n: Long, x: Long): MonthDigests = {
+    val (n0, x0) = acc.getOrElse(month, (0L, 0L))
+    acc.updated(month, (n0 + n, x0 ^ x))
+  }
 
   private def monthsOf(summary: Set[Row]): Seq[(Int, Int)] =
     summary.toSeq.map(r => (r.getInt(0), r.getInt(1)))

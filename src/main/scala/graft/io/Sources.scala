@@ -1,6 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ops.KeyRanges
 
 /** Source abstraction (SURVEY.md §5.5): the archival pipeline reads
   * through this trait so the extract logic is testable without a live
@@ -47,9 +48,10 @@ final case class JdbcSource(url: String, props: java.util.Properties)
   * it archived (its extract had LIMIT batchSize), i.e. it can destroy
   * rows it never saved (SURVEY §3.1, a data-loss bug). Here the delete
   * set is keyed to the actually-archived rows: callers pass the
-  * archived frame, we derive per-table key ranges and delete only
-  * those. Driver-side JDBC (no DataFrame DELETE in the v1 source);
-  * statements are built with bind parameters, not string interpolation
+  * archived keys' per-table id ranges (or the archived frame, whose
+  * ranges are gathered here) and only those are deleted. Driver-side
+  * JDBC (no DataFrame DELETE in the v1 source); statements are built
+  * with bind parameters, not string interpolation
   * (the reference string-interpolates the table name — injection-prone,
   * main.go:88).
   */
@@ -70,26 +72,9 @@ object JdbcRetention {
   private[io] def deleteIdSql(table: String): String =
     s"DELETE FROM ${quoteIdent(table)} WHERE ${quoteIdent("id")} = ?"
 
-  /** Per-table inclusive id ranges covering exactly the archived rows,
-    * as a (table_name, lo, hi) frame — built distributed: per table,
-    * split ids where gaps occur. At 100 TB a range list (not an id
-    * list) keeps the DELETE statement count bounded; contiguous ids
-    * collapse to single ranges.
-    */
-  private def keyRangesDf(archived: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("table_name")).orderBy(col("id"))
-    archived.select(col("table_name"), col("id"))
-      .withColumn("grp", col("id") - row_number().over(w))
-      .groupBy(col("table_name"), col("grp"))
-      .agg(min(col("id")).as("lo"), max(col("id")).as("hi"))
-      .select(col("table_name"), col("lo"), col("hi"))
-  }
-
   /** What [[executeDelete]] sends, decided before any statement: the
-    * collected key ranges, or — past `maxRanges` — the per-id fallback
-    * over `archived`, whose tables were checked against the allowlist.
+    * key ranges, or — past their cap — the per-id fallback over
+    * `archived`, whose tables were checked against the allowlist.
     */
   sealed trait DeletePlan
   final case class Ranged(ranges: Seq[(String, Long, Long)]) extends DeletePlan
@@ -97,40 +82,40 @@ object JdbcRetention {
       tables: Set[String]) extends DeletePlan
 
   /** Decides what [[executeDelete]] sends for exactly the `archived`
-    * rows: the Spark work (the key-range collect, capped at
-    * `maxRanges + 1` rows) and the allowlist check, with no connection
-    * opened. Table names are validated against `allowedTables` instead
-    * of interpolating untrusted strings. A caller may run it
-    * concurrently with other work on the archived frame and execute the
-    * plan later.
-    *
-    * Driver-memory bound: the collected range list is capped at
-    * `maxRanges` (pathologically fragmented archived ids — e.g. every
-    * second id — would otherwise materialize one driver row per id).
-    * Past the cap the delete DEGRADES, never widens: the plan becomes
-    * per-id batched `DELETE WHERE id = ?` statements streamed through
-    * `toLocalIterator` (one partition of ids on the driver at a time),
-    * so memory stays bounded and the delete set is still EXACTLY the
-    * archived rows — slower, but a fragmented id space is already the
-    * slow path server-side, and coarsening ranges instead would
-    * re-introduce the reference's delete-wider-than-extract bug
-    * (main.go:134).
+    * `(table_name, id)` rows, with no connection opened: gathers their
+    * per-table inclusive id ranges ([[KeyRanges.gather]], one job with
+    * no exchange, capped at `maxRanges`), then plans as the overload
+    * below. At 100 TB a range list (not an id list) keeps the DELETE
+    * statement count bounded; contiguous ids collapse to single ranges.
     */
   def planDelete(archived: DataFrame, allowedTables: Set[String],
-      maxRanges: Int = 100000): DeletePlan = {
-    // one job serves both the cap check and the data: maxRanges + 1
-    // rows decide which path runs without re-running the window/group
-    // over all archived rows
-    val headRanges = keyRangesDf(archived).limit(maxRanges + 1).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    val tables =
-      if (headRanges.length <= maxRanges) headRanges.map(_._1).toSet
-      else archived.select("table_name").distinct()
-        .collect().map(_.getString(0)).toSet
+      maxRanges: Int = KeyRanges.MaxRanges): DeletePlan =
+    planDelete(archived, allowedTables, KeyRanges.gather(archived, maxRanges))
+
+  /** The delete plan for `archived` given its key ranges, already
+    * gathered (`None` past their cap). Table names are validated against
+    * `allowedTables` instead of interpolating untrusted strings. With
+    * ranges the plan is made on the driver and runs no Spark job.
+    *
+    * Driver-memory bound: the range list is capped (pathologically
+    * fragmented archived ids — e.g. every second id — would otherwise
+    * hold one driver range per id). Past the cap the delete DEGRADES,
+    * never widens: the plan becomes per-id batched `DELETE WHERE id = ?`
+    * statements streamed through `toLocalIterator` (one partition of ids
+    * on the driver at a time), so memory stays bounded and the delete
+    * set is still EXACTLY the archived rows — slower, but a fragmented
+    * id space is already the slow path server-side, and coarsening
+    * ranges instead would re-introduce the reference's
+    * delete-wider-than-extract bug (main.go:134). Its table set takes
+    * one `distinct` job.
+    */
+  def planDelete(archived: DataFrame, allowedTables: Set[String],
+      ranges: Option[KeyRanges]): DeletePlan = {
+    val tables = ranges.fold(
+      archived.select("table_name").distinct().collect().map(_.getString(0)).toSet)(_.tables)
     require((tables -- allowedTables).isEmpty,
       s"tables not in allowlist: ${tables -- allowedTables}")
-    if (headRanges.length <= maxRanges) Ranged(headRanges)
-    else PerId(archived, allowedTables, tables)
+    ranges.fold[DeletePlan](PerId(archived, allowedTables, tables))(r => Ranged(r.ranges))
   }
 
   /** Issues a [[planDelete]] plan's statements over one connection from

@@ -81,30 +81,36 @@ object Archive {
   /** Idempotent (exactly-once-per-row) archive append — SURVEY §3.1:
     * the reference re-archives rows when a run crashes between upload
     * and delete (duplicate objects). Here the archive itself is the
-    * dedup state: the incoming batch is anti-joined against the
-    * already-archived (table_name, id) keys before appending, so
-    * re-running an interrupted archival writes only missing rows.
-    * Returns the number of rows written.
+    * dedup state: batch rows whose (table_name, id) the archive already
+    * holds are dropped before appending, so re-running an interrupted
+    * archival writes only missing rows. Returns the number of rows
+    * written.
     *
-    * `batch` carries its `year`/`month` partition columns, and `months`
-    * is its (year, month) set, which the caller already holds (e.g. from
-    * its per-month digest). The anti-join reads ONLY those archive
-    * partitions — a partition-pruning filter, never a full archive scan.
+    * `batch` carries its `year`/`month` partition columns, `months` is
+    * its (year, month) set and `keys` its [[KeyRanges]] (`None` past the
+    * cap), all of which the caller already holds from its per-month
+    * digest pass. The overlap probe reads ONLY those archive partitions
+    * — a partition-pruning filter, never a full archive scan — and keeps
+    * the rows whose keys `keys` holds. One job gathers their key ranges
+    * with the same builder; the write then filters the batch by them
+    * (no filter when the archive holds none of the keys). With no key
+    * ranges, or held ranges past the cap, the batch is anti-joined with
+    * the probed keys instead.
     *
     * The archive is read with `batch`'s schema, so no footer-inference
     * job runs. A missing archive root (checked through the Hadoop
     * FileSystem of the session's conf, so `s3a:` and other schemes
-    * resolve) is the first run: nothing to dedup against. A root holding
-    * no committed data file — a crash mid-first-write leaves only
-    * `_temporary/` — reads as empty. A root whose first data file in path
-    * order lacks `table_name` or `id` is not an archive: the append refuses,
-    * naming the file, because skipping the anti-join there would append
-    * duplicates.
+    * resolve) is the first run: nothing to dedup against. So is a root
+    * holding no committed data file (an empty directory, or a crash
+    * mid-first-write that left only `_temporary/`): neither runs a probe
+    * job. A root whose first data file in path order lacks `table_name`
+    * or `id` is not an archive: the append refuses, naming the file,
+    * because skipping the dedup there would append duplicates.
     *
     * The written row count is observed on the write itself (a
-    * `CollectMetrics` node over the anti-join), so the anti-join runs
-    * once; an empty result still runs the write, which then adds no
-    * data file, and returns 0.
+    * `CollectMetrics` node over the filtered batch), so no count job
+    * runs; an empty result still runs the write, which then adds no data
+    * file, and returns 0.
     *
     * Sink (main.go:46-85,220-223): snappy parquet under a hive
     * `year=/month=` layout. Spark writes `month=3` where the reference
@@ -113,18 +119,25 @@ object Archive {
     * zero-padded path globs.
     */
   def appendIdempotent(batch: DataFrame, archiveDir: String,
-      months: Seq[(Int, Int)]): Long = {
+      months: Seq[(Int, Int)], keys: Option[KeyRanges]): Long = {
     val spark = batch.sparkSession
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(archiveDir)
-    val fresh =
-      if (!root.getFileSystem(conf).exists(root)) batch
-      else {
-        val archived = spark.read.schema(batch.schema).parquet(archiveDir)
-        archived.inputFiles.minOption.foreach(requireArchiveKeys(_, conf))
-        batch.join(archived.filter(inMonths(months)).select("table_name", "id"),
-          Seq("table_name", "id"), "left_anti")
-      }
+    val archived =
+      if (!root.getFileSystem(conf).exists(root)) None
+      else Some(spark.read.schema(batch.schema).parquet(archiveDir))
+    val files = archived.fold(Array.empty[String])(_.inputFiles)
+    val fresh = archived match {
+      case Some(a) if files.nonEmpty =>
+        requireArchiveKeys(files.min, conf)
+        val probed = a.filter(inMonths(months))
+        keys.flatMap(k => KeyRanges.gather(probed.filter(k.holds))) match {
+          case Some(held) if held.isEmpty => batch
+          case Some(held) => batch.filter(!held.holds)
+          case None => batch.join(probed.select("table_name", "id"), Seq("table_name", "id"), "left_anti")
+        }
+      case _ => batch
+    }
     val written = new org.apache.spark.sql.Observation()
     fresh.observe(written, count(lit(1)).as("n")).write.mode("append")
       .option("compression", "snappy")

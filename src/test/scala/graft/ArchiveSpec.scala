@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.Archive
+import graft.ops.{Archive, KeyRanges}
 
 /** A non-`file:` Hadoop filesystem scheme backed by the local FS — the
   * closest an offline sandbox gets to an object store: writes and reads
@@ -37,7 +37,7 @@ class ArchiveSpec extends AnyFunSuite {
   private def append(batch: org.apache.spark.sql.DataFrame, dir: String): Long = {
     val parted = batch.transform(Archive.withTimePartitions("timestamp"))
     val months = parted.select("year", "month").distinct().as[(Int, Int)].collect().toSeq
-    Archive.appendIdempotent(parted, dir, months)
+    Archive.appendIdempotent(parted, dir, months, KeyRanges.gather(parted))
   }
 
   private val sample = iotDf(Seq(

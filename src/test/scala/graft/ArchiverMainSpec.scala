@@ -453,7 +453,7 @@ class ArchiverMainSpec extends AnyFunSuite {
     assert(remainingIds(connect, "IOT_DATA") == Set(1L, 2L))
   }
 
-  test("one archiver cycle with verify and delete on runs at most 6 Spark jobs") {
+  test("one archiver cycle with verify and delete on runs at most 4 Spark jobs") {
     val (url, connect) = derby("graft_job_budget")
     val outDir = tmp("graft_cli_budget_out") + "/arch"
     insert(connect, "IOT_DATA", (1L to 8L).map(i =>
@@ -469,7 +469,83 @@ class ArchiverMainSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(rec)
     assert(w.rows == Right(4L), w.rows)
     assert(remainingIds(connect, "IOT_DATA").isEmpty)
-    assert(w.delta.jobs <= 6, s"${w.delta.jobs} jobs:\n${w.jobLines.mkString("\n")}")
+    assert(w.delta.jobs <= 4, s"${w.delta.jobs} jobs:\n${w.jobLines.mkString("\n")}")
+  }
+
+  /** Runs `body` with a listener recording the executed plan of each
+    * SQL action; returns its result and the plans.
+    */
+  private def withPlans[A](body: => A): (A, Seq[String]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString): Unit
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val a = body
+      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext, 10000L)
+      (a, scala.jdk.CollectionConverters.IteratorHasAsScala(plans.iterator).asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a batch past the key-range cap takes the keyed joins and per-id " +
+      "deletes, with the ranged path's appended, verified and deleted results") {
+    // a crash (delete off) then a recovery (delete on) and a drain, on
+    // fragmented ids; maxRanges = 1 forces every batch past the cap
+    def cycles(db: String, maxRanges: Int) = {
+      val (url, connect) = derby(db)
+      val outDir = tmp(s"graft_cli_${db}_out") + "/arch"
+      insert(connect, "IOT_DATA", Seq(1L, 3L, 4L, 9L, 12L, 13L).map(i =>
+        (i, f"2024-01-${i + 10}%02d 08:00:00", s"d$i", i.toDouble)))
+      val cfg = ArchiverMain.parseConfig(derbyBase(url, outDir) + ("GRAFT_BATCH_SIZE" -> "4"))
+      val source = JdbcSource(url, new java.util.Properties())
+      val (reports, plans) = withPlans(Seq(cfg, cfg.copy(deleteFromSource = true),
+          cfg.copy(deleteFromSource = true))
+        .map(c => ArchiverMain.run(spark, c, source, Some(connect), maxRanges)))
+      val archived = spark.read.parquet(outDir)
+        .select("id", "timestamp", "device_id", "value", "table_name")
+        .as[(Long, Long, String, Double, String)].collect().toSeq.sortBy(_._1)
+      (reports, remainingIds(connect, "IOT_DATA"), archived, plans)
+    }
+    val (ranged, rangedLeft, rangedArchive, rangedPlans) = cycles("graft_ranged", 100000)
+    val (overCap, overCapLeft, overCapArchive, overCapPlans) = cycles("graft_over_cap", 1)
+    assert(ranged == Seq(
+      ArchiverMain.RunReport(4L, 4L, Map.empty),
+      ArchiverMain.RunReport(4L, 0L, Map("IOT_DATA" -> 4L)),
+      ArchiverMain.RunReport(2L, 2L, Map("IOT_DATA" -> 2L))), ranged)
+    assert(overCap == ranged)
+    assert(rangedLeft.isEmpty && overCapLeft.isEmpty)
+    assert(rangedArchive.map(_._1) == Seq(1L, 3L, 4L, 9L, 12L, 13L))
+    assert(overCapArchive == rangedArchive)
+    // the ranged path moves no keys through a join; past the cap the
+    // append anti-joins and the read-back semi-joins
+    def joins(plans: Seq[String], kind: String) = plans.count(_.contains(kind))
+    assert(joins(rangedPlans, "LeftAnti") == 0 && joins(rangedPlans, "LeftSemi") == 0 &&
+      joins(rangedPlans, "BroadcastExchange") == 0, rangedPlans.mkString("\n"))
+    assert(joins(overCapPlans, "LeftAnti") > 0 && joins(overCapPlans, "LeftSemi") > 0,
+      overCapPlans.mkString("\n"))
+  }
+
+  test("a batch holding a NULL id is refused before anything is written, " +
+      "naming the table and the count") {
+    val srcDir = tmp("graft_cli_null_id_src")
+    val outDir = tmp("graft_cli_null_id_out") + "/arch"
+    Seq((Some(1L), "2024-01-10 00:00:00"), (None, "2024-01-11 00:00:00"),
+        (None, "2024-01-12 00:00:00"))
+      .toDF("id", "ts").select(col("id"), to_timestamp(col("ts")).as("timestamp"),
+        lit("d1").as("device_id"), lit(1.0).as("value"))
+      .write.parquet(s"$srcDir/iot_data.parquet")
+    val cfg = ArchiverMain.parseConfig(Map(
+      "GRAFT_SOURCE_DIR" -> srcDir, "GRAFT_OUT" -> outDir,
+      "GRAFT_TABLES" -> "iot_data", "GRAFT_CUTOFF" -> Cutoff))
+    val ex = intercept[IllegalArgumentException] {
+      ArchiverMain.run(spark, cfg, ParquetSource(srcDir), None)
+    }
+    assert(ex.getMessage.contains("2 rows of table iot_data have a NULL id"), ex.getMessage)
+    assert(!new java.io.File(outDir).exists())
   }
 
   test("a first cycle into a fresh GRAFT_OUT runs no failing query") {

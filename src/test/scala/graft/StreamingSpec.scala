@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.TimeSeries
 import graft.model.Tables
-import graft.ops.Archive
+import graft.ops.{Archive, KeyRanges}
 import graft.streaming.Streaming
 
 /** Streaming ≡ batch equivalence: the same `DataFrame => DataFrame`
@@ -74,7 +74,8 @@ class StreamingSpec extends AnyFunSuite {
         .filter(col("event_id") % 3 === 0))
       .transform(Archive.withTimePartitions("timestamp"))
       .transform(Archive.toArchiveShape("timestamp"))
-    assert(Archive.appendIdempotent(overlap, out, Seq((2024, 1))) == 0L)
+    assert(Archive.appendIdempotent(overlap, out, Seq((2024, 1)),
+      KeyRanges.gather(overlap)) == 0L)
     // a lost checkpoint replays every file and appends nothing
     val rerun = ArchiverMain.archiveStream(stream, out, ckpt)
     assert(rerun.extracted == n && rerun.appended == 0L, rerun)
