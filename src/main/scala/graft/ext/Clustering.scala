@@ -1,8 +1,10 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.Decimal
 import graft.functions.ArrayMath.l2sqF
 
 /** DataFrame-native k-means (Lloyd's algorithm) over an embedding
@@ -10,23 +12,18 @@ import graft.functions.ArrayMath.l2sqF
   * similarity surface stops at search; clustering is what makes the
   * cell layout principled rather than "first k vectors").
   *
-  * Scale shape per iteration: centroids are k·dim floats — a broadcast
-  * row set, never a shuffle key. Assignment is ONE corpus scan: the
-  * k distances per vector run through the codegen'd `l2sq_f32`
-  * expression against broadcast centroids, and the argmin collapses
-  * map-side (partial `min(struct(d2, cell))` aggregation), so the only
-  * shuffle carries one row per vector. Recompute is the proven
-  * [[Similarity.labelCentroids]] shape: positional explode + one
-  * (cell, dim)-keyed decimal-sum aggregation (order-independent, so
-  * bit-stable under any partitioning). Centroid frames are always ≤k
-  * rows, so every iteration coalesces them to one partition — centroid
-  * stages are single tasks instead of `shuffle.partitions` mostly-empty
-  * ones. Lineage control is structural since r15: [[lloyd]] collects
-  * the ≤k-row centroid set to the driver per iteration and re-broadcasts
-  * it as a literal frame, so training lineage never grows, nothing can
-  * recompute per broadcast (the r7 6.3 s lazy-training regression), and
-  * no per-round eager checkpoint jobs exist to pay for (the r6
-  * eager-tiny-job class).
+  * Scale shape per iteration: centroids are k·dim floats — one broadcast
+  * row, never a shuffle key. Assignment is ONE corpus scan: the k
+  * distances per vector run through the codegen'd `l2sq_f32` expression
+  * against the broadcast centroids and the argmin folds per row, so the
+  * scan shuffles nothing. The recompute rides the same scan
+  * ([[meansByKey]]): each partition folds exact per-(cell, dim) decimal
+  * sums and counts, a tree merge brings them to the driver, and the
+  * driver divides — [[centroidStats]]' decimal mean bit for bit
+  * (order-independent, so stable under any partitioning). [[lloyd]]
+  * keeps the ≤k-row centroid set on the driver between iterations and
+  * broadcasts it back as a literal frame, so training lineage never
+  * grows and nothing recomputes per broadcast.
   */
 object Clustering {
 
@@ -85,8 +82,8 @@ object Clustering {
 
   /** Per-(cell, dim) mean of the assigned vectors, decimal-summed for
     * order-independence: (cell_id, dim, n, centroid). This long form is
-    * the oracle-checkable surface; [[packCentroids]] folds it back to
-    * one array row per cell for the next iteration.
+    * the oracle-checkable surface (`q_kmeans_step`); [[lloyd]] computes
+    * the same means, cast to float, with [[meansByKey]].
     */
   def centroidStats(assigned: DataFrame,
       vecCol: String = "embedding"): DataFrame =
@@ -97,61 +94,139 @@ object Clustering {
         (sum(bround(col("v").cast("double"), 9).cast("decimal(18,9)"))
           .cast("double") / count(lit(1))).as("centroid"))
 
-  /** (cell_id, dim, centroid) rows → (cell_id, array<float> centroid). */
-  def packCentroids(stats: DataFrame): DataFrame =
-    stats.groupBy(col("cell_id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("dim"), col("centroid")))),
-        s => s.getField("centroid").cast("float")).as("centroid"))
-
   /** `iters` Lloyd iterations from the deterministic seeds. A cell that
     * loses every member keeps its previous centroid (standard empty-
     * cluster fallback — dropping it would shrink k mid-run).
     *
-    * EAGER AT CALL TIME (ADVICE r15, stated plainly): this runs
-    * 1 + iters full-corpus Spark jobs when CALLED — before any action
-    * on the returned frame — and so do [[Similarity.ivfIndex]] /
-    * [[Similarity.ivfTopK]], which call it during construction. Don't
-    * construct speculatively; training failures surface here, not at
-    * the first downstream action. The returned frame itself is a
-    * driver-local literal (LocalTableScan) and costs nothing to reuse.
+    * EAGER AT CALL TIME: this runs at most 1 + 2·iters Spark jobs when
+    * CALLED — before any action on the returned frame — and so do
+    * [[Similarity.ivfIndex]] / [[Similarity.ivfTopK]], which call it
+    * during construction. Don't construct speculatively; training
+    * failures surface here, not at the first downstream action. The
+    * returned frame itself is a driver-local literal (LocalTableScan)
+    * and costs nothing to reuse.
     *
-    * The reduce step COLLECTS: centroids are k·dim floats — driver-tiny
-    * whatever the corpus size — so each iteration ends with a bounded
-    * ≤k-row collect (the k-means reduce every production implementation
-    * uses, and the codebase's established bounded-collect pattern: PQ
-    * seed vectors, the BPE candidate pool) and the next iteration's
-    * assignment broadcasts them back as a literal frame. That removes
-    * the per-iteration materialize/left-join machinery this replaced
-    * (r15 optimization): each iteration is exactly ONE corpus-scan agg
-    * job, lineage never grows (the returned frame is a LocalTableScan),
-    * and the old failure modes — lazy training re-running per broadcast
-    * (r7, 6.3 s), eager per-round checkpoint jobs — are impossible by
-    * construction. Values are bit-identical: the same decimal-mean
-    * recompute, argmin tie-break, and keep-previous fallback, just
-    * coalesced on the driver (ClusteringSpec determinism/monotonicity
-    * pins, PqSpec's per-subspace equality pin, and the pinned IVF
-    * digests all hold unchanged).
+    * The jobs are one seed collect (≤k rows), then per iteration the
+    * broadcast of the packed ≤k-row literal and ONE corpus scan that
+    * assigns every vector and folds the new means ([[meansByKey]]). The
+    * driver holds the ≤k centroids and, while a scan runs, about √P + 1
+    * partial sum sets of k·dim cells each for P scan partitions. Values
+    * are [[centroidStats]]' decimal means cast to float, with
+    * [[assign]]'s argmin tie-break and the keep-previous fallback
+    * (ClusteringSpec pins the fold against the centroidStats path,
+    * PqSpec pins per-subspace equality, and the IVF digests are pinned).
     */
   def lloyd(corpus: DataFrame, k: Int, iters: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    def asFrame(cur: Seq[(Int, Array[Float])]): DataFrame =
-      cur.toDF("cell_id", "centroid")
-        .select(col("cell_id"), col("centroid").cast("array<float>")
-          .as("centroid"))
-    var cur: Seq[(Int, Array[Float])] =
+    var cur: Seq[(Int, Array[java.lang.Float])] =
       seedCentroids(corpus, k, idCol, vecCol)
-        .as[(Int, Array[Float])].collect().toSeq // bounded: ≤ k rows
+        .as[(Int, Array[java.lang.Float])].collect().toSeq // bounded: ≤ k rows
+    // one partition: the packed broadcast row then aggregates in the
+    // broadcast's own job, with no exchange
+    def asFrame: DataFrame = cur.toDF("cell_id", "centroid").coalesce(1)
     for (_ <- 0 until iters if cur.nonEmpty) {
-      val next = packCentroids(
-          centroidStats(assign(corpus, asFrame(cur), idCol, vecCol), vecCol))
-        .as[(Int, Array[Float])].collect().toMap // bounded: ≤ k rows
+      val next = meansByKey(assign(corpus, asFrame, idCol, vecCol)
+        .select(col("cell_id").as("key"), col(vecCol).as("v")), cur.size)
       cur = cur.map { case (c, prev) => (c, next.getOrElse(c, prev)) }
     }
-    asFrame(cur).coalesce(1)
+    asFrame
   }
+
+  /** Per-key mean vector of `keyed`'s `(key: int, v: array<float>)` rows
+    * for keys in `[0, keys)`, in ONE Spark job: per (key, dim) it equals
+    * [[centroidStats]]' `sum(bround(v, 9) as decimal(18,9)) as double /
+    * count`, cast to float. Spark rounds each element (`bround` and the
+    * decimal cast, so ties at the 9th digit and out-of-range values
+    * behave as in SQL); each partition sums the unscaled decimals
+    * exactly, and `treeAggregate` merges the partials with fan-in about
+    * √P. A key with no element is absent, a null array adds nothing,
+    * and a null element counts toward its dim's divisor but not its sum,
+    * as `posexplode` with `count(lit(1))` does; a dim with no non-null
+    * value has a null mean.
+    */
+  private[graft] def meansByKey(keyed: DataFrame,
+      keys: Int): Map[Int, Array[java.lang.Float]] =
+    keyed.select(col("key"), transform(col("v"),
+        x => bround(x.cast("double"), 9).cast("decimal(18,9)")).as("v"))
+      .queryExecution.toRdd
+      .treeAggregate(new MeanSums(keys))((acc, row) => acc.add(row), _.merge(_))
+      .means
+
+  /** The exact sums behind [[meansByKey]]: per (key, dim), the rows seen,
+    * the non-null values, and the unscaled decimal(·, 9) sum as a
+    * 128-bit two's-complement (hi, lo) pair that no row count overflows.
+    */
+  private final class MeanSums(keys: Int) extends Serializable {
+    private val rows, vals, lo, hi = new Array[Array[Long]](keys)
+
+    def add(row: InternalRow): MeanSums = {
+      if (!row.isNullAt(0) && !row.isNullAt(1)) {
+        val key = row.getInt(0)
+        val v = row.getArray(1)
+        val n = v.numElements()
+        if (n > 0) grow(key, n)
+        var d = 0
+        while (d < n) {
+          rows(key)(d) += 1
+          if (!v.isNullAt(d)) {
+            vals(key)(d) += 1
+            val x = v.getDecimal(d, 18, 9).toUnscaledLong
+            addTo(key, d, x >> 63, x) // sign-extended to 128 bits
+          }
+          d += 1
+        }
+      }
+      this
+    }
+
+    def merge(o: MeanSums): MeanSums = {
+      for (key <- 0 until keys if o.rows(key) != null) {
+        grow(key, o.rows(key).length)
+        for (d <- o.rows(key).indices) {
+          rows(key)(d) += o.rows(key)(d)
+          vals(key)(d) += o.vals(key)(d)
+          addTo(key, d, o.hi(key)(d), o.lo(key)(d))
+        }
+      }
+      this
+    }
+
+    def means: Map[Int, Array[java.lang.Float]] =
+      (0 until keys).filter(rows(_) != null).map { key =>
+        key -> rows(key).indices.map { d =>
+          if (vals(key)(d) == 0L) null
+          else {
+            val sum = java.math.BigInteger.valueOf(hi(key)(d)).shiftLeft(64)
+              .add(java.math.BigInteger.valueOf(lo(key)(d)).and(Low64))
+            // SQL's sum of decimal(18,9) is a decimal(28,9)
+            if (sum.abs.compareTo(Max28) > 0)
+              throw new ArithmeticException(s"decimal(28,9) sum overflow at key $key, dim $d")
+            java.lang.Float.valueOf((Decimal(new java.math.BigDecimal(sum, 9)).toDouble /
+              rows(key)(d)).toFloat)
+          }
+        }.toArray
+      }.toMap
+
+    private def addTo(key: Int, d: Int, addHi: Long, addLo: Long): Unit = {
+      val s = lo(key)(d) + addLo
+      val carry = if (java.lang.Long.compareUnsigned(s, addLo) < 0) 1L else 0L
+      hi(key)(d) += addHi + carry
+      lo(key)(d) = s
+    }
+
+    private def grow(key: Int, n: Int): Unit = {
+      require(key >= 0 && key < keys, s"key $key outside [0, $keys)")
+      if (rows(key) == null || rows(key).length < n)
+        Seq(rows, vals, lo, hi).foreach { a =>
+          a(key) = if (a(key) == null) new Array[Long](n) else java.util.Arrays.copyOf(a(key), n)
+        }
+    }
+  }
+
+  private val Low64 = java.math.BigInteger.ONE.shiftLeft(64).subtract(java.math.BigInteger.ONE)
+  private val Max28 = java.math.BigInteger.TEN.pow(28).subtract(java.math.BigInteger.ONE)
 
   /** Total within-cluster squared distance — the monotone objective
     * Lloyd minimizes; ClusteringSpec asserts it never increases across

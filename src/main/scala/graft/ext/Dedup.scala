@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Count
 
 /** Deduplication operators for large-scale training-data pipelines
   * (SURVEY.md §2.9): exact, n-gram Jaccard (inverted index), MinHash+LSH
@@ -506,7 +507,7 @@ object Dedup {
           (coalesce(col("nbr_min"), col("component")) < col("component"))
             .as("changed"))
         .localCheckpoint(eager = false)
-      converged = next.filter(col("changed")).count() == 0L
+      converged = Count.rows(next.filter(col("changed"))) == 0L
       labels = next.drop("changed")
       i += 1
     }

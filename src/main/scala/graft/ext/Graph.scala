@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Count
 
 /** Graph analytics over pair lists (the near-dup graph being the
   * motivating instance): PageRank picks the most central doc of every
@@ -57,7 +58,7 @@ object Graph {
     // algorithm needs anyway materializes BOTH frames in one job —
     // deg's compute flows through edges, persisting each as it goes —
     // replacing two eager checkpoint jobs + a count with a single job.
-    // Safe because nothing consumes either frame before count()
+    // Safe because nothing consumes either frame before the count
     // returns; every later consumer (the per-iteration joins, the
     // broadcast degree enrichment) reads persisted blocks.
     val edges = shrink(pairs.select(col(aCol).as("u"), col(bCol).as("v"))
@@ -66,7 +67,7 @@ object Graph {
     val deg = shrink(edges.groupBy(col("u")).agg(count(lit(1)).as("deg"))
       .select(col("u").as("node"), col("deg")))
       .localCheckpoint(eager = false)
-    val n = deg.count()
+    val n = Count.rows(deg)
     if (n == 0)
       return deg.select(col("node"), lit(0.0).as("pagerank")).limit(0)
     val base = (1.0 - damping) / n
@@ -113,7 +114,7 @@ object Graph {
     * node-sized broadcast semi-joins on a MONOTONICALLY SHRINKING edge
     * list, lineage cut per round (the connected-components discipline);
     * rounds are data-bounded (2 on the fixture at the registered k, ≤
-    * the graph's peeling depth — the driver-side loop runs one count()
+    * the graph's peeling depth — the driver-side loop runs one count
     * action per round exactly like CC). `maxIterations` is a runaway
     * bound, not a
     * tuning knob; hitting it throws rather than returning a non-core.
@@ -126,10 +127,11 @@ object Graph {
     // round is unavoidable (data-driven peeling), but the separate
     // eager materialization job is not — localCheckpoint(eager=false)
     // marks the round's edge list for persist-on-first-compute and the
-    // count() that the loop needs ANYWAY materializes it in the same
-    // job (the count scans every partition, so the persist is
-    // complete). Single-consumer-at-materialization makes this safe:
-    // nothing else touches the marked RDD until count() returns, after
+    // count that the loop needs ANYWAY materializes it in the same
+    // job (Count.rows: one job, where Dataset.count() takes two, and it
+    // scans every partition, so the persist is complete).
+    // Single-consumer-at-materialization makes this safe: nothing else
+    // touches the marked RDD until the count returns, after
     // which every later consumer (the next round's degree agg legs and
     // semi-joins) reads persisted blocks.
     var edges = pairs.select(
@@ -137,7 +139,7 @@ object Graph {
         greatest(col(aCol), col(bCol)).as("v"))
       .filter(col("u") < col("v"))
       .distinct().localCheckpoint(eager = false)
-    var n = edges.count()
+    var n = Count.rows(edges)
     var iter = 0
     var stable = n == 0L
     while (!stable) {
@@ -158,7 +160,7 @@ object Graph {
         .join(broadcast(keep.select(col("n").as("v"))), Seq("v"), "leftsemi")
         .select(col("u"), col("v"))
         .localCheckpoint(eager = false)
-      val m = next.count()
+      val m = Count.rows(next)
       stable = m == n
       edges = next
       n = m

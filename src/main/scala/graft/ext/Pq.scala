@@ -32,21 +32,20 @@ object Pq {
   /** Train an (m × k) codebook: per subspace, k-means from
     * deterministic seeds over the sliced subvectors. Returns
     * (subspace, cell_id, centroid) rows — m·k of them, a driver-tiny
-    * frame whatever the corpus size. `m · dsub` must equal the width
-    * of every seed vector (else it fails before any training job).
-    * EAGER AT CALL TIME: the seed collect and one codebook checkpoint
-    * job per iteration run when CALLED.
+    * literal frame whatever the corpus size. `m · dsub` must equal the
+    * width of every seed vector (else it fails before any training job).
+    * EAGER AT CALL TIME: the seed collect and, per iteration, the
+    * codebook broadcast and one corpus scan run when CALLED.
     *
     * Semantics are EXACTLY m independent [[Clustering.lloyd]] runs
     * (same seeds: the first k vectors by id, sliced; same argmin
-    * tie-break; same order-independent decimal-mean recompute; same
-    * keep-previous empty-cell fallback) — but executed as ONE corpus
-    * scan per iteration for ALL subspaces: the m-run formulation cost
-    * 8 × (seed job + assignment agg + pack + join) = 45 one-task jobs
-    * at m = 8 and was scheduling-bound (4.9 s at sf0.1 vs 1.3 s for
-    * this shape, timed warm by JobProbe); at 100 TB it's the difference
-    * between m corpus scans and one per iteration. PqSpec pins
-    * equality against the per-subspace lloyd reference.
+    * tie-break; the same decimal means, [[Clustering.meansByKey]] keyed
+    * by (subspace, cell); same keep-previous empty-cell fallback) — but
+    * executed as ONE corpus scan per iteration for ALL subspaces, where
+    * m runs would scan the corpus m times. The driver holds the m·k·dsub
+    * codebook floats and, during a scan, about √P + 1 partial sum sets
+    * of that size for P scan partitions. PqSpec pins equality against
+    * the per-subspace lloyd reference.
     */
   def train(corpus: DataFrame, m: Int, dsub: Int, k: Int, iters: Int = 1): DataFrame = {
     require(m >= 1 && dsub >= 1 && k >= 2, s"bad PQ shape m=$m dsub=$dsub k=$k")
@@ -55,46 +54,27 @@ object Pq {
     // seeds: the first k vectors by id, sliced per subspace — identical
     // to seedCentroids over each sliced corpus; k·d floats, driver-tiny
     val seedVecs = corpus.orderBy(col("vec_id")).limit(k)
-      .select(col("embedding")).as[Array[Float]].collect()
+      .select(col("embedding")).as[Seq[java.lang.Float]].collect()
     require(seedVecs.length >= 2, s"PQ needs >= 2 vectors, got ${seedVecs.length}")
     val widths = seedVecs.map(_.length).distinct.sorted
     require(widths.sameElements(Array(m * dsub)), s"PQ shape m=$m × dsub=$dsub = " +
       s"${m * dsub} must equal the embedding width, got width(s) ${widths.mkString(", ")}")
-    var cb = (for (j <- 0 until m; c <- seedVecs.indices) yield
-      (j, c, seedVecs(c).slice(j * dsub, (j + 1) * dsub)))
-      .toDF("subspace", "cell_id", "centroid")
-      .select(col("subspace"), col("cell_id"),
-        col("centroid").cast("array<float>").as("centroid"))
-      .coalesce(1)
+    val cells = seedVecs.length
+    var cb = for (j <- 0 until m; c <- 0 until cells) yield
+      (j, c, seedVecs(c).slice(j * dsub, (j + 1) * dsub).toArray)
+    def asFrame: DataFrame = cb.toDF("subspace", "cell_id", "centroid").coalesce(1)
     for (_ <- 0 until iters) {
-      // one scan: assign every subvector (the encode fold), explode to
-      // (subspace, cell, dim, value), ONE keyed decimal-mean agg —
-      // partial aggregation collapses map-side, the shuffle carries at
-      // most m·k·dsub keys per map partition (the centroidStats shape)
-      val next = encode(corpus, cb, m, dsub)
+      // one scan: assign every subvector (the encode fold) and fold the
+      // new means keyed by (subspace, cell)
+      val next = Clustering.meansByKey(encode(corpus, asFrame, m, dsub)
         .select(posexplode(col("codes")).as(Seq("subspace", "cell_id")),
           col("embedding"))
-        .select(col("subspace"), col("cell_id"),
-          posexplode(slice(col("embedding"),
-            col("subspace") * dsub + 1, lit(dsub))).as(Seq("dim", "v")))
-        .groupBy(col("subspace"), col("cell_id"), col("dim"))
-        .agg((sum(bround(col("v").cast("double"), 9).cast("decimal(18,9)"))
-          .cast("double") / count(lit(1))).as("c"))
-        .groupBy(col("subspace"), col("cell_id"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("dim"), col("c")))),
-          s => s.getField("c").cast("float")).as("centroid"))
-      // empty-cell fallback: a cell that lost every member keeps its
-      // previous centroid (lloyd's contract — dropping would shrink k)
-      cb = cb
-        .select(col("subspace"), col("cell_id"), col("centroid").as("prev"))
-        .join(next.select(col("subspace"), col("cell_id"),
-          col("centroid").as("nxt")), Seq("subspace", "cell_id"), "left")
-        .select(col("subspace"), col("cell_id"),
-          coalesce(col("nxt"), col("prev")).as("centroid"))
-        .coalesce(1).localCheckpoint()
+        .select((col("subspace") * cells + col("cell_id")).as("key"),
+          slice(col("embedding"), col("subspace") * dsub + 1, lit(dsub)).as("v")),
+        m * cells)
+      cb = cb.map { case (j, c, prev) => (j, c, next.getOrElse(j * cells + c, prev)) }
     }
-    cb
+    asFrame
   }
 
   /** The codebook collapsed to ONE broadcastable row:

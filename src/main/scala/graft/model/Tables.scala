@@ -1,6 +1,8 @@
 package graft.model
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -36,8 +38,34 @@ object Tables {
     StructField("table_name", StringType)
   ))
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** `spark.read.parquet` of a fixture table with its schema resolved on
+    * the driver ([[parquetSchema]]): a read without a schema runs a
+    * one-task Spark job to infer it. The frame and its schema are the
+    * same as the inferring read's.
+    */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+  }
+
+  /** The schema `spark.read.parquet(path)` infers, converted by Spark
+    * from the footer of `path` itself or of the first data file under
+    * it by name (names starting `_` or `.` are not data, as in Spark's
+    * listing). Like that inference, it reads one footer and assumes the
+    * other files agree.
+    */
+  private[graft] def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def firstFile(st: FileStatus): Option[FileStatus] =
+      if (st.isFile) Some(st)
+      else fs.listStatus(st.getPath).sortBy(_.getPath.getName).iterator
+        .filterNot(c => c.getPath.getName.startsWith("_") || c.getPath.getName.startsWith("."))
+        .flatMap(firstFile).nextOption()
+    firstFile(fs.getFileStatus(root)).flatMap(GraftParquetBridge.footerSchema(spark, _))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no parquet data file to read a schema from under $path"))
+  }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

@@ -703,8 +703,7 @@ object ExtQueries {
     // partition invariance) are pinned in PqSpec.
     "q_embed_pq" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      // train checkpoints the final 128-row codebook itself — no
-      // second cut needed
+      // train returns the 128-row codebook as a driver literal
       val cb = Pq.train(emb, m = 8, dsub = 8, k = 16)
       Pq.encode(emb, cb, m = 8, dsub = 8)
         .agg(count(lit(1)).as("n_rows"),

@@ -33,8 +33,9 @@ object Streaming {
     * directory — the incremental version of the reference's batch
     * re-scan loop. maxFilesPerTrigger bounds per-batch work.
     *
-    * A file stream needs its schema up front: this probes the footers
-    * ALREADY in `dir` (batch read, schema only), checks `ts` through
+    * A file stream needs its schema up front: this reads it from a
+    * footer ALREADY in `dir`, on the driver with no Spark job
+    * ([[graft.model.Tables.parquetSchema]]), checks `ts` through
     * [[graft.model.Tables.eventsTsType]] and canonicalizes it to a µs
     * TimestampType exactly like [[graft.model.Tables.events]]. Requires
     * ≥1 seed file at start — true for the re-scan layouts this models.
@@ -44,7 +45,7 @@ object Streaming {
   def readEventsStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Int = 1): DataFrame = {
     val tsType = graft.model.Tables.eventsTsType(spark,
-      spark.read.parquet(dir).schema)
+      graft.model.Tables.parquetSchema(spark, dir))
     spark.readStream
       .schema(eventsSchema(tsType))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)

@@ -24,6 +24,27 @@ class FixtureSchemaSpec extends AnyFunSuite {
     }
   }
 
+  test("Tables.load resolves each fixture's schema on the driver: the " +
+      "schema spark.read.parquet infers, with no Spark job; a directory " +
+      "of Spark-written files (the events stream's source) too") {
+    val sc = spark.sparkContext
+    val sf = TestSpark.Sf0001
+    for (table <- FixtureCheck.expected.keySet.toSeq.sorted) {
+      val group = s"schema-$table"
+      sc.setJobGroup(group, group)
+      val loaded = try model.Tables.load(spark, sf, table).schema finally sc.clearJobGroup()
+      org.apache.spark.GraftListenerBridge.drainListenerBus(sc, 10000L)
+      assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty, s"$table ran a job")
+      assert(loaded == spark.read.parquet(s"$sf/$table.parquet").schema, table)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_schema_dir").toString
+    try {
+      model.Tables.events(spark, sf).repartition(2)
+        .write.mode("overwrite").parquet(dir)
+      assert(model.Tables.parquetSchema(spark, dir) == spark.read.parquet(dir).schema)
+    } finally model.Tables.rmrf(dir)
+  }
+
   test("canary fires on a retyped column, naming table.column, the " +
     "arrived dtype, and the accepted set (the r8 events.ts class)") {
     // events with ts as String — the shape of an incompatible regeneration
