@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,47 +38,70 @@ object Clustering {
         (row_number().over(Window.orderBy(col(idCol))) - 1).as("cell_id"),
         col(vecCol).as("centroid"))
 
-  /** Nearest-centroid assignment: (idCol, cell_id, d2, vecCol) — ties
-    * break toward the smaller cell_id via the lexicographic
-    * `array_min(struct(d2, cell_id))` fold over the packed centroid
-    * array. ZERO shuffle (r8): the ≤k centroid rows collapse into ONE
-    * broadcast array row and the argmin runs per corpus row map-side —
-    * the `crossJoin(broadcast) + groupBy(min(struct))` formulation this
-    * replaced shuffled one row per VECTOR, i.e. a full-corpus exchange
-    * per Lloyd iteration at 100 TB. The distance HOF is interpreted
-    * (HigherOrderFunctions are CodegenFallback), a per-row constant
-    * factor traded for the corpus-wide shuffle; `array_min` over
-    * struct(d2, cell_id) keeps the exact lexicographic tie-break of
-    * `min(struct(...))`, and cells with a null centroid are filtered
-    * before the fold (they could otherwise win the argmin — struct
-    * ordering puts nulls first).
-    *
-    * Contract: `idCol` must be unique in `vecs`. The per-row fold emits
-    * one output row per INPUT row — unlike the replaced
-    * `groupBy(idCol).agg(min(struct(...)))`, which silently collapsed
-    * duplicate ids to one row. Nothing here enforces uniqueness
-    * (enforcing it would cost exactly the corpus-wide exchange this
-    * formulation exists to avoid); callers with non-unique ids must
-    * dropDuplicates first. Fixture `vec_id` is unique by construction.
+  /** Nearest-centroid assignment: (idCol, cell_id, d2, vecCol), d2 the
+    * squared l2 distance. The search and its contract are
+    * [[withCells]]' (so `idCol` must be unique in `vecs`); an empty or
+    * all-null centroid set yields no rows.
     */
   def assign(vecs: DataFrame, centroids: DataFrame, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val packed = centroids
-      .agg(sort_array(collect_list(struct(col("cell_id"), col("centroid"))))
-        .as("cells"))
-    val scored = transform(
-      filter(col("cells"), c => c.getField("centroid").isNotNull),
-      c => struct(l2sqF(col(vecCol), c.getField("centroid")).as("d2"),
-        c.getField("cell_id").as("cell_id")))
-    vecs.select(col(idCol), col(vecCol))
-      .crossJoin(broadcast(packed))
-      .withColumn("m", array_min(scored))
-      // empty/all-null centroid set: the old inner join dropped every
-      // row; keep that contract
-      .filter(col("m.cell_id").isNotNull)
+      vecCol: String = "embedding"): DataFrame =
+    nearestRows(vecs.select(col(idCol), col(vecCol)), centroids,
+        c => l2sqF(col(vecCol), c))
       .select(col(idCol), col("m.cell_id").as("cell_id"),
-        col("m.d2").as("d2"), col(vecCol))
-  }
+        col("m.d").as("d2"), col(vecCol))
+
+  /** Nearest-centroid search, the one kernel behind [[assign]],
+    * [[Similarity.ivfAssign]], [[Similarity.ivfProbe]]'s cell ranking
+    * and [[Pq.encode]]. Every column of `centroids` — at least `cell_id`
+    * and `centroid` — packs into ONE sorted struct array, `cells`,
+    * crossed onto `frame` as a broadcast row, so the search runs per
+    * row map-side and shuffles nothing (the groupBy-min(struct) form it
+    * replaced exchanged one row per vector, a corpus-wide shuffle per
+    * Lloyd iteration at 100 TB; the distance lambda is interpreted, a
+    * per-row constant factor traded for that shuffle).
+    *
+    * Contract, for every caller: a cell whose centroid is null is
+    * skipped (struct order puts nulls first, so it would otherwise win);
+    * cells rank by the lexicographic `(d, cell_id)` struct order, so
+    * ties go to the smaller `cell_id`; and there is one output row per
+    * input row. Nothing deduplicates the input — enforcing a unique id
+    * would cost the exchange this shape avoids — so callers with
+    * non-unique ids must dropDuplicates first. [[nearest]] and
+    * [[nearestN]] search a row's `cells` by the caller's distance;
+    * `among` narrows the candidates (Pq: one subspace's cells).
+    */
+  private[graft] def withCells(frame: DataFrame, centroids: DataFrame): DataFrame =
+    frame.crossJoin(broadcast(centroids.agg(
+      sort_array(collect_list(struct(centroids.columns.toSeq.map(col): _*))).as("cells"))))
+
+  /** `(d, cell_id)` of each non-null centroid in `cells` that `among`
+    * keeps, d = `dist(centroid)`.
+    */
+  private def scored(cells: Column, dist: Column => Column,
+      among: Column => Column = _ => lit(true)): Column =
+    transform(filter(cells, c => among(c) && c.getField("centroid").isNotNull),
+      c => struct(dist(c.getField("centroid")).as("d"), c.getField("cell_id").as("cell_id")))
+
+  /** The nearest cell of `cells` (of those `among` keeps) as a
+    * `(d, cell_id)` struct; null if none.
+    */
+  private[graft] def nearest(cells: Column, dist: Column => Column,
+      among: Column => Column = _ => lit(true)): Column =
+    array_min(scored(cells, dist, among))
+
+  /** The `n` nearest cells of `cells`, nearest first. */
+  private[graft] def nearestN(cells: Column, dist: Column => Column, n: Int): Column =
+    slice(array_sort(scored(cells, dist)), 1, n)
+
+  /** `frame` with its nearest cell as the struct column `m` (and the
+    * packed `cells`); rows with no non-null centroid to go to are
+    * dropped, as the inner join of the first formulation did.
+    */
+  private[graft] def nearestRows(frame: DataFrame, centroids: DataFrame,
+      dist: Column => Column): DataFrame =
+    withCells(frame, centroids)
+      .withColumn("m", nearest(col("cells"), dist))
+      .filter(col("m.cell_id").isNotNull)
 
   /** Per-(cell, dim) mean of the assigned vectors, decimal-summed for
     * order-independence: (cell_id, dim, n, centroid). This long form is
@@ -87,12 +110,21 @@ object Clustering {
     */
   def centroidStats(assigned: DataFrame,
       vecCol: String = "embedding"): DataFrame =
-    assigned
-      .select(col("cell_id"), posexplode(col(vecCol)).as(Seq("dim", "v")))
-      .groupBy(col("cell_id"), col("dim"))
+    dimMeans(assigned, col("cell_id"), vecCol)
+
+  /** (key, dim, n, centroid): per key and dim, the mean of the 9th-digit
+    * `bround`ed values summed as DECIMAL(18,9) — exact, so the same
+    * under any partitioning — over the row count `n` (a null element
+    * counts toward n). [[Similarity.labelCentroids]] says why `bround`.
+    */
+  private[graft] def dimMeans(frame: DataFrame, key: Column,
+      vecCol: String): DataFrame = {
+    val exploded = frame.select(key, posexplode(col(vecCol)).as(Seq("dim", "v")))
+    exploded.groupBy(col(exploded.columns.head), col("dim"))
       .agg(count(lit(1)).as("n"),
         (sum(bround(col("v").cast("double"), 9).cast("decimal(18,9)"))
           .cast("double") / count(lit(1))).as("centroid"))
+  }
 
   /** `iters` Lloyd iterations from the deterministic seeds. A cell that
     * loses every member keeps its previous centroid (standard empty-

@@ -253,27 +253,24 @@ object Graph {
     * Scale shape: one degree agg, one broadcast-able orientation join,
     * one self-join of the oriented edge list on the wedge apex, one
     * semi-join probe against the oriented edges — all keyed shuffles
-    * on the PAIR graph, never the corpus. `partitions` as pageRank.
+    * on the PAIR graph, never the corpus.
     */
-  def triangleCounts(pairs: DataFrame, aCol: String, bCol: String,
-      partitions: Int = 0): DataFrame = {
-    def shrink(df: DataFrame): DataFrame =
-      if (partitions > 0) df.coalesce(partitions) else df
+  def triangleCounts(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
     // normalize to one row per undirected edge (u < v) directly — the
     // doubled u↔v list would pay a distinct over 2E rows for nothing
     // (degree falls out of a union of the two endpoint columns)
-    val half = shrink(pairs.select(
+    val half = pairs.select(
         least(col(aCol), col(bCol)).as("u"),
         greatest(col(aCol), col(bCol)).as("v"))
       .filter(col("u") < col("v")) // drops self-loops
-      .distinct()).localCheckpoint()
+      .distinct().localCheckpoint()
     val deg = half.select(col("u").as("node"))
       .union(half.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     // orient lower-(deg, id) → higher-(deg, id); keep each undirected
     // edge once. Joining degrees twice onto the half edge list (u < v)
     // beats re-deriving order per pair; deg is node-sized → broadcast.
-    val oriented = shrink(half
+    val oriented = half
       .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
       .select(
@@ -282,7 +279,7 @@ object Graph {
           .otherwise(col("v")).as("src"),
         when(col("du") < col("dv") ||
             (col("du") === col("dv") && col("u") < col("v")), col("v"))
-          .otherwise(col("u")).as("dst"))).localCheckpoint()
+          .otherwise(col("u")).as("dst")).localCheckpoint()
     // ^ kept EAGER (r16 re-audit): dropping it makes the wedge
     // self-join sides two full copies of the orientation subtree whose
     // runtime dedup would hang on AQE's stage cache, and the planner
@@ -296,9 +293,8 @@ object Graph {
     // wedge enumeration (41M rows at sf0.1) single-threaded — the
     // pinned N keeps enumerate→probe at full parallelism, and the
     // self-join reuses the one exchange for both sides.
-    val n = math.max(pairs.sparkSession.sessionState.conf.numShufflePartitions,
-      if (partitions > 0) partitions else 0)
-    val byApex = oriented.repartition(n, col("src"))
+    val byApex = oriented.repartition(
+      pairs.sparkSession.sessionState.conf.numShufflePartitions, col("src"))
     val wedges = byApex.as("e1")
       .join(byApex.as("e2"), col("e1.src") === col("e2.src"))
       .filter(col("e1.dst") < col("e2.dst"))

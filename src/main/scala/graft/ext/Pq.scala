@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.ArrayMath.l2sqF
 
@@ -17,14 +17,14 @@ import graft.functions.ArrayMath.l2sqF
   * Scale shape: training is m independent tiny k-means runs (sample
   * the corpus at 100 TB — the codebook is m·k·(d/m) = k·d floats
   * regardless of corpus size); encoding is ONE corpus scan with a
-  * per-row argmin fold against the broadcast packed codebook (zero
-  * shuffle — the [[Clustering.assign]] shape per subspace). Compose
+  * per-row nearest-centroid search per subspace against the broadcast
+  * packed codebook (zero shuffle). Compose
   * with IVF for IVFADC (codes partitioned by cell) — the postings
   * layout stays [[Similarity.writeIvfIndex]]'s.
   *
   * Determinism: seeds and Lloyd steps are the deterministic
-  * [[Clustering]] machinery, the argmin tie-breaks to the smaller
-  * code (lexicographic struct min), so codes are a pure function of
+  * [[Clustering]] machinery, the search breaks ties toward the smaller
+  * code, so codes are a pure function of
   * the corpus SET — digest-pinnable at the gate (q_embed_pq).
   */
 object Pq {
@@ -77,37 +77,20 @@ object Pq {
     asFrame
   }
 
-  /** The codebook collapsed to ONE broadcastable row:
-    * cb = array of (subspace, cell_id, centroid) structs, sorted — the
-    * packed-centroid pattern of [[Clustering.assign]] lifted to m
-    * subspaces. */
-  private def packed(codebook: DataFrame): DataFrame =
-    codebook
-      .agg(sort_array(collect_list(struct(col("subspace"), col("cell_id"),
-        col("centroid")))).as("cb"))
-
-  /** Per-subspace argmin of l2 distance between a subvector slice and
-    * that subspace's centroids — lexicographic struct min, ties to the
-    * smaller cell_id (exactly [[Clustering.assign]]'s contract).
-    */
-  private def codeFor(vec: Column, cb: Column, j: Column, dsub: Int): Column =
-    array_min(transform(
-      filter(cb, c => c.getField("subspace") === j &&
-        c.getField("centroid").isNotNull),
-      c => struct(
-        l2sqF(slice(vec, j * lit(dsub) + 1, lit(dsub)),
-          c.getField("centroid")).as("d2"),
-        c.getField("cell_id").as("cell_id")))).getField("cell_id")
-
   /** Encode the corpus: appends `codes` (array<int>, length m) — one
-    * scan, zero shuffle, the codebook rides as one broadcast row.
+    * scan, zero shuffle. Per subspace, the code is the nearest of that
+    * subspace's centroids to the subvector slice by l2 distance:
+    * [[Clustering.withCells]]' search and contract among the packed
+    * codebook's cells of that subspace.
     */
   def encode(corpus: DataFrame, codebook: DataFrame, m: Int,
       dsub: Int): DataFrame =
-    corpus
-      .crossJoin(broadcast(packed(codebook)))
+    Clustering.withCells(corpus, codebook)
       .withColumn("codes",
-        transform(sequence(lit(0), lit(m - 1)),
-          j => codeFor(col("embedding"), col("cb"), j, dsub).cast("int")))
-      .drop("cb")
+        transform(sequence(lit(0), lit(m - 1)), j =>
+          Clustering.nearest(col("cells"),
+            c => l2sqF(slice(col("embedding"), j * lit(dsub) + 1, lit(dsub)), c),
+            among = _.getField("subspace") === j)
+            .getField("cell_id").cast("int")))
+      .drop("cells")
 }

@@ -336,35 +336,83 @@ object Profiling {
     * with zero variance on either side have no defined r and drop out.
     */
   def groupCorrelation(df: DataFrame, groupCol: String, xCol: Column,
-      valueCol: String): DataFrame = {
-    val base = df.select(col(groupCol).as("grp"),
-        xCol.cast("long").as("x"),
-        round(col(valueCol) * 100, 0).cast("long").as("cy"))
-      .withColumn("cy2", col("cy") * col("cy"))
-    val m = base
-      .withColumn("cy2_hi", expr("cy2 div 1000000"))
-      .withColumn("cy2_lo", col("cy2") % 1000000L)
-      .groupBy(col("grp"))
-      .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("cy")).as("sy"),
-        sum(col("cy2_hi")).as("syy_hi"), sum(col("cy2_lo")).as("syy_lo"),
-        sum(col("x") * col("cy")).as("sxy"))
-    val d38 = "decimal(38,0)"
-    val syy = m("syy_hi").cast(d38) * lit(1000000L) + m("syy_lo").cast(d38)
-    val num = m("n").cast(d38) * m("sxy").cast(d38) -
-      m("sx").cast(d38) * m("sy").cast(d38)
-    val dx = m("n").cast(d38) * m("sxx").cast(d38) -
-      m("sx").cast(d38) * m("sx").cast(d38)
-    val dy = m("n").cast(d38) * syy - m("sy").cast(d38) * m("sy").cast(d38)
-    m.select(col("grp"), col("n"), num.as("num"), dx.as("dx"), dy.as("dy"))
+      valueCol: String): DataFrame =
+    comoments(df, groupCol, xCol, valueCol)
       .filter(col("dx") > 0 && col("dy") > 0)
       .select(col("grp"), col("n"),
         round(col("num").cast("double") /
           sqrt(col("dx").cast("double") * col("dy").cast("double")), 6)
           .as("r"))
       .orderBy(col("grp"))
-  }
+
+  /** Per group `grp`: n, the sums sx, sy, sxx, sxy of x = `xCol` as
+    * BIGINT and y = `valueCol` in cents, and the exact DECIMAL(38,0)
+    * closed-form numerators num = n·Σxy − Σx·Σy, dx = n·Σx² − (Σx)² and
+    * dy = n·Σy² − (Σy)², in one two-phase agg of constant-width
+    * partials ([[withCents]]).
+    */
+  private def comoments(df: DataFrame, groupCol: String, xCol: Column,
+      valueCol: String): DataFrame =
+    withCents(df.select(col(groupCol).as("grp"), xCol.cast("long").as("x"),
+        col(valueCol).as("v")), col("v"))
+      .groupBy(col("grp"))
+      .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
+        sum(col("x") * col("x")).as("sxx"),
+        sum(col("cents")).as("sy"),
+        sum(col("c2_hi")).as("syy_hi"), sum(col("c2_lo")).as("syy_lo"),
+        sum(col("x") * col("cents")).as("sxy"))
+      .select(col("grp"), col("n"), col("sx"), col("sy"), col("sxx"), col("sxy"),
+        cross(col("n"), col("sxy"), col("sx"), col("sy")).as("num"),
+        cross(col("n"), col("sxx"), col("sx"), col("sx")).as("dx"),
+        cross(col("n"), sumSquares(col("syy_hi"), col("syy_lo")),
+          col("sy"), col("sy")).as("dy"))
+
+  /** Exact integer moments of a 2-dp money-like double, one home for
+    * [[groupCorrelation]], [[groupRegression]], [[welchT]],
+    * [[zscoreOutliers]] and q_variance_stats: `df` plus `cents` (`value`
+    * as BIGINT cents), `c2` = cents² and its split `c2_hi` = c2 div 10⁶,
+    * `c2_lo` = c2 mod 10⁶. Σc2 (~10²⁰ at scale) is carried as the two
+    * exact BIGINT sums of the split, because a single huge decimal
+    * differs across engines at the int128→double cast (DuckDB's is not
+    * correctly rounded); [[sumSquares]] recombines them exactly in
+    * DECIMAL(38,0), [[centsMoments]] in double (both sums < 2⁵³ convert
+    * exactly, and the recombination is the same IEEE arithmetic on
+    * every engine).
+    */
+  private[graft] def withCents(df: DataFrame, value: Column): DataFrame =
+    df.withColumn("cents", round(value * 100, 0).cast("long"))
+      .withColumn("c2", col("cents") * col("cents"))
+      .withColumn("c2_hi", expr("c2 div 1000000"))
+      .withColumn("c2_lo", col("c2") % 1000000L)
+
+  private val D38 = "decimal(38,0)"
+
+  /** Σc² from the sums of its [[withCents]] split, in DECIMAL(38,0). */
+  private def sumSquares(hi: Column, lo: Column): Column =
+    hi.cast(D38) * lit(1000000L) + lo.cast(D38)
+
+  /** a·b − c·d, exact in DECIMAL(38,0). */
+  private def cross(a: Column, b: Column, c: Column, d: Column): Column =
+    a.cast(D38) * b.cast(D38) - c.cast(D38) * d.cast(D38)
+
+  /** Per `group`: n, s1 = Σ`value` (exact through DECIMAL(18,2)) and
+    * s2 = Σ`value`² from the [[withCents]] split — double moments that
+    * are bit-identical under any partitioning and on any engine.
+    */
+  private[graft] def centsMoments(df: DataFrame, group: String,
+      value: Column): DataFrame =
+    withCents(df, value)
+      .groupBy(col(group))
+      .agg(count(lit(1)).as("n"),
+        sum(value.cast("decimal(18,2)")).cast("double").as("s1"),
+        sum(col("c2_hi")).as("hi"), sum(col("c2_lo")).as("lo"))
+      .select(col(group), col("n"), col("s1"),
+        ((col("hi").cast("double") * 1000000.0 + col("lo").cast("double")) / 10000.0)
+          .as("s2"))
+
+  /** The sample variance (s2 − s1²/n) / (n − 1) of [[centsMoments]]. */
+  private[graft] def sampleVariance(n: Column, s1: Column, s2: Column): Column =
+    (s2 - s1 * s1 / n) / (n - 1)
 
   /** Per-group OLS regression of a 2-dp value on an integer regressor —
     * the trend line a drift monitor fits per segment (is `value`
@@ -390,31 +438,10 @@ object Profiling {
     * like groupCorrelation.
     */
   def groupRegression(df: DataFrame, groupCol: String, xCol: Column,
-      valueCol: String): DataFrame = {
-    val base = df.select(col(groupCol).as("grp"),
-        xCol.cast("long").as("x"),
-        round(col(valueCol) * 100, 0).cast("long").as("cy"))
-      .withColumn("cy2", col("cy") * col("cy"))
-    val m = base
-      .withColumn("cy2_hi", expr("cy2 div 1000000"))
-      .withColumn("cy2_lo", col("cy2") % 1000000L)
-      .groupBy(col("grp"))
-      .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("cy")).as("sy"),
-        sum(col("cy2_hi")).as("syy_hi"), sum(col("cy2_lo")).as("syy_lo"),
-        sum(col("x") * col("cy")).as("sxy"))
-    val d38 = "decimal(38,0)"
-    val syy = m("syy_hi").cast(d38) * lit(1000000L) + m("syy_lo").cast(d38)
-    val num = m("n").cast(d38) * m("sxy").cast(d38) -
-      m("sx").cast(d38) * m("sy").cast(d38)
-    val dx = m("n").cast(d38) * m("sxx").cast(d38) -
-      m("sx").cast(d38) * m("sx").cast(d38)
-    val dy = m("n").cast(d38) * syy - m("sy").cast(d38) * m("sy").cast(d38)
-    val icNum = m("sy").cast(d38) * m("sxx").cast(d38) -
-      m("sx").cast(d38) * m("sxy").cast(d38)
-    m.select(col("grp"), col("n"), num.as("num"), dx.as("dx"), dy.as("dy"),
-        icNum.as("ic"))
+      valueCol: String): DataFrame =
+    comoments(df, groupCol, xCol, valueCol)
+      .select(col("grp"), col("n"), col("num"), col("dx"), col("dy"),
+        cross(col("sy"), col("sxx"), col("sx"), col("sxy")).as("ic"))
       .filter(col("dx") > 0)
       .select(col("grp"), col("n"),
         // cents → value units: one division per column, denominator
@@ -430,7 +457,6 @@ object Profiling {
             (col("dx").cast("double") * col("dy").cast("double")), 6))
           .as("r2"))
       .orderBy(col("grp"))
-  }
 
   /** Data-contract expectation check: evaluate a set of named row-level
     * rules (each a boolean "violated" predicate) in ONE scan and emit
@@ -531,27 +557,22 @@ object Profiling {
     */
   def welchT(df: DataFrame, groupCol: String, valueCol: String,
       groupA: String, groupB: String): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val base = df.filter(col(groupCol).isin(groupA, groupB))
-      .select((col(groupCol) === groupA).as("isa"),
-        round(col(valueCol) * 100, 0).cast("long").as("cy"))
-      .withColumn("cy2", col("cy") * col("cy"))
-      .withColumn("cy2_hi", expr("cy2 div 1000000"))
-      .withColumn("cy2_lo", col("cy2") % 1000000L)
+    val base = withCents(df.filter(col(groupCol).isin(groupA, groupB))
+      .select((col(groupCol) === groupA).as("isa"), col(valueCol).as("v")),
+      col("v"))
     def side(flag: Column, c: Column): Column = sum(when(flag, c)
       .otherwise(lit(0L)))
     val m = base.agg(
       side(col("isa"), lit(1L)).as("n_a"),
       side(!col("isa"), lit(1L)).as("n_b"),
-      side(col("isa"), col("cy")).as("sy_a"),
-      side(!col("isa"), col("cy")).as("sy_b"),
-      side(col("isa"), col("cy2_hi")).as("hi_a"),
-      side(col("isa"), col("cy2_lo")).as("lo_a"),
-      side(!col("isa"), col("cy2_hi")).as("hi_b"),
-      side(!col("isa"), col("cy2_lo")).as("lo_b"))
+      side(col("isa"), col("cents")).as("sy_a"),
+      side(!col("isa"), col("cents")).as("sy_b"),
+      side(col("isa"), col("c2_hi")).as("hi_a"),
+      side(col("isa"), col("c2_lo")).as("lo_a"),
+      side(!col("isa"), col("c2_hi")).as("hi_b"),
+      side(!col("isa"), col("c2_lo")).as("lo_b"))
     def v(n: Column, sy: Column, hi: Column, lo: Column): Column =
-      n.cast(d38) * (hi.cast(d38) * lit(1000000L) + lo.cast(d38)) -
-        sy.cast(d38) * sy.cast(d38)
+      cross(n, sumSquares(hi, lo), sy, sy)
     val va = v(col("n_a"), col("sy_a"), col("hi_a"), col("lo_a"))
     val vb = v(col("n_b"), col("sy_b"), col("hi_b"), col("lo_b"))
     // q_i = s_i²/n_i = v_i / (n_i² · (n_i − 1)) — cents² cancel in t
@@ -762,32 +783,19 @@ object Profiling {
   def zscoreOutliers(df: DataFrame, groupCol: String, valueCol: String,
       idCol: String, zCut: Double): DataFrame = {
     require(zCut > 0, s"zCut must be positive, got $zCut")
-    val withCents = df
-      .select(col(idCol).as("id"), col(groupCol).as("grp"),
-        col(valueCol).as("v"))
-      .withColumn("cents", round(col("v") * 100, 0).cast("long"))
-      .withColumn("c2", col("cents") * col("cents"))
-    val moments = withCents
-      .withColumn("c2_hi", expr("c2 div 1000000"))
-      .withColumn("c2_lo", col("c2") % 1000000L)
-      .groupBy(col("grp"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("v").cast("decimal(18,2)")).cast("double").as("s1"),
-        sum(col("c2_hi")).as("hi"), sum(col("c2_lo")).as("lo"))
-      .select(col("grp"), col("n"), col("s1"),
-        ((col("hi").cast("double") * 1000000.0 + col("lo").cast("double")) / 10000.0)
-          .as("s2"))
+    val base = df.select(col(idCol).as("id"), col(groupCol).as("grp"),
+      col(valueCol).as("v"))
+    val moments = centsMoments(base, "grp", col("v"))
       .select(col("grp"), col("n"), (col("s1") / col("n")).as("mean"),
         // n = 1 guards the (n−1) division, and zero-variance groups
         // (sd = 0) have no outliers by definition — both filtered
         // below. ANSI Spark throws on ANY division by zero, doubles
         // included, so these are correctness guards, not cosmetics.
         sqrt(when(col("n") > 1,
-          (col("s2") - col("s1") * col("s1") / col("n")) / (col("n") - 1)))
-          .as("sd"))
+          sampleVariance(col("n"), col("s1"), col("s2")))).as("sd"))
       .filter(col("sd") > 0)
     val z = (col("v") - col("mean")) / col("sd")
-    withCents.join(broadcast(moments), Seq("grp"))
+    base.join(broadcast(moments), Seq("grp"))
       .filter(abs(z) >= lit(zCut))
       // z emits as round(…, 6) DOUBLE (Spark round = HALF_UP = ties
       // away from zero, matching DuckDB's round — bround's HALF_EVEN

@@ -289,44 +289,27 @@ object Similarity {
   }
 
   /** IVF (inverted-file) index: assign every vector to its nearest of
-    * `centroids` (a tiny broadcast table), search only the `nprobe`
-    * nearest cells per query. Centroids come from
+    * `centroids` (a tiny broadcast table) by cosine, search
+    * only the `nprobe` nearest cells per query. Centroids come from
     * [[Clustering.lloyd]] (or its seeds, [[Clustering.seedCentroids]]) —
     * at real scale you'd train offline and persist the cell assignment
-    * as a partition key.
-    *
-    * Contract: `vec_id` must be unique in `vecs` — the zero-shuffle
-    * argmin fold emits one row per input row, where the replaced
-    * groupBy(vec_id) formulation collapsed duplicates (see
-    * [[Clustering.assign]]); callers with duplicate ids must
-    * dropDuplicates first.
+    * as a partition key. The search and its contract are
+    * [[Clustering.withCells]]' (so `vec_id` must be unique); null
+    * vectors are dropped.
     */
   def ivfAssign(vecs: DataFrame, vecCol: String, centroids: DataFrame): DataFrame = {
-    // argmin over cells via the lexicographic array_min(struct(cdist,
-    // cell_id)) fold over the packed centroid array — ZERO shuffle
-    // (r8): the ≤cells centroid rows collapse into one broadcast array
-    // row and the argmin runs per corpus row map-side. The groupBy
-    // min(struct) formulation this replaced shuffled one row per
-    // vector — a full-corpus exchange per execution at 100 TB (itself
-    // the replacement for the ×cells window formulation). Same
-    // tie-break (smaller cell_id), null centroids filtered before the
-    // fold, null vectors dropped — the old join condition's contract.
     val passthrough = vecs.columns.filter(c => c != "vec_id" && c != vecCol)
-    val packed = centroids
-      .agg(sort_array(collect_list(struct(col("cell_id"), col("centroid"))))
-        .as("cells"))
-    val scored = transform(
-      filter(col("cells"), c => c.getField("centroid").isNotNull),
-      c => struct((-dot(col(vecCol), c.getField("centroid")) /
-          (norm(col(vecCol)) * norm(c.getField("centroid")))).as("cdist"),
-        c.getField("cell_id").as("cell_id")))
-    vecs.filter(col(vecCol).isNotNull)
-      .crossJoin(broadcast(packed))
-      .withColumn("m", array_min(scored))
-      .filter(col("m.cell_id").isNotNull)
+    Clustering.nearestRows(vecs.filter(col(vecCol).isNotNull), centroids,
+        cellDistance(col(vecCol), norm(col(vecCol))))
       .select(col("vec_id") +: col("m.cell_id").as("cell_id") +:
         (vecCol +: passthrough.toSeq).map(col): _*)
   }
+
+  /** The IVF cell metric shared by assignment and probing: the negated
+    * cosine of `v` (whose norm is `vNorm`) and a centroid.
+    */
+  private def cellDistance(v: Column, vNorm: Column): Column => Column =
+    c => -dot(v, c) / (vNorm * norm(c))
 
   /** IVF top-k search: Lloyd-trained cells (k-means is what makes IVF
     * an index rather than a partition guess), each query probing only
@@ -407,7 +390,8 @@ object Similarity {
 
   /** The SERVE half: top-k cosine over a fitted index — each query
     * ranks the `nprobe` nearest cells against the (tiny, broadcast)
-    * centroid frame, then scores ONLY the postings of those cells.
+    * centroid frame by [[ivfAssign]]'s metric and search, then scores
+    * ONLY the postings of those cells.
     * Never corpus×corpus, never a corpus shuffle: the postings scan is
     * the only big input and the probe side broadcasts. Incremental
     * corpus growth appends rows to `postings` via [[ivfAssign]] with
@@ -416,24 +400,12 @@ object Similarity {
     */
   def ivfProbe(centroids: DataFrame, postings: DataFrame,
       queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    // nprobe nearest cells per query, by the same metric ivfAssign
-    // uses: slice(array_sort(...), 1, nprobe) over the packed centroid
-    // array — ascending lexicographic struct order = the (cdist,
-    // cell_id) window rank it replaced, with ZERO exchange (the window
-    // formulation shuffled the query set per execution)
     require(nprobe >= 1, s"need nprobe >= 1, got $nprobe")
-    val packed = centroids
-      .agg(sort_array(collect_list(struct(col("cell_id"), col("centroid"))))
-        .as("cells"))
-    val probes = queries
-      .withColumn("qnrm", norm(col("query_vec")))
-      .crossJoin(broadcast(packed))
+    val probes = Clustering.withCells(
+        queries.withColumn("qnrm", norm(col("query_vec"))), centroids)
       .select(col("query_id"), col("query_vec"), col("qnrm"),
-        explode(slice(array_sort(transform(
-          filter(col("cells"), c => c.getField("centroid").isNotNull),
-          c => struct((-dot(col("query_vec"), c.getField("centroid")) /
-              (col("qnrm") * norm(c.getField("centroid")))).as("cdist"),
-            c.getField("cell_id").as("cell_id")))), 1, nprobe)).as("p"))
+        explode(Clustering.nearestN(col("cells"),
+          cellDistance(col("query_vec"), col("qnrm")), nprobe)).as("p"))
       .select(col("query_id"), col("query_vec"), col("qnrm"),
         col("p.cell_id").as("cell_id"))
     val scored = postings.as("c")
@@ -464,13 +436,7 @@ object Similarity {
     */
   def labelCentroids(embeddings: DataFrame, labelCol: String = "label",
       vecCol: String = "embedding"): DataFrame =
-    embeddings
-      .select(col(labelCol).as("label"),
-        posexplode(col(vecCol)).as(Seq("dim", "v")))
-      .groupBy(col("label"), col("dim"))
-      .agg(count(lit(1)).as("n"),
-        (sum(bround(col("v").cast("double"), 9).cast("decimal(18,9)"))
-          .cast("double") / count(lit(1))).as("centroid"))
+    Clustering.dimMeans(embeddings, col(labelCol).as("label"), vecCol)
 
   /** SemDeDup (Abbas et al. 2023): semantic near-dup pairs = cluster
     * the embedding space, then compare only WITHIN each cell — the

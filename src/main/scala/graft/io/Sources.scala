@@ -82,20 +82,13 @@ object JdbcRetention {
       tables: Set[String]) extends DeletePlan
 
   /** Decides what [[executeDelete]] sends for exactly the `archived`
-    * `(table_name, id)` rows, with no connection opened: gathers their
-    * per-table inclusive id ranges ([[KeyRanges.gather]], one job with
-    * no exchange, capped at `maxRanges`), then plans as the overload
-    * below. At 100 TB a range list (not an id list) keeps the DELETE
+    * `(table_name, id)` rows, with no connection opened, given their
+    * per-table inclusive id ranges ([[KeyRanges.gather]], `None` past its
+    * cap). At 100 TB a range list (not an id list) keeps the DELETE
     * statement count bounded; contiguous ids collapse to single ranges.
-    */
-  def planDelete(archived: DataFrame, allowedTables: Set[String],
-      maxRanges: Int = KeyRanges.MaxRanges): DeletePlan =
-    planDelete(archived, allowedTables, KeyRanges.gather(archived, maxRanges))
-
-  /** The delete plan for `archived` given its key ranges, already
-    * gathered (`None` past their cap). Table names are validated against
-    * `allowedTables` instead of interpolating untrusted strings. With
-    * ranges the plan is made on the driver and runs no Spark job.
+    * Table names are validated against `allowedTables` instead of
+    * interpolating untrusted strings. With ranges the plan is made on
+    * the driver and runs no Spark job.
     *
     * Driver-memory bound: the range list is capped (pathologically
     * fragmented archived ids — e.g. every second id — would otherwise

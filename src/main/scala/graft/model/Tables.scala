@@ -15,29 +15,6 @@ import org.apache.spark.sql.types._
   */
 object Tables {
 
-  /** Schema of the reference's in-memory record (reference main.go:20-26).
-    * `table_name` is a synthesized discriminator (main.go:25,114).
-    */
-  val iotSchema: StructType = StructType(Seq(
-    StructField("id", LongType),
-    StructField("timestamp", TimestampType),
-    StructField("device_id", StringType),
-    StructField("value", DoubleType),
-    StructField("table_name", StringType)
-  ))
-
-  /** Schema of the reference's Parquet archive row (main.go:28-34):
-    * timestamp is epoch NANOS as INT64 (main.go:39). Spark timestamps are
-    * µs precision so the nanos column is µs*1000 (zero-padded ns).
-    */
-  val archiveSchema: StructType = StructType(Seq(
-    StructField("id", LongType),
-    StructField("timestamp", LongType),
-    StructField("device_id", StringType),
-    StructField("value", DoubleType),
-    StructField("table_name", StringType)
-  ))
-
   /** `spark.read.parquet` of a fixture table with its schema resolved on
     * the driver ([[parquetSchema]]): a read without a schema runs a
     * one-task Spark job to infer it. The frame and its schema are the
@@ -164,4 +141,31 @@ object Tables {
     }
     go(new java.io.File(p))
   }
+
+  private val stagedDirs =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** A temp dir built once per JVM for `key`: on first use `build`
+    * populates a fresh `createTempDirectory(prefix)` dir; later callers
+    * get the same path back. The staged streaming inputs and the
+    * persisted IVF index are pure functions of the fixture, so in a
+    * Verify/Bench JVM only the first consumer pays the write. The dir is
+    * deleted at JVM exit; the hook goes in BEFORE the build, so a
+    * failed build cannot leak its partial tree, and the failure also
+    * reaps it at once and leaves the map empty for a clean retry.
+    *
+    * The build runs INSIDE computeIfAbsent, holding the map's bin lock
+    * for its duration: fine because queries run serially (Bench, Verify
+    * and Probe) and no build is re-entrant; a caller that parallelizes
+    * queries must first move the build out of the map (per-key futures).
+    */
+  private[graft] def stagedDir(prefix: String, key: String)(
+      build: String => Unit): String =
+    stagedDirs.computeIfAbsent(s"$prefix|$key", _ => {
+      val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
+      sys.addShutdownHook(rmrf(tmp))
+      try build(tmp)
+      catch { case e: Throwable => rmrf(tmp); throw e }
+      tmp
+    })
 }

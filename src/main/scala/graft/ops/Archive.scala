@@ -2,15 +2,11 @@ package graft.ops
 
 import java.util.Locale
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.model.Tables
 
 /** The reference's archival-pipeline capabilities as composable
   * `DataFrame => DataFrame` operators (SURVEY.md §2.1-2.8, §3.1).
@@ -129,7 +125,7 @@ object Archive {
     val files = archived.fold(Array.empty[String])(_.inputFiles)
     val fresh = archived match {
       case Some(a) if files.nonEmpty =>
-        requireArchiveKeys(files.min, conf)
+        requireArchiveKeys(spark, files.min)
         val probed = a.filter(inMonths(months))
         keys.flatMap(k => KeyRanges.gather(probed.filter(k.holds))) match {
           case Some(held) if held.isEmpty => batch
@@ -150,12 +146,9 @@ object Archive {
     * (matched case-insensitively, as the reader resolves columns). One
     * footer read on the driver, no Spark job.
     */
-  private def requireArchiveKeys(file: String, conf: Configuration): Unit = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(java.net.URI.create(file)), conf))
-    val fields =
-      try reader.getFileMetaData.getSchema.getFields.asScala.map(_.getName.toLowerCase(Locale.ROOT))
-      finally reader.close()
+  private def requireArchiveKeys(spark: SparkSession, file: String): Unit = {
+    val fields = Tables.parquetSchema(spark, new Path(java.net.URI.create(file)).toString)
+      .fieldNames.map(_.toLowerCase(Locale.ROOT))
     require(fields.contains("table_name") && fields.contains("id"),
       s"archive file $file lacks table_name or id: not an archive, refusing to append")
   }

@@ -36,30 +36,17 @@ object ExtQueries {
     pcaModelCache.computeIfAbsent(d, _ =>
       Pca.fit(Tables.embeddings(s, d), "embedding", k = 8, dim = 64))
 
-  /** Persisted IVF index dir per scale (round 15 — the stagedEvents3
-    * pattern): q_similarity_serve's contract is the SERVE half —
-    * probing a reloaded index — so the one-time train+write staging is
-    * built on first use and shared for the JVM (a Bench warm pass
-    * absorbs it, exactly like the streaming staged tree), keyed by
-    * scale dir and deleted at JVM exit. Training is deterministic, so
-    * whichever query triggers the build, the persisted index and every
-    * probe digest are identical. A failed build reaps its partial tree
-    * and leaves the map empty for a clean retry.
+  /** Persisted IVF index dir per scale: q_similarity_serve's contract
+    * is the SERVE half — probing a reloaded index — so the train+write
+    * staging is built once per JVM ([[Tables.stagedDir]]; a Bench warm
+    * pass absorbs it). Training is deterministic, so the persisted index
+    * and every probe digest are the same whichever run builds it.
     */
-  private val ivfIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ivfIndexDir(s: SparkSession, d: String): String =
-    ivfIndexDirs.computeIfAbsent(d, _ => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_ivf_index").toString
-      sys.addShutdownHook(Tables.rmrf(tmp))
-      try {
-        val (cents, posts) = Similarity.ivfIndex(Tables.embeddings(s, d),
-          cells = 8)
-        Similarity.writeIvfIndex(cents, posts, tmp)
-      } catch { case e: Throwable => Tables.rmrf(tmp); throw e }
-      tmp
-    })
+    Tables.stagedDir("graft_ivf_index", d) { tmp =>
+      val (cents, posts) = Similarity.ivfIndex(Tables.embeddings(s, d), cells = 8)
+      Similarity.writeIvfIndex(cents, posts, tmp)
+    }
 
   def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
 

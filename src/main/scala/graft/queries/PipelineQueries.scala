@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ext.{Bpe, Dedup, Layout, Profiling, TextAnalysis, TimeSeries}
 import graft.model.Tables
 import graft.ops.Archive
+import graft.streaming.Streaming
 
 /** Round-10 pipeline operators (SURVEY.md §2.9): two-stage fuzzy dedup
   * with edit-distance verification, archive snapshot diff, Z-order
@@ -16,55 +17,21 @@ import graft.ops.Archive
 object PipelineQueries {
 
   /** Plain 3-shard staged copy of `events`, SHARED by the three
-    * arrival-order-free streams — q_ohlc_stream, q_stream_archive
-    * (r14 — VERDICT r13 #3), and q_stream_sessions (r15): all stage
-    * the identical `repartition(3)` copy of `events.parquet` and
-    * none depends on arrival order (complete-mode aggs / stateless
-    * sink), so in a Verify/Bench JVM that runs every query only the
-    * FIRST pays the staging write. Keyed by scale dir; deleted at JVM
-    * exit (a per-query `finally` can no longer delete it — the other
-    * consumers still need it). The ORDERED streams (q_stream_join,
-    * q_stream_dedup) get the same treatment via [[stagedRangeSlices]]
-    * since r15 (their slice counts and mtime sequencing differ from
-    * this tree and from each other, so each keys its own entry).
+    * arrival-order-free streams — q_ohlc_stream, q_stream_archive and
+    * q_stream_sessions: none depends on arrival order (complete-mode
+    * aggs / stateless sink), so they stage the identical
+    * `repartition(3)` copy once per JVM and scale dir
+    * ([[Tables.stagedDir]]). The ORDERED streams (q_stream_join,
+    * q_stream_dedup) stage through [[stagedRangeSlices]], each keyed by
+    * its own slice count and delivery.
     *
     * Bench semantics note: the one-time staging write is absorbed by
-    * whichever consumer the bench times FIRST (the rest run warm) —
-    * a bounded, direction-safe order coupling (before r14 each query
-    * paid its own write every run), but a per-query A/B against
-    * pre-r14 BENCH_DETAIL history must read the GROUP's sum, not any
-    * single query alone.
+    * whichever consumer the bench times FIRST (the rest run warm), so a
+    * per-query A/B against pre-r14 BENCH_DETAIL history must read the
+    * GROUP's sum, not any single query alone.
     */
-  private val stagedTrees =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** Build-once staged input tree keyed by (kind, scale dir): `build`
-    * populates a fresh temp dir on first use; later callers get the
-    * same path back. Hook BEFORE the build: a mid-flight failure must
-    * not leak the partial tree (the mapping function throws, the map
-    * stays empty, the hook still reaps the directory at exit); the
-    * catch ALSO reaps eagerly (review r15) so a long-lived Verify JVM
-    * that retries after a failed staging write doesn't accumulate one
-    * abandoned tree + hook per attempt.
-    *
-    * Concurrency contract (ADVICE r15): the Spark staging write runs
-    * INSIDE computeIfAbsent, holding the bin lock for its duration —
-    * fine here because query execution is single-threaded by contract
-    * (Bench/Verify/JobProbe run queries serially) and no build is
-    * re-entrant; a caller that parallelizes queries must first move
-    * the build outside the map (per-key futures).
-    */
-  private def stagedTree(kind: String, d: String)(
-      build: String => Unit): String =
-    stagedTrees.computeIfAbsent(s"$kind|$d", _ => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft_stream_$kind").toString
-      sys.addShutdownHook(Tables.rmrf(tmp))
-      try build(tmp)
-      catch { case e: Throwable => Tables.rmrf(tmp); throw e }
-      tmp
-    })
   private[graft] def stagedEvents3(s: SparkSession, d: String): String =
-    stagedTree("stage3", d) { tmp =>
+    Tables.stagedDir("graft_stream_stage3", d) { tmp =>
       Tables.load(s, d, "events").repartition(3)
         .write.mode("overwrite").parquet(tmp)
     }
@@ -85,7 +52,7 @@ object PipelineQueries {
     */
   private[graft] def stagedRangeSlices(s: SparkSession, d: String, slices: Int,
       dupEachFile: Boolean): String =
-    stagedTree(s"range${slices}dup$dupEachFile", d) { tmp =>
+    Tables.stagedDir(s"graft_stream_range${slices}dup$dupEachFile", d) { tmp =>
       val staging = java.nio.file.Files
         .createTempDirectory("graft_stream_range_stage").toString
       try {
@@ -114,6 +81,30 @@ object PipelineQueries {
         }
       } finally Tables.rmrf(staging)
     }
+
+  /** Runs `query` over the events files under `dir`, one file per
+    * micro-batch, into the memory sink `sink` in `outputMode`, to the
+    * end of the input, and returns the sink table. The stream runs on a
+    * fresh session pinned to 4 shuffle partitions: a stateful
+    * operator's cost is (state stores = shuffle partitions) ×
+    * micro-batches, not data volume, and the pin lives and dies with
+    * the stream, so the caller's session conf is never mutated and the
+    * sink name cannot clash. `newSession` inherits only builder-time
+    * options, so the caller's time zone (watermark parsing, `to_date`
+    * bucketing) is copied across.
+    */
+  private def memorySinkRun(s: SparkSession, dir: String, sink: String,
+      outputMode: String)(query: DataFrame => DataFrame): DataFrame = {
+    val s2 = s.newSession()
+    s2.conf.set("spark.sql.shuffle.partitions", "4")
+    s2.conf.set("spark.sql.session.timeZone",
+      s.conf.get("spark.sql.session.timeZone"))
+    val q = query(Streaming.readEventsStream(s2, dir))
+      .writeStream.format("memory").queryName(sink)
+      .outputMode(outputMode).start()
+    try q.processAllAvailable() finally q.stop()
+    s2.table(sink)
+  }
 
   def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -202,28 +193,9 @@ object PipelineQueries {
       // staged input shared with q_stream_archive and q_stream_sessions
       // (see stagedEvents3)
       val tmp = stagedEvents3(s, d)
-      val sink = "graft_ohlc_stream_sink"
-      // fresh session (ADVICE r11): the 4-partition state-store pin
-      // lives and dies with this stream — the caller's session conf is
-      // never mutated, so concurrent queries can't observe it; the
-      // fresh catalog also makes the sink name clash-free by scope.
-      // newSession inherits only BUILDER-time options, so runtime-set
-      // confs the result depends on (the session time zone bucketing
-      // to_date) are copied across explicitly.
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", "4")
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone"))
-      val q = TimeSeries.ohlcBars(
-          graft.streaming.Streaming.readEventsStream(s2, tmp,
-            maxFilesPerTrigger = 1),
-          "event_type", "ts", "event_id", "value")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      // the memory sink holds the rows; the SHARED staged input stays
-      // for the other order-free streams and is deleted at JVM exit
-      s2.table(sink).orderBy(col("grp"), col("bucket"))
+      memorySinkRun(s, tmp, "graft_ohlc_stream_sink", "complete")(
+          TimeSeries.ohlcBars(_, "event_type", "ts", "event_id", "value"))
+        .orderBy(col("grp"), col("bucket"))
     }),
 
     // Stream-stream watermarked join through the ACTUAL incremental
@@ -246,29 +218,9 @@ object PipelineQueries {
       // staging, not query work, and re-running the stream over the
       // same tree is bit-identical.
       val tmp = stagedRangeSlices(s, d, slices = 3, dupEachFile = false)
-      val sink = "graft_stream_join_sink"
-      // Stateful-op cost here is (state stores = shuffle partitions) ×
-      // micro-batches, not data volume — 32 session partitions would
-      // mean 2×32 store instances per batch for a ~10 MB join state.
-      // Pin the stream to 4 on a FRESH session (ADVICE r11): the pin dies
-      // with the stream instead of mutate-and-restore on the shared
-      // session conf; 4 halves the per-batch state-store commit count
-      // vs the previous 8 with identical output (r12). Runtime-set
-      // session confs are not inherited by newSession — copy the time
-      // zone the watermark timestamps parse under.
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", "4")
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone"))
-      // the SHARED staged tree stays for later runs; deleted at JVM exit
-      val q = graft.streaming.Streaming.purchaseSignupJoin(
-          graft.streaming.Streaming.readEventsStream(s2, tmp,
-            maxFilesPerTrigger = 1))
-        .select(col("p_id"), col("s_id"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s2.table(sink).orderBy(col("p_id"), col("s_id"))
+      memorySinkRun(s, tmp, "graft_stream_join_sink", "append")(
+          Streaming.purchaseSignupJoin(_).select(col("p_id"), col("s_id")))
+        .orderBy(col("p_id"), col("s_id"))
     }),
 
     // Stateful streaming dedup through the ACTUAL incremental path
@@ -289,19 +241,8 @@ object PipelineQueries {
       // duplicate at the next mtime tick. Staged ONCE per JVM+scale
       // (stagedRangeSlices, r15) — same reasoning as q_stream_join.
       val tmp = stagedRangeSlices(s, d, slices = 2, dupEachFile = true)
-      val sink = "graft_stream_dedup_sink"
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", "4")
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone"))
-      // the SHARED staged tree stays for later runs; deleted at JVM exit
-      val q = graft.streaming.Streaming.dedupedStream(
-          graft.streaming.Streaming.readEventsStream(s2, tmp,
-            maxFilesPerTrigger = 1))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s2.table(sink)
+      memorySinkRun(s, tmp, "graft_stream_dedup_sink", "append")(
+          Streaming.dedupedStream(_))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           countDistinct(col("user_id")).as("n_users"),
@@ -328,8 +269,7 @@ object PipelineQueries {
         .createTempDirectory("graft_stream_archive_ckpt").toString
       try {
         graft.ArchiverMain.archiveStream(
-          graft.streaming.Streaming.readEventsStream(s, tmp,
-              maxFilesPerTrigger = 1)
+          Streaming.readEventsStream(s, tmp)
             .select(col("event_id").as("id"), col("ts").as("timestamp"),
               col("user_id").cast("string").as("device_id"), col("value"))
             .transform(Archive.stampTableName("events")),
@@ -375,20 +315,8 @@ object PipelineQueries {
     // machine shifts n_sessions and fails the oracle.
     "q_stream_sessions" -> ((s, d) => {
       val tmp = stagedEvents3(s, d)
-      val sink = "graft_stream_sessions_sink"
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", "4")
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone"))
-      val q = graft.streaming.Streaming.sessionCounts(
-          graft.streaming.Streaming.readEventsStream(s2, tmp,
-            maxFilesPerTrigger = 1), watermark = "3650 days")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      // the SHARED staged input stays for the other two order-free
-      // streams and is deleted at JVM exit
-      s2.table(sink)
+      memorySinkRun(s, tmp, "graft_stream_sessions_sink", "complete")(
+          Streaming.sessionCounts(_, watermark = "3650 days"))
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_sessions"),
           sum(col("n_events")).as("n_events"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ext.Profiling
 import graft.model.Tables
 import graft.ops.Scalar.dsum
 
@@ -42,32 +43,16 @@ object StatsQueries {
           max(col("o_totalprice")).as("hi"))
         .orderBy(col("o_orderstatus"))),
 
-    // partitioning-independent variance/stddev from exact moments.
-    // Money is integer CENTS; the second moment Σcents² (~10²⁰) is
-    // carried as TWO exact int64 sums (hi = Σ c²÷10⁶, lo = Σ c²mod10⁶)
-    // because a single huge decimal differs across engines at the
-    // int128→double cast (DuckDB's is not correctly rounded — caught
-    // by the sf0.1 robustness sweep). hi, lo < 2⁵³ convert exactly;
-    // the recombination is the same IEEE arithmetic everywhere.
+    // partitioning-independent variance/stddev from exact moments:
+    // money as integer cents, Σcents² as two exact int64 sums
+    // (Profiling.withCents says why)
     "q_variance_stats" -> ((s, d) => {
-      val s1 = sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
-      val n = count(lit(1))
-      Tables.orders(s, d)
-        .withColumn("cents", round(col("o_totalprice") * 100, 0).cast("long"))
-        .withColumn("c2", col("cents") * col("cents"))
-        .withColumn("c2_hi", expr("c2 div 1000000"))
-        .withColumn("c2_lo", col("c2") % 1000000L)
-        .groupBy(col("o_orderstatus"))
-        .agg(n.as("n"), s1.as("s1"),
-          sum(col("c2_hi")).as("hi"),
-          sum(col("c2_lo")).as("lo"))
-        .select(col("o_orderstatus"), col("n"), col("s1"),
-          ((col("hi").cast("double") * 1000000.0 + col("lo").cast("double")) / 10000.0)
-            .as("s2"))
+      val variance = Profiling.sampleVariance(col("n"), col("s1"), col("s2"))
+      Profiling.centsMoments(Tables.orders(s, d), "o_orderstatus",
+          col("o_totalprice"))
         .select(col("o_orderstatus"), col("n"),
           (col("s1") / col("n")).as("mean"),
-          ((col("s2") - col("s1") * col("s1") / col("n")) / (col("n") - 1)).as("variance"),
-          sqrt((col("s2") - col("s1") * col("s1") / col("n")) / (col("n") - 1)).as("stddev"))
+          variance.as("variance"), sqrt(variance).as("stddev"))
         .orderBy(col("o_orderstatus"))
     }),
 

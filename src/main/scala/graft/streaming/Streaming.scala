@@ -31,7 +31,7 @@ object Streaming {
 
   /** File-based streaming source over an events-shaped parquet
     * directory — the incremental version of the reference's batch
-    * re-scan loop. maxFilesPerTrigger bounds per-batch work.
+    * re-scan loop: one file per micro-batch.
     *
     * A file stream needs its schema up front: this reads it from a
     * footer ALREADY in `dir`, on the driver with no Spark job
@@ -42,13 +42,12 @@ object Streaming {
     * Files of a different `ts` dtype arriving later fail the stream
     * loudly rather than misread.
     */
-  def readEventsStream(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Int = 1): DataFrame = {
+  def readEventsStream(spark: SparkSession, dir: String): DataFrame = {
     val tsType = graft.model.Tables.eventsTsType(spark,
       graft.model.Tables.parquetSchema(spark, dir))
     spark.readStream
       .schema(eventsSchema(tsType))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", 1)
       .parquet(dir)
       .withColumn("ts", col("ts").cast(TimestampType))
   }

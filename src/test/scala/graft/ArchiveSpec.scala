@@ -133,6 +133,29 @@ class ArchiveSpec extends AnyFunSuite {
     assert(back.groupBy("id").count().filter(col("count") > 1).isEmpty)
   }
 
+  test("an append refuses a directory whose footer lacks table_name or id, " +
+      "naming the file and running no Spark job; the keys match in any case") {
+    val batch = sample.transform(Archive.stampTableName("t"))
+    val foreign = java.nio.file.Files.createTempDirectory("graft_not_archive").toString
+    val upper = java.nio.file.Files.createTempDirectory("graft_upper_keys").toString
+    try {
+      Seq((1L, "x")).toDF("id", "name").write.mode("overwrite").parquet(foreign)
+      val parted = batch.transform(Archive.withTimePartitions("timestamp"))
+      val keys = KeyRanges.gather(parted)
+      val sc = spark.sparkContext
+      sc.setJobGroup("refuse", "refuse")
+      val e = try intercept[IllegalArgumentException](
+          Archive.appendIdempotent(parted, foreign, Seq((2024, 1)), keys))
+        finally sc.clearJobGroup()
+      org.apache.spark.GraftListenerBridge.drainListenerBus(sc, 10000L)
+      assert(sc.statusTracker.getJobIdsForGroup("refuse").isEmpty)
+      assert(e.getMessage.contains("not an archive") && e.getMessage.contains(".parquet"),
+        e.getMessage)
+      Seq((7L, "u")).toDF("ID", "TABLE_NAME").write.mode("overwrite").parquet(upper)
+      assert(append(batch, upper) == 4)
+    } finally model.Tables.rmrf(foreign, upper)
+  }
+
   test("an append of a fully archived batch returns 0 and adds no data file") {
     val dir = java.nio.file.Files.createTempDirectory("graft_idem_empty").toString + "/arch"
     val batch = sample.transform(Archive.stampTableName("t"))

@@ -60,6 +60,19 @@ class PqSpec extends AnyFunSuite {
     assert(base.values.toSet.size > 100)
   }
 
+  test("encode ties break toward the smaller cell_id in every subspace") {
+    // subspace 0 ties cells 0 and 1, subspace 1 ties cells 1 and 2 (l2
+    // distance 1 each); the third cell of each subspace is far
+    val book = Seq(
+      (0, 2, Array(5.0f, 5.0f)), (0, 1, Array(1.0f, 1.0f)), (0, 0, Array(1.0f, -1.0f)),
+      (1, 2, Array(-1.0f, 1.0f)), (1, 1, Array(1.0f, 1.0f)), (1, 0, Array(9.0f, 9.0f)))
+      .toDF("subspace", "cell_id", "centroid")
+    val vecs = Seq((10L, Array(1.0f, 0.0f, 0.0f, 1.0f))).toDF("vec_id", "embedding")
+    val codes = Pq.encode(vecs, book, m = 2, dsub = 2)
+      .select(col("codes")).as[Seq[Int]].head()
+    assert(codes == Seq(0, 1))
+  }
+
   test("train fails fast when m × dsub differs from the embedding width " +
       "(below it trains on a truncated prefix of every vector, above it " +
       "slices short or empty tail subvectors)") {

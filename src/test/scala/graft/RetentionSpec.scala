@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.io.JdbcRetention
+import graft.ops.KeyRanges
 
 /** Retention write-back (SURVEY.md §7 step 6): the delete set must be
   * keyed to the actually-archived rows — NOT the reference's wider
@@ -15,6 +17,11 @@ class RetentionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** The delete plan for `archived` from its gathered key ranges. */
+  private def plan(archived: DataFrame, allowed: Set[String],
+      cap: Int = KeyRanges.MaxRanges): JdbcRetention.DeletePlan =
+    JdbcRetention.planDelete(archived, allowed, KeyRanges.gather(archived, cap))
+
   test("archivedKeyRanges collapses contiguous ids into ranges per table") {
     val archived = Seq(
       ("t1", 1L), ("t1", 2L), ("t1", 3L), ("t1", 7L), ("t1", 8L),
@@ -22,7 +29,7 @@ class RetentionSpec extends AnyFunSuite {
     val executed = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
     val conn = stubConnection((sql, lo, hi) => executed += ((sql, lo, hi)))
     JdbcRetention.executeDelete(
-      JdbcRetention.planDelete(archived, Set("t1", "t2")), () => conn): Unit
+      plan(archived, Set("t1", "t2")), () => conn): Unit
     // the bound (lo, hi) parameters of the range DELETEs are the ranges
     def sql(t: String) = s"""DELETE FROM "$t" WHERE "id" BETWEEN ? AND ?"""
     assert(executed.toSet ==
@@ -38,7 +45,7 @@ class RetentionSpec extends AnyFunSuite {
     val conn = stubConnection((sql, lo, hi) => executed += ((sql, lo, hi)))
 
     val counts = JdbcRetention.executeDelete(
-      JdbcRetention.planDelete(archived, Set("iot_data")), () => conn)
+      plan(archived, Set("iot_data")), () => conn)
     assert(counts == Map("iot_data" -> 2L)) // stub reports 1 row per executeUpdate
     assert(executed.toSet ==
       Set(("""DELETE FROM "iot_data" WHERE "id" BETWEEN ? AND ?""", 1L, 2L),
@@ -46,7 +53,7 @@ class RetentionSpec extends AnyFunSuite {
 
     val bad = intercept[IllegalArgumentException] {
       JdbcRetention.executeDelete(
-        JdbcRetention.planDelete(archived, Set("other")), () => conn)
+        plan(archived, Set("other")), () => conn)
     }
     assert(bad.getMessage.contains("iot_data"))
 
@@ -55,7 +62,7 @@ class RetentionSpec extends AnyFunSuite {
     executed.clear()
     val weird = Seq(("""we"ird""", 5L)).toDF("table_name", "id")
     JdbcRetention.executeDelete(
-      JdbcRetention.planDelete(weird, Set("""we"ird""")), () => conn): Unit
+      plan(weird, Set("""we"ird""")), () => conn): Unit
     assert(executed.toSeq ==
       Seq(("""DELETE FROM "we""ird" WHERE "id" BETWEEN ? AND ?""", 5L, 5L)))
   }
@@ -72,13 +79,13 @@ class RetentionSpec extends AnyFunSuite {
       deleted += id
     })
     val counts = JdbcRetention.executeDelete(
-      JdbcRetention.planDelete(archived, Set("iot_data"), maxRanges = 2), () => conn)
+      plan(archived, Set("iot_data"), cap = 2), () => conn)
     assert(counts == Map("iot_data" -> ids.size.toLong))
     assert(deleted.toSet == ids.toSet) // exactly the archived ids, no widening
     // allowlist still enforced on the fallback path
     val bad = intercept[IllegalArgumentException] {
       JdbcRetention.executeDelete(
-        JdbcRetention.planDelete(archived, Set("other"), maxRanges = 2), () => conn)
+        plan(archived, Set("other"), cap = 2), () => conn)
     }
     assert(bad.getMessage.contains("iot_data"))
   }

@@ -173,6 +173,33 @@ class SimilaritySpec extends AnyFunSuite {
     assert(assigned.groupBy("vec_id").count().filter(col("count") > 1).isEmpty)
   }
 
+  test("ivfAssign ties break toward the smaller cell_id") {
+    val vecs = Seq((10L, Array(1.0f, 0.0f))).toDF("vec_id", "embedding")
+    // both centroids at cosine 1/√2 from the vector, bit for bit
+    val cents = Seq((5, Array(1.0f, 1.0f)), (3, Array(1.0f, -1.0f)))
+      .toDF("cell_id", "centroid")
+    val cell = Similarity.ivfAssign(vecs, "embedding", cents)
+      .select(col("cell_id")).as[Int].collect()
+    assert(cell.toSeq == Seq(3))
+  }
+
+  test("ivfProbe ranks equidistant cells by the smaller cell_id") {
+    val cents = Seq((5, Array(1.0f, 1.0f)), (3, Array(1.0f, -1.0f)),
+      (1, Array(-1.0f, 0.0f))).toDF("cell_id", "centroid")
+    // one posting per cell; the query (1, 0) is equidistant from 3 and 5
+    val postings = Seq((30L, 3, Array(1.0f, -0.5f)), (50L, 5, Array(1.0f, 0.5f)),
+        (10L, 1, Array(-1.0f, 0.1f)))
+      .toDF("vec_id", "cell_id", "embedding")
+      .withColumn("nrm", Similarity.norm(col("embedding")))
+    val q = Seq((100L, Array(1.0f, 0.0f))).toDF("query_id", "query_vec")
+    def hits(nprobe: Int): Set[Long] =
+      Similarity.ivfProbe(cents, postings, q, k = 10, nprobe)
+        .select(col("vec_id")).as[Long].collect().toSet
+    assert(hits(1) == Set(30L))
+    assert(hits(2) == Set(30L, 50L))
+    assert(hits(3) == Set(10L, 30L, 50L))
+  }
+
   test("null centroid cells are dead to the whole IVF path: never " +
     "assigned to, never probed, output identical to the cell set " +
     "without them (ADVICE r8 — pins the filter-before-fold contract)") {

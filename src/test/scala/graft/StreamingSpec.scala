@@ -17,7 +17,7 @@ class StreamingSpec extends AnyFunSuite {
 
   private def eventsDir: String = {
     // two-file parquet dir of the events fixture as loaded, so a stream
-    // with maxFilesPerTrigger = 1 runs two data micro-batches
+    // reading one file per micro-batch runs two data micro-batches
     val dir = java.nio.file.Files.createTempDirectory("graft_stream_src").toString
     Tables.load(spark, TestSpark.Sf0001, "events").repartition(2)
       .write.mode("overwrite").parquet(dir)
@@ -44,7 +44,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streamed OHLC bars (complete mode) equal the batch run of the " +
       "same ohlcBars and the registered q_ohlc_bars") {
     val dir = eventsDir
-    val q = ohlc(Streaming.readEventsStream(spark, dir, maxFilesPerTrigger = 1))
+    val q = ohlc(Streaming.readEventsStream(spark, dir))
       .writeStream.format("memory").queryName("ohlc_out")
       .outputMode("complete").start()
     q.processAllAvailable()
@@ -60,7 +60,7 @@ class StreamingSpec extends AnyFunSuite {
     val dir = eventsDir
     val out = java.nio.file.Files.createTempDirectory("graft_stream_out").toString
     def ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt").toString
-    def stream = iot(Streaming.readEventsStream(spark, dir, maxFilesPerTrigger = 1))
+    def stream = iot(Streaming.readEventsStream(spark, dir))
     val n = Tables.events(spark, TestSpark.Sf0001).count()
     val first = ArchiverMain.archiveStream(stream, out, ckpt)
     assert(first.extracted == n && first.appended == n, first)
@@ -101,7 +101,7 @@ class StreamingSpec extends AnyFunSuite {
     spark.streams.addListener(listener)
     val r = try {
       val r = ArchiverMain.archiveStream(
-        iot(Streaming.readEventsStream(spark, dir, maxFilesPerTrigger = 1)), out, ckpt)
+        iot(Streaming.readEventsStream(spark, dir)), out, ckpt)
       org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext, 10000L)
       r
     } finally spark.streams.removeListener(listener)
@@ -139,7 +139,7 @@ class StreamingSpec extends AnyFunSuite {
     Tables.load(spark, TestSpark.Sf0001, "events").repartition(3)
       .write.mode("overwrite").parquet(dir)
     val q = Streaming.sessionCounts(
-        Streaming.readEventsStream(spark, dir, maxFilesPerTrigger = 1),
+        Streaming.readEventsStream(spark, dir),
         watermark = "3650 days")
       .writeStream.format("memory").queryName("sess_out")
       .outputMode("complete").start()
@@ -184,7 +184,7 @@ class StreamingSpec extends AnyFunSuite {
     try {
       spark.conf.set(key,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val stream = Streaming.readEventsStream(spark, dir, maxFilesPerTrigger = 1)
+      val stream = Streaming.readEventsStream(spark, dir)
       val q = ohlc(stream)
         .writeStream.format("memory").queryName("rocks_out")
         .outputMode("complete").start()

@@ -18,6 +18,9 @@ comparing, every plan is normalised:
     `localCheckpoint`, not what the plan does
   - temp-directory suffixes (`graft_stream_stage3123456789`) -> `...N`
   - random UUIDs, e.g. an `Observation`'s `CollectMetrics` name -> `<uuid>`
+  - lambda variables (`lambda x_12#`), whose suffix is a JVM-wide counter,
+    renumbered per plan in order of first appearance (`lambda x_L1#`), so
+    which lambda binds which variable still has to match
   - each `Expand` node's projection lists are sorted; for a
     distinct-aggregate Expand (output column `gid#`), whose distinct
     groups Spark may order differently between runs of the same code,
@@ -135,6 +138,18 @@ def canonical_expands(lines):
     return block
 
 
+LAMBDA = re.compile(r"(lambda \w+?)_\d+#")
+
+
+def renumber_lambdas(lines):
+    """Numbers each plan's lambda variables in order of first appearance."""
+    seen = {}
+
+    def sub(m):
+        return f"{m.group(1)}_L{seen.setdefault(m.group(0), len(seen) + 1)}#"
+    return [LAMBDA.sub(sub, line) for line in lines]
+
+
 def parse(path):
     """Query name -> normalised plan lines."""
     plans, name, body, in_block = {}, None, [], False
@@ -145,7 +160,7 @@ def parse(path):
                 name, body = line[3:].strip(), []
             elif line.startswith("```") and name is not None:
                 if in_block:
-                    plans[name] = canonical_expands(body)
+                    plans[name] = canonical_expands(renumber_lambdas(body))
                     name = None
                 in_block = not in_block
             elif in_block:
