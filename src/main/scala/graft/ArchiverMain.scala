@@ -192,7 +192,9 @@ object ArchiverMain {
     * checkpoint replay nor total checkpoint LOSS can duplicate a row, and
     * a re-delivered key whose content changed fails the stream. Runs every
     * available file to completion (AvailableNow) and reports the rows
-    * extracted and appended.
+    * extracted and appended. It runs on the session `stream` was built
+    * on, whose checkpoint manager suits `checkpoint` (a user's
+    * `GRAFT_CHECKPOINT` may be on HDFS).
     */
   def archiveStream(stream: DataFrame, outPath: String, checkpoint: String): RunReport = {
     var appended = 0L

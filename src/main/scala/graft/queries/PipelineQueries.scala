@@ -85,20 +85,16 @@ object PipelineQueries {
   /** Runs `query` over the events files under `dir`, one file per
     * micro-batch, into the memory sink `sink` in `outputMode`, to the
     * end of the input, and returns the sink table. The stream runs on a
-    * fresh session pinned to 4 shuffle partitions: a stateful
-    * operator's cost is (state stores = shuffle partitions) ×
+    * [[Streaming.streamSession]] pinned to 4 shuffle partitions: a
+    * stateful operator's cost is (state stores = shuffle partitions) ×
     * micro-batches, not data volume, and the pin lives and dies with
     * the stream, so the caller's session conf is never mutated and the
-    * sink name cannot clash. `newSession` inherits only builder-time
-    * options, so the caller's time zone (watermark parsing, `to_date`
-    * bucketing) is copied across.
+    * sink name cannot clash.
     */
   private def memorySinkRun(s: SparkSession, dir: String, sink: String,
       outputMode: String)(query: DataFrame => DataFrame): DataFrame = {
-    val s2 = s.newSession()
+    val s2 = Streaming.streamSession(s)
     s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2.conf.set("spark.sql.session.timeZone",
-      s.conf.get("spark.sql.session.timeZone"))
     val q = query(Streaming.readEventsStream(s2, dir))
       .writeStream.format("memory").queryName(sink)
       .outputMode(outputMode).start()
@@ -255,8 +251,9 @@ object PipelineQueries {
     // streaming path (ArchiverMain.archiveStream, the GRAFT_STREAMING
     // micro-batch): events mapped to the IoT row shape and stamped with
     // a table_name, file-streamed one file per micro-batch (AvailableNow,
-    // checkpointed) through the batch cycle's archival step (digest,
-    // keyed idempotent append, verify) into a fresh archive dir; then
+    // checkpointed in a local temp dir, so on a Streaming.streamSession)
+    // through the batch cycle's archival step (digest, keyed idempotent
+    // append, verify) into a fresh archive dir; then
     // the gate aggregates the READ-BACK archive per partition — proving
     // the incremental write path lands the data the reference's batch
     // rerun would. Stateless per batch ⇒ no watermark, so arrival order
@@ -269,7 +266,7 @@ object PipelineQueries {
         .createTempDirectory("graft_stream_archive_ckpt").toString
       try {
         graft.ArchiverMain.archiveStream(
-          Streaming.readEventsStream(s, tmp)
+          Streaming.readEventsStream(Streaming.streamSession(s), tmp)
             .select(col("event_id").as("id"), col("ts").as("timestamp"),
               col("user_id").cast("string").as("device_id"), col("value"))
             .transform(Archive.stampTableName("events")),

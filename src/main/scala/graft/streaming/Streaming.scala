@@ -18,6 +18,27 @@ import org.apache.spark.sql.types._
   */
 object Streaming {
 
+  /** A fresh session for a stream graft runs itself on a local temp
+    * checkpoint: the caller's time zone (watermark parsing, `to_date`
+    * bucketing) and shuffle partitions copied across — `newSession`
+    * inherits only builder-time options — and Spark's FileSystem-based
+    * checkpoint manager. The default FileContext manager renames with
+    * overwrite, which matters only on HDFS; on a local path without
+    * libhadoop each of its renames forks a `readlink` process, paid on
+    * every offset-log, commit-log and state-store file of every
+    * micro-batch. The state-store files keep their `.crc` checksums.
+    * The caller's session is not changed.
+    */
+  private[graft] def streamSession(s: SparkSession): SparkSession = {
+    val s2 = s.newSession()
+    Seq("spark.sql.session.timeZone", "spark.sql.shuffle.partitions")
+      .foreach(k => s2.conf.set(k, s.conf.get(k)))
+    s2.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+      classOf[org.apache.spark.sql.execution.streaming.checkpointing
+        .FileSystemBasedCheckpointFileManager].getName)
+    s2
+  }
+
   /** events schema for file-stream reads, with `ts` as found in the
     * directory (see [[readEventsStream]]).
     */

@@ -203,6 +203,47 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("graft's stream session uses the FileSystem-based checkpoint " +
+      "manager and copies the caller's time zone and shuffle partitions; " +
+      "the caller's session conf is unchanged") {
+    import org.apache.spark.sql.execution.streaming.checkpointing._
+    val before = spark.conf.getAll
+    val s2 = Streaming.streamSession(spark)
+    val path = new org.apache.hadoop.fs.Path(System.getProperty("java.io.tmpdir"))
+    assert(CheckpointFileManager.create(path, s2.sessionState.newHadoopConf())
+      .isInstanceOf[FileSystemBasedCheckpointFileManager])
+    Seq("spark.sql.session.timeZone", "spark.sql.shuffle.partitions").foreach { k =>
+      assert(s2.conf.get(k) == spark.conf.get(k), k)
+    }
+    assert(spark.conf.getAll == before)
+  }
+
+  test("q_stream_dedup forks no readlink process: its offset, commit and " +
+      "state-store renames do not shell out") {
+    import scala.jdk.CollectionConverters._
+    val jfr = java.nio.file.Files.createTempFile("graft_stream_forks", ".jfr")
+    val rec = new jdk.jfr.Recording()
+    val commands = try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      // a fork of our own: the recording must see one to count any
+      assert(new ProcessBuilder("true").start().waitFor() == 0)
+      assert(SparkEntry.queries("q_stream_dedup")(spark, TestSpark.Sf0001)
+        .count() > 0)
+      rec.stop()
+      rec.dump(jfr)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala.toSeq
+        .map(_.getString("command").trim.split(' ').head.split('/').last)
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(jfr): Unit
+    }
+    assert(commands.contains("true"), commands)
+    val readlinks = commands.count(_ == "readlink")
+    assert(readlinks == 0, s"$readlinks readlink forks: " +
+      commands.groupBy(identity).view.mapValues(_.size).toMap)
+  }
+
   test("stateful dedup drops duplicate event_ids within watermark") {
     val dir = eventsDir
     // duplicate the source: same rows twice -> dedup must halve them
